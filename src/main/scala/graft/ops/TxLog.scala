@@ -230,6 +230,11 @@ object TxLog {
     "replaceWhere", "copyInto", "scd2", "fsck", "identityColumn",
     "widenColumn", "reorg", "protocol")
 
+  /** Ops that rewrite the data layout without changing any logical row:
+    * change feeds and stream sources skip them, and auto-compaction never
+    * re-triggers on them. */
+  private[graft] val LayoutOnlyOps = Set("optimize", "optimizeDvs", "reorg")
+
   /** File entries are table-relative (`d-<uuid>/part-….parquet`) except
     * shallow-CLONE entries, which reference the SOURCE table absolutely.
     * Partitioned writes nest Hive-style value dirs under the staging dir
@@ -1622,7 +1627,7 @@ object TxLog {
           activeDvs(table).isEmpty)
           generateManifest(table)
         if (commit.add.nonEmpty &&
-          !Set("optimize", "optimizeDvs", "reorg", "protocol")(commit.op) &&
+          !LayoutOnlyOps(commit.op) &&
           properties(table).get("graft.autoCompact.enabled")
             .contains("true")) {
           val minSize = properties(table)
@@ -1791,17 +1796,19 @@ object TxLog {
     * logical in the property and translate at the write/conflict
     * boundaries). */
   def enableColumnMapping(table: String): Long = {
-    val schema = schemaAsOf(table).getOrElse(throw
-      new IllegalArgumentException(
-        s"txlog table $table has no logged schema — column mapping " +
-          "needs a schema-carrying log (write once first)"))
     // idempotent: an already-mapped table no-ops (Delta treats
     // re-setting the same mode the same way) — a re-run setup script
     // must not fail here and strand its other statements
     if (mappingAsOf(table).nonEmpty) return latestVersion(table).get
-    val idMap = schema.fieldNames.toSeq.map(n => n -> n)
-    metadataCommitLoop(table, "columnMapping",
-      schemaDdl = Some(schema.toDDL), colMap = Some(idMap))
+    commitNext(table, "columnMapping") { v =>
+      val schema = schemaAsOf(table).getOrElse(throw
+        new IllegalArgumentException(
+          s"txlog table $table has no logged schema — column mapping " +
+            "needs a schema-carrying log (write once first)"))
+      Commit(v, Seq.empty, Seq.empty, "columnMapping", -1L,
+        schemaDdl = Some(schema.toDDL),
+        colMap = Some(schema.fieldNames.toSeq.map(n => n -> n)))
+    }
   }
 
   /** ALTER TABLE … RENAME COLUMN: metadata-only under column mapping —
@@ -1809,100 +1816,103 @@ object TxLog {
     * every data file, stat, bloom and partition path) stays. Refused
     * when a CHECK constraint references the column (its text would
     * dangle — Delta refuses identically). */
-  def renameColumn(table: String, from: String, to: String): Long = {
-    val mapping = mappingAsOf(table).getOrElse(throw
-      new IllegalArgumentException(
-        s"txlog table $table has no column mapping — run " +
-          s"TxLog.enableColumnMapping (or ALTER TABLE … SET TBLPROPERTIES" +
-          s" ('graft.columnMapping.mode'='name')) before RENAME COLUMN"))
-    val schema = schemaAsOf(table).get
-    require(schema.fieldNames.contains(from),
-      s"txlog table $table has no column '$from' " +
-        s"(columns: ${schema.fieldNames.mkString(", ")})")
-    require(!schema.fieldNames.contains(to),
-      s"txlog table $table already has a column '$to'")
-    val offending = constraintRefs(table).collect {
-      case (n, refs) if refs.contains(from) => n }
-    require(offending.isEmpty,
-      s"cannot rename $table.$from: CHECK constraint(s) " +
-        s"${offending.mkString(", ")} reference it — drop them first")
-    val genOffending = generatedRefs(table).collect {
-      case (c, refs) if refs.contains(from) => c }
-    require(genOffending.isEmpty,
-      s"cannot rename $table.$from: generated column(s) " +
-        s"${genOffending.mkString(", ")} reference it in their " +
-        "generation expression — drop the declaration(s) first")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      schema.map(f => if (f.name == from) f.copy(name = to) else f))
-    val newMap = schema.fieldNames.toSeq.map { n =>
-      if (n == from) to -> mapping.getOrElse(from, from)
-      else n -> mapping.getOrElse(n, n) }
-    metadataCommitLoop(table, "renameColumn",
-      schemaDdl = Some(newSchema.toDDL), colMap = Some(newMap),
-      properties = renamePropDeltas(table, from, to))
-  }
+  def renameColumn(table: String, from: String, to: String): Long =
+    commitNext(table, "renameColumn") { v =>
+      val mapping = mappingAsOf(table).getOrElse(throw
+        new IllegalArgumentException(
+          s"txlog table $table has no column mapping — run " +
+            s"TxLog.enableColumnMapping (or ALTER TABLE … SET TBLPROPERTIES" +
+            s" ('graft.columnMapping.mode'='name')) before RENAME COLUMN"))
+      val schema = schemaAsOf(table).get
+      require(schema.fieldNames.contains(from),
+        s"txlog table $table has no column '$from' " +
+          s"(columns: ${schema.fieldNames.mkString(", ")})")
+      require(!schema.fieldNames.contains(to),
+        s"txlog table $table already has a column '$to'")
+      val offending = constraintRefs(table).collect {
+        case (n, refs) if refs.contains(from) => n }
+      require(offending.isEmpty,
+        s"cannot rename $table.$from: CHECK constraint(s) " +
+          s"${offending.mkString(", ")} reference it — drop them first")
+      val genOffending = generatedRefs(table).collect {
+        case (c, refs) if refs.contains(from) => c }
+      require(genOffending.isEmpty,
+        s"cannot rename $table.$from: generated column(s) " +
+          s"${genOffending.mkString(", ")} reference it in their " +
+          "generation expression — drop the declaration(s) first")
+      val newSchema = org.apache.spark.sql.types.StructType(
+        schema.map(f => if (f.name == from) f.copy(name = to) else f))
+      val newMap = schema.fieldNames.toSeq.map { n =>
+        if (n == from) to -> mapping.getOrElse(from, from)
+        else n -> mapping.getOrElse(n, n) }
+      Commit(v, Seq.empty, Seq.empty, "renameColumn", -1L,
+        schemaDdl = Some(newSchema.toDDL), colMap = Some(newMap),
+        properties = renamePropDeltas(table, from, to))
+    }
 
   /** ALTER TABLE … DROP COLUMN: metadata-only under column mapping — the
     * column leaves the schema and the mapping; its physical data stays
     * in the files, unselected. A later ADD COLUMN of the same logical
     * name gets a FRESH physical name, so the dropped data can never
     * resurrect. */
-  def dropColumn(table: String, name: String): Long = {
-    val mapping = mappingAsOf(table).getOrElse(throw
-      new IllegalArgumentException(
-        s"txlog table $table has no column mapping — run " +
-          "TxLog.enableColumnMapping before DROP COLUMN"))
-    val schema = schemaAsOf(table).get
-    require(schema.fieldNames.contains(name),
-      s"txlog table $table has no column '$name' " +
-        s"(columns: ${schema.fieldNames.mkString(", ")})")
-    require(schema.length > 1,
-      s"cannot drop the only column of txlog table $table")
-    val offending = constraintRefs(table).collect {
-      case (n, refs) if refs.contains(name) => n }
-    require(offending.isEmpty,
-      s"cannot drop $table.$name: CHECK constraint(s) " +
-        s"${offending.mkString(", ")} reference it — drop them first")
-    require(!declaredPartitionCols(table).contains(name),
-      s"cannot drop $table.$name: it is a declared partition column " +
-        "(graft.partition.columns) — the layout-defining column of " +
-        "every partitioned file; Delta refuses the same")
-    val genOffending = generatedRefs(table).collect {
-      case (c, refs) if refs.contains(name) && c != name => c }
-    require(genOffending.isEmpty,
-      s"cannot drop $table.$name: generated column(s) " +
-        s"${genOffending.mkString(", ")} reference it in their " +
-        "generation expression — drop the declaration(s) first")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      schema.filterNot(_.name == name))
-    val newMap = newSchema.fieldNames.toSeq
-      .map(n => n -> mapping.getOrElse(n, n))
-    metadataCommitLoop(table, "dropColumn",
-      schemaDdl = Some(newSchema.toDDL), colMap = Some(newMap),
-      properties = dropPropDeltas(table, name))
-  }
+  def dropColumn(table: String, name: String): Long =
+    commitNext(table, "dropColumn") { v =>
+      val mapping = mappingAsOf(table).getOrElse(throw
+        new IllegalArgumentException(
+          s"txlog table $table has no column mapping — run " +
+            "TxLog.enableColumnMapping before DROP COLUMN"))
+      val schema = schemaAsOf(table).get
+      require(schema.fieldNames.contains(name),
+        s"txlog table $table has no column '$name' " +
+          s"(columns: ${schema.fieldNames.mkString(", ")})")
+      require(schema.length > 1,
+        s"cannot drop the only column of txlog table $table")
+      val offending = constraintRefs(table).collect {
+        case (n, refs) if refs.contains(name) => n }
+      require(offending.isEmpty,
+        s"cannot drop $table.$name: CHECK constraint(s) " +
+          s"${offending.mkString(", ")} reference it — drop them first")
+      require(!declaredPartitionCols(table).contains(name),
+        s"cannot drop $table.$name: it is a declared partition column " +
+          "(graft.partition.columns) — the layout-defining column of " +
+          "every partitioned file; Delta refuses the same")
+      val genOffending = generatedRefs(table).collect {
+        case (c, refs) if refs.contains(name) && c != name => c }
+      require(genOffending.isEmpty,
+        s"cannot drop $table.$name: generated column(s) " +
+          s"${genOffending.mkString(", ")} reference it in their " +
+          "generation expression — drop the declaration(s) first")
+      val newSchema = org.apache.spark.sql.types.StructType(
+        schema.filterNot(_.name == name))
+      val newMap = newSchema.fieldNames.toSeq
+        .map(n => n -> mapping.getOrElse(n, n))
+      Commit(v, Seq.empty, Seq.empty, "dropColumn", -1L,
+        schemaDdl = Some(newSchema.toDDL), colMap = Some(newMap),
+        properties = dropPropDeltas(table, name))
+    }
 
   /** ALTER TABLE … ADD COLUMN: a schema-evolution metadata commit — old
     * files backfill NULL on read (the mergeSchema read path, no rewrite).
     * Under column mapping the new logical name binds to a FRESH physical
     * name, never a recycled one. Works on unmapped tables too. */
   def addColumn(table: String, name: String,
-      dataType: org.apache.spark.sql.types.DataType): Long = {
-    val schema = schemaAsOf(table).getOrElse(throw
-      new IllegalArgumentException(
-        s"txlog table $table has no logged schema — nothing to evolve"))
-    require(!schema.fieldNames.contains(name),
-      s"txlog table $table already has a column '$name'")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      schema :+ org.apache.spark.sql.types.StructField(name, dataType,
-        nullable = true))
-    val newMap = mappingAsOf(table).map { m =>
-      schema.fieldNames.toSeq.map(n => n -> m.getOrElse(n, n)) :+
-        (name -> freshPhysName(table))
+      dataType: org.apache.spark.sql.types.DataType): Long =
+    commitNext(table, "addColumn") { v =>
+      val schema = schemaAsOf(table).getOrElse(throw
+        new IllegalArgumentException(
+          s"txlog table $table has no logged schema — nothing to evolve"))
+      require(!schema.fieldNames.contains(name),
+        s"txlog table $table already has a column '$name'")
+      val newSchema = org.apache.spark.sql.types.StructType(
+        schema :+ org.apache.spark.sql.types.StructField(name, dataType,
+          nullable = true))
+      val newMap = mappingAsOf(table).map { m =>
+        schema.fieldNames.toSeq.map(n => n -> m.getOrElse(n, n)) :+
+          (name -> freshPhysName(table))
+      }
+      Commit(v, Seq.empty, Seq.empty, "addColumn", -1L,
+        schemaDdl = Some(newSchema.toDDL), colMap = newMap)
     }
-    metadataCommitLoop(table, "addColumn",
-      schemaDdl = Some(newSchema.toDDL), colMap = newMap)
-  }
 
   /** ALTER TABLE … ALTER COLUMN c TYPE <wider> (Delta's type widening):
     * a metadata-only schema commit — old files keep their narrow
@@ -1915,51 +1925,42 @@ object TxLog {
     * next OPTIMIZE / indexed write). Range stats survive: both eras'
     * values compare through the recorded doubles losslessly. */
   def widenColumnType(spark: SparkSession, table: String, name: String,
-      newType: org.apache.spark.sql.types.DataType): Long = {
-    val schema = schemaAsOf(table).getOrElse(throw
-      new IllegalArgumentException(
-        s"txlog table $table has no logged schema — nothing to widen"))
-    val field = schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
-      throw new IllegalArgumentException(
-        s"txlog table $table has no column '$name' " +
-          s"(columns: ${schema.fieldNames.mkString(", ")})"))
-    require(isWidening(field.dataType, newType),
-      s"ALTER COLUMN ${field.name} TYPE: ${field.dataType.simpleString} → " +
-        s"${newType.simpleString} is not a supported widening (supported: " +
-        "byte/short/int → wider integral or double, integral → decimal " +
-        "with enough digits, decimal → wider decimal, float → double, " +
-        "date → timestamp_ntz)")
-    require(!identityCols(table).keys.exists(_.equalsIgnoreCase(field.name)),
-      s"cannot widen $table.${field.name}: identity columns are BIGINT " +
-        "by construction")
-    require(!generatedCols(table).keys.exists(_.equalsIgnoreCase(field.name)),
-      s"cannot widen $table.${field.name}: it is a generated column — " +
-        "its type is the generation expression's")
-    val genOffending = generatedRefs(table).collect {
-      case (c, refs) if refs.contains(field.name) => c }
-    require(genOffending.isEmpty,
-      s"cannot widen $table.${field.name}: generated column(s) " +
-        s"${genOffending.mkString(", ")} reference it in their generation " +
-        "expression — recorded values would diverge under the new type")
-    val phys = mappingAsOf(table).fold(field.name)(
-      _.getOrElse(field.name, field.name))
-    val blRem = if (activeBloomCols(spark, table, None).contains(phys))
-      activeBlooms(table) else Seq.empty
-    val newSchema = org.apache.spark.sql.types.StructType(schema.map(f =>
-      if (f.name == field.name) f.copy(dataType = newType) else f))
-    val meta0 = metaFingerprint(table)
-    var attempts = 0
-    while (attempts < 10) {
-      if (attempts > 0) refuseIfMetaChanged(table, "widenColumn", meta0)
-      val v = latestVersion(table).getOrElse(0L) + 1
-      if (tryCommit(table, Commit(v, Seq.empty, Seq.empty, "widenColumn",
-        -1L, schemaDdl = Some(newSchema.toDDL), bloomRemove = blRem)))
-        return v
-      attempts += 1
+      newType: org.apache.spark.sql.types.DataType): Long =
+    commitNext(table, "widenColumn") { v =>
+      val schema = schemaAsOf(table).getOrElse(throw
+        new IllegalArgumentException(
+          s"txlog table $table has no logged schema — nothing to widen"))
+      val field = schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
+        throw new IllegalArgumentException(
+          s"txlog table $table has no column '$name' " +
+            s"(columns: ${schema.fieldNames.mkString(", ")})"))
+      require(isWidening(field.dataType, newType),
+        s"ALTER COLUMN ${field.name} TYPE: ${field.dataType.simpleString} → " +
+          s"${newType.simpleString} is not a supported widening (supported: " +
+          "byte/short/int → wider integral or double, integral → decimal " +
+          "with enough digits, decimal → wider decimal, float → double, " +
+          "date → timestamp_ntz)")
+      require(!identityCols(table).keys.exists(_.equalsIgnoreCase(field.name)),
+        s"cannot widen $table.${field.name}: identity columns are BIGINT " +
+          "by construction")
+      require(!generatedCols(table).keys.exists(_.equalsIgnoreCase(field.name)),
+        s"cannot widen $table.${field.name}: it is a generated column — " +
+          "its type is the generation expression's")
+      val genOffending = generatedRefs(table).collect {
+        case (c, refs) if refs.contains(field.name) => c }
+      require(genOffending.isEmpty,
+        s"cannot widen $table.${field.name}: generated column(s) " +
+          s"${genOffending.mkString(", ")} reference it in their generation " +
+          "expression — recorded values would diverge under the new type")
+      val phys = mappingAsOf(table).fold(field.name)(
+        _.getOrElse(field.name, field.name))
+      val blRem = if (activeBloomCols(spark, table, None).contains(phys))
+        activeBlooms(table) else Seq.empty
+      val newSchema = org.apache.spark.sql.types.StructType(schema.map(f =>
+        if (f.name == field.name) f.copy(dataType = newType) else f))
+      Commit(v, Seq.empty, Seq.empty, "widenColumn", -1L,
+        schemaDdl = Some(newSchema.toDDL), bloomRemove = blRem)
     }
-    throw new IllegalStateException(
-      s"txlog widenColumn on $table lost 10 straight races — giving up")
-  }
 
   /** The widening matrix the parquet reader up-converts natively
     * (Delta's type-widening set; each pair probe-verified on this
@@ -1988,26 +1989,6 @@ object TxLog {
         b.scale >= a.scale && b.precision - b.scale >= a.precision - a.scale
       case _ => false
     }
-  }
-
-  /** Data-less metadata commit with optimistic retry (the
-    * [[dropConstraint]] loop, shared by the column-mapping DDL).
-    * `properties` rides the same commit so a RENAME/DROP can carry its
-    * declared-column-list rewrites atomically with the schema change. */
-  private def metadataCommitLoop(table: String, op: String,
-      schemaDdl: Option[String] = None,
-      colMap: Option[Seq[(String, String)]] = None,
-      properties: Map[String, Option[String]] = Map.empty): Long = {
-    var attempts = 0
-    while (attempts < 10) {
-      val v = latestVersion(table).getOrElse(0L) + 1
-      if (tryCommit(table, Commit(v, Seq.empty, Seq.empty, op, -1L,
-        schemaDdl = schemaDdl, colMap = colMap,
-        properties = properties))) return v
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"txlog $op on $table lost 10 straight races — giving up")
   }
 
   private val ColListProps = Seq("graft.partition.columns",
@@ -2168,15 +2149,10 @@ object TxLog {
     require(constraints(table).contains(name),
       s"no CHECK constraint '$name' on $table " +
         s"(active: ${constraints(table).keys.mkString(", ")})")
-    var attempts = 0
-    while (attempts < 10) {
-      val v = latestVersion(table).getOrElse(0L) + 1
-      if (tryCommit(table, Commit(v, Seq.empty, Seq.empty, "dropConstraint",
-        -1L, constraint = Some(name -> "")))) return v
-      attempts += 1
+    commitNext(table, "dropConstraint") { v =>
+      Commit(v, Seq.empty, Seq.empty, "dropConstraint", -1L,
+        constraint = Some(name -> ""))
     }
-    throw new IllegalStateException(
-      s"txlog dropConstraint on $table lost 10 straight races — giving up")
   }
 
   /** Table properties as of `asOf` (Delta TBLPROPERTIES): folded
@@ -2270,41 +2246,30 @@ object TxLog {
     * shows no changes; row-tracking ids materialize through the rewrite
     * like every DML path. Returns the new version, or None when every
     * active file already carries the declared layout (no commit). */
-  def migrateLayout(spark: SparkSession, table: String): Option[Long] = {
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
-      if (base.isEmpty) return None
-      val files = activeFiles(table, base)
+  def migrateLayout(spark: SparkSession, table: String): Option[Long] =
+    optimistic(table, "migrateLayout") { base =>
+      val files = base.fold(Seq.empty[String])(_ => activeFiles(table, base))
       val phys = declaredPartitionCols(table).map(physOf(mappingAsOf(table)))
-      if (phys.isEmpty) return None
-      val legacy = files.filter { f =>
+      val legacy = if (phys.isEmpty) Seq.empty else files.filter { f =>
         val carried = partValuesOf(f).map(_._1).toSet
         !phys.forall(carried.contains)
       }
-      if (legacy.isEmpty) return None
-      val tracking = rowTrackingEnabled(table, base)
-      val rows = readFiles(spark, table, legacy, base, withRowIds = tracking)
-      if (commitRewrite(spark, table, base, files, legacy, rows, "optimize"))
-        return Some(base.get + 1)
-      attempts += 1
+      if (legacy.isEmpty) Some(None)
+      else {
+        val tracking = rowTrackingEnabled(table, base)
+        val rows = readFiles(spark, table, legacy, base, withRowIds = tracking)
+        Option.when(commitRewrite(spark, table, base, files, legacy, rows,
+          "optimize"))(Some(base.get + 1))
+      }
     }
-    throw new IllegalStateException(
-      s"txlog migrateLayout on $table lost 10 straight races — giving up")
-  }
 
   private def commitProperties(table: String,
       deltas: Map[String, Option[String]]): Long = {
     require(deltas.nonEmpty, "setProperties needs at least one property")
-    var attempts = 0
-    while (attempts < 10) {
-      val v = latestVersion(table).getOrElse(0L) + 1
-      if (tryCommit(table, Commit(v, Seq.empty, Seq.empty, "setProperty",
-        -1L, properties = deltas))) return v
-      attempts += 1
+    commitNext(table, "setProperties") { v =>
+      Commit(v, Seq.empty, Seq.empty, "setProperty", -1L,
+        properties = deltas)
     }
-    throw new IllegalStateException(
-      s"txlog setProperties on $table lost 10 straight races — giving up")
   }
 
   /** ALTER TABLE ADD CONSTRAINT analog: a named CHECK every row of every
@@ -2312,21 +2277,17 @@ object TxLog {
     * (Delta's behavior — a constraint the current table violates is
     * refused), then the constraint rides the log as a data-less commit so
     * every future writer — including one on another driver — sees and
-    * enforces it. */
+    * enforces it. The validation reads exactly the snapshot the commit
+    * lands on (version `v - 1`): a row appended after it takes `v`, so
+    * this commit loses the race and the retry validates again. */
   def addConstraint(spark: SparkSession, table: String, name: String,
-      expr: String): Long = {
-    if (latestVersion(table).isDefined)
-      validateConstraints(read(spark, table), Map(name -> expr))
-    var attempts = 0
-    while (attempts < 10) {
-      val v = latestVersion(table).getOrElse(0L) + 1
-      if (tryCommit(table, Commit(v, Seq.empty, Seq.empty, "addConstraint",
-        -1L, constraint = Some(name -> expr)))) return v
-      attempts += 1
+      expr: String): Long =
+    commitNext(table, "addConstraint") { v =>
+      if (v > 1)
+        validateConstraints(read(spark, table, Some(v - 1)), Map(name -> expr))
+      Commit(v, Seq.empty, Seq.empty, "addConstraint", -1L,
+        constraint = Some(name -> expr))
     }
-    throw new IllegalStateException(
-      s"txlog addConstraint on $table lost 10 straight races — giving up")
-  }
 
   /** Reject the write if any row violates any active constraint. One
     * predicated scan of the incoming batch per write (Delta folds this
@@ -2436,35 +2397,37 @@ object TxLog {
       s"declareIdentityColumn $colName on $table: the table already has " +
         "data files — identity columns must be declared before the first " +
         "write (rows written without row ids would read NULL identity)")
-    val schema = schemaAsOf(table).getOrElse(throw
-      new IllegalArgumentException(
-        s"txlog table $table has no logged schema — CREATE the table " +
-          "(TxLog.createTable) before declaring an identity column"))
+    require(schemaAsOf(table).nonEmpty,
+      s"txlog table $table has no logged schema — CREATE the table " +
+        "(TxLog.createTable) before declaring an identity column")
     if (!properties(table).get("graft.rowTracking.enabled").contains("true"))
       enableRowTracking(table)
-    schema.fields.find(_.name.equalsIgnoreCase(colName)) match {
-      case Some(f) =>
-        // CREATE TABLE (… id BIGINT GENERATED ALWAYS AS IDENTITY …):
-        // the column is already in the created schema — declaring is a
-        // property-only commit (the table is empty, required above)
-        require(f.dataType == org.apache.spark.sql.types.LongType,
-          s"identity column ${f.name} on $table must be BIGINT, " +
-            s"got ${f.dataType.simpleString}")
-        metadataCommitLoop(table, "identityColumn",
-          properties =
-            Map(s"graft.identity.${f.name}" -> Some(s"$start,$step")))
-      case None =>
-        val newSchema = org.apache.spark.sql.types.StructType(
-          schema :+ org.apache.spark.sql.types.StructField(colName,
-            org.apache.spark.sql.types.LongType, nullable = true))
-        val newMap = mappingAsOf(table).map { m =>
-          schema.fieldNames.toSeq.map(n => n -> m.getOrElse(n, n)) :+
-            (colName -> freshPhysName(table))
-        }
-        metadataCommitLoop(table, "identityColumn",
-          schemaDdl = Some(newSchema.toDDL), colMap = newMap,
-          properties =
-            Map(s"graft.identity.$colName" -> Some(s"$start,$step")))
+    commitNext(table, "identityColumn") { v =>
+      val schema = schemaAsOf(table).get
+      schema.fields.find(_.name.equalsIgnoreCase(colName)) match {
+        case Some(f) =>
+          // CREATE TABLE (… id BIGINT GENERATED ALWAYS AS IDENTITY …):
+          // the column is already in the created schema — declaring is a
+          // property-only commit (the table is empty, required above)
+          require(f.dataType == org.apache.spark.sql.types.LongType,
+            s"identity column ${f.name} on $table must be BIGINT, " +
+              s"got ${f.dataType.simpleString}")
+          Commit(v, Seq.empty, Seq.empty, "identityColumn", -1L,
+            properties =
+              Map(s"graft.identity.${f.name}" -> Some(s"$start,$step")))
+        case None =>
+          val newSchema = org.apache.spark.sql.types.StructType(
+            schema :+ org.apache.spark.sql.types.StructField(colName,
+              org.apache.spark.sql.types.LongType, nullable = true))
+          val newMap = mappingAsOf(table).map { m =>
+            schema.fieldNames.toSeq.map(n => n -> m.getOrElse(n, n)) :+
+              (colName -> freshPhysName(table))
+          }
+          Commit(v, Seq.empty, Seq.empty, "identityColumn", -1L,
+            schemaDdl = Some(newSchema.toDDL), colMap = newMap,
+            properties =
+              Map(s"graft.identity.$colName" -> Some(s"$start,$step")))
+      }
     }
   }
 
@@ -2983,21 +2946,98 @@ object TxLog {
   }
 
   /** Snapshot of the metadata a writer derives its commit from: logical
-    * schema DDL + column mapping. Compared across retry attempts. */
-  private[graft] def metaFingerprint(table: String)
-      : (Option[String], Option[Map[String, String]]) =
-    (schemaAsOf(table).map(_.toDDL), mappingAsOf(table))
+    * column names and types + column mapping. Compared across retry
+    * attempts. Nullability is left out (`catalogString` omits it): NOT
+    * NULL is enforced as a CHECK constraint, never through the schema's
+    * nullability flags, and data rewrites (merge, optimize) re-record
+    * whatever nullability their frame carries — a flip there is not a
+    * concurrent schema change. */
+  private[graft] def metaFingerprint(table: String,
+      asOf: Option[Long] = None): MetaFingerprint =
+    (schemaAsOf(table, asOf).map(_.catalogString), mappingAsOf(table, asOf))
 
-  /** Refuse the retry when the table's schema/mapping no longer matches
-    * the snapshot this writer staged under (Delta's
-    * ConcurrentMetadataChange rule — see [[commitLoop]]). */
+  private[graft] type MetaFingerprint =
+    (Option[String], Option[Map[String, String]])
+
+  /** Refuse the commit when the table's schema/mapping as of `asOf`
+    * (latest by default) no longer matches the snapshot this writer
+    * staged under (Delta's ConcurrentMetadataChange rule — see
+    * [[optimistic]]). */
   private[graft] def refuseIfMetaChanged(table: String, op: String,
-      meta0: (Option[String], Option[Map[String, String]])): Unit =
-    if (metaFingerprint(table) != meta0)
+      meta0: MetaFingerprint, asOf: Option[Long] = None): Unit =
+    if (metaFingerprint(table, asOf) != meta0)
       throw new ConcurrentWriteException(
         s"txlog $op on $table: a concurrent commit changed the table " +
           "schema or column mapping during this write — re-read the " +
           "table and retry the operation (concurrent metadata change)")
+
+  /** Jittered exponential backoff between optimistic-retry attempts
+    * (Delta's commit backoff), applied by [[optimistic]] to every verb:
+    * a data-rewriting writer re-stages its touched files on EVERY
+    * attempt, so against a fast small-commit writer it can lose every
+    * race in lockstep — before backoff, the two-writer spec saw `update`
+    * give up after ten lost races under exactly that starvation. A
+    * bounded random pause desynchronizes the writers; attempt 0 never
+    * sleeps, the cap stays well under a second. */
+  private def retryBackoff(attempt: Int): Unit =
+    if (attempt > 0) {
+      val cap = math.min(400L, 25L << math.min(attempt, 4))
+      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
+        .nextLong(cap / 2, cap + 1))
+    }
+
+  /** The one optimistic-commit path every mutating verb runs through.
+    * Each attempt reads the base version and hands it to `attempt`, which
+    * derives its commit from that snapshot and publishes it at base + 1:
+    * Some(result) when it committed or had nothing to do, None when it
+    * lost the version race. Conflict rules that depend on the verb's
+    * read set ([[checkFileConflicts]], [[checkPartitionConflicts]], the
+    * replay guard in [[tryCommit]]) stay in the verb.
+    *
+    * Metadata fingerprint: `stagedUnder` is the schema/mapping the verb
+    * derived from — taken here at entry unless the verb staged its
+    * schemaDdl / colMap / data files earlier and passes the fingerprint
+    * it read first. Every attempt compares it against the fingerprint AT
+    * ITS BASE, after the backoff: a commit at base + 1 only lands when
+    * nothing landed past base, so a stale schemaDdl/colMap can never
+    * publish. A mismatch means a concurrent RENAME/DROP/ADD COLUMN (or
+    * evolving writer) landed — re-committing would silently REVERT it
+    * (newest wins the fold), so the verb refuses instead, like Delta's
+    * ConcurrentMetadataChange, which fails every concurrent transaction
+    * on a metadata change (a verb that would re-derive cleanly refuses
+    * too: one rule, not a per-verb judgement). Every retry backs off
+    * ([[retryBackoff]]); ten lost races give up. */
+  private def optimistic[R](table: String, op: String,
+      stagedUnder: Option[MetaFingerprint] = None)(
+      attempt: Option[Long] => Option[R]): R = {
+    val meta0 = stagedUnder.getOrElse(metaFingerprint(table))
+    var attempts = 0
+    while (attempts < 10) {
+      retryBackoff(attempts)
+      val base = latestVersion(table)
+      refuseIfMetaChanged(table, op, meta0, base)
+      attempt(base) match {
+        case Some(r) => return r
+        case None => attempts += 1
+      }
+    }
+    throw new IllegalStateException(
+      s"txlog $op on $table lost 10 straight races — giving up")
+  }
+
+  /** [[optimistic]] for a commit with no conflict rule of its own — the
+    * data-less ones (schema, mapping, properties, constraints, protocol)
+    * and those whose data is staged up front (append, convert). `mk`
+    * builds the commit for version `v` inside each attempt, so whatever
+    * it reads is at least as new as the base `v - 1`: a commit that
+    * landed in between makes `v` taken and the attempt retry. */
+  private def commitNext(table: String, op: String,
+      stagedUnder: Option[MetaFingerprint] = None)(mk: Long => Commit)
+      : Long =
+    optimistic(table, op, stagedUnder) { base =>
+      val v = base.getOrElse(0L) + 1
+      if (tryCommit(table, mk(v))) Some(v) else None
+    }
 
   private def commitLoop(table: String, add: Seq[String],
       removeAll: Boolean, op: String, batchId: Long,
@@ -3007,35 +3047,20 @@ object TxLog {
       bloomAdd: Seq[String] = Seq.empty,
       colMap: Option[Seq[(String, String)]] = None,
       copySources: Seq[String] = Seq.empty,
-      extraProps: Map[String, Option[String]] = Map.empty): Long = {
-    // Metadata fingerprint at entry: the caller derived its schemaDdl /
-    // colMap / staged files from THIS snapshot. If a retry after a lost
-    // race sees a different schema or column mapping, a concurrent
-    // RENAME/DROP/ADD COLUMN (or evolving writer) landed in between —
-    // blindly re-committing the stale schemaDdl/colMap at a higher
-    // version would silently REVERT that metadata change (newest wins
-    // the fold). Refuse instead, like Delta's ConcurrentMetadataChange.
-    val meta0 = metaFingerprint(table)
-    var attempts = 0
-    while (attempts < 10) {
-      if (attempts > 0) refuseIfMetaChanged(table, op, meta0)
-      val v = latestVersion(table).getOrElse(0L) + 1
+      extraProps: Map[String, Option[String]] = Map.empty,
+      stagedUnder: MetaFingerprint): Long =
+    commitNext(table, op, Some(stagedUnder)) { v =>
       val remove = if (removeAll) activeFiles(table) else Seq.empty
       // a full rewrite retires every active DV with the files it covered,
       // and every bloom sidecar (nothing they index survives)
       val dvRem = if (removeAll) activeDvs(table) else Seq.empty
       val blRem = if (removeAll) activeBlooms(table) else Seq.empty
-      if (tryCommit(table, Commit(v, add, remove, op, batchId, stats._1,
-          schemaDdl, dvRemove = dvRem, sstats = stats._2,
-          streamId = streamId, bloomAdd = bloomAdd, bloomRemove = blRem,
-          colMap = colMap, copySources = copySources,
-          properties = extraProps)))
-        return v
-      attempts += 1
+      Commit(v, add, remove, op, batchId, stats._1,
+        schemaDdl, dvRemove = dvRem, sstats = stats._2,
+        streamId = streamId, bloomAdd = bloomAdd, bloomRemove = blRem,
+        colMap = colMap, copySources = copySources,
+        properties = extraProps)
     }
-    throw new IllegalStateException(
-      s"txlog commit on $table lost 10 straight races — giving up")
-  }
 
   /** Append `df` as a new version; returns the committed version. With
     * `statsCols`, per-file min/max of those columns ride the commit for
@@ -3048,6 +3073,10 @@ object TxLog {
       bloomCols: Seq[String] = Seq.empty,
       extraProps: Map[String, Option[String]] = Map.empty): Long = {
     refuseReservedCols(df0)
+    // the schema/mapping this write stages under — read BEFORE deriving,
+    // so a concurrent schema change during the data write refuses the
+    // commit instead of being reverted by it (see [[optimistic]])
+    val meta0 = metaFingerprint(table)
     val df = applyGenerated(stripOrRefuseIdentity(df0, table), table)
     val schema = resolveSchema(table, df, mergeSchema)
     validateConstraints(df, constraints(table))
@@ -3069,7 +3098,7 @@ object TxLog {
       Some(schema.toDDL), streamId,
       fileBlooms(df.sparkSession, table, add,
         effectiveBloomCols(df, table, bloomCols), mapping),
-      colMap = colMap, extraProps = extraProps)
+      colMap = colMap, extraProps = extraProps, stagedUnder = meta0)
   }
 
   /** The columns this write should bloom-index: the caller's explicit
@@ -3137,6 +3166,7 @@ object TxLog {
       bloomCols: Seq[String] = Seq.empty,
       extraProps: Map[String, Option[String]] = Map.empty): Long = {
     refuseReservedCols(df0)
+    val meta0 = metaFingerprint(table) // staged-under, as in [[append]]
     val df = applyGenerated(stripOrRefuseIdentity(df0, table), table)
     if (!mergeSchema) resolveSchema(table, df, mergeSchema = true) // type check only
     validateConstraints(df, constraints(table))
@@ -3159,7 +3189,7 @@ object TxLog {
       Some(df.schema.toDDL), streamId,
       fileBlooms(df.sparkSession, table, add,
         effectiveBloomCols(df, table, bloomCols), mapping),
-      colMap = colMap, extraProps = extraProps)
+      colMap = colMap, extraProps = extraProps, stagedUnder = meta0)
   }
 
   /** Dynamic partition overwrite (Spark's `partitionOverwriteMode=
@@ -3283,6 +3313,7 @@ object TxLog {
       statsCols: Seq[String] = Seq.empty, batchId: Long = -1L,
       streamId: Option[String] = None): Long = {
     refuseReservedCols(df0)
+    val meta0 = metaFingerprint(table) // staged-under, as in [[append]]
     val df = applyGenerated(stripOrRefuseIdentity(df0, table), table)
     val spark = df.sparkSession
     val partCols = declaredCols(table, "graft.partition.columns")
@@ -3305,9 +3336,7 @@ object TxLog {
       effectiveStatsCols(df, table, statsCols))
     val bloomAdd = fileBlooms(spark, table, add,
       effectiveBloomCols(df, table, Seq.empty))
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+    optimistic(table, "overwritePartitions", Some(meta0)) { base =>
       val active = activeFiles(table, base)
       // a file whose path lacks ANY current declared partition column —
       // pre-partitioning files AND files from an EVOLVED-AWAY layout
@@ -3336,16 +3365,13 @@ object TxLog {
           dvRemove = dvRemove, streamId = streamId,
           bloomAdd = bloomAdd, bloomRemove = bi.inert(keep)))
       } finally bi.release()
-      if (won) return v
       // lost the race: commits landed past `base`. Disjoint-partition
       // writers re-derive (metadata-only — the data files are already
       // staged) and commit on the next version; under serializable
       // isolation a TRUE conflict on this writer's tuples refuses here.
-      checkPartitionConflicts(table, base, touched, physPartCols)
-      attempts += 1
+      if (!won) checkPartitionConflicts(table, base, touched, physPartCols)
+      Option.when(won)(v)
     }
-    throw new IllegalStateException(
-      s"txlog overwritePartitions on $table lost 10 straight races — giving up")
   }
 
   /** SHOW PARTITIONS analog: the snapshot's distinct partition tuples
@@ -4087,9 +4113,8 @@ object TxLog {
     validateConstraints(updates, constraints(table))
     val keyBounds = mergeKeyBounds(updates, keyCols) // snapshot-independent
     val keyProbes = mergeKeyProbes(updates, keyCols) // snapshot-independent
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+    // lost the race: a new snapshot exists, re-merge against it
+    optimistic(table, "merge") { base =>
       val allActive = base.map(_ => activeFiles(table, base)).getOrElse(Seq.empty)
       // Stats-pruned MERGE: only files whose recorded key range intersects
       // the batch's key bounds are rewritten — for a key-clustered table
@@ -4108,7 +4133,7 @@ object TxLog {
       // ONE sidecar read per attempt serves all three bloom questions
       // (survivors, indexed cols, inertness) — see [[BloomIndex]]
       val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val won = try {
+      try {
         val touched =
           refineTouchedByBlooms(table, rangeTouched, keyProbes,
             updates, base, bi)
@@ -4185,11 +4210,7 @@ object TxLog {
           dvRemove = dvRemove, streamId = streamId,
           bloomAdd = blAdd, bloomRemove = blRemove))) Some(v) else None
       } finally bi.release()
-      if (won.nonEmpty) return won.get
-      attempts += 1 // lost the race: new snapshot exists, re-merge against it
     }
-    throw new IllegalStateException(
-      s"txlog merge on $table lost 10 straight races — giving up")
   }
 
   /** foreachBatch adapter: replay-idempotent streaming MERGE. A batch id
@@ -4298,9 +4319,8 @@ object TxLog {
     // misses those bounds hold no challengeable rows and stay in place
     val keyBounds = mergeKeyBounds(changes, keyCols)
     val keyProbes = mergeKeyProbes(changes, keyCols)
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+    // lost the race: re-apply against the new snapshot
+    optimistic(table, "applyChanges") { base =>
       val allActive = base.map(_ => activeFiles(table, base)).getOrElse(Seq.empty)
       val rangeTouched =
         if (base.isEmpty) Seq.empty
@@ -4310,7 +4330,7 @@ object TxLog {
         }
       // ONE sidecar read per attempt, as in [[merge]]
       val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val won = try {
+      try {
         val touched =
           refineTouchedByBlooms(table, rangeTouched, keyProbes,
             changes, base, bi)
@@ -4383,11 +4403,7 @@ object TxLog {
           dvRemove = dvRemove, streamId = streamId,
           bloomAdd = blAdd, bloomRemove = blRemove))) Some(v) else None
       } finally bi.release()
-      if (won.nonEmpty) return won.get
-      attempts += 1 // lost the race: re-apply against the new snapshot
     }
-    throw new IllegalStateException(
-      s"txlog applyChanges on $table lost 10 straight races — giving up")
   }
 
   /** foreachBatch adapter for [[applyChanges]] — (streamId, batchId)-
@@ -4450,74 +4466,70 @@ object TxLog {
       .agg(min(col(versionCol)).cast("long").alias("__scd_first"))
     val keyBounds = mergeKeyBounds(changes, keyCols)
     val keyProbes = mergeKeyProbes(changes, keyCols)
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+    optimistic(table, "applyChangesScd2") { base =>
       if (base.isEmpty || activeFiles(table, base).isEmpty)
-        return append(newRows, table, batchId = batchId,
-          streamId = streamId)
-      val allActive = activeFiles(table, base)
-      val ranged = keyBounds match {
-        case Some(b) => filesForKeyBounds(table, b, base)
-        case None => allActive
+        Some(append(newRows, table, batchId = batchId,
+          streamId = streamId))
+      else {
+        val allActive = activeFiles(table, base)
+        val ranged = keyBounds match {
+          case Some(b) => filesForKeyBounds(table, b, base)
+          case None => allActive
+        }
+        val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+        try {
+          val candidates = refineTouchedByBlooms(table, ranged, keyProbes,
+            changes, base, bi)
+          // exact: files holding ANY row for a batch key. Not just open
+          // rows — a key whose chain is fully CLOSED must still be found,
+          // or a late event for it would silently append an overlapping
+          // "current" row instead of hitting the sequence guard below.
+          val touchedRel =
+            if (candidates.isEmpty) Set.empty[String]
+            else readFiles(spark, table, candidates, base,
+                keepRowKeys = true)
+              .join(firstVer, keyCols, "left_semi")
+              .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
+          val touched = candidates.filter(f =>
+            touchedRel.contains(fileKey(f)))
+          val tracking = rowTrackingEnabled(table, base)
+          val rewritten =
+            if (touched.isEmpty) newRows
+            else {
+              val cur = readFiles(spark, table, touched, base,
+                withRowIds = tracking)
+              // the per-key digest is batch-sized: broadcast it
+              val closed = cur.join(broadcast(firstVer), keyCols, "left")
+                .withColumn("__end_at",
+                  when(col("__end_at").isNull && col("__scd_first").isNotNull,
+                    col("__scd_first")).otherwise(col("__end_at")))
+              // out-of-order guard: the batch's first sequence per key
+              // must be at or after EVERY sequence the key has seen —
+              // open-row starts AND closed-chain ends (a late event for a
+              // fully-closed key would otherwise silently append an
+              // overlapping "current" row). repairScd2 is the remedy.
+              val bad = closed
+                .filter(col("__scd_first") <
+                  greatest(col("__start_at"),
+                    coalesce(col("__end_at"), col("__start_at")))).limit(1)
+              if (!bad.isEmpty) throw new IllegalArgumentException(
+                s"applyChangesScd2 on $table: batch sequence values " +
+                  "precede sequences this key's history already carries — " +
+                  "per-key sequences must be non-decreasing across batches; " +
+                  "use repairScd2 to splice late events (offending row: " +
+                  bad.collect().mkString(", ") + ")")
+              val newIn =
+                if (tracking)
+                  newRows.withColumn(RowIdCol, lit(null).cast("long"))
+                else newRows
+              closed.drop("__scd_first").unionByName(newIn)
+            }
+          Option.when(commitRewrite(spark, table, base, allActive, touched,
+            rewritten, "scd2", batchId = batchId,
+            streamId = streamId))(base.get + 1)
+        } finally bi.release()
       }
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val won = try {
-        val candidates = refineTouchedByBlooms(table, ranged, keyProbes,
-          changes, base, bi)
-        // exact: files holding ANY row for a batch key. Not just open
-        // rows — a key whose chain is fully CLOSED must still be found,
-        // or a late event for it would silently append an overlapping
-        // "current" row instead of hitting the sequence guard below.
-        val touchedRel =
-          if (candidates.isEmpty) Set.empty[String]
-          else readFiles(spark, table, candidates, base,
-              keepRowKeys = true)
-            .join(firstVer, keyCols, "left_semi")
-            .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
-        val touched = candidates.filter(f =>
-          touchedRel.contains(fileKey(f)))
-        val tracking = rowTrackingEnabled(table, base)
-        val rewritten =
-          if (touched.isEmpty) newRows
-          else {
-            val cur = readFiles(spark, table, touched, base,
-              withRowIds = tracking)
-            // the per-key digest is batch-sized: broadcast it
-            val closed = cur.join(broadcast(firstVer), keyCols, "left")
-              .withColumn("__end_at",
-                when(col("__end_at").isNull && col("__scd_first").isNotNull,
-                  col("__scd_first")).otherwise(col("__end_at")))
-            // out-of-order guard: the batch's first sequence per key
-            // must be at or after EVERY sequence the key has seen —
-            // open-row starts AND closed-chain ends (a late event for a
-            // fully-closed key would otherwise silently append an
-            // overlapping "current" row). repairScd2 is the remedy.
-            val bad = closed
-              .filter(col("__scd_first") <
-                greatest(col("__start_at"),
-                  coalesce(col("__end_at"), col("__start_at")))).limit(1)
-            if (!bad.isEmpty) throw new IllegalArgumentException(
-              s"applyChangesScd2 on $table: batch sequence values " +
-                "precede sequences this key's history already carries — " +
-                "per-key sequences must be non-decreasing across batches; " +
-                "use repairScd2 to splice late events (offending row: " +
-                bad.collect().mkString(", ") + ")")
-            val newIn =
-              if (tracking)
-                newRows.withColumn(RowIdCol, lit(null).cast("long"))
-              else newRows
-            closed.drop("__scd_first").unionByName(newIn)
-          }
-        if (commitRewrite(spark, table, base, allActive, touched,
-            rewritten, "scd2", batchId = batchId, streamId = streamId)) true
-        else false
-      } finally bi.release()
-      if (won) return base.get + 1
-      attempts += 1
     }
-    throw new IllegalStateException(
-      s"txlog applyChangesScd2 on $table lost 10 straight races — giving up")
   }
 
   /** Retro-fix for LATE events ([[applyChangesScd2]] refuses them):
@@ -4547,9 +4559,7 @@ object TxLog {
     val lateKeys = lateChanges.select(keyCols.map(col): _*).distinct()
     val keyBounds = mergeKeyBounds(lateChanges, keyCols)
     val keyProbes = mergeKeyProbes(lateChanges, keyCols)
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+    optimistic(table, "repairScd2") { base =>
       require(base.nonEmpty && activeFiles(table, base).nonEmpty,
         s"repairScd2 on empty txlog table $table — use applyChangesScd2")
       val allActive = activeFiles(table, base)
@@ -4558,7 +4568,7 @@ object TxLog {
         case None => allActive
       }
       val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val won = try {
+      try {
         val candidates = refineTouchedByBlooms(table, ranged, keyProbes,
           lateChanges, base, bi)
         // ANY row of an affected key touches (history rewrites whole
@@ -4612,14 +4622,10 @@ object TxLog {
             rebuilt.withColumn(RowIdCol, lit(null).cast("long"))
           else rebuilt
         val rewritten = untouched.unionByName(rebuiltIn)
-        commitRewrite(spark, table, base, allActive, touched, rewritten,
-          "scd2")
+        Option.when(commitRewrite(spark, table, base, allActive, touched,
+          rewritten, "scd2"))(base.get + 1)
       } finally bi.release()
-      if (won) return base.get + 1
-      attempts += 1
     }
-    throw new IllegalStateException(
-      s"txlog repairScd2 on $table lost 10 straight races — giving up")
   }
 
   /** foreachBatch adapter for [[applyChangesScd2]] — (streamId, batchId)
@@ -4799,8 +4805,8 @@ object TxLog {
     }
     if (c.add.isEmpty && c.remove.isEmpty && c.dvAdd.isEmpty) return empty()
     c.op match {
-      case "optimize" | "optimizeDvs" | "addConstraint" | "reorg" =>
-        empty() // layout/metadata only: no logical row changed
+      case op if LayoutOnlyOps(op) =>
+        empty() // layout only: no logical row changed
       case _ =>
         val bootstrap = c.op == "clone" ||
           !commits(table).exists(p => p.version < version &&
@@ -4891,7 +4897,7 @@ object TxLog {
     val parts = window.flatMap { c =>
       if (c.add.isEmpty && c.remove.isEmpty && c.dvAdd.isEmpty) Nil
       else c.op match {
-        case "optimize" | "optimizeDvs" | "reorg" => Nil
+        case op if LayoutOnlyOps(op) => Nil
         case _ =>
           val bootstrap = c.op == "clone" ||
             !all.exists(p => p.version < c.version &&
@@ -4925,28 +4931,10 @@ object TxLog {
     * the affected set. Cost is scan + rewrite-of-affected-files, not a
     * table rewrite — with clustered layout (see [[optimize]]) a selective
     * predicate touches few files. */
-  /** Jittered exponential backoff between optimistic-retry attempts
-    * (Delta's commit backoff): a data-rewriting writer re-stages its
-    * touched files on EVERY attempt, so against a fast small-commit
-    * writer it can lose every race in lockstep — the pre-backoff
-    * two-writer spec reproduced `update … lost 10 straight races` under
-    * exactly that starvation. A bounded random pause desynchronizes the
-    * writers; attempt 0 never sleeps, the cap stays well under a
-    * second. */
-  private def retryBackoff(attempt: Int): Unit =
-    if (attempt > 0) {
-      val cap = math.min(400L, 25L << math.min(attempt, 4))
-      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(cap / 2, cap + 1))
-    }
-
   private def copyOnWrite(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column, op: String)(
-      rewrite: DataFrame => DataFrame): Long = {
-    var attempts = 0
-    while (attempts < 10) {
-      retryBackoff(attempts)
-      val base = latestVersion(table)
+      rewrite: DataFrame => DataFrame): Long =
+    optimistic(table, op) { base =>
       require(base.nonEmpty, s"$op on empty txlog table $table")
       val files = activeFiles(table, base)
       // one scan finds the files containing any LIVE matching row (the
@@ -4962,28 +4950,30 @@ object TxLog {
       // resolves both relative entries and absolute (shallow-clone)
       // entries — no linear suffix scan over the active set
       val touched = files.filter(f => touchedRel.contains(fileKey(f)))
-      if (touched.isEmpty) return base.get // nothing matches: no new version
-      // DV-filtered like every other scan: rewriting a touched file must
-      // not resurrect rows an active deletion vector already killed.
-      // Row tracking: surviving rows carry their ids into the rewrite
-      // (materialized into the new files by writeData).
-      val touchedDf = readFiles(spark, table, touched, base,
-        withRowIds = rowTrackingEnabled(table, base))
-      val rewritten = rewrite(touchedDf)
-      if (commitRewrite(spark, table, base, files, touched, rewritten, op))
-        return base.get + 1
-      // lost the race: serializable writers refuse when the winner
-      // touched the same files; disjoint (or default-isolation) writers
-      // re-derive the touched set against the new snapshot and retry
-      checkFileConflicts(table, base, touched.map(fileKey).toSet, op)
-      attempts += 1
+      if (touched.isEmpty) Some(base.get) // nothing matches: no new version
+      else {
+        // DV-filtered like every other scan: rewriting a touched file must
+        // not resurrect rows an active deletion vector already killed.
+        // Row tracking: surviving rows carry their ids into the rewrite
+        // (materialized into the new files by writeData).
+        val touchedDf = readFiles(spark, table, touched, base,
+          withRowIds = rowTrackingEnabled(table, base))
+        val won = commitRewrite(spark, table, base, files, touched,
+          rewrite(touchedDf), op)
+        // lost the race: serializable writers refuse when the winner
+        // touched the same files; disjoint (or default-isolation) writers
+        // re-derive the touched set against the new snapshot and retry
+        if (!won) checkFileConflicts(table, base, touched.map(fileKey).toSet, op)
+        Option.when(won)(base.get + 1)
+      }
     }
-    throw new IllegalStateException(
-      s"txlog $op on $table lost 10 straight races — giving up")
-  }
 
-  /** Shared commit tail for every row-level rewrite (UPDATE / DELETE /
-    * MERGE INTO): constraint-validate and write the rewritten rows,
+  /** Shared commit tail for every file-set rewrite (UPDATE / DELETE /
+    * MERGE INTO / SCD2, and the partial compactions: layout migration,
+    * OPTIMIZE WHERE, DV compaction, REORG PURGE — full [[optimize]] and
+    * [[compactSelected]] keep their own tails for their explicit
+    * bloom/stats columns): constraint-validate (DML only — layout-only
+    * ops skip it) and write the rewritten rows,
     * retire DVs and bloom sidecars that referenced only rewritten files,
     * re-record declared stats/bloom metadata on the outputs, and attempt
     * the commit. Returns false when the version race was lost (caller
@@ -5003,9 +4993,16 @@ object TxLog {
     // only the touched files' rewrite is scanned. GENERATED ALWAYS
     // columns are enforced the same way: an UPDATE that changes a base
     // column without recomputing the generated one refuses rather than
-    // committing a row where the column silently lies.
-    val rewritten = applyGenerated(rewritten0, table)
-    validateConstraints(rewritten, constraints(table))
+    // committing a row where the column silently lies. Layout-only
+    // rewrites (compactions) move rows without changing a value, so they
+    // skip both scans.
+    val rewritten =
+      if (LayoutOnlyOps(op)) rewritten0
+      else {
+        val r = applyGenerated(rewritten0, table)
+        validateConstraints(r, constraints(table))
+        r
+      }
     // schema-evolving MERGE on a mapped table passes its extended
     // mapping; everything else stages under the committed one
     val mapping =
@@ -5081,9 +5078,7 @@ object TxLog {
         "WHERE predicate (Delta's replaceWhere constraint) — got e.g. " +
         offending.collect().mkString(", "))
     if (latestVersion(table).isEmpty) return append(df, table)
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+    optimistic(table, "replaceWhere") { base =>
       val files = activeFiles(table, base)
       // same touched-file search as copyOnWrite: one metadata-sized
       // collect of the files holding any LIVE matching row
@@ -5107,15 +5102,12 @@ object TxLog {
         else readFiles(spark, table, touched, base, withRowIds = tracking)
           .filter(!coalesce(condition, lit(false)))
           .unionByName(incoming)
-      if (commitRewrite(spark, table, base, files, touched, rewritten,
-          "replaceWhere"))
-        return base.get + 1
-      checkFileConflicts(table, base, touched.map(fileKey).toSet,
+      val won = commitRewrite(spark, table, base, files, touched, rewritten,
         "replaceWhere")
-      attempts += 1
+      if (!won) checkFileConflicts(table, base, touched.map(fileKey).toSet,
+        "replaceWhere")
+      Option.when(won)(base.get + 1)
     }
-    throw new IllegalStateException(
-      s"txlog replaceWhere on $table lost 10 straight races — giving up")
   }
 
   /** DELETE WHERE via deletion vectors (protocol v2; Delta's DV feature):
@@ -5134,10 +5126,8 @@ object TxLog {
     * files. DVs accumulate until a rewrite ([[optimize]] / merge /
     * overwrite / [[optimizeDvs]]) materializes and retires them. */
   def deleteVectors(spark: SparkSession, table: String,
-      condition: org.apache.spark.sql.Column): Long = {
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+      condition: org.apache.spark.sql.Column): Long =
+    optimistic(table, "dvDelete") { base =>
       require(base.nonEmpty, s"dvDelete on empty txlog table $table")
       val w = Window.partitionBy(col("file")).orderBy(col("ri"))
       val hits = readFiles(spark, table, activeFiles(table, base), base,
@@ -5186,22 +5176,24 @@ object TxLog {
       if (covered.isEmpty) {
         org.apache.commons.io.FileUtils.deleteDirectory(
           new java.io.File(s"$table/$sub"))
-        return base.get
+        Some(base.get)
+      } else {
+        val v = base.get + 1
+        val won = tryCommit(table, Commit(v, Seq.empty, Seq.empty,
+          "dvDelete", -1L,
+          dvAdd = dvFiles,
+          dvTargets = covered.toSeq.map(fileKey),
+          minReader = if (scattered) 3 else 1))
+        // lost the race: under serializable, refuse if the winner touched
+        // my covered files (re-deriving would silently delete over its
+        // write); disjoint writers re-scan against the new snapshot and
+        // both commit
+        if (!won)
+          checkFileConflicts(table, base, covered.map(fileKey).toSet,
+            "dvDelete")
+        Option.when(won)(v)
       }
-      val v = base.get + 1
-      if (tryCommit(table, Commit(v, Seq.empty, Seq.empty, "dvDelete", -1L,
-        dvAdd = dvFiles,
-        dvTargets = covered.toSeq.map(fileKey),
-        minReader = if (scattered) 3 else 1))) return v
-      // lost the race: under serializable, refuse if the winner touched
-      // my covered files (re-deriving would silently delete over its
-      // write); disjoint writers re-derive and both commit
-      checkFileConflicts(table, base, covered.map(fileKey).toSet, "dvDelete")
-      attempts += 1 // re-scan against the new snapshot
     }
-    throw new IllegalStateException(
-      s"txlog dvDelete on $table lost 10 straight races — giving up")
-  }
 
   /** RESTORE TABLE … TO VERSION AS OF: make the CURRENT snapshot equal the
     * `toV` snapshot again, as one new commit (history moves forward —
@@ -5209,10 +5201,8 @@ object TxLog {
     * DV sets, like Delta RESTORE). Time travel to the in-between versions
     * keeps working. Caveat shared with Delta: restoring past a [[vacuum]]
     * horizon fails at read time, since vacuumed data files are gone. */
-  def restore(spark: SparkSession, table: String, toV: Long): Long = {
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+  def restore(spark: SparkSession, table: String, toV: Long): Long =
+    optimistic(table, "restore") { base =>
       require(base.nonEmpty, s"restore on empty txlog table $table")
       require(toV <= base.get, s"restore target $toV is ahead of ${base.get}")
       val target = activeFiles(table, Some(toV))
@@ -5233,16 +5223,12 @@ object TxLog {
           schemaAsOf(table, Some(toV)).get.fieldNames.toSeq
             .map(n => n -> m.getOrElse(n, n))
         }.getOrElse(Seq.empty))
-      if (tryCommit(table, Commit(v, target.diff(cur), cur.diff(target),
-        "restore", -1L, schemaDdl = schemaAsOf(table, Some(toV)).map(_.toDDL),
+      Option.when(tryCommit(table, Commit(v, target.diff(cur),
+        cur.diff(target), "restore", -1L,
+        schemaDdl = schemaAsOf(table, Some(toV)).map(_.toDDL),
         dvAdd = targetDvs.diff(curDvs), dvRemove = curDvs.diff(targetDvs),
-        colMap = cmStamp)))
-        return v
-      attempts += 1
+        colMap = cmStamp)))(v)
     }
-    throw new IllegalStateException(
-      s"txlog restore on $table lost 10 straight races — giving up")
-  }
 
   /** UPDATE … SET … WHERE: apply `set` (column → new expression) to
     * matching rows, rewriting only the files that contain them. */
@@ -5368,10 +5354,8 @@ object TxLog {
     val keyProbes = keyedSrc.map(mergeKeyProbes(_, onKeys.map(_._1)))
       .getOrElse(Map.empty)
     val tracking = rowTrackingEnabled(table)
-    var attempts = 0
-    while (attempts < 10) {
-      retryBackoff(attempts)
-      val base = latestVersion(table)
+    // a lost race re-derives against the new snapshot
+    optimistic(table, "mergeInto") { base =>
       require(base.nonEmpty, s"mergeInto on empty txlog table $table")
       val files = activeFiles(table, base)
       val logSchema = schemaAsOf(table, base)
@@ -5492,155 +5476,154 @@ object TxLog {
           nmbsTouched
       val touched = files.filter(f => rewriteKeys.contains(fileKey(f)))
       if (touched.isEmpty && notMatched.isEmpty)
-        return base.get // nothing fires and nothing to insert: no new version
-      // FULL OUTER of the join-file rows against the source. Every target
-      // row matching ANY source row lives in a join file by
-      // construction, so source rows unmatched here are unmatched against
-      // the whole table. An empty join set skips the target side
-      // entirely (insert-only merge with no matches).
-      val joined =
-        if (joinFiles.isEmpty) {
-          // no target rows to read — every source row is unmatched; a
-          // zero-row target side with the table schema keeps the column
-          // and alias shape identical to the join path
-          val empty0 = read(spark, table, base).limit(0)
-            .withColumn("__dv_f", lit(null).cast("string"))
-            .withColumn("__dv_ri", lit(null).cast("long"))
-            .withColumn("__t_present", lit(true))
-          val empty = (if (tracking)
-            empty0.withColumn(RowIdCol, lit(null).cast("long"))
-          else empty0).alias(targetAlias)
-          empty.join(src, condition, "full_outer")
-        } else {
-          readFiles(spark, table, joinFiles, base, keepRowKeys = true,
-              withRowIds = tracking)
-            .withColumn("__t_present", lit(true))
-            .alias(targetAlias)
-            .join(src, condition, "full_outer")
+        Some(base.get) // nothing fires and nothing to insert: no new version
+      else {
+        // FULL OUTER of the join-file rows against the source. Every target
+        // row matching ANY source row lives in a join file by
+        // construction, so source rows unmatched here are unmatched against
+        // the whole table. An empty join set skips the target side
+        // entirely (insert-only merge with no matches).
+        val joined =
+          if (joinFiles.isEmpty) {
+            // no target rows to read — every source row is unmatched; a
+            // zero-row target side with the table schema keeps the column
+            // and alias shape identical to the join path
+            val empty0 = read(spark, table, base).limit(0)
+              .withColumn("__dv_f", lit(null).cast("string"))
+              .withColumn("__dv_ri", lit(null).cast("long"))
+              .withColumn("__t_present", lit(true))
+            val empty = (if (tracking)
+              empty0.withColumn(RowIdCol, lit(null).cast("long"))
+            else empty0).alias(targetAlias)
+            empty.join(src, condition, "full_outer")
+          } else {
+            readFiles(spark, table, joinFiles, base, keepRowKeys = true,
+                withRowIds = tracking)
+              .withColumn("__t_present", lit(true))
+              .alias(targetAlias)
+              .join(src, condition, "full_outer")
+          }
+        val tP = coalesce(col("__t_present"), lit(false))
+        val sP = coalesce(col("__s_present"), lit(false))
+        // Delta's cardinality rule: a target row matched by >1 source rows
+        // has no deterministic update — refuse (only when a WHEN MATCHED
+        // clause exists: with none, nothing updates twice — Delta's rule).
+        // Grouped on the (file, row_index) row keys: fully distributed,
+        // bounded by matched rows.
+        if (joinFiles.nonEmpty && matchedC.nonEmpty) {
+          val dup = joined.filter(tP && sP)
+            .groupBy(col("__dv_f"), col("__dv_ri")).count()
+            .filter(col("count") > 1).limit(1).count() > 0
+          if (dup) throw new IllegalStateException(
+            s"MERGE INTO $table: a target row matched multiple source rows " +
+              "— make the ON condition key-unique or pre-aggregate the source")
         }
-      val tP = coalesce(col("__t_present"), lit(false))
-      val sP = coalesce(col("__s_present"), lit(false))
-      // Delta's cardinality rule: a target row matched by >1 source rows
-      // has no deterministic update — refuse (only when a WHEN MATCHED
-      // clause exists: with none, nothing updates twice — Delta's rule).
-      // Grouped on the (file, row_index) row keys: fully distributed,
-      // bounded by matched rows.
-      if (joinFiles.nonEmpty && matchedC.nonEmpty) {
-        val dup = joined.filter(tP && sP)
-          .groupBy(col("__dv_f"), col("__dv_ri")).count()
-          .filter(col("count") > 1).limit(1).count() > 0
-        if (dup) throw new IllegalStateException(
-          s"MERGE INTO $table: a target row matched multiple source rows " +
-            "— make the ON condition key-unique or pre-aggregate the source")
+        // one action id per row, first-matching-clause semantics via a
+        // reversed when-chain: matched rows pick a WHEN MATCHED clause
+        // (-1 = no clause applies: keep unchanged), source-only rows pick a
+        // WHEN NOT MATCHED clause (-2 = none applies: drop)
+        val matchedAction = matchedC.zipWithIndex.foldRight(lit(-1)) {
+          case ((a, i), els) =>
+            val c = a match {
+              case MergeUpdate(cond, _) => cond
+              case MergeDelete(cond) => cond
+              case _ => None
+            }
+            when(c.getOrElse(lit(true)), lit(i)).otherwise(els)
+        }
+        val insertAction = notMatchedC.zipWithIndex.foldRight(lit(-2)) {
+          case ((a, j), els) =>
+            when(a.condition.getOrElse(lit(true)), lit(100 + j)).otherwise(els)
+        }
+        // target-only rows (tP && !sP) pick a WHEN NOT MATCHED BY SOURCE
+        // clause (200+i; -1 = none applies: keep unchanged)
+        val nmbsAction = nmbsC.zipWithIndex.foldRight(lit(-1)) {
+          case ((a, i), els) =>
+            val c = a match {
+              case MergeUpdate(cond, _) => cond
+              case MergeDelete(cond) => cond
+              case _ => None
+            }
+            when(c.getOrElse(lit(true)), lit(200 + i)).otherwise(els)
+        }
+        val deleteIds = matchedC.zipWithIndex.collect {
+          case (MergeDelete(_), i) => i
+        }.toSet ++ nmbsC.zipWithIndex.collect {
+          case (MergeDelete(_), i) => 200 + i
+        }
+        val acted = joined.withColumn("__action",
+          when(tP && sP, matchedAction)
+            .when(!tP && sP, insertAction)
+            .when(tP && !sP, nmbsAction)
+            .otherwise(lit(-1)))
+        val kept0 = acted.filter(!col("__action")
+          .isin((deleteIds + (-2)).toSeq.map(_.asInstanceOf[Any]): _*))
+        // target rows read for match detection but living in a NON-rewrite
+        // file stay where they are — only insert rows (no target side) and
+        // rewrite-file rows flow into the rewritten output
+        val kept1 =
+          if (joinKeys == rewriteKeys) kept0
+          else kept0.filter(!tP ||
+            col("__dv_f").isin(rewriteKeys.toSeq.map(_.asInstanceOf[Any]): _*))
+        // A merge with NO WHEN MATCHED clause skips the cardinality check
+        // (nothing can update twice), but an NMBS-rewritten file can still
+        // hold a target row matched by >1 source rows: it appears once per
+        // match in the FULL OUTER join, every copy carrying action -1
+        // (keep). All copies carry identical target columns — the only ones
+        // the rewrite projects for keep rows — so collapse on the physical
+        // row key. row_number over that key (not dropDuplicates: the joined
+        // frame has clashing target/source column names) keeps one copy;
+        // insert rows (no target side) get a unique synthetic key so they
+        // all survive AND don't pile into one null-key partition.
+        val kept =
+          if (matchedC.isEmpty && nmbsTouched.nonEmpty) {
+            val dedupKey = when(tP, col("__dv_f"))
+              .otherwise(concat(lit("__ins_"),
+                monotonically_increasing_id().cast("string")))
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(dedupKey, col("__dv_ri")).orderBy(lit(1))
+            kept1.withColumn("__keep_rn", row_number().over(w))
+              .filter(col("__keep_rn") === 1).drop("__keep_rn")
+          } else kept1
+        val outCols = tgtSchema.fields.toSeq.map { f =>
+          // an evolution-added column has no target side to keep: rows the
+          // clauses don't reach carry NULL (the same backfill untouched
+          // files get on read)
+          val keepAsIs =
+            if (addedNames.contains(f.name)) lit(null).cast(f.dataType)
+            else col(s"$targetAlias.${f.name}")
+          val branches: Seq[(Int, org.apache.spark.sql.Column)] =
+            matchedC.zipWithIndex.collect {
+              case (MergeUpdate(_, set), i) if set.contains(f.name) =>
+                i -> set(f.name)
+            } ++ notMatchedC.zipWithIndex.map { case (ins, j) =>
+              // partial INSERT backfill: the column's declared DEFAULT
+              // (graft.default.<col>, same rule as SQL INSERT) or NULL
+              (100 + j) -> ins.values.getOrElse(f.name,
+                properties(table).get(s"graft.default.${f.name}")
+                  .map(expr).getOrElse(lit(null)).cast(f.dataType))
+            } ++ nmbsC.zipWithIndex.collect {
+              case (MergeUpdate(_, set), i) if set.contains(f.name) =>
+                (200 + i) -> set(f.name)
+            }
+          branches.foldRight(keepAsIs) { case ((id, v), els) =>
+            when(col("__action") === id, v).otherwise(els)
+          }.cast(f.dataType).as(f.name)
+        }
+        // Row tracking: surviving target rows carry their ids through the
+        // rewrite; merge-INSERTED rows have a NULL target side, so their
+        // materialized id is NULL and they take this commit's fresh base
+        // range on read — stable and globally unique either way.
+        val outColsAll = outCols ++ (if (tracking)
+          Seq(col(s"$targetAlias.$RowIdCol").as(RowIdCol)) else Nil)
+        val rewritten = kept.select(outColsAll: _*)
+        Option.when(commitRewrite(spark, table, base, files, touched,
+          rewritten, "merge", schemaDdlOverride =
+            if (added.nonEmpty) Some(tgtSchema.toDDL) else None,
+          extraProps = extraProps, batchId = batchId,
+          streamId = streamId))(base.get + 1)
       }
-      // one action id per row, first-matching-clause semantics via a
-      // reversed when-chain: matched rows pick a WHEN MATCHED clause
-      // (-1 = no clause applies: keep unchanged), source-only rows pick a
-      // WHEN NOT MATCHED clause (-2 = none applies: drop)
-      val matchedAction = matchedC.zipWithIndex.foldRight(lit(-1)) {
-        case ((a, i), els) =>
-          val c = a match {
-            case MergeUpdate(cond, _) => cond
-            case MergeDelete(cond) => cond
-            case _ => None
-          }
-          when(c.getOrElse(lit(true)), lit(i)).otherwise(els)
-      }
-      val insertAction = notMatchedC.zipWithIndex.foldRight(lit(-2)) {
-        case ((a, j), els) =>
-          when(a.condition.getOrElse(lit(true)), lit(100 + j)).otherwise(els)
-      }
-      // target-only rows (tP && !sP) pick a WHEN NOT MATCHED BY SOURCE
-      // clause (200+i; -1 = none applies: keep unchanged)
-      val nmbsAction = nmbsC.zipWithIndex.foldRight(lit(-1)) {
-        case ((a, i), els) =>
-          val c = a match {
-            case MergeUpdate(cond, _) => cond
-            case MergeDelete(cond) => cond
-            case _ => None
-          }
-          when(c.getOrElse(lit(true)), lit(200 + i)).otherwise(els)
-      }
-      val deleteIds = matchedC.zipWithIndex.collect {
-        case (MergeDelete(_), i) => i
-      }.toSet ++ nmbsC.zipWithIndex.collect {
-        case (MergeDelete(_), i) => 200 + i
-      }
-      val acted = joined.withColumn("__action",
-        when(tP && sP, matchedAction)
-          .when(!tP && sP, insertAction)
-          .when(tP && !sP, nmbsAction)
-          .otherwise(lit(-1)))
-      val kept0 = acted.filter(!col("__action")
-        .isin((deleteIds + (-2)).toSeq.map(_.asInstanceOf[Any]): _*))
-      // target rows read for match detection but living in a NON-rewrite
-      // file stay where they are — only insert rows (no target side) and
-      // rewrite-file rows flow into the rewritten output
-      val kept1 =
-        if (joinKeys == rewriteKeys) kept0
-        else kept0.filter(!tP ||
-          col("__dv_f").isin(rewriteKeys.toSeq.map(_.asInstanceOf[Any]): _*))
-      // A merge with NO WHEN MATCHED clause skips the cardinality check
-      // (nothing can update twice), but an NMBS-rewritten file can still
-      // hold a target row matched by >1 source rows: it appears once per
-      // match in the FULL OUTER join, every copy carrying action -1
-      // (keep). All copies carry identical target columns — the only ones
-      // the rewrite projects for keep rows — so collapse on the physical
-      // row key. row_number over that key (not dropDuplicates: the joined
-      // frame has clashing target/source column names) keeps one copy;
-      // insert rows (no target side) get a unique synthetic key so they
-      // all survive AND don't pile into one null-key partition.
-      val kept =
-        if (matchedC.isEmpty && nmbsTouched.nonEmpty) {
-          val dedupKey = when(tP, col("__dv_f"))
-            .otherwise(concat(lit("__ins_"),
-              monotonically_increasing_id().cast("string")))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(dedupKey, col("__dv_ri")).orderBy(lit(1))
-          kept1.withColumn("__keep_rn", row_number().over(w))
-            .filter(col("__keep_rn") === 1).drop("__keep_rn")
-        } else kept1
-      val outCols = tgtSchema.fields.toSeq.map { f =>
-        // an evolution-added column has no target side to keep: rows the
-        // clauses don't reach carry NULL (the same backfill untouched
-        // files get on read)
-        val keepAsIs =
-          if (addedNames.contains(f.name)) lit(null).cast(f.dataType)
-          else col(s"$targetAlias.${f.name}")
-        val branches: Seq[(Int, org.apache.spark.sql.Column)] =
-          matchedC.zipWithIndex.collect {
-            case (MergeUpdate(_, set), i) if set.contains(f.name) =>
-              i -> set(f.name)
-          } ++ notMatchedC.zipWithIndex.map { case (ins, j) =>
-            // partial INSERT backfill: the column's declared DEFAULT
-            // (graft.default.<col>, same rule as SQL INSERT) or NULL
-            (100 + j) -> ins.values.getOrElse(f.name,
-              properties(table).get(s"graft.default.${f.name}")
-                .map(expr).getOrElse(lit(null)).cast(f.dataType))
-          } ++ nmbsC.zipWithIndex.collect {
-            case (MergeUpdate(_, set), i) if set.contains(f.name) =>
-              (200 + i) -> set(f.name)
-          }
-        branches.foldRight(keepAsIs) { case ((id, v), els) =>
-          when(col("__action") === id, v).otherwise(els)
-        }.cast(f.dataType).as(f.name)
-      }
-      // Row tracking: surviving target rows carry their ids through the
-      // rewrite; merge-INSERTED rows have a NULL target side, so their
-      // materialized id is NULL and they take this commit's fresh base
-      // range on read — stable and globally unique either way.
-      val outColsAll = outCols ++ (if (tracking)
-        Seq(col(s"$targetAlias.$RowIdCol").as(RowIdCol)) else Nil)
-      val rewritten = kept.select(outColsAll: _*)
-      if (commitRewrite(spark, table, base, files, touched, rewritten,
-        "merge", schemaDdlOverride =
-          if (added.nonEmpty) Some(tgtSchema.toDDL) else None,
-        extraProps = extraProps, batchId = batchId, streamId = streamId))
-        return base.get + 1
-      attempts += 1 // lost the race: re-derive against the new snapshot
     }
-    throw new IllegalStateException(
-      s"txlog mergeInto on $table lost 10 straight races — giving up")
   }
 
   /** Incremental-consumer form of [[changes]]: everything after the
@@ -5866,16 +5849,10 @@ object TxLog {
     val stCols = (statsCols ++ declaredCols(dir, "graft.stats.columns"))
       .distinct.filter(schema.fieldNames.contains)
     val (nst, sst) = fileStats(spark, dir, entries, stCols)
-    var attempts = 0
-    while (attempts < 10) {
-      val v = latestVersion(dir).getOrElse(0L) + 1
-      if (tryCommit(dir, Commit(v, entries, Seq.empty, "convert", -1L,
-        stats = nst, sstats = sst, schemaDdl = Some(schema.toDDL))))
-        return v
-      attempts += 1
+    commitNext(dir, "convertParquet") { v =>
+      Commit(v, entries, Seq.empty, "convert", -1L,
+        stats = nst, sstats = sst, schemaDdl = Some(schema.toDDL))
     }
-    throw new IllegalStateException(
-      s"txlog convertParquet on $dir lost 10 straight races — giving up")
   }
 
   /** `COPY INTO` (Delta's idempotent bulk file ingestion): load the data
@@ -5917,75 +5894,72 @@ object TxLog {
     // two racing COPY INTOs of the same source would otherwise BOTH pass
     // the staleness check they took before either committed, and the
     // loser's retry would double-ingest every file the winner loaded
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+    optimistic(table, "copyInto") { base =>
       val loaded = stateAt(table, None).copySources
       val fresh =
         if (force) candidates
         else candidates.filterNot(p => loaded.contains(stamp(p)))
-      if (fresh.isEmpty) return (base.getOrElse(0L), 0L)
-      val raw = spark.read.format(format).options(options)
-        .load(fresh.map(_.toString): _*)
-      // the reserved row-id column is refused here like every other
-      // ingest path: a source file carrying it would read back as
-      // MATERIALIZED row ids colliding with commit-allocated ranges
-      refuseReservedCols(raw)
-      val raw1 = stripOrRefuseIdentity(raw, table)
-      val df = applyGenerated(schemaAsOf(table) match {
-        case Some(sch) => // by-name match + cast, Delta's COPY INTO rule
-          // generated AND identity columns are derived, never sourced —
-          // exempt from the missing-column rule
-          val gen = (generatedCols(table).keySet ++
-            identityCols(table).keySet).map(_.toLowerCase)
-          val have = raw1.columns.map(_.toLowerCase).toSet
-          val missing = sch.fieldNames.filterNot(f =>
-            have.contains(f.toLowerCase) || gen.contains(f.toLowerCase))
-          require(missing.isEmpty, s"COPY INTO $table: source files lack " +
-            s"table columns ${missing.mkString(", ")}")
-          // extra source columns REFUSE without mergeSchema (a typo'd
-          // column would otherwise vanish silently — Delta's rule);
-          // with mergeSchema they ride along and evolve the schema
-          val known = (sch.fieldNames.map(_.toLowerCase) ++ gen).toSet
-          val extras = raw1.columns.filterNot(c => known.contains(c.toLowerCase))
-          require(mergeSchema || extras.isEmpty,
-            s"COPY INTO $table: source files carry column(s) " +
-              s"${extras.mkString(", ")} not in the table schema — " +
-              "drop them or set COPY_OPTIONS ('mergeSchema' = 'true')")
-          raw1.select(sch.fields.toSeq
-            .filter(f => have.contains(f.name.toLowerCase))
-            .map(f => col(f.name).cast(f.dataType).alias(f.name)) ++
-            extras.toSeq.map(col): _*)
-        case None => raw1
-      }, table)
-      val schema = resolveSchema(table, df, mergeSchema)
-      validateConstraints(df, constraints(table))
-      // a mergeSchema evolution on a MAPPED table binds fresh physical
-      // names for the new columns and publishes the extended mapping
-      // with this commit (same rule as [[append]])
-      val mapping0 = mappingAsOf(table)
-      val mapping = mapping0.map { m =>
-        m ++ schema.fieldNames.filterNot(m.contains)
-          .map(n => n -> freshPhysName(table))
+      if (fresh.isEmpty) Some((base.getOrElse(0L), 0L))
+      else {
+        val raw = spark.read.format(format).options(options)
+          .load(fresh.map(_.toString): _*)
+        // the reserved row-id column is refused here like every other
+        // ingest path: a source file carrying it would read back as
+        // MATERIALIZED row ids colliding with commit-allocated ranges
+        refuseReservedCols(raw)
+        val raw1 = stripOrRefuseIdentity(raw, table)
+        val df = applyGenerated(schemaAsOf(table) match {
+          case Some(sch) => // by-name match + cast, Delta's COPY INTO rule
+            // generated AND identity columns are derived, never sourced —
+            // exempt from the missing-column rule
+            val gen = (generatedCols(table).keySet ++
+              identityCols(table).keySet).map(_.toLowerCase)
+            val have = raw1.columns.map(_.toLowerCase).toSet
+            val missing = sch.fieldNames.filterNot(f =>
+              have.contains(f.toLowerCase) || gen.contains(f.toLowerCase))
+            require(missing.isEmpty, s"COPY INTO $table: source files lack " +
+              s"table columns ${missing.mkString(", ")}")
+            // extra source columns REFUSE without mergeSchema (a typo'd
+            // column would otherwise vanish silently — Delta's rule);
+            // with mergeSchema they ride along and evolve the schema
+            val known = (sch.fieldNames.map(_.toLowerCase) ++ gen).toSet
+            val extras = raw1.columns.filterNot(c => known.contains(c.toLowerCase))
+            require(mergeSchema || extras.isEmpty,
+              s"COPY INTO $table: source files carry column(s) " +
+                s"${extras.mkString(", ")} not in the table schema — " +
+                "drop them or set COPY_OPTIONS ('mergeSchema' = 'true')")
+            raw1.select(sch.fields.toSeq
+              .filter(f => have.contains(f.name.toLowerCase))
+              .map(f => col(f.name).cast(f.dataType).alias(f.name)) ++
+              extras.toSeq.map(col): _*)
+          case None => raw1
+        }, table)
+        val schema = resolveSchema(table, df, mergeSchema)
+        validateConstraints(df, constraints(table))
+        // a mergeSchema evolution on a MAPPED table binds fresh physical
+        // names for the new columns and publishes the extended mapping
+        // with this commit (same rule as [[append]])
+        val mapping0 = mappingAsOf(table)
+        val mapping = mapping0.map { m =>
+          m ++ schema.fieldNames.filterNot(m.contains)
+            .map(n => n -> freshPhysName(table))
+        }
+        val colMap = mapping.filter(m => !mapping0.contains(m))
+          .map(m => schema.fieldNames.toSeq.map(n => n -> m(n)))
+        val add = writeData(df, table, mapping)
+        val (nst, sst) = fileStats(spark, table, add,
+          effectiveStatsCols(df, table, Seq.empty), mapping)
+        val v = base.getOrElse(0L) + 1
+        Option.when(tryCommit(table, Commit(v, add, Seq.empty,
+            "copyInto", -1L,
+            stats = nst, sstats = sst,
+            schemaDdl = Some(schema.toDDL),
+            bloomAdd = fileBlooms(spark, table, add,
+              effectiveBloomCols(df, table, Seq.empty), mapping),
+            colMap = colMap,
+            copySources = fresh.map(stamp))))((v, fresh.size.toLong))
       }
-      val colMap = mapping.filter(m => !mapping0.contains(m))
-        .map(m => schema.fieldNames.toSeq.map(n => n -> m(n)))
-      val add = writeData(df, table, mapping)
-      val (nst, sst) = fileStats(spark, table, add,
-        effectiveStatsCols(df, table, Seq.empty), mapping)
-      if (tryCommit(table, Commit(base.getOrElse(0L) + 1, add, Seq.empty,
-          "copyInto", -1L,
-          stats = nst, sstats = sst,
-          schemaDdl = Some(schema.toDDL),
-          bloomAdd = fileBlooms(spark, table, add,
-            effectiveBloomCols(df, table, Seq.empty), mapping),
-          colMap = colMap,
-          copySources = fresh.map(stamp))))
-        return (base.getOrElse(0L) + 1, fresh.size.toLong)
-      attempts += 1
     }
-    throw new IllegalStateException(
-      s"txlog copyInto on $table lost 10 straight races — giving up")
   }
 
   /** One-row table summary (Delta's DESCRIBE DETAIL): snapshot version,
@@ -6022,30 +5996,26 @@ object TxLog {
     * files are LOST — fsck repairs readability, not data; restore from
     * an older version or a clone for recovery. */
   def fsck(spark: SparkSession, table: String,
-      dryRun: Boolean = false): Seq[String] = {
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+      dryRun: Boolean = false): Seq[String] =
+    optimistic(table, "fsck") { base =>
       require(base.nonEmpty, s"fsck on empty txlog table $table")
       val files = activeFiles(table, base)
       val missing = files.filterNot(f =>
         Files.exists(Paths.get(resolve(table, f))))
-      if (missing.isEmpty || dryRun) return missing
-      val keep = files.filterNot(missing.toSet)
-      val dvRemove = inertDvs(spark, table, activeDvs(table, base),
-        keep.map(fileKey).toSet)
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val won = try {
-        tryCommit(table, Commit(base.get + 1, Seq.empty, missing, "fsck",
-          -1L, dvRemove = dvRemove,
-          bloomRemove = bi.inert(keep.map(fileKey).toSet)))
-      } finally bi.release()
-      if (won) return missing
-      attempts += 1
+      if (missing.isEmpty || dryRun) Some(missing)
+      else {
+        val keep = files.filterNot(missing.toSet)
+        val dvRemove = inertDvs(spark, table, activeDvs(table, base),
+          keep.map(fileKey).toSet)
+        val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+        val won = try {
+          tryCommit(table, Commit(base.get + 1, Seq.empty, missing, "fsck",
+            -1L, dvRemove = dvRemove,
+            bloomRemove = bi.inert(keep.map(fileKey).toSet)))
+        } finally bi.release()
+        Option.when(won)(missing)
+      }
     }
-    throw new IllegalStateException(
-      s"txlog fsck on $table lost 10 straight races — giving up")
-  }
 
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
@@ -6317,22 +6287,15 @@ object TxLog {
     // the floor checkpoint is multi-part — a v7 reader's listing can't
     // see its parts, see [[ProtocolVersion]]) BEFORE anything vanishes.
     // Tail commits written under an existing marker already do; otherwise
-    // publish a data-less protocol commit at tip+1
+    // publish a data-less protocol commit at tip+1 (a give-up throws
+    // before any deletion)
     val floor = if (multiPartFloor) 8 else 7
     val hasFloorTail = commits(table).exists(c =>
       c.version > h && c.minReader >= floor)
-    if (!hasFloorTail) {
-      var attempts = 0
-      var placed = false
-      while (!placed && attempts < 10) {
-        val v = latestVersion(table).getOrElse(h) + 1
-        placed = tryCommit(table, Commit(v, Seq.empty, Seq.empty,
-          "protocol", -1L, minReader = floor))
-        attempts += 1
+    if (!hasFloorTail)
+      commitNext(table, "protocol") { v =>
+        Commit(v, Seq.empty, Seq.empty, "protocol", -1L, minReader = floor)
       }
-      require(placed, s"expireLog on $table: protocol-floor commit lost " +
-        "10 straight races — giving up before any deletion")
-    }
     val node = mapper.createObjectNode()
     node.put("horizon", h)
     // the horizon commit's in-commit stamp, captured BEFORE its file
@@ -6468,11 +6431,9 @@ object TxLog {
       clusterBy: Seq[org.apache.spark.sql.Column] = Seq.empty,
       statsCols: Seq[String] = Seq.empty,
       targetBytes: Option[Long] = None,
-      bloomCols: Seq[String] = Seq.empty): Long = {
-    var attempts = 0
-    while (attempts < 10) {
-      retryBackoff(attempts)
-      val base = latestVersion(table)
+      bloomCols: Seq[String] = Seq.empty): Long =
+    // a lost race recompacts against the new snapshot
+    optimistic(table, "optimize") { base =>
       require(base.nonEmpty, s"optimize on empty txlog table $table")
       val cur = readFiles(spark, table, activeFiles(table, base), base,
         withRowIds = rowTrackingEnabled(table, base))
@@ -6507,16 +6468,12 @@ object TxLog {
         (statsCols ++ declaredCols(table, "graft.stats.columns"))
           .map(c => invA.getOrElse(c, c))
           .distinct.filter(arranged.columns.contains))
-      if (tryCommit(table, Commit(v, add, remove, "optimize", -1L,
+      Option.when(tryCommit(table, Commit(v, add, remove, "optimize", -1L,
           nstats, Some(logicalDdl(arranged)),
           dvRemove = activeDvs(table, base), sstats = sstats,
           bloomAdd = fileBlooms(spark, table, add, blCols),
-          bloomRemove = activeBlooms(table, base)))) return v
-      attempts += 1 // lost the race: recompact against the new snapshot
+          bloomRemove = activeBlooms(table, base))))(v)
     }
-    throw new IllegalStateException(
-      s"txlog optimize on $table lost 10 straight races — giving up")
-  }
 
   /** Bin-packing OPTIMIZE (Delta's minFileSize form): rewrite ONLY the
     * active files smaller than `minFileSizeBytes` into `targetFiles`
@@ -6609,57 +6566,53 @@ object TxLog {
       targetFiles: Int, statsCols: Seq[String], targetBytes: Option[Long],
       clusterBy: Seq[org.apache.spark.sql.Column])(
       select: (Seq[String], Map[String, Long], Option[Long]) => Seq[String])
-      : Option[Long] = {
-    var attempts = 0
-    while (attempts < 10) {
-      retryBackoff(attempts)
-      val base = latestVersion(table)
+      : Option[Long] =
+    // a lost race re-selects against the new snapshot
+    optimistic(table, "optimizeSmall") { base =>
       require(base.nonEmpty, s"optimize on empty txlog table $table")
       val sizes = fileSizes(table, base)
       val active = activeFiles(table, base)
       val small = select(active, sizes, base)
-      if (small.size < 2) return None // nothing to gain from a rewrite
-      val nOut = targetBytes.map { tb =>
-        require(tb > 0, s"optimizeSmall targetBytes must be positive: $tb")
-        val total = small.map(f => sizes.getOrElse(f, 0L)).sum
-        math.max(1L, (total + tb - 1) / tb).toInt
-      }.getOrElse(targetFiles)
-      val cur = readFiles(spark, table, small, base,
-        withRowIds = rowTrackingEnabled(table, base))
-      val arranged = arrange(cur, nOut, clusterBy)
-      val add = writeData(arranged, table)
-      val v = base.get + 1
-      val keep = active.filterNot(small.toSet)
-      // DVs never reference files newer than themselves, so the
-      // post-commit reference universe for inertness is the kept set
-      // (fileKey-normalized: DV refs are recorded in that form, and a
-      // shallow-clone's absolute entry would otherwise never match)
-      val dvRemove = inertDvs(spark, table, activeDvs(table, base),
-        keep.map(fileKey).toSet)
-      val invB = logicalsOf(mappingAsOf(table, base))
-      val (nstats, sstats) = fileStats(spark, table, add,
-        (statsCols ++ declaredCols(table, "graft.stats.columns"))
-          .map(c => invB.getOrElse(c, c))
-          .distinct.filter(arranged.columns.contains))
-      // one sidecar read answers both the indexed-columns and the
-      // inertness questions — see [[BloomIndex]]
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val won = try {
-        val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-          .map(c => invB.getOrElse(c, c))
-          .distinct.filter(arranged.columns.contains)
-        tryCommit(table, Commit(v, add, small, "optimize", -1L,
-          nstats, Some(logicalDdl(arranged)), dvRemove = dvRemove,
-          sstats = sstats,
-          bloomAdd = fileBlooms(spark, table, add, blCols),
-          bloomRemove = bi.inert(keep.map(fileKey).toSet)))
-      } finally bi.release()
-      if (won) return Some(v)
-      attempts += 1 // lost the race: re-select against the new snapshot
+      if (small.size < 2) Some(None) // nothing to gain from a rewrite
+      else {
+        val nOut = targetBytes.map { tb =>
+          require(tb > 0, s"optimizeSmall targetBytes must be positive: $tb")
+          val total = small.map(f => sizes.getOrElse(f, 0L)).sum
+          math.max(1L, (total + tb - 1) / tb).toInt
+        }.getOrElse(targetFiles)
+        val cur = readFiles(spark, table, small, base,
+          withRowIds = rowTrackingEnabled(table, base))
+        val arranged = arrange(cur, nOut, clusterBy)
+        val add = writeData(arranged, table)
+        val v = base.get + 1
+        val keep = active.filterNot(small.toSet)
+        // DVs never reference files newer than themselves, so the
+        // post-commit reference universe for inertness is the kept set
+        // (fileKey-normalized: DV refs are recorded in that form, and a
+        // shallow-clone's absolute entry would otherwise never match)
+        val dvRemove = inertDvs(spark, table, activeDvs(table, base),
+          keep.map(fileKey).toSet)
+        val invB = logicalsOf(mappingAsOf(table, base))
+        val (nstats, sstats) = fileStats(spark, table, add,
+          (statsCols ++ declaredCols(table, "graft.stats.columns"))
+            .map(c => invB.getOrElse(c, c))
+            .distinct.filter(arranged.columns.contains))
+        // one sidecar read answers both the indexed-columns and the
+        // inertness questions — see [[BloomIndex]]
+        val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+        val won = try {
+          val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
+            .map(c => invB.getOrElse(c, c))
+            .distinct.filter(arranged.columns.contains)
+          tryCommit(table, Commit(v, add, small, "optimize", -1L,
+            nstats, Some(logicalDdl(arranged)), dvRemove = dvRemove,
+            sstats = sstats,
+            bloomAdd = fileBlooms(spark, table, add, blCols),
+            bloomRemove = bi.inert(keep.map(fileKey).toSet)))
+        } finally bi.release()
+        Option.when(won)(Some(v))
+      }
     }
-    throw new IllegalStateException(
-      s"txlog optimizeSmall on $table lost 10 straight races — giving up")
-  }
 
   /** Partition-scoped compaction — `OPTIMIZE table WHERE partition = v`
     * (Delta's partition-predicate OPTIMIZE): rewrite ONLY the files of
@@ -6685,64 +6638,39 @@ object TxLog {
       case (k, null) => physName(k) -> None
       case (k, v) => physName(k) -> Some(String.valueOf(v))
     }
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+    optimistic(table, "optimizeWhere") { base =>
       require(base.nonEmpty, s"optimizeWhere on empty txlog table $table")
       val active = activeFiles(table, base)
       val sel = active.filter { f =>
         val p = partValuesOf(f).toMap
         p.nonEmpty && want.forall { case (c, v) => p.get(c).contains(v) }
       }
-      if (sel.isEmpty) return None
       // a single-file partition is a no-op UNLESS a deletion vector
       // references it — then the rewrite has a job: materialize the
       // deletes and retire the DV (one metadata-sized ref read decides)
-      if (sel.size < 2) {
+      val worthIt = sel.size >= 2 || sel.nonEmpty && {
         val dvs = activeDvs(table, base)
-        val dvTouched = dvs.nonEmpty && {
+        dvs.nonEmpty && {
           val refs = spark.read.option("mergeSchema", "true")
             .parquet(dvs.map(resolve(table, _)): _*)
             .select("file").distinct().collect().map(_.getString(0)).toSet
           sel.exists(f => refs.contains(fileKey(f)))
         }
-        if (!dvTouched) return None
       }
-      val sizes = fileSizes(table, base)
-      val nOut = targetBytes.map { tb =>
-        require(tb > 0, s"optimizeWhere targetBytes must be positive: $tb")
-        val total = sel.map(f => sizes.getOrElse(f, 0L)).sum
-        math.max(1L, (total + tb - 1) / tb).toInt
-      }.getOrElse(targetFiles)
-      val cur = readFiles(spark, table, sel, base,
-        withRowIds = rowTrackingEnabled(table, base))
-      val arranged = arrange(cur, nOut, clusterBy)
-      val add = writeData(arranged, table)
-      val v = base.get + 1
-      val keep = active.filterNot(sel.toSet)
-      val dvRemove = inertDvs(spark, table, activeDvs(table, base),
-        keep.map(fileKey).toSet)
-      val invC = logicalsOf(mappingAsOf(table, base))
-      val (nstats, sstats) = fileStats(spark, table, add,
-        declaredCols(table, "graft.stats.columns")
-          .map(c => invC.getOrElse(c, c))
-          .filter(arranged.columns.contains))
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val won = try {
-        val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-          .map(c => invC.getOrElse(c, c))
-          .distinct.filter(arranged.columns.contains)
-        tryCommit(table, Commit(v, add, sel, "optimize", -1L,
-          nstats, Some(logicalDdl(arranged)), dvRemove = dvRemove,
-          sstats = sstats,
-          bloomAdd = fileBlooms(spark, table, add, blCols),
-          bloomRemove = bi.inert(keep.map(fileKey).toSet)))
-      } finally bi.release()
-      if (won) return Some(v)
-      attempts += 1
+      if (!worthIt) Some(None)
+      else {
+        val sizes = fileSizes(table, base)
+        val nOut = targetBytes.map { tb =>
+          require(tb > 0, s"optimizeWhere targetBytes must be positive: $tb")
+          val total = sel.map(f => sizes.getOrElse(f, 0L)).sum
+          math.max(1L, (total + tb - 1) / tb).toInt
+        }.getOrElse(targetFiles)
+        val cur = readFiles(spark, table, sel, base,
+          withRowIds = rowTrackingEnabled(table, base))
+        Option.when(commitRewrite(spark, table, base, active, sel,
+          arrange(cur, nOut, clusterBy), "optimize"))(Some(base.get + 1))
+      }
     }
-    throw new IllegalStateException(
-      s"txlog optimizeWhere on $table lost 10 straight races — giving up")
   }
 
   /** Deletion-vector maintenance (Delta's DV compaction threshold inside
@@ -6755,70 +6683,45 @@ object TxLog {
     * reference). Returns the base version unchanged when nothing crosses
     * the threshold. */
   def optimizeDvs(spark: SparkSession, table: String,
-      maxDeletedFraction: Double = 0.2): Long = {
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+      maxDeletedFraction: Double = 0.2): Long =
+    optimistic(table, "optimizeDvs") { base =>
       require(base.nonEmpty, s"optimizeDvs on empty txlog table $table")
       val dvs = activeDvs(table, base)
-      if (dvs.isEmpty) return base.get
       val files = activeFiles(table, base)
-      // dead rows per data-file key, and which DV file holds which refs
-      // dead-row count per file = total width of its ranges (DV files
-      // never overlap ranges for live rows: a re-delete of an already-
-      // dead row can't happen — readFiles filters it out of the scan)
-      val deadRanges = readDvRanges(spark, table, dvs)
-        .groupBy("file")
-        .agg(sum(col("end") - col("start") + 1).alias("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // bitset-encoded DVs contribute their cardinality to the dead count
-      val deadBits = readDvBitmaps(spark, table, dvs)
-        .map { case (f, bm) =>
-          f -> graft.functions.DvBitmapCodec.cardinality(bm) }
-      val dead = (deadRanges.keySet ++ deadBits.keySet).map(f =>
-        f -> (deadRanges.getOrElse(f, 0L) + deadBits.getOrElse(f, 0L))).toMap
-      // total rows per file (projection-free scan keyed like the DV)
-      val totals = spark.read
-        .parquet(files.map(resolve(table, _)): _*)
-        .select(relFileKey.alias("_f")).groupBy("_f").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val touched = files.filter { f =>
-        val k = fileKey(f)
-        dead.get(k).exists(d =>
-          d.toDouble / math.max(totals.getOrElse(k, d), 1L) > maxDeletedFraction)
+      val touched = if (dvs.isEmpty) Seq.empty[String] else {
+        // dead rows per data-file key, and which DV file holds which refs
+        // dead-row count per file = total width of its ranges (DV files
+        // never overlap ranges for live rows: a re-delete of an already-
+        // dead row can't happen — readFiles filters it out of the scan)
+        val deadRanges = readDvRanges(spark, table, dvs)
+          .groupBy("file")
+          .agg(sum(col("end") - col("start") + 1).alias("n"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        // bitset-encoded DVs contribute their cardinality to the dead count
+        val deadBits = readDvBitmaps(spark, table, dvs)
+          .map { case (f, bm) =>
+            f -> graft.functions.DvBitmapCodec.cardinality(bm) }
+        val dead = (deadRanges.keySet ++ deadBits.keySet).map(f =>
+          f -> (deadRanges.getOrElse(f, 0L) + deadBits.getOrElse(f, 0L))).toMap
+        // total rows per file (projection-free scan keyed like the DV)
+        val totals = spark.read
+          .parquet(files.map(resolve(table, _)): _*)
+          .select(relFileKey.alias("_f")).groupBy("_f").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        files.filter { f =>
+          val k = fileKey(f)
+          dead.get(k).exists(d =>
+            d.toDouble / math.max(totals.getOrElse(k, d), 1L) > maxDeletedFraction)
+        }
       }
-      if (touched.isEmpty) return base.get
-      val rewritten = readFiles(spark, table, touched, base, // DVs applied
-        withRowIds = rowTrackingEnabled(table, base))
-      val add = writeData(rewritten, table)
-      // retire DV files whose every referenced data file leaves the set
-      val dvRemove = inertDvs(spark, table, dvs,
-        files.diff(touched).map(fileKey).toSet)
-      val v = base.get + 1
-      // one sidecar read for indexed-columns + inertness ([[BloomIndex]])
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val invD = logicalsOf(mappingAsOf(table, base))
-      val stCols = declaredCols(table, "graft.stats.columns")
-        .map(c => invD.getOrElse(c, c))
-        .filter(rewritten.columns.contains)
-      val (nst, sst) = fileStats(spark, table, add, stCols)
-      val won = try {
-        val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-          .map(c => invD.getOrElse(c, c))
-          .distinct.filter(rewritten.columns.contains)
-        tryCommit(table, Commit(v, add, touched, "optimizeDvs", -1L,
-          stats = nst, sstats = sst,
-          schemaDdl = schemaAsOf(table, base).map(_.toDDL),
-          dvRemove = dvRemove,
-          bloomAdd = fileBlooms(spark, table, add, blCols),
-          bloomRemove = bi.inert(files.diff(touched).map(fileKey).toSet)))
-      } finally bi.release()
-      if (won) return v
-      attempts += 1
+      if (touched.isEmpty) Some(base.get)
+      else {
+        val rewritten = readFiles(spark, table, touched, base, // DVs applied
+          withRowIds = rowTrackingEnabled(table, base))
+        Option.when(commitRewrite(spark, table, base, files, touched,
+          rewritten, "optimizeDvs"))(base.get + 1)
+      }
     }
-    throw new IllegalStateException(
-      s"txlog optimizeDvs on $table lost 10 straight races — giving up")
-  }
 
   /** `REORG TABLE … APPLY (PURGE)` (Delta's reorg verb): physically
     * rewrite exactly the files still carrying soft-deleted state —
@@ -6832,10 +6735,8 @@ object TxLog {
     * nothing needs purging. Footer checks run only over files added
     * before the last DROP COLUMN commit — the only possible carriers —
     * so a never-dropped table pays zero footer reads. */
-  def reorgPurge(spark: SparkSession, table: String): Option[Long] = {
-    var attempts = 0
-    while (attempts < 10) {
-      val base = latestVersion(table)
+  def reorgPurge(spark: SparkSession, table: String): Option[Long] =
+    optimistic(table, "reorgPurge") { base =>
       require(base.nonEmpty, s"reorgPurge on empty txlog table $table")
       val files = activeFiles(table, base)
       val dvs = activeDvs(table, base)
@@ -6864,36 +6765,14 @@ object TxLog {
       }
       val touched = (files.filter(f => dvd.contains(fileKey(f))) ++ stale)
         .distinct
-      if (touched.isEmpty) return None
-      val rewritten = readFiles(spark, table, touched, base,
-        withRowIds = rowTrackingEnabled(table, base))
-      val add = writeData(rewritten, table)
-      val dvRemove = inertDvs(spark, table, dvs,
-        files.diff(touched).map(fileKey).toSet)
-      val v = base.get + 1
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val invD = logicalsOf(mappingAsOf(table, base))
-      val stCols = declaredCols(table, "graft.stats.columns")
-        .map(c => invD.getOrElse(c, c))
-        .filter(rewritten.columns.contains)
-      val (nst, sst) = fileStats(spark, table, add, stCols)
-      val won = try {
-        val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-          .map(c => invD.getOrElse(c, c))
-          .distinct.filter(rewritten.columns.contains)
-        tryCommit(table, Commit(v, add, touched, "reorg", -1L,
-          stats = nst, sstats = sst,
-          schemaDdl = schemaAsOf(table, base).map(_.toDDL),
-          dvRemove = dvRemove,
-          bloomAdd = fileBlooms(spark, table, add, blCols),
-          bloomRemove = bi.inert(files.diff(touched).map(fileKey).toSet)))
-      } finally bi.release()
-      if (won) return Some(v)
-      attempts += 1
+      if (touched.isEmpty) Some(None)
+      else {
+        val rewritten = readFiles(spark, table, touched, base,
+          withRowIds = rowTrackingEnabled(table, base))
+        Option.when(commitRewrite(spark, table, base, files, touched,
+          rewritten, "reorg"))(Some(base.get + 1))
+      }
     }
-    throw new IllegalStateException(
-      s"txlog reorgPurge on $table lost 10 straight races — giving up")
-  }
 
   /** Delete data files no snapshot in the last `retainVersions` versions
     * references — removed-before-horizon files and crash orphans. Bounds

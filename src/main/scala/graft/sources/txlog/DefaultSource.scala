@@ -935,8 +935,7 @@ class TxLogStreamSource(sqlContext: SQLContext, path: String,
         if (c.add.nonEmpty) checkSchemaDrift(c)
         val delivered = c.op match {
           case "append" | "clone" => c.add
-          case "optimize" | "optimizeDvs" | "addConstraint" | "reorg" =>
-            Seq.empty
+          case op if TxLog.LayoutOnlyOps(op) => Seq.empty
           case "dvDelete" =>
             if (!ignoreDeletes && !ignoreChanges) throw new IllegalStateException(
               s"txlog stream on $path hit a row-deleting commit " +

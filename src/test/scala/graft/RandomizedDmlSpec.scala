@@ -112,8 +112,9 @@ class RandomizedDmlSpec extends SparkSpec {
     runScenario(1337L, 30)
   }
 
-  /** Two seeded writers race append/DELETE/UPDATE/OPTIMIZE on ONE table
-    * under `graft.isolationLevel=serializable`. Each writer owns a
+  /** Two seeded writers race append/DELETE/UPDATE/OPTIMIZE, keyed
+    * `TxLog.merge` and deletion-vector DELETE on ONE table under
+    * `graft.isolationLevel=serializable`. Each writer owns a
     * disjoint key space (w, w+2, w+4, …) and mutates only its own keys,
     * so every pair of committed ops is semantically commutative — the
     * final table must equal the UNION of the two per-writer models no
@@ -148,7 +149,7 @@ class RandomizedDmlSpec extends SparkSpec {
       var nextK = w.toLong
       def ownKeys = model.keys.toSeq.sorted
       (1 to 20).foreach { _ =>
-        val action = rnd.nextInt(7)
+        val action = rnd.nextInt(9)
         try action match {
           case 0 | 1 | 2 =>
             val rows = (0 until 1 + rnd.nextInt(3)).map { _ =>
@@ -167,6 +168,21 @@ class RandomizedDmlSpec extends SparkSpec {
             model = model.updatedWith(victim)(_.map(r => (r._1, r._2 + 1000)))
           case 5 =>
             TxLog.optimize(spark, t, targetFiles = 3)
+          case 6 => // CDC merge: bump one own key, insert one fresh key
+            val bumped = if (model.isEmpty) Seq.empty else {
+              val victim = ownKeys(rnd.nextInt(ownKeys.size))
+              Seq((victim, s"w$w-m$victim", model(victim)._2 + 1000))
+            }
+            nextK += 2
+            val rows = bumped :+ ((nextK, s"w$w-$nextK", 1.0))
+            // versionCol = amt: every merged row outranks what it replaces
+            TxLog.merge(spark, t, rows.toDF("k", "v", "amt").coalesce(1),
+              Seq("k"), "amt")
+            model ++= rows.map(r => r._1 -> (r._2, r._3))
+          case 7 if model.nonEmpty =>
+            val victim = ownKeys(rnd.nextInt(ownKeys.size))
+            TxLog.deleteVectors(spark, t, col("k") === victim)
+            model -= victim
           case _ => ()
         } catch {
           case e: Throwable if isRefusal(e) => refusals.incrementAndGet()

@@ -1,8 +1,12 @@
 package graft
 
-import java.util.concurrent.CountDownLatch
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.ops.TxLog
 
@@ -162,4 +166,132 @@ class TxLogConflictSpec extends SparkSpec {
     assert(TxLog.read(spark, t).filter(col("y") === 2020)
       .select("k").as[Long].collect().toSet === Set(200L))
   }
+
+  test("racing ADD COLUMNs on a mapped table never revert a winner") {
+    val t = tmpDir("txconflict") + "/ddl"
+    TxLog.append(Seq((1L, "a")).toDF("k", "v"), t)
+    TxLog.enableColumnMapping(t)
+    val names = (0 until 8).map(i => s"c$i")
+    val start = new CountDownLatch(1)
+    val outcomes = new java.util.concurrent.ConcurrentHashMap[String, Try[Long]]()
+    val threads = names.map { n =>
+      val th = new Thread(() => {
+        start.await()
+        outcomes.put(n, Try(TxLog.addColumn(t, n, LongType)))
+      }, s"ddl-$n")
+      th.start(); th
+    }
+    start.countDown()
+    threads.foreach(_.join(120000))
+    val got = outcomes.asScala.toMap
+    assert(got.keySet === names.toSet, "every DDL thread must finish")
+    // a DDL that loses its race to a concurrent schema change refuses —
+    // never the bounded give-up, never anything else
+    val unexpected = got.collect {
+      case (n, Failure(e)) if !e.isInstanceOf[TxLog.ConcurrentWriteException] =>
+        s"$n: $e"
+    }
+    assert(unexpected.isEmpty, s"unexpected failures: $unexpected")
+    val committed = got.collect { case (n, Success(_)) => n }.toSet
+    assert(committed.nonEmpty, "at least one ADD COLUMN must commit")
+    val schema = TxLog.schemaAsOf(t).get.fieldNames.toSet
+    val mapping = TxLog.mappingAsOf(t).get.keySet
+    assert(committed.subsetOf(schema),
+      s"committed columns missing from the schema: ${committed -- schema}")
+    assert(committed.subsetOf(mapping),
+      s"committed columns missing from the mapping: ${committed -- mapping}")
+    info(s"${committed.size} of ${names.size} ADD COLUMNs committed, " +
+      s"${names.size - committed.size} refused")
+  }
+
+  test("addConstraint validates exactly the snapshot it commits on") {
+    val t = tmpDir("txconflict") + "/ck"
+    TxLog.append(Seq((1L, 10L), (2L, 20L)).toDF("k", "amt"), t)
+    // the CHECK's first evaluation parks the validation scan until a
+    // violating row has committed — the append lands strictly between
+    // addConstraint's validation and its commit
+    spark.udf.register("race_gate_pos", (amt: Long) => {
+      RaceGate.park("constraint")
+      amt > 0
+    })
+    val appended = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val appender = new Thread(() => {
+      if (RaceGate.awaitParked("constraint"))
+        try appended.set(
+          TxLog.append(Seq((3L, -5L)).toDF("k", "amt"), t))
+        finally RaceGate.release("constraint")
+    }, "violating-appender")
+    appender.start()
+    val outcome = Try(
+      TxLog.addConstraint(spark, t, "pos", "race_gate_pos(amt)"))
+    appender.join(120000)
+    assert(appended.get() > 0, "the violating append must commit mid-race")
+    outcome match {
+      case Success(v) =>
+        assert(TxLog.read(spark, t, Some(v)).filter(col("amt") <= 0)
+          .isEmpty, s"constraint committed at v$v over a violating row")
+      case Failure(e) =>
+        // the retry re-validated against the snapshot holding the row
+        assert(e.getMessage.contains("CHECK constraint 'pos'"), e.toString)
+    }
+  }
+
+  test("an append staged before a concurrent ADD COLUMN refuses, never reverts it") {
+    val t = tmpDir("txconflict") + "/stale"
+    TxLog.append(Seq((1L, "a")).toDF("k", "v"), t)
+    // the append's data write parks on its first row until an ADD COLUMN
+    // has committed — the append derived its schema before that column
+    // existed, so publishing it would silently drop the column
+    spark.udf.register("race_gate_tag", (v: String) => {
+      RaceGate.park("append")
+      v
+    })
+    val added = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val ddl = new Thread(() => {
+      if (RaceGate.awaitParked("append"))
+        try added.set(TxLog.addColumn(t, "extra", LongType))
+        finally RaceGate.release("append")
+    }, "concurrent-ddl")
+    ddl.start()
+    val outcome = Try(TxLog.append(
+      Seq((2L, "b")).toDF("k", "v").selectExpr("k", "race_gate_tag(v) AS v"),
+      t))
+    ddl.join(120000)
+    assert(added.get() > 0, "the ADD COLUMN must commit mid-append")
+    assert(TxLog.schemaAsOf(t).get.fieldNames.contains("extra"),
+      s"the append (${outcome}) reverted the concurrent ADD COLUMN")
+    outcome match {
+      case Failure(e) =>
+        assert(e.isInstanceOf[TxLog.ConcurrentWriteException], e.toString)
+      case Success(v) =>
+        fail(s"the stale-schema append committed at v$v")
+    }
+  }
+}
+
+/** Named one-shot rendezvous for the race tests: the first `park(name)`
+  * signals that it parked and waits for `release(name)`; later calls
+  * pass straight through. A top-level object so a registered UDF reaches
+  * it statically instead of capturing (and serializing) the latches. */
+object RaceGate {
+  private final class Gate {
+    val parked = new CountDownLatch(1)
+    val released = new CountDownLatch(1)
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+  }
+  private val gates =
+    new java.util.concurrent.ConcurrentHashMap[String, Gate]()
+  private def gate(name: String): Gate =
+    gates.computeIfAbsent(name, _ => new Gate)
+
+  def park(name: String): Unit = {
+    val g = gate(name)
+    if (g.armed.compareAndSet(true, false)) {
+      g.parked.countDown()
+      g.released.await(120, TimeUnit.SECONDS)
+    }
+  }
+  def awaitParked(name: String): Boolean =
+    gate(name).parked.await(120, TimeUnit.SECONDS)
+  def release(name: String): Unit = gate(name).released.countDown()
 }
