@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{IvfIndex, Similarity}
@@ -17,13 +17,8 @@ import graft.ext.{IvfIndex, Similarity}
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")

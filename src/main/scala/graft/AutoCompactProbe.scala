@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.TxLog
 
 /** Dev-tool main: writer auto-compaction cost-shape probe, printed as
@@ -14,11 +12,7 @@ import graft.ops.TxLog
 object AutoCompactProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(120)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[8]", 8)
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
     val root = java.nio.file.Files.createTempDirectory("graft_acprobe")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...}. Queries are forced through the
   * noop sink so every output column is actually computed (a bare count()
@@ -23,31 +21,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Set every dialect conf the builders may flip ONCE, up front: some
-    // builders mutate session confs (ANSI off, nanosAsLong) and a conf set
-    // by one thread mid-flight would change analysis-time semantics of an
-    // unrelated query being planned concurrently.
-    Graft.referenceSemantics(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // st10 flips the session to RocksDB mid-run; set it up front so every
-    // concurrent stream plans against the same provider
-    graft.streaming.SessionizeTws.configure(spark)
-    // Maintenance cadence differs per pass. CONCURRENT pass: keep the
-    // default 60 s daemon so the RocksDB providers of FINISHED streaming
-    // entries unload as the pass proceeds — r8 suppressed the daemon for
-    // the whole run (600 s), which let ~26 streaming entries × cpus
-    // providers accumulate native memory across the entire concurrent
-    // pass, the leading suspect for BENCH_r08's gate-run drift (code-
-    // untouched entries like ext_pack_budget at 5× their solo time).
+    val spark = Harness.session()
+    // Maintenance cadence differs per pass. CONCURRENT pass: Spark's
+    // default 60 s daemon (Harness.session parks it at 600 s), so the
+    // RocksDB providers of FINISHED streaming entries unload as the pass
+    // proceeds — r8 suppressed the daemon for the whole run (600 s),
+    // which let ~26 streaming entries × cpus providers accumulate native
+    // memory across the entire concurrent pass, the leading suspect for
+    // BENCH_r08's gate-run drift (code-untouched entries like
+    // ext_pack_budget at 5× their solo time).
     // Concurrent per-query times are non-attributable by design (jobs
     // overlap), so mid-pass unload noise is acceptable HERE and only
     // here. SEQUENTIAL pass: daemon parked (600 s) + explicit unloads
@@ -57,8 +39,7 @@ object Bench {
     spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "60s")
     // JIT/classload warmup so per-query numbers measure the plan, not
     // first-use JVM costs.
-    SparkEntry.queries.get("a2_grouped_count")
-      .foreach(q => q(spark, sfDir).write.format("noop").mode("overwrite").save())
+    Harness.run(spark, "a2_grouped_count", sfDir)
     // Pre-warm every per-JVM trainer cache (ANN codebooks/rotations,
     // the quality classifier, DSIR weights) by running the
     // trainer-bearing entries once BEFORE the timed window: trainer
@@ -74,25 +55,8 @@ object Bench {
       "ext_sim_topk_pq", "ext_sim_topk_opq", "ext_sim_topk_opq_trained",
       "ext_sim_topk_opq_full", "ext_ann_filtered", "ext_ann_lakehouse",
       "ext_ann_lakehouse_ivfpq", "st31_stream_ivf_ingest")
-    trainerEntries.foreach(n => SparkEntry.queries.get(n).foreach(q =>
-      scala.util.Try(
-        q(spark, sfDir).write.format("noop").mode("overwrite").save())))
-    // shed the providers the warmup's streaming entry loaded
-    scala.util.Try(
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop())
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val s0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        // class + top frames: a null-message NPE with no stack cost a
-        // debugging session once
-        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
-          s"${e.getMessage}\n  " +
-          e.getStackTrace.take(6).mkString("\n  "))
-      }
-      (System.nanoTime() - s0) / 1e9
-    }
-    val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
+    trainerEntries.foreach(n => Harness.run(spark, n, sfDir))
+    val catalog = SparkEntry.queries.keys.toSeq.sorted
     // The heaviest stateful-streaming entries run as a SERIAL TAIL of the
     // concurrent pass (still inside its timed window, so `total` remains
     // whole-catalog wall-clock): their wall time is per-partition RocksDB
@@ -106,60 +70,48 @@ object Bench {
       "st3_stream_stream_join", "st4_stream_join_watermarked",
       "st24_stream_join_left_outer", "st26_stream_join_full_outer",
       "st33_stream_txlog_update_sink", "st37_stream_datacard")
-    val (heavy, light) = catalog.partition(c => heavyStreaming(c._1))
+    val (heavy, light) = catalog.partition(heavyStreaming)
     // Concurrent pass: Spark's scheduler interleaves jobs, so the
     // catalog's per-query fixed costs (planning, stream startup, temp IO)
     // overlap instead of serializing. 2× cores: waits overlap compute.
-    val parallelism = math.max(4, cpus.toInt * 2)
+    val parallelism = math.max(4, Harness.cpus * 2)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
-    def unloadStateStores(): Unit = scala.util.Try(
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop())
     val t0 = System.nanoTime()
-    val futures = light.map { case (name, fn) =>
-      scala.concurrent.Future { name -> runOne(name, fn) }
+    val futures = light.map { name =>
+      scala.concurrent.Future { name -> Harness.timed(spark, name, sfDir) }
     }
     val lightResults = scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
-    unloadStateStores() // shed the light pass's providers before the tail
-    val heavyResults = heavy.map { case (name, fn) =>
-      val r = name -> runOne(name, fn)
-      unloadStateStores() // between-entry unload OUTSIDE the entry's time
-      r
-    }
+    Harness.unloadStateStores() // shed the light pass's providers before the tail
+    val heavyResults = heavy.map(name => name -> Harness.run(spark, name, sfDir))
     val results = (lightResults ++ heavyResults).sortBy(_._1)
     val total = (System.nanoTime() - t0) / 1e9
     pool.shutdown()
+    // a failed entry's NaN is written as null: NaN is not JSON
     def toJson(xs: Seq[(String, Double)], dp: Int = -1): String =
       xs.map { case (k, v) =>
-        val value = if (dp < 0) v.toString else s"%.${dp}f".format(v)
-        "\"" + k + "\":" + value
+        val value =
+          if (v.isNaN) "null" else if (dp < 0) v.toString else s"%.${dp}f".format(v)
+        Harness.json(k) + ":" + value
       }.mkString("{", ",", "}")
     // Sequential pass (always): one query at a time — attributable
     // per-query data-path times for round-over-round regression tracking.
     // Discard one warmup run first: the alphabetically-first query
     // otherwise absorbs the concurrent pass's GC/JIT/page-cache debris
     // (a5_tpch_q1 measured 1.14 s vs 6.33 s on identical code, r5 vs r6).
-    // Between sequential queries, unload every state-store provider the
-    // previous query left loaded — OUTSIDE the timed region. Otherwise the
-    // close/unload cost of query N's 32 RocksDB instances lands at an
-    // arbitrary later maintenance tick, charged to query N+k. stop() also
-    // parks the maintenance daemon; the next stateful query restarts it.
-    unloadStateStores() // shed the whole concurrent pass's providers first
+    // Harness.run unloads every state-store provider between sequential
+    // queries, outside the timed region.
+    Harness.unloadStateStores() // shed the whole concurrent pass's providers first
     // park the daemon for the attributable pass (see the cadence note up
     // top): StateStore.stop() above killed the 60 s task; the next
     // stateful query restarts it reading THIS value
     spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    catalog.headOption.foreach { case (name, fn) => runOne(name, fn) }
-    unloadStateStores()
+    catalog.headOption.foreach(Harness.run(spark, _, sfDir))
     val seqT0 = System.nanoTime()
-    val seqResults = catalog.map { case (name, fn) =>
-      val r = name -> runOne(name, fn)
-      unloadStateStores()
-      r
-    }
+    val seqResults = catalog.map(name => name -> Harness.run(spark, name, sfDir))
     val seqTotal = (System.nanoTime() - seqT0) / 1e9
     // Full-precision detail lines FIRST; the driver's tail capture keeps
     // only the LAST 2000 bytes of stdout (measured: BENCH_r03.tail is

@@ -39,7 +39,7 @@ object PlanDump {
     "ext_hybrid_retrieval")
 
   def main(args: Array[String]): Unit = {
-    val spark = Graft.session("local[4]", 4)
+    val spark = Harness.session()
     val sf = "/root/testdata/sf0.001"
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans of headline queries (sf0.001)\n\n"

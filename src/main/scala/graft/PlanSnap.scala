@@ -22,7 +22,7 @@ object PlanSnap {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
-    val spark = Graft.session("local[4]", 4)
+    val spark = Harness.session()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sf)

@@ -125,7 +125,6 @@ object ScaleProbe {
     }
 
     if (!have("events")) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // ts passes through in whatever physical encoding the lake wrote
       // (nanos-long / NTZ / µs) — Tables.loadEvents adapts at read time
       val ev = spark.read.parquet(s"$Sf01/events.parquet")
@@ -150,51 +149,17 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Graft.referenceSemantics(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.streaming.SessionizeTws.configure(spark)
-    // same mid-pass-maintenance suppression as Bench: unloads are explicit
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-
+    val spark = Harness.session()
     synthesize(spark)
 
     // full catalog by default; a name list as args narrows the probe
     val names =
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    def unload(): Unit = scala.util.Try(
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop())
-    def time(name: String, dir: String): Double = {
-      // elapsed captured BEFORE the unload: closing every RocksDB provider
-      // belongs to harness cleanup, not the entry's measured duration
-      // (Bench keeps unloads outside its timed region the same way)
-      val s0 = System.nanoTime()
-      val elapsed = try {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - s0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[probe] $name@$dir failed: ${e.getMessage}")
-        Double.NaN
-      }
-      unload()
-      elapsed
-    }
-    def minOf2(name: String, dir: String): Double = {
-      val a = time(name, dir); val b = time(name, dir)
-      math.min(a, b)
-    }
+    def minOf2(name: String, dir: String): Double =
+      math.min(Harness.run(spark, name, dir), Harness.run(spark, name, dir))
     // JVM warmup on the small scale, discarded
-    time(names.head, Sf01)
+    Harness.run(spark, names.head, Sf01)
     println("name,sf0.1_sec,sf1_sec,ratio,flag")
     names.foreach { n =>
       val t01 = minOf2(n, Sf01)
