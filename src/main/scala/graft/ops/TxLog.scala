@@ -2319,12 +2319,15 @@ object TxLog {
     * its own values for a GENERATED ALWAYS column must supply the right
     * ones, or downstream pruning/joins on the column silently lie). One
     * predicated scan per declared column, same posture as CHECK
-    * constraints. */
-  private def applyGenerated(df: DataFrame, table: String): DataFrame =
+    * constraints. Supplied values are checked only on rows where
+    * `checked` holds — a CDC feed's delete markers legitimately carry
+    * nulls in business columns, including a generated one. */
+  private def applyGenerated(df: DataFrame, table: String,
+      checked: org.apache.spark.sql.Column = lit(true)): DataFrame =
     generatedCols(table).foldLeft(df) { case (d, (c, e)) =>
       if (!d.columns.exists(_.equalsIgnoreCase(c))) d.withColumn(c, expr(e))
       else {
-        if (!d.filter(!(col(c) <=> expr(e))).isEmpty)
+        if (!d.filter(checked && !(col(c) <=> expr(e))).isEmpty)
           throw new IllegalArgumentException(
             s"txlog generated column '$c' ($e) on $table: the write " +
               "supplies values that differ from the generation expression " +
@@ -3972,9 +3975,6 @@ object TxLog {
     base.filter(col(colName) >= lo && col(colName) <= hi)
   }
 
-  /** Keyed MERGE: per `keyCols` keep the highest-`versionCol` row (ties →
-    * incoming wins), committed as one new txlog version. Optimistic: a lost
-    * commit race re-reads the new snapshot and re-merges. */
   /** Typed per-column bounds of the merge keys over the incoming batch:
     * numeric/timestamp key columns yield double bounds (pruned against
     * `stats`), string key columns lexicographic bounds (pruned against
@@ -4106,38 +4106,59 @@ object TxLog {
     }
   }
 
-  def merge(spark: SparkSession, table: String, updates0: DataFrame,
-      keyCols: Seq[String], versionCol: String, batchId: Long = -1L,
-      streamId: Option[String] = None): Long = {
-    val updates = applyGenerated(updates0, table)
-    validateConstraints(updates, constraints(table))
-    val keyBounds = mergeKeyBounds(updates, keyCols) // snapshot-independent
-    val keyProbes = mergeKeyProbes(updates, keyCols) // snapshot-independent
-    // lost the race: a new snapshot exists, re-merge against it
-    optimistic(table, "merge") { base =>
-      val allActive = base.map(_ => activeFiles(table, base)).getOrElse(Seq.empty)
-      // Stats-pruned MERGE: only files whose recorded key range intersects
-      // the batch's key bounds are rewritten — for a key-clustered table
-      // with localized updates (the CDC shape), per-merge cost follows the
-      // TOUCHED files, not the table. filesForRanges keeps files with NO
-      // recorded stats (they could hold any key), so pruning never drops
-      // a row that might lose to an incoming key; untouched files' rows
-      // are unchallenged by construction (their keys are outside the
-      // batch's bounds) and stay byte-identical in place.
-      val rangeTouched =
-        if (base.isEmpty) Seq.empty
-        else keyBounds match {
-          case Some(b) => filesForKeyBounds(table, b, base)
-          case None => allActive
-        }
-      // ONE sidecar read per attempt serves all three bloom questions
-      // (survivors, indexed cols, inertness) — see [[BloomIndex]]
+  /** The key-bounds + bloom prune every keyed verb shares ([[merge]],
+    * [[applyChanges]], [[applyChangesScd2]], [[repairScd2]] and
+    * [[mergeInto]]'s `onKeys`): the batch's bounds and probes are
+    * snapshot-independent, so they compute once per call, and
+    * [[candidates]] narrows one attempt's active files to those that may
+    * hold a batch key. Files without recorded stats or blooms always
+    * pass — pruning only ever narrows, never decides membership. */
+  private final class KeyPrune(table: String, batch: DataFrame,
+      keyCols: Seq[String]) {
+    private val bounds = mergeKeyBounds(batch, keyCols)
+    private val probes = mergeKeyProbes(batch, keyCols)
+    def candidates(base: Option[Long], bi: BloomIndex): Seq[String] = {
+      val ranged = bounds match {
+        case Some(b) => filesForKeyBounds(table, b, base)
+        case None => activeFiles(table, base)
+      }
+      refineTouchedByBlooms(table, ranged, probes, batch, base, bi)
+    }
+  }
+
+  /** The keyed latest-per-key fold behind [[merge]] (`opCol` = None:
+    * every row upserts) and [[applyChanges]]: one key-partitioned window
+    * over the touched files ∪ the batch keeps each key's
+    * highest-`versionCol` row (ties → incoming beats existing, then a
+    * delete beats an upsert) and drops winning deletes. Generated
+    * columns compute when absent; their supplied values and the CHECK
+    * constraints validate on the incoming non-delete rows BEFORE the
+    * fold, so a violating row refuses even when it loses on version. */
+  private def foldLatest(spark: SparkSession, table: String,
+      batch0: DataFrame, keyCols: Seq[String], versionCol: String,
+      opCol: Option[String], batchId: Long,
+      streamId: Option[String]): Long = {
+    // NULL op reads as upsert (a feed that only marks deletes), not as a
+    // silent delete-by-three-valued-logic
+    val isDelete = opCol.fold(lit(false))(op =>
+      coalesce(col(op), lit("upsert")) === "delete")
+    val batch = applyGenerated(batch0, table, checked = !isDelete)
+    validateConstraints(batch.filter(!isDelete), constraints(table))
+    val prune = new KeyPrune(table, batch, keyCols)
+    // lost the race: a new snapshot exists, re-fold against it
+    optimistic(table, opCol.fold("merge")(_ => "applyChanges")) { base =>
+      val allActive = base.fold(Seq.empty[String])(_ => activeFiles(table, base))
+      // ONE sidecar read per attempt serves the pruning and the commit's
+      // bloom bookkeeping — see [[BloomIndex]]
       val bi = new BloomIndex(spark, table, activeBlooms(table, base))
       try {
+        // Stats-pruned: only files that may hold a batch key are
+        // rewritten — for a key-clustered table with localized updates
+        // (the CDC shape), per-fold cost follows the TOUCHED files, not
+        // the table. Untouched files' rows are unchallenged by
+        // construction and stay byte-identical in place.
         val touched =
-          refineTouchedByBlooms(table, rangeTouched, keyProbes,
-            updates, base, bi)
-        val untouched = allActive.filterNot(touched.toSet)
+          if (base.isEmpty) Seq.empty else prune.candidates(base, bi)
         // latest-per-key applies to the incoming batch too: the first batch
         // of a CDC stream can itself carry several versions of one key.
         // When every file prunes away, the zero-row read still enforces the
@@ -4152,66 +4173,52 @@ object TxLog {
         // side carries the id column, i.e. a with-ids touched read) —
         // the union stays strict so a batch missing a business column
         // fails loudly
-        val updatesIn =
+        val incoming0 = batch.withColumn("_src", lit(1))
+        val incoming =
           if (tracking && touched.nonEmpty)
-            updates.withColumn(RowIdCol, lit(null).cast("long"))
-          else updates
-        val all = existing match {
-          case None => updatesIn.withColumn("_src", lit(1))
-          case Some(cur) => cur.withColumn("_src", lit(0))
-            .unionByName(updatesIn.withColumn("_src", lit(1)))
+            incoming0.withColumn(RowIdCol, lit(null).cast("long"))
+          else incoming0
+        val all0 = existing match {
+          case None => incoming
+          case Some(cur) => opCol.fold(cur)(cur.withColumn(_, lit("upsert")))
+            .withColumn("_src", lit(0))
+            .unionByName(incoming)
         }
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(versionCol).desc, col("_src").desc)
+        val byKey = Window.partitionBy(keyCols.map(col): _*)
         // Row tracking: the id follows the KEY — a CDC update that wins
         // over an existing row inherits that row's id (max over the key
         // group: incoming rows carry NULL, so any existing id wins;
         // brand-new keys stay NULL and take the commit's fresh range)
-        val all2 =
-          if (tracking && all.columns.contains(RowIdCol))
-            all.withColumn(RowIdCol, max(col(RowIdCol))
-              .over(Window.partitionBy(keyCols.map(col): _*)))
-          else all
-        val merged = all2.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn", "_src")
-        val add = writeData(merged, table)
-        val v = base.getOrElse(0L) + 1
-        // DVs referencing only rewritten files retire (their deletes just
-        // materialized); a DV still covering a kept file stays active.
-        // Kept entries normalize through fileKey — DV refs are recorded in
-        // that form, and a shallow-clone's ABSOLUTE entry would otherwise
-        // never match, mis-retiring a live DV (rows would resurrect)
-        val dvRemove =
-          if (untouched.isEmpty) activeDvs(table, base)
-          else inertDvs(spark, table, activeDvs(table, base),
-            untouched.map(fileKey).toSet)
-        // the bloom index follows the rewrite: output files get filters
-        // for the columns the table already indexes, and sidecars whose
-        // every indexed file was rewritten retire with the commit
-        val minv = logicalsOf(mappingAsOf(table, base))
-        val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-          .map(c => minv.getOrElse(c, c))
-          .distinct.filter(merged.columns.contains)
-        val blAdd = fileBlooms(spark, table, add, blCols)
-        val blRemove =
-          if (untouched.isEmpty) bi.sidecars
-          else bi.inert(untouched.map(fileKey).toSet)
-        // declared stats columns re-record on the rewrite — without
-        // this every merge strips its output files of skipping stats
-        // and the NEXT merge's key-bounds pruning must treat them as
-        // could-hold-anything (one-merge decay of the CDC fast path)
-        val stCols = declaredCols(table, "graft.stats.columns")
-          .map(c => minv.getOrElse(c, c))
-          .filter(merged.columns.contains)
-        val (nst, sst) = fileStats(spark, table, add, stCols)
-        if (tryCommit(table, Commit(v, add, touched, "merge", batchId,
-          stats = nst, sstats = sst,
-          schemaDdl = Some(logicalDdl(merged)),
-          dvRemove = dvRemove, streamId = streamId,
-          bloomAdd = blAdd, bloomRemove = blRemove))) Some(v) else None
+        val all =
+          if (tracking && all0.columns.contains(RowIdCol))
+            all0.withColumn(RowIdCol, max(col(RowIdCol)).over(byKey))
+          else all0
+        // Final key: on a full (version, src) tie — two rows in the SAME
+        // batch with the same key and version, one delete and one upsert —
+        // the delete wins deterministically; without it row_number breaks
+        // the tie arbitrarily and the survivor can differ run-to-run.
+        val w = byKey.orderBy(Seq(col(versionCol).desc, col("_src").desc) ++
+          opCol.map(_ => isDelete.desc): _*)
+        val merged = all.withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") === 1 && !isDelete)
+          .drop(Seq("_rn", "_src") ++ opCol: _*)
+        Option.when(commitRewrite(spark, table, base, allActive, touched,
+          merged, "merge", schemaDdlOverride = Some(logicalDdl(merged)),
+          batchId = batchId, streamId = streamId, blooms = Some(bi)))(
+          base.getOrElse(0L) + 1)
       } finally bi.release()
     }
   }
+
+  /** Keyed MERGE: per `keyCols` keep the highest-`versionCol` row (ties →
+    * incoming wins), committed as one new txlog version — [[applyChanges]]
+    * without deletes. Optimistic: a lost commit race re-reads the new
+    * snapshot and re-merges. */
+  def merge(spark: SparkSession, table: String, updates: DataFrame,
+      keyCols: Seq[String], versionCol: String, batchId: Long = -1L,
+      streamId: Option[String] = None): Long =
+    foldLatest(spark, table, updates, keyCols, versionCol, None, batchId,
+      streamId)
 
   /** foreachBatch adapter: replay-idempotent streaming MERGE. A batch id
     * already present in the log (checkpoint-recovery redelivery) is
@@ -4287,124 +4294,15 @@ object TxLog {
     * into the table as one commit. Per key, the highest-`versionCol` row
     * wins (ties → incoming beats existing, later `opCol`='delete' beats an
     * earlier upsert); a winning delete removes the key, a winning upsert
-    * lands WITHOUT the op column. Same optimistic commit loop and scale
-    * shape as [[merge]]: one key-partitioned window over current ∪ batch.
-    * Out-of-order CDC is handled by the version ordering — a stale delete
-    * arriving after a newer upsert does NOT kill the key. */
-  def applyChanges(spark: SparkSession, table: String, changes0: DataFrame,
+    * lands WITHOUT the op column. The same fold as [[merge]]: one
+    * key-partitioned window over touched files ∪ batch. Out-of-order CDC
+    * is handled by the version ordering — a stale delete arriving after a
+    * newer upsert does NOT kill the key. */
+  def applyChanges(spark: SparkSession, table: String, changes: DataFrame,
       keyCols: Seq[String], versionCol: String, opCol: String,
-      batchId: Long = -1L, streamId: Option[String] = None): Long = {
-    // generated columns: compute when absent (delete rows' null bases
-    // generate null — fine, those rows drop), but VALIDATE supplied
-    // values only on non-delete rows — a delete marker legitimately
-    // carries nulls in business columns, including a generated one
-    val changes = {
-      val gen = generatedCols(table)
-      val computed = gen.foldLeft(changes0) { case (d, (c, e)) =>
-        if (!d.columns.exists(_.equalsIgnoreCase(c))) d.withColumn(c, expr(e))
-        else d
-      }
-      gen.foreach { case (c, e) =>
-        if (changes0.columns.exists(_.equalsIgnoreCase(c)) &&
-            !computed.filter(coalesce(col(opCol), lit("upsert")) =!= "delete")
-              .filter(!(col(c) <=> expr(e))).isEmpty)
-          throw new IllegalArgumentException(
-            s"txlog generated column '$c' ($e) on $table: the CDC feed " +
-              "supplies values that differ from the generation expression")
-      }
-      computed
-    }
-    // same stats pruning as [[merge]]: upserts AND deletes only contest
-    // keys inside the batch's bounds, so files whose recorded key range
-    // misses those bounds hold no challengeable rows and stay in place
-    val keyBounds = mergeKeyBounds(changes, keyCols)
-    val keyProbes = mergeKeyProbes(changes, keyCols)
-    // lost the race: re-apply against the new snapshot
-    optimistic(table, "applyChanges") { base =>
-      val allActive = base.map(_ => activeFiles(table, base)).getOrElse(Seq.empty)
-      val rangeTouched =
-        if (base.isEmpty) Seq.empty
-        else keyBounds match {
-          case Some(b) => filesForKeyBounds(table, b, base)
-          case None => allActive
-        }
-      // ONE sidecar read per attempt, as in [[merge]]
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      try {
-        val touched =
-          refineTouchedByBlooms(table, rangeTouched, keyProbes,
-            changes, base, bi)
-        val untouched = allActive.filterNot(touched.toSet)
-        val tracking = rowTrackingEnabled(table, base)
-        val existing = base.map { _ =>
-          if (touched.nonEmpty) readFiles(spark, table, touched, base,
-            withRowIds = tracking)
-          else read(spark, table, base).limit(0)
-        }
-        // explicit null id on the incoming side; strict union (a feed
-        // missing a business column must fail loudly, not NULL-fill)
-        val incoming0 = changes.withColumn("_src", lit(1))
-        val incoming =
-          if (tracking && touched.nonEmpty)
-            incoming0.withColumn(RowIdCol, lit(null).cast("long"))
-          else incoming0
-        val all0 = existing match {
-          case None => incoming
-          case Some(cur) => cur
-            .withColumn(opCol, lit("upsert"))
-            .withColumn("_src", lit(0))
-            .unionByName(incoming)
-        }
-        // Row tracking: the id follows the KEY (see [[merge]])
-        val all =
-          if (tracking && all0.columns.contains(RowIdCol))
-            all0.withColumn(RowIdCol, max(col(RowIdCol))
-              .over(Window.partitionBy(keyCols.map(col): _*)))
-          else all0
-        // Final key: on a full (version, src) tie — two rows in the SAME
-        // batch with the same key and version, one delete and one upsert —
-        // the delete wins deterministically; without it row_number breaks
-        // the tie arbitrarily and the survivor can differ run-to-run.
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(col(versionCol).desc, col("_src").desc,
-            (coalesce(col(opCol), lit("upsert")) === "delete").desc)
-        // NULL op reads as upsert (a feed that only marks deletes), not as
-        // a silent delete-by-three-valued-logic
-        val merged = all.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1 &&
-            coalesce(col(opCol), lit("upsert")) =!= "delete")
-          .drop("_rn", "_src", opCol)
-        validateConstraints(merged, constraints(table))
-        val add = writeData(merged, table)
-        val v = base.getOrElse(0L) + 1
-        val dvRemove =
-          if (untouched.isEmpty) activeDvs(table, base)
-          else inertDvs(spark, table, activeDvs(table, base),
-            untouched.map(fileKey).toSet)
-        val minv = logicalsOf(mappingAsOf(table, base))
-        val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-          .map(c => minv.getOrElse(c, c))
-          .distinct.filter(merged.columns.contains)
-        val blAdd = fileBlooms(spark, table, add, blCols)
-        val blRemove =
-          if (untouched.isEmpty) bi.sidecars
-          else bi.inert(untouched.map(fileKey).toSet)
-        // declared stats columns re-record on the rewrite — without
-        // this every merge strips its output files of skipping stats
-        // and the NEXT merge's key-bounds pruning must treat them as
-        // could-hold-anything (one-merge decay of the CDC fast path)
-        val stCols = declaredCols(table, "graft.stats.columns")
-          .map(c => minv.getOrElse(c, c))
-          .filter(merged.columns.contains)
-        val (nst, sst) = fileStats(spark, table, add, stCols)
-        if (tryCommit(table, Commit(v, add, touched, "merge", batchId,
-          stats = nst, sstats = sst,
-          schemaDdl = Some(logicalDdl(merged)),
-          dvRemove = dvRemove, streamId = streamId,
-          bloomAdd = blAdd, bloomRemove = blRemove))) Some(v) else None
-      } finally bi.release()
-    }
-  }
+      batchId: Long = -1L, streamId: Option[String] = None): Long =
+    foldLatest(spark, table, changes, keyCols, versionCol, Some(opCol),
+      batchId, streamId)
 
   /** foreachBatch adapter for [[applyChanges]] — (streamId, batchId)-
     * idempotent like [[sink]], but the feed carries deletes. */
@@ -4427,10 +4325,10 @@ object TxLog {
     * (`__start_at <= v AND (v < __end_at OR __end_at IS NULL)`).
     *
     * Incremental cost follows the BATCH, not the table: candidate files
-    * prune through the same key-bounds + bloom machinery as [[merge]],
-    * an exact semi-join of OPEN rows against the batch's keys finds the
-    * touched files, and only those rewrite — closed history rows and
-    * untouched keys stay byte-identical in place. The incremental fold
+    * prune through the [[KeyPrune]] every keyed verb shares, an exact
+    * semi-join of their rows against the batch's keys finds the touched
+    * files ([[touchedFiles]]), and only those rewrite — closed history
+    * rows and untouched keys stay byte-identical in place. The incremental fold
     * is equivalent to the global recompute (each key's history is the
     * lead()-chain of its events) as long as each key's sequence values
     * arrive non-decreasing across batches — an out-of-order batch that
@@ -4464,34 +4362,22 @@ object TxLog {
     // (if any) closes at it
     val firstVer = changes.groupBy(keyCols.map(col): _*)
       .agg(min(col(versionCol)).cast("long").alias("__scd_first"))
-    val keyBounds = mergeKeyBounds(changes, keyCols)
-    val keyProbes = mergeKeyProbes(changes, keyCols)
+    val prune = new KeyPrune(table, changes, keyCols)
     optimistic(table, "applyChangesScd2") { base =>
       if (base.isEmpty || activeFiles(table, base).isEmpty)
         Some(append(newRows, table, batchId = batchId,
           streamId = streamId))
       else {
         val allActive = activeFiles(table, base)
-        val ranged = keyBounds match {
-          case Some(b) => filesForKeyBounds(table, b, base)
-          case None => allActive
-        }
         val bi = new BloomIndex(spark, table, activeBlooms(table, base))
         try {
-          val candidates = refineTouchedByBlooms(table, ranged, keyProbes,
-            changes, base, bi)
           // exact: files holding ANY row for a batch key. Not just open
           // rows — a key whose chain is fully CLOSED must still be found,
           // or a late event for it would silently append an overlapping
           // "current" row instead of hitting the sequence guard below.
-          val touchedRel =
-            if (candidates.isEmpty) Set.empty[String]
-            else readFiles(spark, table, candidates, base,
-                keepRowKeys = true)
-              .join(firstVer, keyCols, "left_semi")
-              .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
-          val touched = candidates.filter(f =>
-            touchedRel.contains(fileKey(f)))
+          val touched = touchedFiles(spark, table,
+            prune.candidates(base, bi), base)(
+            _.join(firstVer, keyCols, "left_semi"))
           val tracking = rowTrackingEnabled(table, base)
           val rewritten =
             if (touched.isEmpty) newRows
@@ -4526,7 +4412,7 @@ object TxLog {
             }
           Option.when(commitRewrite(spark, table, base, allActive, touched,
             rewritten, "scd2", batchId = batchId,
-            streamId = streamId))(base.get + 1)
+            streamId = streamId, blooms = Some(bi)))(base.get + 1)
         } finally bi.release()
       }
     }
@@ -4557,30 +4443,18 @@ object TxLog {
       col(versionCol).cast("long").alias("__scd_ver"),
       coalesce(col(opCol), lit("upsert")).alias("__scd_op")): _*)
     val lateKeys = lateChanges.select(keyCols.map(col): _*).distinct()
-    val keyBounds = mergeKeyBounds(lateChanges, keyCols)
-    val keyProbes = mergeKeyProbes(lateChanges, keyCols)
+    val prune = new KeyPrune(table, lateChanges, keyCols)
     optimistic(table, "repairScd2") { base =>
       require(base.nonEmpty && activeFiles(table, base).nonEmpty,
         s"repairScd2 on empty txlog table $table — use applyChangesScd2")
       val allActive = activeFiles(table, base)
-      val ranged = keyBounds match {
-        case Some(b) => filesForKeyBounds(table, b, base)
-        case None => allActive
-      }
       val bi = new BloomIndex(spark, table, activeBlooms(table, base))
       try {
-        val candidates = refineTouchedByBlooms(table, ranged, keyProbes,
-          lateChanges, base, bi)
         // ANY row of an affected key touches (history rewrites whole
         // chains, not just open rows)
-        val touchedRel =
-          if (candidates.isEmpty) Set.empty[String]
-          else readFiles(spark, table, candidates, base,
-              keepRowKeys = true)
-            .join(lateKeys, keyCols, "left_semi")
-            .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
-        val touched = candidates.filter(f =>
-          touchedRel.contains(fileKey(f)))
+        val touched = touchedFiles(spark, table,
+          prune.candidates(base, bi), base)(
+          _.join(lateKeys, keyCols, "left_semi"))
         val tracking = rowTrackingEnabled(table, base)
         // row tracking: untouched keys in rewritten files KEEP their ids;
         // the repaired chains are re-derived rows and take fresh ones
@@ -4623,7 +4497,7 @@ object TxLog {
           else rebuilt
         val rewritten = untouched.unionByName(rebuiltIn)
         Option.when(commitRewrite(spark, table, base, allActive, touched,
-          rewritten, "scd2"))(base.get + 1)
+          rewritten, "scd2", blooms = Some(bi)))(base.get + 1)
       } finally bi.release()
     }
   }
@@ -4937,19 +4811,7 @@ object TxLog {
     optimistic(table, op) { base =>
       require(base.nonEmpty, s"$op on empty txlog table $table")
       val files = activeFiles(table, base)
-      // one scan finds the files containing any LIVE matching row (the
-      // collect is one row per TOUCHED file — metadata-sized, like the
-      // commit). The file key comes from readFiles' row keys rather than
-      // input_file_name(): with a DV anti-join in the plan there are two
-      // sources, and input_file_name() refuses multi-source expressions.
-      val touchedRel = readFiles(spark, table, files, base,
-          keepRowKeys = true)
-        .filter(condition)
-        .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
-      // __dv_f is the last-two-segments fileKey: a canonical SET lookup
-      // resolves both relative entries and absolute (shallow-clone)
-      // entries — no linear suffix scan over the active set
-      val touched = files.filter(f => touchedRel.contains(fileKey(f)))
+      val touched = touchedFiles(spark, table, files, base)(_.filter(condition))
       if (touched.isEmpty) Some(base.get) // nothing matches: no new version
       else {
         // DV-filtered like every other scan: rewriting a touched file must
@@ -4968,16 +4830,39 @@ object TxLog {
       }
     }
 
+  /** The exact touched-file search every row-level DML verb shares: one
+    * scan of `candidates` tagged with row keys, narrowed by `matching` (a
+    * filter, or a semi/anti join against a source) to the LIVE rows that
+    * make a file touched, and collected as one row per touched file —
+    * metadata-sized, like the commit. The file key comes from readFiles'
+    * row keys rather than input_file_name(): with a DV anti-join in the
+    * plan there are two sources, and input_file_name() refuses
+    * multi-source expressions. __dv_f is the last-two-segments fileKey: a
+    * canonical SET lookup resolves both relative entries and absolute
+    * (shallow-clone) entries — no linear suffix scan over the active set. */
+  private def touchedFiles(spark: SparkSession, table: String,
+      candidates: Seq[String], base: Option[Long])(
+      matching: DataFrame => DataFrame): Seq[String] =
+    if (candidates.isEmpty) Seq.empty
+    else {
+      val keys = matching(readFiles(spark, table, candidates, base,
+          keepRowKeys = true))
+        .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
+      candidates.filter(f => keys.contains(fileKey(f)))
+    }
+
   /** Shared commit tail for every file-set rewrite (UPDATE / DELETE /
-    * MERGE INTO / SCD2, and the partial compactions: layout migration,
-    * OPTIMIZE WHERE, DV compaction, REORG PURGE — full [[optimize]] and
-    * [[compactSelected]] keep their own tails for their explicit
-    * bloom/stats columns): constraint-validate (DML only — layout-only
-    * ops skip it) and write the rewritten rows,
-    * retire DVs and bloom sidecars that referenced only rewritten files,
-    * re-record declared stats/bloom metadata on the outputs, and attempt
-    * the commit. Returns false when the version race was lost (caller
-    * re-derives its touched set against the new snapshot and retries). */
+    * MERGE INTO / the keyed fold / SCD2, and the partial compactions:
+    * layout migration, OPTIMIZE WHERE, DV compaction, REORG PURGE — full
+    * [[optimize]] and [[compactSelected]] keep their own tails for their
+    * explicit bloom/stats columns): constraint-validate (DML only —
+    * layout-only ops skip it) and write the rewritten rows, retire DVs
+    * and bloom sidecars that referenced only rewritten files, re-record
+    * declared stats/bloom metadata on the outputs, and attempt the
+    * commit. `base` = None (a keyed fold into a path with no log yet)
+    * commits version 1. Returns false when the version race was lost
+    * (caller re-derives its touched set against the new snapshot and
+    * retries). */
   private def commitRewrite(spark: SparkSession, table: String,
       base: Option[Long], files: Seq[String], touched: Seq[String],
       rewritten0: DataFrame, op: String,
@@ -4986,7 +4871,8 @@ object TxLog {
       colMapStamp: Option[Seq[(String, String)]] = None,
       batchId: Long = -1L,
       streamId: Option[String] = None,
-      extraProps: Map[String, Option[String]] = Map.empty): Boolean = {
+      extraProps: Map[String, Option[String]] = Map.empty,
+      blooms: Option[BloomIndex] = None): Boolean = {
     // DML honors the same CHECK constraints as append/overwrite/merge:
     // an UPDATE … SET that lands a violating row must be refused, not
     // committed (Delta enforces constraints on every write path). Cheap:
@@ -5010,22 +4896,32 @@ object TxLog {
       else mappingOverride
     val inv = logicalsOf(mapping)
     val add = writeData(rewritten, table, mapping)
-    val v = base.get + 1
+    val v = base.getOrElse(0L) + 1
     // the rewrite materialized any DV'd deletes for the touched files;
-    // DVs that referenced ONLY touched files are now inert — retire them
-    // here or they stay active (and vacuum-protected) forever
-    val dvRemove = inertDvs(spark, table, activeDvs(table, base),
-      files.diff(touched).map(fileKey).toSet)
-    // same no-decay rule as merge: DECLARED stats/bloom columns
-    // re-record on the rewrite, or DML strips its output files of
-    // skipping metadata and every later pruned operation must read them.
+    // DVs and bloom sidecars that referenced ONLY touched files are now
+    // inert — retire them here or they stay active (and vacuum-protected)
+    // forever. When no active file is kept, all of them are: retire them
+    // without reading them. Kept entries normalize through fileKey — DV
+    // refs are recorded in that form, and a shallow-clone's ABSOLUTE
+    // entry would otherwise never match, mis-retiring a live DV
+    val kept = files.diff(touched).map(fileKey).toSet
+    val dvRemove =
+      if (kept.isEmpty) activeDvs(table, base)
+      else inertDvs(spark, table, activeDvs(table, base), kept)
+    // DECLARED stats/bloom columns re-record on the rewrite, or DML
+    // strips its output files of skipping metadata and every later
+    // pruned operation must read them (for the keyed fold: one-merge
+    // decay of the CDC fast path).
     // Declared/sidecar names normalize physical→logical for the
     // rewritten-frame filter; fileStats/fileBlooms map back.
     val stCols = declaredCols(table, "graft.stats.columns")
       .map(c => inv.getOrElse(c, c))
       .filter(rewritten.columns.contains)
     val (nst, sst) = fileStats(spark, table, add, stCols, mapping)
-    val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+    // a caller that already holds the attempt's index passes it in, so
+    // the sidecars are read once per attempt
+    val bi = blooms.getOrElse(
+      new BloomIndex(spark, table, activeBlooms(table, base)))
     try {
       val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
         .map(c => inv.getOrElse(c, c))
@@ -5037,9 +4933,9 @@ object TxLog {
           .orElse(schemaAsOf(table, base).map(_.toDDL)),
         dvRemove = dvRemove,
         bloomAdd = fileBlooms(spark, table, add, blCols, mapping),
-        bloomRemove = bi.inert(files.diff(touched).map(fileKey).toSet),
+        bloomRemove = if (kept.isEmpty) bi.sidecars else bi.inert(kept),
         colMap = colMapStamp, properties = extraProps))
-    } finally bi.release()
+    } finally if (blooms.isEmpty) bi.release()
   }
 
   /** DELETE WHERE: drop matching rows, rewriting only the files that
@@ -5080,13 +4976,7 @@ object TxLog {
     if (latestVersion(table).isEmpty) return append(df, table)
     optimistic(table, "replaceWhere") { base =>
       val files = activeFiles(table, base)
-      // same touched-file search as copyOnWrite: one metadata-sized
-      // collect of the files holding any LIVE matching row
-      val touchedRel = readFiles(spark, table, files, base,
-          keepRowKeys = true)
-        .filter(condition)
-        .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
-      val touched = files.filter(f => touchedRel.contains(fileKey(f)))
+      val touched = touchedFiles(spark, table, files, base)(_.filter(condition))
       // survivors of the touched files (NULL-cond rows survive, same
       // three-valued rule as delete) + the incoming rows, committed as
       // one rewrite. Row tracking: survivors keep their ids; incoming
@@ -5319,8 +5209,8 @@ object TxLog {
     * condition equi-joins on (extracted from the conjuncts by the SQL
     * layer; API callers may pass them directly). When present, the
     * touched-file search runs over a STATS/BLOOM-PRUNED candidate set
-    * instead of the whole snapshot — the same key-bounds + bloom
-    * machinery the CDC [[merge]] uses, making a localized MERGE INTO
+    * instead of the whole snapshot — the [[KeyPrune]] every keyed verb
+    * shares (the CDC [[merge]] too), making a localized MERGE INTO
     * scan O(touched files) instead of O(table). Sound because a target
     * row can only match a source row whose equi-key it EQUALS, so every
     * match's key lies within the source's per-column bounds; files with
@@ -5348,14 +5238,10 @@ object TxLog {
     // snapshot-independent source-side key digest (computed once): the
     // source's per-key-column bounds and distinct hash probes, keyed by
     // the TARGET column names they constrain
-    val keyedSrc = if (onKeys.isEmpty) None else Some(
-      source.select(onKeys.map { case (tc, sc) => col(sc).as(tc) }: _*))
-    val keyBounds = keyedSrc.flatMap(mergeKeyBounds(_, onKeys.map(_._1)))
-    val keyProbes = keyedSrc.map(mergeKeyProbes(_, onKeys.map(_._1)))
-      .getOrElse(Map.empty)
-    val tracking = rowTrackingEnabled(table)
-    // a lost race re-derives against the new snapshot
-    optimistic(table, "mergeInto") { base =>
+    val prune = Option.when(onKeys.nonEmpty)(new KeyPrune(table,
+      source.select(onKeys.map { case (tc, sc) => col(sc).as(tc) }: _*),
+      onKeys.map(_._1)))
+    def attempt(base: Option[Long], bi: BloomIndex): Option[Long] = {
       require(base.nonEmpty, s"mergeInto on empty txlog table $table")
       val files = activeFiles(table, base)
       val logSchema = schemaAsOf(table, base)
@@ -5424,28 +5310,12 @@ object TxLog {
       val tgtSchema = org.apache.spark.sql.types.StructType(
         logSchema.fields ++ added)
       val addedNames = added.map(_.name).toSet
-      val ranged = keyBounds match {
-        case Some(b) => filesForKeyBounds(table, b, base)
-        case None => files
-      }
-      val candidates =
-        if (keyProbes.isEmpty || ranged.isEmpty) ranged
-        else {
-          val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-          try refineTouchedByBlooms(table, ranged, keyProbes,
-            keyedSrc.get, base, bi)
-          finally bi.release()
-        }
+      val candidates = prune.fold(files)(_.candidates(base, bi))
       lastMergeCandidateCount.set(candidates.size) // spec probe
       // one semi-join scan over the CANDIDATES finds the files holding
-      // any LIVE matched row (collect is one row per touched file —
-      // metadata-plane-sized)
-      val touchedRel =
-        if (candidates.isEmpty) Set.empty[String]
-        else readFiles(spark, table, candidates, base,
-            keepRowKeys = true).alias(targetAlias)
-          .join(src, condition, "left_semi")
-          .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
+      // any LIVE matched row
+      val matchedFiles = touchedFiles(spark, table, candidates, base)(
+        _.alias(targetAlias).join(src, condition, "left_semi"))
       // WHEN NOT MATCHED BY SOURCE reaches target rows with NO source
       // match — membership can't be bounded by the source's key bounds,
       // so the search is one full-snapshot LEFT ANTI scan (column-pruned
@@ -5457,24 +5327,23 @@ object TxLog {
         case MergeDelete(c) => c.getOrElse(lit(true))
         case _ => lit(false)
       }.reduceOption(_ || _)
-      val nmbsTouched =
-        if (nmbsC.isEmpty || files.isEmpty) Set.empty[String]
-        else readFiles(spark, table, files, base, keepRowKeys = true)
-          .alias(targetAlias)
-          .join(src, condition, "left_anti")
-          .filter(coalesce(nmbsCondAny.get, lit(false)))
-          .select("__dv_f").distinct().collect().map(_.getString(0)).toSet
+      val nmbsFiles =
+        if (nmbsC.isEmpty) Seq.empty
+        else touchedFiles(spark, table, files, base)(
+          _.alias(targetAlias).join(src, condition, "left_anti")
+            .filter(coalesce(nmbsCondAny.get, lit(false))))
       // files to JOIN (match detection) vs files to REWRITE: a merge
       // with no WHEN MATCHED clause (insert-only / NMBS-only) still
       // reads matched files — the inserts' anti-semantics need to see
       // every match — but must NOT rewrite them (their rows can't
       // change); NMBS-fired files always rewrite
-      val joinKeys = touchedRel ++ nmbsTouched
-      val joinFiles = files.filter(f => joinKeys.contains(fileKey(f)))
-      val rewriteKeys =
-        (if (matchedC.nonEmpty) touchedRel else Set.empty[String]) ++
-          nmbsTouched
-      val touched = files.filter(f => rewriteKeys.contains(fileKey(f)))
+      val joinFiles = files.filter((matchedFiles ++ nmbsFiles).toSet)
+      val touched = files.filter(
+        ((if (matchedC.nonEmpty) matchedFiles else Nil) ++ nmbsFiles).toSet)
+      // read at the attempt's base like every other verb: an
+      // enableRowTracking that won the race must reach the retry, or the
+      // rewrite would drop its rows' ids
+      val tracking = rowTrackingEnabled(table, base)
       if (touched.isEmpty && notMatched.isEmpty)
         Some(base.get) // nothing fires and nothing to insert: no new version
       else {
@@ -5562,9 +5431,9 @@ object TxLog {
         // file stay where they are — only insert rows (no target side) and
         // rewrite-file rows flow into the rewritten output
         val kept1 =
-          if (joinKeys == rewriteKeys) kept0
+          if (joinFiles == touched) kept0
           else kept0.filter(!tP ||
-            col("__dv_f").isin(rewriteKeys.toSeq.map(_.asInstanceOf[Any]): _*))
+            col("__dv_f").isin(touched.map(fileKey): _*))
         // A merge with NO WHEN MATCHED clause skips the cardinality check
         // (nothing can update twice), but an NMBS-rewritten file can still
         // hold a target row matched by >1 source rows: it appears once per
@@ -5576,7 +5445,7 @@ object TxLog {
         // insert rows (no target side) get a unique synthetic key so they
         // all survive AND don't pile into one null-key partition.
         val kept =
-          if (matchedC.isEmpty && nmbsTouched.nonEmpty) {
+          if (matchedC.isEmpty && nmbsFiles.nonEmpty) {
             val dedupKey = when(tP, col("__dv_f"))
               .otherwise(concat(lit("__ins_"),
                 monotonically_increasing_id().cast("string")))
@@ -5621,8 +5490,13 @@ object TxLog {
           rewritten, "merge", schemaDdlOverride =
             if (added.nonEmpty) Some(tgtSchema.toDDL) else None,
           extraProps = extraProps, batchId = batchId,
-          streamId = streamId))(base.get + 1)
+          streamId = streamId, blooms = Some(bi)))(base.get + 1)
       }
+    }
+    // a lost race re-derives against the new snapshot
+    optimistic(table, "mergeInto") { base =>
+      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+      try attempt(base, bi) finally bi.release()
     }
   }
 

@@ -267,6 +267,41 @@ class TxLogConflictSpec extends SparkSpec {
         fail(s"the stale-schema append committed at v$v")
     }
   }
+
+  test("a mergeInto retried past enableRowTracking carries the row ids") {
+    val t = tmpDir("txconflict") + "/rt"
+    TxLog.enableRowTracking(t)
+    TxLog.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), t)
+    TxLog.setProperties(t, Map("graft.rowTracking.enabled" -> "false"))
+    def ids(): Map[Long, Option[Long]] =
+      TxLog.readWithRowIds(spark, t).select("k", "_row_id")
+        .as[(Long, Option[Long])].collect().toMap
+    val before = ids()
+    assert(before.values.forall(_.nonEmpty))
+    // the merge's matched-file scan parks on its first row until tracking
+    // is back on — the first attempt loses its race to that commit and
+    // the retry must rewrite the file with its rows' ids
+    spark.udf.register("race_gate_key", (k: Long) => {
+      RaceGate.park("rowTracking")
+      k
+    })
+    val enabled = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val toggler = new Thread(() => {
+      if (RaceGate.awaitParked("rowTracking"))
+        try enabled.set(TxLog.enableRowTracking(t))
+        finally RaceGate.release("rowTracking")
+    }, "row-tracking-enable")
+    toggler.start()
+    TxLog.mergeInto(spark, t, Seq((2L, "B")).toDF("k", "nv"), "t", "s",
+      expr("race_gate_key(t.k) = s.k"),
+      matched = Seq(TxLog.MergeUpdate(None, Map("v" -> col("s.nv")))))
+    toggler.join(120000)
+    assert(enabled.get() > 0, "enableRowTracking must commit mid-merge")
+    assert(TxLog.read(spark, t).as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "B")))
+    assert(ids() === before,
+      "rows in the rewritten file must keep their ids")
+  }
 }
 
 /** Named one-shot rendezvous for the race tests: the first `park(name)`
