@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -86,7 +88,8 @@ object Mview {
     * fold the small files with [[TxLog.optimizeSmall]] — a layout-only
     * commit that [[TxLog.rowDeltas]] skips, so cascading views see
     * nothing. Best-effort: a failed compaction must never fail the
-    * refresh that data-committed already. */
+    * refresh that data-committed already, but it says so on stderr;
+    * fatal errors and interrupts propagate. */
   private def maybeCompact(spark: SparkSession, view: String): Unit = {
     val threshold = TxLog.properties(view)
       .get("graft.mview.compactThreshold").map(_.toInt).getOrElse(32)
@@ -95,7 +98,10 @@ object Mview {
       if (TxLog.activeFiles(view).size > threshold)
         TxLog.optimizeSmall(spark, view,
           minFileSizeBytes = 32L * 1024 * 1024, targetFiles = 1)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[mview] compaction of $view failed: " +
+        s"${e.getClass.getName}: ${e.getMessage}")
+    }
   }
 
   /** A recognized aggregate select item. `fn`: count_star | count |

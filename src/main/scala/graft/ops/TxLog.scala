@@ -1146,6 +1146,16 @@ object TxLog {
     }
   }
 
+  /** Data-file keys (the [[fileKey]] form) the given DV sidecars
+    * reference — one metadata-sized distinct. mergeSchema: range- and
+    * bitset-encoded sidecars have different schemas. */
+  private def dvRefKeys(spark: SparkSession, table: String,
+      dvs: Seq[String]): Set[String] =
+    if (dvs.isEmpty) Set.empty
+    else spark.read.option("mergeSchema", "true")
+      .parquet(dvs.map(resolve(table, _)): _*)
+      .select("file").distinct().collect().map(_.getString(0)).toSet
+
   /** Schema-aware, DV-filtered read of a specific file subset — the ONE
     * place scan semantics live, shared by [[read]], [[readRanges]] and
     * [[copyOnWrite]] so a deletion vector can never be skipped on one path
@@ -2247,21 +2257,13 @@ object TxLog {
     * like every DML path. Returns the new version, or None when every
     * active file already carries the declared layout (no commit). */
   def migrateLayout(spark: SparkSession, table: String): Option[Long] =
-    optimistic(table, "migrateLayout") { base =>
-      val files = base.fold(Seq.empty[String])(_ => activeFiles(table, base))
+    compact(spark, table, "migrateLayout") { (_, files) =>
       val phys = declaredPartitionCols(table).map(physOf(mappingAsOf(table)))
-      val legacy = if (phys.isEmpty) Seq.empty else files.filter { f =>
+      if (phys.isEmpty) Seq.empty else files.filter { f =>
         val carried = partValuesOf(f).map(_._1).toSet
         !phys.forall(carried.contains)
       }
-      if (legacy.isEmpty) Some(None)
-      else {
-        val tracking = rowTrackingEnabled(table, base)
-        val rows = readFiles(spark, table, legacy, base, withRowIds = tracking)
-        Option.when(commitRewrite(spark, table, base, files, legacy, rows,
-          "optimize"))(Some(base.get + 1))
-      }
-    }
+    }.toOption
 
   private def commitProperties(table: String,
       deltas: Map[String, Option[String]]): Long = {
@@ -2774,25 +2776,6 @@ object TxLog {
     candidates.filterNot(f => misses.contains(fileKey(f)))
   }
 
-  /** Bloom sidecar files whose every indexed data file is absent from
-    * `remainingKeys` — nothing they index can ever be read again, so
-    * they retire with the commit that removed their last file (the
-    * [[inertDvs]] pattern; same metadata-sized bookkeeping). */
-  private def inertBlooms(spark: SparkSession, table: String,
-      blooms: Seq[String], remainingKeys: Set[String]): Seq[String] = {
-    if (blooms.isEmpty) return Seq.empty
-    val refs = spark.read.parquet(blooms.map(resolve(table, _)): _*)
-      .withColumn("_bl", input_file_name())
-      .select("_bl", "file").distinct().collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    blooms.filter { bl =>
-      val itsRefs = refs.collect {
-        case (uri, f) if uri.endsWith(fileKey(bl)) => f
-      }
-      itsRefs.nonEmpty && itsRefs.forall(f => !remainingKeys.contains(f))
-    }
-  }
-
   /** One-pass view of the active bloom sidecar set for a single write
     * attempt. merge/applyChanges need THREE derived answers per attempt
     * — indexed columns, probe survivors, inert sidecars — and asking
@@ -2844,8 +2827,10 @@ object TxLog {
         candidates.filterNot(f => misses.contains(fileKey(f)))
       case _ => candidates
     }
-    /** Sidecars whose every indexed file is outside `remainingKeys`
-      * (the [[inertBlooms]] answer, from the collected manifest). */
+    /** Sidecars whose every indexed file is outside `remainingKeys` —
+      * nothing they index can be read again, so they retire with the
+      * commit that removed their last file (the [[inertDvs]] pattern,
+      * answered from the collected manifest). */
     def inert(remainingKeys: Set[String]): Seq[String] =
       sidecars.filter { bl =>
         val itsRefs = manifest.collect {
@@ -3492,11 +3477,7 @@ object TxLog {
     val active = activeFiles(table, asOf)
     val st = stateAt(table, asOf)
     val inv = logicalsOf(mappingAsOf(table, asOf))
-    val dvs = activeDvs(table, asOf)
-    val dvKeys: Set[String] =
-      if (dvs.isEmpty) Set.empty
-      else spark.read.parquet(dvs.map(resolve(table, _)): _*)
-        .select("file").distinct().collect().map(_.getString(0)).toSet
+    val dvKeys = dvRefKeys(spark, table, activeDvs(table, asOf))
     val upTo = asOf.getOrElse(Long.MaxValue)
     val addedV: Map[String, Long] = commits(table)
       .filter(_.version <= upTo)
@@ -4725,10 +4706,7 @@ object TxLog {
       c: Commit): Seq[String] =
     if (c.dvAdd.isEmpty) Seq.empty[String]
     else {
-      val keys = spark.read
-        .parquet(c.dvAdd.map(resolve(table, _)): _*)
-        .select("file").distinct().collect()
-        .map(_.getString(0)).toSet
+      val keys = dvRefKeys(spark, table, c.dvAdd)
       activeFiles(table, Some(c.version))
         .filter(f => keys.contains(fileKey(f)))
     }
@@ -4852,17 +4830,15 @@ object TxLog {
     }
 
   /** Shared commit tail for every file-set rewrite (UPDATE / DELETE /
-    * MERGE INTO / the keyed fold / SCD2, and the partial compactions:
-    * layout migration, OPTIMIZE WHERE, DV compaction, REORG PURGE — full
-    * [[optimize]] and [[compactSelected]] keep their own tails for their
-    * explicit bloom/stats columns): constraint-validate (DML only —
-    * layout-only ops skip it) and write the rewritten rows, retire DVs
-    * and bloom sidecars that referenced only rewritten files, re-record
-    * declared stats/bloom metadata on the outputs, and attempt the
-    * commit. `base` = None (a keyed fold into a path with no log yet)
-    * commits version 1. Returns false when the version race was lost
-    * (caller re-derives its touched set against the new snapshot and
-    * retries). */
+    * MERGE INTO / the keyed fold / SCD2, and every compaction through
+    * [[compact]]): constraint-validate (DML only — layout-only ops skip
+    * it) and write the rewritten rows, retire DVs and bloom sidecars that
+    * referenced only rewritten files, re-record declared (plus the
+    * caller's explicit `statsCols`/`bloomCols`) stats/bloom metadata on
+    * the outputs, and attempt the commit. `base` = None (a keyed fold
+    * into a path with no log yet) commits version 1. Returns false when
+    * the version race was lost (caller re-derives its touched set against
+    * the new snapshot and retries). */
   private def commitRewrite(spark: SparkSession, table: String,
       base: Option[Long], files: Seq[String], touched: Seq[String],
       rewritten0: DataFrame, op: String,
@@ -4872,7 +4848,9 @@ object TxLog {
       batchId: Long = -1L,
       streamId: Option[String] = None,
       extraProps: Map[String, Option[String]] = Map.empty,
-      blooms: Option[BloomIndex] = None): Boolean = {
+      blooms: Option[BloomIndex] = None,
+      statsCols: Seq[String] = Seq.empty,
+      bloomCols: Seq[String] = Seq.empty): Boolean = {
     // DML honors the same CHECK constraints as append/overwrite/merge:
     // an UPDATE … SET that lands a violating row must be refused, not
     // committed (Delta enforces constraints on every write path). Cheap:
@@ -4914,18 +4892,19 @@ object TxLog {
     // decay of the CDC fast path).
     // Declared/sidecar names normalize physical→logical for the
     // rewritten-frame filter; fileStats/fileBlooms map back.
-    val stCols = declaredCols(table, "graft.stats.columns")
+    val stCols = (statsCols ++ declaredCols(table, "graft.stats.columns"))
       .map(c => inv.getOrElse(c, c))
-      .filter(rewritten.columns.contains)
+      .distinct.filter(rewritten.columns.contains)
     val (nst, sst) = fileStats(spark, table, add, stCols, mapping)
     // a caller that already holds the attempt's index passes it in, so
     // the sidecars are read once per attempt
     val bi = blooms.getOrElse(
       new BloomIndex(spark, table, activeBlooms(table, base)))
     try {
-      val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-        .map(c => inv.getOrElse(c, c))
-        .distinct.filter(rewritten.columns.contains)
+      val blCols =
+        (bloomCols ++ bi.cols ++ declaredCols(table, "graft.bloom.columns"))
+          .map(c => inv.getOrElse(c, c))
+          .distinct.filter(rewritten.columns.contains)
       tryCommit(table, Commit(v, add, touched, op, batchId,
         streamId = streamId,
         stats = nst, sstats = sst,
@@ -6301,53 +6280,85 @@ object TxLog {
     if (counts.size == active.size) Some(counts.sum) else None
   }
 
+  /** Output shape of a bin-packing OPTIMIZE rewrite ([[arrange]]):
+    * `targetBytes` sizes the output as ceil(selected bytes / targetBytes)
+    * files, from the commit-recorded sizes (Delta's maxFileSize — OPTIMIZE
+    * toward ~1 GB files regardless of file count); otherwise
+    * `targetFiles` files. */
+  private final case class Packing(targetFiles: Int,
+      targetBytes: Option[Long], clusterBy: Seq[org.apache.spark.sql.Column])
+
+  /** Output arrangement for an OPTIMIZE rewrite: plain bin-packing
+    * (`coalesce`, no shuffle) when no clustering is requested; with
+    * `clusterBy` keys (a column, or a space-filling-curve key like
+    * [[graft.functions.ZOrder.interleave2]]), a range repartition +
+    * in-partition sort so every output file covers a tight min/max range
+    * of the clustered dimensions — the rewrite that makes the recorded
+    * file stats PRUNE (Delta's `OPTIMIZE … ZORDER BY`). The key
+    * expressions need not be table columns: they are evaluated for the
+    * shuffle/sort only and never appear in the output schema. */
+  private def arrange(cur: DataFrame, nOut: Int,
+      clusterBy: Seq[org.apache.spark.sql.Column]): DataFrame =
+    if (clusterBy.isEmpty) cur.coalesce(nOut)
+    else cur.repartitionByRange(nOut, clusterBy: _*)
+      .sortWithinPartitions(clusterBy: _*)
+
+  /** The one compaction engine behind every OPTIMIZE-style verb. Each
+    * attempt asks `select(base, active)` for the files to rewrite (empty:
+    * no-op, `Left(base)`), reads them THROUGH their deletion vectors
+    * (deletes materialize; row ids carry over when tracking is on), packs
+    * them when `packing` is set (otherwise rewrites them as read), and
+    * commits through [[commitRewrite]] as `commitOp` — `Right(v)`. A lost
+    * race re-selects against the new snapshot. `statsCols`/`bloomCols`
+    * are explicit extras on top of the declared and already-indexed
+    * columns. */
+  private def compact(spark: SparkSession, table: String, op: String,
+      commitOp: String = "optimize", packing: Option[Packing] = None,
+      statsCols: Seq[String] = Seq.empty, bloomCols: Seq[String] = Seq.empty)(
+      select: (Option[Long], Seq[String]) => Seq[String])
+      : Either[Option[Long], Long] =
+    optimistic(table, op) { base =>
+      val active = base.fold(Seq.empty[String])(_ => activeFiles(table, base))
+      val sel = select(base, active)
+      if (sel.isEmpty) Some(Left(base))
+      else {
+        val cur = readFiles(spark, table, sel, base,
+          withRowIds = rowTrackingEnabled(table, base))
+        val out = packing.fold(cur) { p =>
+          val nOut = p.targetBytes.map { tb =>
+            require(tb > 0, s"$op targetBytes must be positive: $tb")
+            val sizes = fileSizes(table, base)
+            val total = sel.map(f => sizes.getOrElse(f, 0L)).sum
+            math.max(1L, (total + tb - 1) / tb).toInt
+          }.getOrElse(p.targetFiles)
+          arrange(cur, nOut, p.clusterBy)
+        }
+        Option.when(commitRewrite(spark, table, base, active, sel, out,
+          commitOp, statsCols = statsCols, bloomCols = bloomCols))(
+          Right(base.get + 1))
+      }
+    }
+
+  /** Full OPTIMIZE: rewrite every active file into `targetFiles` files
+    * (or `targetBytes`-sized ones), materializing every deletion vector —
+    * a one-file table with an active DV still rewrites. clusterBy +
+    * statsCols is OPTIMIZE ZORDER BY with data skipping: compacted files
+    * own disjoint key ranges AND the ranges ride the commit, so readRange
+    * prunes to exactly the overlapping files. Explicit `bloomCols`
+    * CREATES the index on an existing table (the "build a bloom index"
+    * entry point); otherwise the rewrite carries forward whatever columns
+    * the table already indexes. */
   def optimize(spark: SparkSession, table: String, targetFiles: Int = 1,
       clusterBy: Seq[org.apache.spark.sql.Column] = Seq.empty,
       statsCols: Seq[String] = Seq.empty,
       targetBytes: Option[Long] = None,
       bloomCols: Seq[String] = Seq.empty): Long =
-    // a lost race recompacts against the new snapshot
-    optimistic(table, "optimize") { base =>
+    compact(spark, table, "optimize",
+      packing = Some(Packing(targetFiles, targetBytes, clusterBy)),
+      statsCols = statsCols, bloomCols = bloomCols) { (base, active) =>
       require(base.nonEmpty, s"optimize on empty txlog table $table")
-      val cur = readFiles(spark, table, activeFiles(table, base), base,
-        withRowIds = rowTrackingEnabled(table, base))
-      // explicit bloomCols CREATES the index on an existing table (the
-      // "build a bloom index" entry point); otherwise the rewrite carries
-      // forward whatever columns the table already indexes
-      val invA = logicalsOf(mappingAsOf(table, base))
-      val blCols = (bloomCols ++ activeBloomCols(spark, table, base) ++
-        declaredCols(table, "graft.bloom.columns"))
-        .map(c => invA.getOrElse(c, c)) // physical→logical on mapped tables
-        .distinct.filter(cur.columns.contains)
-      // targetBytes sizes the output in the unit that matters at scale:
-      // total active bytes / target file size, from the commit-carried
-      // sizes — OPTIMIZE toward ~1 GB files regardless of file count
-      val nOut = targetBytes.map { tb =>
-        math.max(1L, (fileSizes(table, base).values.sum + tb - 1) / tb).toInt
-      }.getOrElse(targetFiles)
-      val arranged =
-        if (clusterBy.nonEmpty)
-          cur.repartitionByRange(nOut, clusterBy: _*)
-            .sortWithinPartitions(clusterBy: _*)
-        else cur.coalesce(nOut)
-      val add = writeData(arranged, table)
-      val v = base.get + 1
-      val remove = activeFiles(table, base)
-      // clusterBy + statsCols is OPTIMIZE ZORDER BY with data skipping:
-      // compacted files own disjoint key ranges AND the ranges ride the
-      // commit, so readRange prunes to exactly the overlapping files
-      // compaction materializes DV deletes into the rewritten files (the
-      // rewrite read through readFiles), so the DVs retire with the commit
-      val (nstats, sstats) = fileStats(spark, table, add,
-        (statsCols ++ declaredCols(table, "graft.stats.columns"))
-          .map(c => invA.getOrElse(c, c))
-          .distinct.filter(arranged.columns.contains))
-      Option.when(tryCommit(table, Commit(v, add, remove, "optimize", -1L,
-          nstats, Some(logicalDdl(arranged)),
-          dvRemove = activeDvs(table, base), sstats = sstats,
-          bloomAdd = fileBlooms(spark, table, add, blCols),
-          bloomRemove = activeBlooms(table, base))))(v)
-    }
+      active
+    }.fold(_.get, identity)
 
   /** Bin-packing OPTIMIZE (Delta's minFileSize form): rewrite ONLY the
     * active files smaller than `minFileSizeBytes` into `targetFiles`
@@ -6369,30 +6380,19 @@ object TxLog {
     * accreted, with no per-table file-count tuning. Overrides
     * `targetFiles` when set; sizes come from the commit log, no
     * filesystem listing. */
-  /** Output arrangement for an OPTIMIZE rewrite: plain bin-packing
-    * (`coalesce`, no shuffle) when no clustering is requested; with
-    * `clusterBy` keys (a column, or a space-filling-curve key like
-    * [[graft.functions.ZOrder.interleave2]]), a range repartition +
-    * in-partition sort so every output file covers a tight min/max range
-    * of the clustered dimensions — the rewrite that makes the recorded
-    * file stats PRUNE (Delta's `OPTIMIZE … ZORDER BY`). The key
-    * expressions need not be table columns: they are evaluated for the
-    * shuffle/sort only and never appear in the output schema. */
-  private def arrange(cur: DataFrame, nOut: Int,
-      clusterBy: Seq[org.apache.spark.sql.Column]): DataFrame =
-    if (clusterBy.isEmpty) cur.coalesce(nOut)
-    else cur.repartitionByRange(nOut, clusterBy: _*)
-      .sortWithinPartitions(clusterBy: _*)
-
   def optimizeSmall(spark: SparkSession, table: String,
       minFileSizeBytes: Long, targetFiles: Int = 1,
       statsCols: Seq[String] = Seq.empty,
       targetBytes: Option[Long] = None,
       clusterBy: Seq[org.apache.spark.sql.Column] = Seq.empty): Option[Long] =
-    compactSelected(spark, table, targetFiles, statsCols, targetBytes,
-      clusterBy) { (active, sizes, _) =>
-      active.filter(f => sizes.getOrElse(f, 0L) < minFileSizeBytes)
-    }
+    compact(spark, table, "optimizeSmall",
+      packing = Some(Packing(targetFiles, targetBytes, clusterBy)),
+      statsCols = statsCols) { (base, active) =>
+      require(base.nonEmpty, s"optimize on empty txlog table $table")
+      val sizes = fileSizes(table, base)
+      val small = active.filter(f => sizes.getOrElse(f, 0L) < minFileSizeBytes)
+      if (small.size < 2) Seq.empty else small // nothing to gain from a rewrite
+    }.toOption
 
   /** CLUSTERING-AWARE INCREMENTAL OPTIMIZE (the Delta liquid-clustering
     * maintenance shape, ZCube-lite): on a table with declared
@@ -6420,8 +6420,11 @@ object TxLog {
       s"optimizeIncremental on $table: declare graft.cluster.columns " +
         "first (the clustering key is what incremental maintenance " +
         "restores); for unclustered compaction use optimizeSmall/OPTIMIZE")
-    compactSelected(spark, table, 1, statsCols, targetBytes,
-      clusterCols.map(col)) { (active, sizes, base) =>
+    compact(spark, table, "optimizeSmall",
+      packing = Some(Packing(1, targetBytes, clusterCols.map(col))),
+      statsCols = statsCols) { (base, active) =>
+      require(base.nonEmpty, s"optimize on empty txlog table $table")
+      val sizes = fileSizes(table, base)
       val upTo = base.getOrElse(Long.MaxValue)
       // adding-commit op per active file; a file whose adding commit was
       // retention-expired folds as unclustered (rewritten once, cubed
@@ -6429,64 +6432,11 @@ object TxLog {
       val addedOp: Map[String, String] = commits(table)
         .filter(_.version <= upTo)
         .flatMap(c => c.add.map(_ -> c.op)).toMap
-      active.filter(f => !addedOp.get(f).contains("optimize") ||
+      val uncubed = active.filter(f => !addedOp.get(f).contains("optimize") ||
         sizes.getOrElse(f, 0L) < minFileSizeBytes)
-    }
+      if (uncubed.size < 2) Seq.empty else uncubed
+    }.toOption
   }
-
-  /** Shared rewrite loop of [[optimizeSmall]] / [[optimizeIncremental]]:
-    * `select` picks the files to fold from (active, sizes, base). */
-  private def compactSelected(spark: SparkSession, table: String,
-      targetFiles: Int, statsCols: Seq[String], targetBytes: Option[Long],
-      clusterBy: Seq[org.apache.spark.sql.Column])(
-      select: (Seq[String], Map[String, Long], Option[Long]) => Seq[String])
-      : Option[Long] =
-    // a lost race re-selects against the new snapshot
-    optimistic(table, "optimizeSmall") { base =>
-      require(base.nonEmpty, s"optimize on empty txlog table $table")
-      val sizes = fileSizes(table, base)
-      val active = activeFiles(table, base)
-      val small = select(active, sizes, base)
-      if (small.size < 2) Some(None) // nothing to gain from a rewrite
-      else {
-        val nOut = targetBytes.map { tb =>
-          require(tb > 0, s"optimizeSmall targetBytes must be positive: $tb")
-          val total = small.map(f => sizes.getOrElse(f, 0L)).sum
-          math.max(1L, (total + tb - 1) / tb).toInt
-        }.getOrElse(targetFiles)
-        val cur = readFiles(spark, table, small, base,
-          withRowIds = rowTrackingEnabled(table, base))
-        val arranged = arrange(cur, nOut, clusterBy)
-        val add = writeData(arranged, table)
-        val v = base.get + 1
-        val keep = active.filterNot(small.toSet)
-        // DVs never reference files newer than themselves, so the
-        // post-commit reference universe for inertness is the kept set
-        // (fileKey-normalized: DV refs are recorded in that form, and a
-        // shallow-clone's absolute entry would otherwise never match)
-        val dvRemove = inertDvs(spark, table, activeDvs(table, base),
-          keep.map(fileKey).toSet)
-        val invB = logicalsOf(mappingAsOf(table, base))
-        val (nstats, sstats) = fileStats(spark, table, add,
-          (statsCols ++ declaredCols(table, "graft.stats.columns"))
-            .map(c => invB.getOrElse(c, c))
-            .distinct.filter(arranged.columns.contains))
-        // one sidecar read answers both the indexed-columns and the
-        // inertness questions — see [[BloomIndex]]
-        val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-        val won = try {
-          val blCols = (bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-            .map(c => invB.getOrElse(c, c))
-            .distinct.filter(arranged.columns.contains)
-          tryCommit(table, Commit(v, add, small, "optimize", -1L,
-            nstats, Some(logicalDdl(arranged)), dvRemove = dvRemove,
-            sstats = sstats,
-            bloomAdd = fileBlooms(spark, table, add, blCols),
-            bloomRemove = bi.inert(keep.map(fileKey).toSet)))
-        } finally bi.release()
-        Option.when(won)(Some(v))
-      }
-    }
 
   /** Partition-scoped compaction — `OPTIMIZE table WHERE partition = v`
     * (Delta's partition-predicate OPTIMIZE): rewrite ONLY the files of
@@ -6512,9 +6462,9 @@ object TxLog {
       case (k, null) => physName(k) -> None
       case (k, v) => physName(k) -> Some(String.valueOf(v))
     }
-    optimistic(table, "optimizeWhere") { base =>
+    val packing = Some(Packing(targetFiles, targetBytes, clusterBy))
+    compact(spark, table, "optimizeWhere", packing = packing) { (base, active) =>
       require(base.nonEmpty, s"optimizeWhere on empty txlog table $table")
-      val active = activeFiles(table, base)
       val sel = active.filter { f =>
         val p = partValuesOf(f).toMap
         p.nonEmpty && want.forall { case (c, v) => p.get(c).contains(v) }
@@ -6523,28 +6473,11 @@ object TxLog {
       // references it — then the rewrite has a job: materialize the
       // deletes and retire the DV (one metadata-sized ref read decides)
       val worthIt = sel.size >= 2 || sel.nonEmpty && {
-        val dvs = activeDvs(table, base)
-        dvs.nonEmpty && {
-          val refs = spark.read.option("mergeSchema", "true")
-            .parquet(dvs.map(resolve(table, _)): _*)
-            .select("file").distinct().collect().map(_.getString(0)).toSet
-          sel.exists(f => refs.contains(fileKey(f)))
-        }
+        val refs = dvRefKeys(spark, table, activeDvs(table, base))
+        sel.exists(f => refs.contains(fileKey(f)))
       }
-      if (!worthIt) Some(None)
-      else {
-        val sizes = fileSizes(table, base)
-        val nOut = targetBytes.map { tb =>
-          require(tb > 0, s"optimizeWhere targetBytes must be positive: $tb")
-          val total = sel.map(f => sizes.getOrElse(f, 0L)).sum
-          math.max(1L, (total + tb - 1) / tb).toInt
-        }.getOrElse(targetFiles)
-        val cur = readFiles(spark, table, sel, base,
-          withRowIds = rowTrackingEnabled(table, base))
-        Option.when(commitRewrite(spark, table, base, active, sel,
-          arrange(cur, nOut, clusterBy), "optimize"))(Some(base.get + 1))
-      }
-    }
+      if (worthIt) sel else Seq.empty
+    }.toOption
   }
 
   /** Deletion-vector maintenance (Delta's DV compaction threshold inside
@@ -6558,11 +6491,10 @@ object TxLog {
     * the threshold. */
   def optimizeDvs(spark: SparkSession, table: String,
       maxDeletedFraction: Double = 0.2): Long =
-    optimistic(table, "optimizeDvs") { base =>
+    compact(spark, table, "optimizeDvs", "optimizeDvs") { (base, files) =>
       require(base.nonEmpty, s"optimizeDvs on empty txlog table $table")
       val dvs = activeDvs(table, base)
-      val files = activeFiles(table, base)
-      val touched = if (dvs.isEmpty) Seq.empty[String] else {
+      if (dvs.isEmpty) Seq.empty[String] else {
         // dead rows per data-file key, and which DV file holds which refs
         // dead-row count per file = total width of its ranges (DV files
         // never overlap ranges for live rows: a re-delete of an already-
@@ -6588,14 +6520,7 @@ object TxLog {
             d.toDouble / math.max(totals.getOrElse(k, d), 1L) > maxDeletedFraction)
         }
       }
-      if (touched.isEmpty) Some(base.get)
-      else {
-        val rewritten = readFiles(spark, table, touched, base, // DVs applied
-          withRowIds = rowTrackingEnabled(table, base))
-        Option.when(commitRewrite(spark, table, base, files, touched,
-          rewritten, "optimizeDvs"))(base.get + 1)
-      }
-    }
+    }.fold(_.get, identity)
 
   /** `REORG TABLE … APPLY (PURGE)` (Delta's reorg verb): physically
     * rewrite exactly the files still carrying soft-deleted state —
@@ -6610,15 +6535,9 @@ object TxLog {
     * before the last DROP COLUMN commit — the only possible carriers —
     * so a never-dropped table pays zero footer reads. */
   def reorgPurge(spark: SparkSession, table: String): Option[Long] =
-    optimistic(table, "reorgPurge") { base =>
+    compact(spark, table, "reorgPurge", commitOp = "reorg") { (base, files) =>
       require(base.nonEmpty, s"reorgPurge on empty txlog table $table")
-      val files = activeFiles(table, base)
-      val dvs = activeDvs(table, base)
-      val dvd: Set[String] =
-        if (dvs.isEmpty) Set.empty
-        else spark.read.option("mergeSchema", "true")
-          .parquet(dvs.map(resolve(table, _)): _*)
-          .select("file").distinct().collect().map(_.getString(0)).toSet
+      val dvd = dvRefKeys(spark, table, activeDvs(table, base))
       val lastDrop = commits(table)
         .filter(c => c.op == "dropColumn" && base.forall(c.version <= _))
         .map(_.version).maxOption
@@ -6637,16 +6556,8 @@ object TxLog {
                 .exists(n => !allowed.contains(n))
           }
       }
-      val touched = (files.filter(f => dvd.contains(fileKey(f))) ++ stale)
-        .distinct
-      if (touched.isEmpty) Some(None)
-      else {
-        val rewritten = readFiles(spark, table, touched, base,
-          withRowIds = rowTrackingEnabled(table, base))
-        Option.when(commitRewrite(spark, table, base, files, touched,
-          rewritten, "reorg"))(Some(base.get + 1))
-      }
-    }
+      (files.filter(f => dvd.contains(fileKey(f))) ++ stale).distinct
+    }.toOption
 
   /** Delete data files no snapshot in the last `retainVersions` versions
     * references — removed-before-horizon files and crash orphans. Bounds

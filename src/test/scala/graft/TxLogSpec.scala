@@ -1812,4 +1812,38 @@ class TxLogSpec extends SparkSpec {
       e.isInstanceOf[java.io.FileNotFoundException],
       s"expected a loud missing-file failure, got: $e")
   }
+
+  test("full optimize rewrites a one-file table with an active DV and retires the DV") {
+    import org.apache.spark.sql.functions.col
+    val t = table()
+    TxLog.overwrite(spark.range(0, 100).toDF("k").coalesce(1), t)  // v1
+    TxLog.deleteVectors(spark, t, col("k") < 10)                   // v2
+    val before = TxLog.activeFiles(t)
+    assert(before.size === 1 && TxLog.activeDvs(t).nonEmpty)
+    // full OPTIMIZE has no two-file rule: the lone file still rewrites,
+    // the deletes materialize and the DV retires with the commit
+    assert(TxLog.optimize(spark, t) === 3L)
+    val last = TxLog.commits(t).last
+    assert(last.op === "optimize" && last.remove === before)
+    assert(TxLog.activeFiles(t).size === 1 && TxLog.activeFiles(t) != before)
+    assert(TxLog.activeDvs(t).isEmpty)
+    assert(TxLog.read(spark, t).as[Long].collect().toSet ===
+      (10L until 100L).toSet)
+  }
+
+  test("optimize refuses a non-positive targetBytes like the partial compactions") {
+    val t = table()
+    TxLog.overwrite(spark.range(0, 100).toDF("k").repartition(2), t)
+    val e = intercept[IllegalArgumentException](
+      TxLog.optimize(spark, t, targetBytes = Some(0L)))
+    assert(e.getMessage.contains("targetBytes must be positive"))
+    assert(TxLog.latestVersion(t) === Some(1L), "a refused optimize commits nothing")
+  }
+
+  test("full optimize on a table with no active file commits nothing") {
+    val t = table()
+    TxLog.createTable(t, Seq((1L, "a")).toDF("k", "v").schema)    // v1, no files
+    assert(TxLog.optimize(spark, t) === 1L)
+    assert(TxLog.latestVersion(t) === Some(1L) && TxLog.activeFiles(t).isEmpty)
+  }
 }
