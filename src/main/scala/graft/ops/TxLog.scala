@@ -1679,15 +1679,14 @@ object TxLog {
     * files and reconstructed at read time, so the layout is what a
     * Hive/Delta-aware engine expects on disk. */
   def writeData(df: DataFrame, table: String,
-      mapping: Option[Map[String, String]] = null): Seq[String] = {
+      mapping: Option[Map[String, String]]): Seq[String] = {
     // Column mapping: stage under PHYSICAL names — the one choke point
     // every write path (append, overwrite, merge/DML rewrites, OPTIMIZE,
-    // streaming sink) already funnels through. `mapping` defaults to the
-    // table's committed mapping; schema-evolving writes pass their
-    // extended not-yet-committed mapping explicitly. Unmapped `_`-helper
-    // columns pass through by name.
-    val m = Option(mapping).getOrElse(mappingAsOf(table))
-    val staged0 = m match {
+    // streaming sink) already funnels through. `mapping` is the one the
+    // commit publishes with: the table's committed mapping, or a
+    // schema-evolving write's extended not-yet-committed one. Unmapped
+    // `_`-helper columns pass through by name.
+    val staged0 = mapping match {
       case Some(mm) => df.select(df.columns.toSeq.map(c =>
         col(c).as(mm.getOrElse(c, c))): _*)
       case None => df
@@ -1697,7 +1696,7 @@ object TxLog {
     // is already physical — translate here so partition directories
     // carry the frozen PHYSICAL name (what makes RENAME of a partition
     // column metadata-only: the paths never change)
-    val physName = physOf(m) _
+    val physName = physOf(mapping) _
     val partCols = declaredCols(table, "graft.partition.columns")
       .map(physName).filter(staged0.columns.contains)
     // Declared clustered writes (liquid-clustering-lite, opt-in via
@@ -2597,13 +2596,13 @@ object TxLog {
     * safe direction. */
   private def fileStats(spark: SparkSession, table: String,
       files: Seq[String], statsCols: Seq[String],
-      mapping: Option[Map[String, String]] = null): (Map[String, Map[String, (Double, Double)]], Map[String, Map[String, (String, String)]]) = {
+      mapping: Option[Map[String, String]]): (Map[String, Map[String, (Double, Double)]], Map[String, Map[String, (String, String)]]) = {
     if (statsCols.isEmpty || files.isEmpty) return (Map.empty, Map.empty)
     val df = spark.read.parquet(files.map(f => s"$table/$f"): _*)
     // staged files carry PHYSICAL column names; callers pass LOGICAL
     // stats columns — translate, and record the stats keyed physical
     // (the same namespace partition paths and footer null counts use)
-    val phys = physOf(Option(mapping).getOrElse(mappingAsOf(table))) _
+    val phys = physOf(mapping) _
     // partition columns are stripped from staged data files — their value
     // rides the path ([[partValuesOf]]), which prunes EXACTLY; min/max
     // stats for them would be both unreadable here and redundant
@@ -2675,7 +2674,9 @@ object TxLog {
 
   /** Build per-file bloom filters for `bloomCols` over freshly-staged
     * `files` and stage them as ONE sidecar parquet (file, col, bloom
-    * BINARY); returns the sidecar's relative paths for the commit's
+    * BINARY; `file` is the staged relative path, which readers compare
+    * through [[fileKey]] — a partitioned path has a third segment);
+    * returns the sidecar's relative paths for the commit's
     * `bloomAdd`. The build is one distributed aggregation (Spark's
     * codegen'd sketch aggregate grouped by file — partial filters OR
     * together map-side); only the finished filters collect, O(batch
@@ -2686,13 +2687,13 @@ object TxLog {
     * never to false negatives (missed rows). */
   private def fileBlooms(spark: SparkSession, table: String,
       files: Seq[String], bloomCols: Seq[String],
-      mapping: Option[Map[String, String]] = null): Seq[String] = {
+      mapping: Option[Map[String, String]]): Seq[String] = {
     if (bloomCols.isEmpty || files.isEmpty) return Seq.empty
     graft.functions.GraftFunctions.register(spark)
     val df = spark.read.parquet(files.map(f => s"$table/$f"): _*)
     // staged files carry PHYSICAL names — translate like [[fileStats]];
     // sidecar `col` entries are physical for the same reason
-    val phys = physOf(Option(mapping).getOrElse(mappingAsOf(table))) _
+    val phys = physOf(mapping) _
     val cols = bloomCols.map(phys).filter(df.columns.contains)
     if (cols.isEmpty) return Seq.empty
     // zero-row staged write: Spark still emits a schema-only part file,
@@ -2766,12 +2767,12 @@ object TxLog {
       .select("file", "col", "bloom").as[(String, String, Array[Byte])]
       .mapPartitions { it =>
         it.filter { case (f, c, bytes) =>
-          candKeys.contains(f) && testedCols.contains(c) && {
+          candKeys.contains(fileKey(f)) && testedCols.contains(c) && {
             val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
               new java.io.ByteArrayInputStream(bytes))
             !tests2(c).exists(bf.mightContainLong)
           }
-        }.map(_._1)
+        }.map(t => fileKey(t._1))
       }.collect().toSet
     candidates.filterNot(f => misses.contains(fileKey(f)))
   }
@@ -2794,11 +2795,12 @@ object TxLog {
       else Some(spark.read.parquet(sidecars.map(resolve(table, _)): _*)
         .withColumn("_bl", input_file_name())
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    /** (sidecar uri, data file, col) — one row per indexed pair. */
+    /** (sidecar uri, data file key, col) — one row per indexed pair. */
     private lazy val manifest: Seq[(String, String, String)] = df match {
       case None => Seq.empty
       case Some(d) => d.select("_bl", "file", "col").distinct().collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+        .map(r => (r.getString(0), fileKey(r.getString(1)), r.getString(2)))
+        .toSeq
     }
     /** Columns any sidecar indexes (the [[activeBloomCols]] answer). */
     def cols: Seq[String] = manifest.map(_._3).distinct
@@ -2817,12 +2819,12 @@ object TxLog {
           .as[(String, String, Array[Byte])]
           .mapPartitions { it =>
             it.filter { case (f, c, bytes) =>
-              candKeys.contains(f) && testedCols.contains(c) && {
+              candKeys.contains(fileKey(f)) && testedCols.contains(c) && {
                 val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
                   new java.io.ByteArrayInputStream(bytes))
                 !tests2(c).exists(bf.mightContainLong)
               }
-            }.map(_._1)
+            }.map(t => fileKey(t._1))
           }.collect().toSet
         candidates.filterNot(f => misses.contains(fileKey(f)))
       case _ => candidates
@@ -3013,42 +3015,138 @@ object TxLog {
       s"txlog $op on $table lost 10 straight races — giving up")
   }
 
-  /** [[optimistic]] for a commit with no conflict rule of its own — the
-    * data-less ones (schema, mapping, properties, constraints, protocol)
-    * and those whose data is staged up front (append, convert). `mk`
-    * builds the commit for version `v` inside each attempt, so whatever
-    * it reads is at least as new as the base `v - 1`: a commit that
-    * landed in between makes `v` taken and the attempt retry. */
-  private def commitNext(table: String, op: String,
-      stagedUnder: Option[MetaFingerprint] = None)(mk: Long => Commit)
+  /** [[optimistic]] for a commit that carries no data file (schema,
+    * mapping, properties, constraints, protocol). `mk` builds the commit
+    * for version `v` inside each attempt, so whatever it reads is at
+    * least as new as the base `v - 1`: a commit that landed in between
+    * makes `v` taken and the attempt retry. */
+  private def commitNext(table: String, op: String)(mk: Long => Commit)
       : Long =
-    optimistic(table, op, stagedUnder) { base =>
+    optimistic(table, op) { base =>
       val v = base.getOrElse(0L) + 1
       if (tryCommit(table, mk(v))) Some(v) else None
     }
 
-  private def commitLoop(table: String, add: Seq[String],
-      removeAll: Boolean, op: String, batchId: Long,
-      stats: (Map[String, Map[String, (Double, Double)]], Map[String, Map[String, (String, String)]]) = (Map.empty, Map.empty),
-      schemaDdl: Option[String] = None,
+  /** Data files staged by [[stage]] and the skipping metadata recorded
+    * for them: what [[swap]] publishes. */
+  private final case class Staged(add: Seq[String],
+      stats: Map[String, Map[String, (Double, Double)]],
+      sstats: Map[String, Map[String, (String, String)]],
+      bloomAdd: Seq[String])
+
+  /** The write half every data-adding verb shares: [[writeData]] under
+    * `mapping` (the one the commit publishes with — the committed
+    * mapping, or a writer's extended or replacement one), then the
+    * skipping metadata for the staged files ([[stageMeta]]). */
+  private def stage(df: DataFrame, table: String,
+      mapping: Option[Map[String, String]],
+      statsCols: Seq[String] = Seq.empty, bloomCols: Seq[String] = Seq.empty,
+      blooms: Option[BloomIndex] = None): Staged =
+    stageMeta(df.sparkSession, table, writeData(df, table, mapping),
+      df.columns.toSeq, mapping, statsCols, bloomCols, blooms)
+
+  /** Per-file stats ([[fileStats]]) and bloom sidecars ([[fileBlooms]])
+    * for `add`, files already in the table directory whose LOGICAL
+    * columns are `columns`. The one column rule: the caller's
+    * `statsCols`/`bloomCols`, plus the table's declared
+    * `graft.stats.columns` and `graft.cluster.columns` (stats) and
+    * `graft.bloom.columns` (blooms), plus every column an active sidecar
+    * already indexes — `blooms` when the attempt holds the index, else
+    * the latest snapshot's. A table configures its skipping layout once
+    * and every writer records it (batch, streaming sink, SQL INSERT, DML
+    * and OPTIMIZE rewrites), instead of each call site re-passing the
+    * lists or silently producing never-pruned files. Declared cluster
+    * columns record stats implicitly: clustering exists to make their
+    * per-file ranges tight. Declared and sidecar names may be recorded in
+    * either era's namespace, so they normalize physical→logical under
+    * `mapping` (fileStats/fileBlooms map back); a name in neither drops
+    * at the column filter, the safe direction. */
+  private def stageMeta(spark: SparkSession, table: String,
+      add: Seq[String], columns: Seq[String],
+      mapping: Option[Map[String, String]], statsCols: Seq[String],
+      bloomCols: Seq[String], blooms: Option[BloomIndex]): Staged = {
+    val inv = logicalsOf(mapping)
+    def rule(own: Seq[String], derived: Seq[String]): Seq[String] =
+      (own ++ derived.map(c => inv.getOrElse(c, c)))
+        .distinct.filter(columns.contains)
+    val stCols = rule(statsCols, declaredCols(table, "graft.stats.columns") ++
+      declaredCols(table, "graft.cluster.columns"))
+    val blCols = rule(bloomCols, declaredCols(table, "graft.bloom.columns") ++
+      blooms.fold(activeBloomCols(spark, table, None))(_.cols))
+    val (nst, sst) = fileStats(spark, table, add, stCols, mapping)
+    Staged(add, nst, sst, fileBlooms(spark, table, add, blCols, mapping))
+  }
+
+  /** The one tail every commit that adds or retires data files ends in:
+    * publish `staged` at `base` + 1 in place of `remove` (files of
+    * `active`, the attempt's active set), and retire the deletion
+    * vectors and bloom sidecars the removal leaves inert — a DV or
+    * sidecar whose every referenced file is gone can never match again,
+    * and left active it stays vacuum-protected and read forever:
+    *   - nothing removed: nothing retires (`active` is not consulted);
+    *   - nothing kept: every active DV and sidecar retires, unread;
+    *   - otherwise: those referencing no kept file ([[inertDvs]],
+    *     [[BloomIndex.inert]], served from `blooms` when the attempt
+    *     already holds the index). Kept entries normalize through
+    *     fileKey, the form DV and sidecar refs are recorded in — a
+    *     shallow clone's ABSOLUTE entry would otherwise never match,
+    *     mis-retiring a live DV.
+    * Some(version) when it committed; None when the version race was
+    * lost (the caller's [[optimistic]] attempt re-derives).
+    *
+    * The `Commit`s built anywhere else, and why they stay there:
+    *   - [[restore]] and [[clone]] re-point existing file sets rather
+    *     than stage any; clone's entries are absolute references into
+    *     another table;
+    *   - [[deleteVectors]] adds a DV and no data file;
+    *   - the metadata verbs (schema, mapping, properties, constraints,
+    *     protocol) carry no data file and go through [[commitNext]];
+    *   - [[createTable]] re-validates against a racing CREATE instead of
+    *     taking [[optimistic]]'s metadata refusal. */
+  private def swap(spark: SparkSession, table: String, base: Option[Long],
+      active: Seq[String], remove: Seq[String], staged: Staged, op: String,
+      schemaDdl: Option[String], batchId: Long = -1L,
       streamId: Option[String] = None,
-      bloomAdd: Seq[String] = Seq.empty,
       colMap: Option[Seq[(String, String)]] = None,
-      copySources: Seq[String] = Seq.empty,
       extraProps: Map[String, Option[String]] = Map.empty,
-      stagedUnder: MetaFingerprint): Long =
-    commitNext(table, op, Some(stagedUnder)) { v =>
-      val remove = if (removeAll) activeFiles(table) else Seq.empty
-      // a full rewrite retires every active DV with the files it covered,
-      // and every bloom sidecar (nothing they index survives)
-      val dvRem = if (removeAll) activeDvs(table) else Seq.empty
-      val blRem = if (removeAll) activeBlooms(table) else Seq.empty
-      Commit(v, add, remove, op, batchId, stats._1,
-        schemaDdl, dvRemove = dvRem, sstats = stats._2,
-        streamId = streamId, bloomAdd = bloomAdd, bloomRemove = blRem,
-        colMap = colMap, copySources = copySources,
-        properties = extraProps)
+      copySources: Seq[String] = Seq.empty,
+      blooms: Option[BloomIndex] = None): Option[Long] = {
+    val kept = active.diff(remove).map(fileKey).toSet
+    val (dvRemove, bloomRemove) =
+      if (remove.isEmpty) (Seq.empty, Seq.empty)
+      else if (kept.isEmpty) (activeDvs(table, base), activeBlooms(table, base))
+      else {
+        val bi = blooms.getOrElse(
+          new BloomIndex(spark, table, activeBlooms(table, base)))
+        try (inertDvs(spark, table, activeDvs(table, base), kept),
+          bi.inert(kept))
+        finally if (blooms.isEmpty) bi.release()
+      }
+    val v = base.getOrElse(0L) + 1
+    Option.when(tryCommit(table, Commit(v, staged.add, remove, op, batchId,
+      staged.stats, schemaDdl, dvRemove = dvRemove, sstats = staged.sstats,
+      streamId = streamId, bloomAdd = staged.bloomAdd,
+      bloomRemove = bloomRemove, colMap = colMap, copySources = copySources,
+      properties = extraProps)))(v)
+  }
+
+  /** The mapping a schema-evolving write (mergeSchema append or COPY
+    * INTO) stages under, and the colMap its commit publishes: on a MAPPED
+    * table each column of `schema` the mapping lacks binds a fresh
+    * physical name, and the extended mapping rides the commit (the
+    * not-yet-committed mapping is what the staged files were written
+    * under, so it must publish with them). Unmapped tables: (None, None). */
+  private def extendMapping(table: String,
+      schema: org.apache.spark.sql.types.StructType)
+      : (Option[Map[String, String]], Option[Seq[(String, String)]]) = {
+    val mapping0 = mappingAsOf(table)
+    val mapping = mapping0.map { m =>
+      m ++ schema.fieldNames.filterNot(m.contains)
+        .map(n => n -> freshPhysName(table))
     }
+    (mapping, mapping.filter(m => !mapping0.contains(m))
+      .map(m => schema.fieldNames.toSeq.map(n => n -> m(n))))
+  }
 
   /** Append `df` as a new version; returns the committed version. With
     * `statsCols`, per-file min/max of those columns ride the commit for
@@ -3068,49 +3166,12 @@ object TxLog {
     val df = applyGenerated(stripOrRefuseIdentity(df0, table), table)
     val schema = resolveSchema(table, df, mergeSchema)
     validateConstraints(df, constraints(table))
-    // a mergeSchema evolution on a MAPPED table binds each new logical
-    // column to a fresh physical name, and the extended mapping rides
-    // this commit (the not-yet-committed mapping is what the staged
-    // files were written under, so it must publish with them)
-    val mapping0 = mappingAsOf(table)
-    val mapping = mapping0.map { m =>
-      m ++ schema.fieldNames.filterNot(m.contains)
-        .map(n => n -> freshPhysName(table))
+    val (mapping, colMap) = extendMapping(table, schema)
+    val staged = stage(df, table, mapping, statsCols, bloomCols)
+    optimistic(table, "append", Some(meta0)) { base =>
+      swap(df.sparkSession, table, base, Seq.empty, Seq.empty, staged,
+        "append", Some(schema.toDDL), batchId, streamId, colMap, extraProps)
     }
-    val colMap = mapping.filter(m => !mapping0.contains(m))
-      .map(m => schema.fieldNames.toSeq.map(n => n -> m(n)))
-    val add = writeData(df, table, mapping)
-    commitLoop(table, add, removeAll = false, "append", batchId,
-      fileStats(df.sparkSession, table, add,
-        effectiveStatsCols(df, table, statsCols), mapping),
-      Some(schema.toDDL), streamId,
-      fileBlooms(df.sparkSession, table, add,
-        effectiveBloomCols(df, table, bloomCols), mapping),
-      colMap = colMap, extraProps = extraProps, stagedUnder = meta0)
-  }
-
-  /** The columns this write should bloom-index: the caller's explicit
-    * `bloomCols`, PLUS the table's DECLARED index config (the
-    * `graft.bloom.columns` property — Delta keeps its bloom config in
-    * table properties the same way), PLUS whatever the active sidecars
-    * already index (the derived fallback for tables configured before
-    * the property existed). Without this, a plain append to an indexed
-    * table indexes nothing unless every caller re-passes bloomCols
-    * forever — pruning stays correct (filter-less files always pass)
-    * but point-lookup skipping silently degrades as the table grows.
-    * One metadata-sized sidecar read; free on unindexed tables. */
-  private def effectiveBloomCols(df: DataFrame, table: String,
-      bloomCols: Seq[String]): Seq[String] = {
-    val declared = declaredCols(table, "graft.bloom.columns")
-    // declared properties and sidecar entries may be recorded in either
-    // era's namespace — normalize everything to LOGICAL for the df
-    // filter (fileBlooms maps back to physical); a name in neither
-    // namespace drops at the filter, the safe direction
-    val inv = logicalsOf(mappingAsOf(table))
-    (bloomCols ++
-      (declared ++ activeBloomCols(df.sparkSession, table, None))
-        .map(c => inv.getOrElse(c, c)))
-      .distinct.filter(df.columns.contains)
   }
 
   private def declaredCols(table: String, prop: String): Seq[String] =
@@ -3122,26 +3183,6 @@ object TxLog {
     * the `graft.partition.columns` property, parsed. */
   def declaredPartitionCols(table: String): Seq[String] =
     declaredCols(table, "graft.partition.columns")
-
-  /** The columns this write should record min/max skipping stats for:
-    * the caller's `statsCols` plus the table's declared
-    * `graft.stats.columns` property — a table configures its
-    * data-skipping layout once and every writer (batch, streaming sink,
-    * SQL INSERT) records the stats, instead of each call site
-    * re-passing the list or silently producing never-pruned files. */
-  private def effectiveStatsCols(df: DataFrame, table: String,
-      statsCols: Seq[String]): Seq[String] = {
-    // declared names normalize to LOGICAL like [[effectiveBloomCols]].
-    // Declared CLUSTER columns stats-record implicitly: clustering
-    // exists to make their per-file ranges tight — recording them is
-    // the whole point, and forgetting the stats property would silently
-    // waste the per-write shuffle.
-    val inv = logicalsOf(mappingAsOf(table))
-    (statsCols ++ (declaredCols(table, "graft.stats.columns") ++
-      declaredCols(table, "graft.cluster.columns"))
-      .map(c => inv.getOrElse(c, c)))
-      .distinct.filter(df.columns.contains)
-  }
 
   /** Replace the table contents with `df`; returns the committed version.
     * Overwrite REPLACES the schema too (rewriting every row is the one
@@ -3170,33 +3211,14 @@ object TxLog {
     }
     val colMap = mapping.filter(m => !mapping0.contains(m))
       .map(m => df.schema.fieldNames.toSeq.map(n => n -> m(n)))
-    val add = writeData(df, table, mapping)
-    commitLoop(table, add, removeAll = true, "overwrite", batchId,
-      fileStats(df.sparkSession, table, add,
-        effectiveStatsCols(df, table, statsCols), mapping),
-      Some(df.schema.toDDL), streamId,
-      fileBlooms(df.sparkSession, table, add,
-        effectiveBloomCols(df, table, bloomCols), mapping),
-      colMap = colMap, extraProps = extraProps, stagedUnder = meta0)
+    val staged = stage(df, table, mapping, statsCols, bloomCols)
+    optimistic(table, "overwrite", Some(meta0)) { base =>
+      val active = activeFiles(table, base)
+      swap(df.sparkSession, table, base, active, active, staged, "overwrite",
+        Some(df.schema.toDDL), batchId, streamId, colMap, extraProps)
+    }
   }
 
-  /** Dynamic partition overwrite (Spark's `partitionOverwriteMode=
-    * dynamic`, Delta's `replaceWhere` on exactly the incoming
-    * partitions): atomically replace ONLY the partitions the batch
-    * writes rows into — every other partition's files stay byte-
-    * identical in place. THE lake-scale backfill shape: re-deriving one
-    * day of a year-partitioned 100 TB gold table removes that day's
-    * files and adds their replacements in one commit; a full
-    * [[overwrite]] would rewrite the table. The replaced set is derived
-    * from the STAGED files' own partition paths (no predicate to get
-    * wrong); the table schema is unchanged (a partial replace has no
-    * authority to evolve it — [[resolveSchema]] append semantics).
-    *
-    * Pre-declaration UNPARTITIONED active files may hold rows of any
-    * partition, so selective replacement over them is inexpressible —
-    * the write REFUSES loudly naming [[optimize]] (whose full rewrite
-    * lands in the declared layout, healing the era) rather than
-    * silently leaving stale rows beside the replacements. */
   /** Raised under `graft.isolationLevel=serializable` when a concurrent
     * commit touched the same partition tuple(s) this writer replaces
     * (Delta's ConcurrentAppendException analog). */
@@ -3297,6 +3319,23 @@ object TxLog {
     }
   }
 
+  /** Dynamic partition overwrite (Spark's `partitionOverwriteMode=
+    * dynamic`, Delta's `replaceWhere` on exactly the incoming
+    * partitions): atomically replace ONLY the partitions the batch
+    * writes rows into — every other partition's files stay byte-
+    * identical in place. THE lake-scale backfill shape: re-deriving one
+    * day of a year-partitioned 100 TB gold table removes that day's
+    * files and adds their replacements in one commit; a full
+    * [[overwrite]] would rewrite the table. The replaced set is derived
+    * from the STAGED files' own partition paths (no predicate to get
+    * wrong); the table schema is unchanged (a partial replace has no
+    * authority to evolve it — [[resolveSchema]] append semantics).
+    *
+    * Pre-declaration UNPARTITIONED active files may hold rows of any
+    * partition, so selective replacement over them is inexpressible —
+    * the write REFUSES loudly naming [[optimize]] (whose full rewrite
+    * lands in the declared layout, healing the era) rather than
+    * silently leaving stale rows beside the replacements. */
   def overwritePartitions(df0: DataFrame, table: String,
       statsCols: Seq[String] = Seq.empty, batchId: Long = -1L,
       streamId: Option[String] = None): Long = {
@@ -3312,18 +3351,15 @@ object TxLog {
         "property (and keep the columns in the frame) or use overwrite()")
     val schema = resolveSchema(table, df, mergeSchema = false)
     validateConstraints(df, constraints(table))
-    val add = writeData(df, table)
+    val mapping = mappingAsOf(table)
+    val staged = stage(df, table, mapping, statsCols)
     // partition paths record the frozen PHYSICAL name under column
     // mapping — tuple matching (and the conflict rule) key physically,
     // the same namespace the staged files were just written in
-    val physPartCols = partCols.map(physOf(mappingAsOf(table)))
+    val physPartCols = partCols.map(physOf(mapping))
     def tupleOf(f: String): Map[String, Option[String]] =
       partValuesOf(f).toMap.view.filterKeys(physPartCols.contains).toMap
-    val touched = add.map(tupleOf).toSet
-    val (nstats, sstats) = fileStats(spark, table, add,
-      effectiveStatsCols(df, table, statsCols))
-    val bloomAdd = fileBlooms(spark, table, add,
-      effectiveBloomCols(df, table, Seq.empty))
+    val touched = staged.add.map(tupleOf).toSet
     optimistic(table, "overwritePartitions", Some(meta0)) { base =>
       val active = activeFiles(table, base)
       // a file whose path lacks ANY current declared partition column —
@@ -3342,23 +3378,15 @@ object TxLog {
           "them. Run TxLog.migrateLayout (rewrites ONLY the legacy " +
           "files) or TxLog.optimize first")
       val remove = active.filter(f => touched.contains(tupleOf(f)))
-      val keep = active.diff(remove).map(fileKey).toSet
-      val dvRemove = inertDvs(spark, table, activeDvs(table, base), keep)
-      val v = base.getOrElse(0L) + 1
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-      val won = try {
-        tryCommit(table, Commit(v,
-          add, remove, "overwritePartitions", batchId,
-          nstats, Some(schema.toDDL), sstats = sstats,
-          dvRemove = dvRemove, streamId = streamId,
-          bloomAdd = bloomAdd, bloomRemove = bi.inert(keep)))
-      } finally bi.release()
+      val won = swap(spark, table, base, active, remove, staged,
+        "overwritePartitions", Some(schema.toDDL), batchId, streamId)
       // lost the race: commits landed past `base`. Disjoint-partition
       // writers re-derive (metadata-only — the data files are already
       // staged) and commit on the next version; under serializable
       // isolation a TRUE conflict on this writer's tuples refuses here.
-      if (!won) checkPartitionConflicts(table, base, touched, physPartCols)
-      Option.when(won)(v)
+      if (won.isEmpty)
+        checkPartitionConflicts(table, base, touched, physPartCols)
+      won
     }
   }
 
@@ -4183,10 +4211,9 @@ object TxLog {
         val merged = all.withColumn("_rn", row_number().over(w))
           .filter(col("_rn") === 1 && !isDelete)
           .drop(Seq("_rn", "_src") ++ opCol: _*)
-        Option.when(commitRewrite(spark, table, base, allActive, touched,
+        commitRewrite(spark, table, base, allActive, touched,
           merged, "merge", schemaDdlOverride = Some(logicalDdl(merged)),
-          batchId = batchId, streamId = streamId, blooms = Some(bi)))(
-          base.getOrElse(0L) + 1)
+          batchId = batchId, streamId = streamId, blooms = Some(bi))
       } finally bi.release()
     }
   }
@@ -4391,9 +4418,9 @@ object TxLog {
                 else newRows
               closed.drop("__scd_first").unionByName(newIn)
             }
-          Option.when(commitRewrite(spark, table, base, allActive, touched,
+          commitRewrite(spark, table, base, allActive, touched,
             rewritten, "scd2", batchId = batchId,
-            streamId = streamId, blooms = Some(bi)))(base.get + 1)
+            streamId = streamId, blooms = Some(bi))
         } finally bi.release()
       }
     }
@@ -4477,8 +4504,8 @@ object TxLog {
             rebuilt.withColumn(RowIdCol, lit(null).cast("long"))
           else rebuilt
         val rewritten = untouched.unionByName(rebuiltIn)
-        Option.when(commitRewrite(spark, table, base, allActive, touched,
-          rewritten, "scd2", blooms = Some(bi)))(base.get + 1)
+        commitRewrite(spark, table, base, allActive, touched,
+          rewritten, "scd2", blooms = Some(bi))
       } finally bi.release()
     }
   }
@@ -4803,8 +4830,9 @@ object TxLog {
         // lost the race: serializable writers refuse when the winner
         // touched the same files; disjoint (or default-isolation) writers
         // re-derive the touched set against the new snapshot and retry
-        if (!won) checkFileConflicts(table, base, touched.map(fileKey).toSet, op)
-        Option.when(won)(base.get + 1)
+        if (won.isEmpty)
+          checkFileConflicts(table, base, touched.map(fileKey).toSet, op)
+        won
       }
     }
 
@@ -4832,25 +4860,23 @@ object TxLog {
   /** Shared commit tail for every file-set rewrite (UPDATE / DELETE /
     * MERGE INTO / the keyed fold / SCD2, and every compaction through
     * [[compact]]): constraint-validate (DML only — layout-only ops skip
-    * it) and write the rewritten rows, retire DVs and bloom sidecars that
-    * referenced only rewritten files, re-record declared (plus the
-    * caller's explicit `statsCols`/`bloomCols`) stats/bloom metadata on
-    * the outputs, and attempt the commit. `base` = None (a keyed fold
-    * into a path with no log yet) commits version 1. Returns false when
-    * the version race was lost (caller re-derives its touched set against
-    * the new snapshot and retries). */
+    * it), [[stage]] the rewritten rows under the mapping as of `base`,
+    * and [[swap]] them in for `touched` (files of `files`, the attempt's
+    * active set). `statsCols`/`bloomCols` are explicit extras on top of
+    * stage's column rule. `base` = None (a keyed fold into a path with no
+    * log yet) commits version 1. Returns None when the version race was
+    * lost (caller re-derives its touched set against the new snapshot
+    * and retries). */
   private def commitRewrite(spark: SparkSession, table: String,
       base: Option[Long], files: Seq[String], touched: Seq[String],
       rewritten0: DataFrame, op: String,
       schemaDdlOverride: Option[String] = None,
-      mappingOverride: Option[Map[String, String]] = null,
-      colMapStamp: Option[Seq[(String, String)]] = None,
       batchId: Long = -1L,
       streamId: Option[String] = None,
       extraProps: Map[String, Option[String]] = Map.empty,
       blooms: Option[BloomIndex] = None,
       statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty): Boolean = {
+      bloomCols: Seq[String] = Seq.empty): Option[Long] = {
     // DML honors the same CHECK constraints as append/overwrite/merge:
     // an UPDATE … SET that lands a violating row must be refused, not
     // committed (Delta enforces constraints on every write path). Cheap:
@@ -4867,53 +4893,20 @@ object TxLog {
         validateConstraints(r, constraints(table))
         r
       }
-    // schema-evolving MERGE on a mapped table passes its extended
-    // mapping; everything else stages under the committed one
-    val mapping =
-      if (mappingOverride == null) mappingAsOf(table, base)
-      else mappingOverride
-    val inv = logicalsOf(mapping)
-    val add = writeData(rewritten, table, mapping)
-    val v = base.getOrElse(0L) + 1
-    // the rewrite materialized any DV'd deletes for the touched files;
-    // DVs and bloom sidecars that referenced ONLY touched files are now
-    // inert — retire them here or they stay active (and vacuum-protected)
-    // forever. When no active file is kept, all of them are: retire them
-    // without reading them. Kept entries normalize through fileKey — DV
-    // refs are recorded in that form, and a shallow-clone's ABSOLUTE
-    // entry would otherwise never match, mis-retiring a live DV
-    val kept = files.diff(touched).map(fileKey).toSet
-    val dvRemove =
-      if (kept.isEmpty) activeDvs(table, base)
-      else inertDvs(spark, table, activeDvs(table, base), kept)
-    // DECLARED stats/bloom columns re-record on the rewrite, or DML
-    // strips its output files of skipping metadata and every later
-    // pruned operation must read them (for the keyed fold: one-merge
-    // decay of the CDC fast path).
-    // Declared/sidecar names normalize physical→logical for the
-    // rewritten-frame filter; fileStats/fileBlooms map back.
-    val stCols = (statsCols ++ declaredCols(table, "graft.stats.columns"))
-      .map(c => inv.getOrElse(c, c))
-      .distinct.filter(rewritten.columns.contains)
-    val (nst, sst) = fileStats(spark, table, add, stCols, mapping)
     // a caller that already holds the attempt's index passes it in, so
     // the sidecars are read once per attempt
     val bi = blooms.getOrElse(
       new BloomIndex(spark, table, activeBlooms(table, base)))
     try {
-      val blCols =
-        (bloomCols ++ bi.cols ++ declaredCols(table, "graft.bloom.columns"))
-          .map(c => inv.getOrElse(c, c))
-          .distinct.filter(rewritten.columns.contains)
-      tryCommit(table, Commit(v, add, touched, op, batchId,
-        streamId = streamId,
-        stats = nst, sstats = sst,
-        schemaDdl = schemaDdlOverride
-          .orElse(schemaAsOf(table, base).map(_.toDDL)),
-        dvRemove = dvRemove,
-        bloomAdd = fileBlooms(spark, table, add, blCols, mapping),
-        bloomRemove = if (kept.isEmpty) bi.sidecars else bi.inert(kept),
-        colMap = colMapStamp, properties = extraProps))
+      // DECLARED stats/bloom columns re-record on the rewrite, or DML
+      // strips its output files of skipping metadata and every later
+      // pruned operation must read them (for the keyed fold: one-merge
+      // decay of the CDC fast path)
+      val staged = stage(rewritten, table, mappingAsOf(table, base),
+        statsCols, bloomCols, Some(bi))
+      swap(spark, table, base, files, touched, staged, op,
+        schemaDdlOverride.orElse(schemaAsOf(table, base).map(_.toDDL)),
+        batchId, streamId, extraProps = extraProps, blooms = Some(bi))
     } finally if (blooms.isEmpty) bi.release()
   }
 
@@ -4973,9 +4966,9 @@ object TxLog {
           .unionByName(incoming)
       val won = commitRewrite(spark, table, base, files, touched, rewritten,
         "replaceWhere")
-      if (!won) checkFileConflicts(table, base, touched.map(fileKey).toSet,
-        "replaceWhere")
-      Option.when(won)(base.get + 1)
+      if (won.isEmpty) checkFileConflicts(table, base,
+        touched.map(fileKey).toSet, "replaceWhere")
+      won
     }
   }
 
@@ -5100,13 +5093,13 @@ object TxLog {
     }
 
   /** UPDATE … SET … WHERE: apply `set` (column → new expression) to
-    * matching rows, rewriting only the files that contain them. */
-  /** UPDATE … SET: every SET expression AND the condition evaluate
-    * against the OLD row (standard SQL): one select applies them all at
-    * once — a sequential withColumn fold would let a later assignment
-    * (or the condition) observe an earlier one's result, so
-    * `SET a = b, b = a` would not swap and `SET k = 10 WHERE k = 1`
-    * would corrupt any later assignment conditioned on k. */
+    * matching rows, rewriting only the files that contain them. Every SET
+    * expression AND the condition evaluate against the OLD row (standard
+    * SQL): one select applies them all at once — a sequential withColumn
+    * fold would let a later assignment (or the condition) observe an
+    * earlier one's result, so `SET a = b, b = a` would not swap and
+    * `SET k = 10 WHERE k = 1` would corrupt any later assignment
+    * conditioned on k. */
   def update(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
@@ -5465,11 +5458,11 @@ object TxLog {
         val outColsAll = outCols ++ (if (tracking)
           Seq(col(s"$targetAlias.$RowIdCol").as(RowIdCol)) else Nil)
         val rewritten = kept.select(outColsAll: _*)
-        Option.when(commitRewrite(spark, table, base, files, touched,
+        commitRewrite(spark, table, base, files, touched,
           rewritten, "merge", schemaDdlOverride =
             if (added.nonEmpty) Some(tgtSchema.toDDL) else None,
           extraProps = extraProps, batchId = batchId,
-          streamId = streamId, blooms = Some(bi)))(base.get + 1)
+          streamId = streamId, blooms = Some(bi))
       }
     }
     // a lost race re-derives against the new snapshot
@@ -5650,9 +5643,6 @@ object TxLog {
     v
   }
 
-  /** DESCRIBE HISTORY analog: one row per commit — version, operation,
-    * batch id (−1 for batch writes), files added/removed. The audit
-    * surface Delta users query before a time-travel read. */
   /** CONVERT TO TXLOG (Delta's `CONVERT TO DELTA parquet.`/dir``): turn
     * an existing plain-parquet directory into a txlog table IN PLACE and
     * with ZERO data copied — every parquet file is HARD-LINKED into a
@@ -5699,12 +5689,11 @@ object TxLog {
       Files.createLink(target, p)
       s"$sub/$rel"
     }.sorted
-    val stCols = (statsCols ++ declaredCols(dir, "graft.stats.columns"))
-      .distinct.filter(schema.fieldNames.contains)
-    val (nst, sst) = fileStats(spark, dir, entries, stCols)
-    commitNext(dir, "convertParquet") { v =>
-      Commit(v, entries, Seq.empty, "convert", -1L,
-        stats = nst, sstats = sst, schemaDdl = Some(schema.toDDL))
+    val staged = stageMeta(spark, dir, entries, schema.fieldNames.toSeq,
+      None, statsCols, Seq.empty, None)
+    optimistic(dir, "convertParquet") { base =>
+      swap(spark, dir, base, Seq.empty, Seq.empty, staged, "convert",
+        Some(schema.toDDL))
     }
   }
 
@@ -5789,28 +5778,11 @@ object TxLog {
         }, table)
         val schema = resolveSchema(table, df, mergeSchema)
         validateConstraints(df, constraints(table))
-        // a mergeSchema evolution on a MAPPED table binds fresh physical
-        // names for the new columns and publishes the extended mapping
-        // with this commit (same rule as [[append]])
-        val mapping0 = mappingAsOf(table)
-        val mapping = mapping0.map { m =>
-          m ++ schema.fieldNames.filterNot(m.contains)
-            .map(n => n -> freshPhysName(table))
-        }
-        val colMap = mapping.filter(m => !mapping0.contains(m))
-          .map(m => schema.fieldNames.toSeq.map(n => n -> m(n)))
-        val add = writeData(df, table, mapping)
-        val (nst, sst) = fileStats(spark, table, add,
-          effectiveStatsCols(df, table, Seq.empty), mapping)
-        val v = base.getOrElse(0L) + 1
-        Option.when(tryCommit(table, Commit(v, add, Seq.empty,
-            "copyInto", -1L,
-            stats = nst, sstats = sst,
-            schemaDdl = Some(schema.toDDL),
-            bloomAdd = fileBlooms(spark, table, add,
-              effectiveBloomCols(df, table, Seq.empty), mapping),
-            colMap = colMap,
-            copySources = fresh.map(stamp))))((v, fresh.size.toLong))
+        val (mapping, colMap) = extendMapping(table, schema)
+        swap(spark, table, base, Seq.empty, Seq.empty,
+          stage(df, table, mapping), "copyInto", Some(schema.toDDL),
+          colMap = colMap, copySources = fresh.map(stamp))
+          .map((_, fresh.size.toLong))
       }
     }
   }
@@ -5856,20 +5828,14 @@ object TxLog {
       val missing = files.filterNot(f =>
         Files.exists(Paths.get(resolve(table, f))))
       if (missing.isEmpty || dryRun) Some(missing)
-      else {
-        val keep = files.filterNot(missing.toSet)
-        val dvRemove = inertDvs(spark, table, activeDvs(table, base),
-          keep.map(fileKey).toSet)
-        val bi = new BloomIndex(spark, table, activeBlooms(table, base))
-        val won = try {
-          tryCommit(table, Commit(base.get + 1, Seq.empty, missing, "fsck",
-            -1L, dvRemove = dvRemove,
-            bloomRemove = bi.inert(keep.map(fileKey).toSet)))
-        } finally bi.release()
-        Option.when(won)(missing)
-      }
+      else swap(spark, table, base, files, missing,
+        Staged(Seq.empty, Map.empty, Map.empty, Seq.empty), "fsck", None)
+        .map(_ => missing)
     }
 
+  /** DESCRIBE HISTORY analog: one row per commit — version, operation,
+    * batch id (−1 for batch writes), files added/removed. The audit
+    * surface Delta users query before a time-travel read. */
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     commits(table)
@@ -6333,9 +6299,8 @@ object TxLog {
           }.getOrElse(p.targetFiles)
           arrange(cur, nOut, p.clusterBy)
         }
-        Option.when(commitRewrite(spark, table, base, active, sel, out,
-          commitOp, statsCols = statsCols, bloomCols = bloomCols))(
-          Right(base.get + 1))
+        commitRewrite(spark, table, base, active, sel, out,
+          commitOp, statsCols = statsCols, bloomCols = bloomCols).map(Right(_))
       }
     }
 

@@ -41,9 +41,31 @@ class ClusteredWriteSpec extends SparkSpec {
     val t = tmpDir("clustered") + "/t"
     TxLog.setProperties(t, Map("graft.cluster.columns" -> "k"))
     TxLog.append(frame(), t)
+    val before = TxLog.readRange(spark, t, "k", 3000.0, 3010.0).inputFiles.length
     spark.sql(s"UPDATE txlog.`$t` SET m = -1 WHERE k = 15")
     val pruned = TxLog.readRange(spark, t, "k", 3000.0, 3010.0)
-    assert(pruned.inputFiles.length <= 2, "pruning survives the rewrite")
+    assert(pruned.inputFiles.length === before, "pruning survives the rewrite")
     assert(pruned.filter(col("k") === 3005).count() === 1)
+    val upd = TxLog.commits(t).last
+    assert(upd.op === "update" && upd.add.nonEmpty)
+    assert(upd.add.forall(f => upd.stats.get(f).exists(_.contains("k"))),
+      s"the rewritten file must record k stats: ${upd.stats}")
+  }
+
+  test("OPTIMIZE on a table declaring only cluster columns keeps their stats") {
+    val t = tmpDir("clustered") + "/t"
+    TxLog.setProperties(t, Map("graft.cluster.columns" -> "k"))
+    TxLog.append(frame(), t)
+    TxLog.optimize(spark, t, targetFiles = 8, clusterBy = Seq(col("k")))
+    val opt = TxLog.commits(t).last
+    assert(opt.op === "optimize" && opt.add.size > 1)
+    // range boundaries are sampled: an 11-key range sits in one ~500-key
+    // output file or straddles two
+    val pruned = TxLog.readRange(spark, t, "k", 3000.0, 3010.0)
+    assert(pruned.inputFiles.length <= 2,
+      s"read ${pruned.inputFiles.length} of ${opt.add.size} files")
+    assert(pruned.filter(col("k").between(3000, 3010)).count() === 11)
+    assert(opt.add.forall(f => opt.stats.get(f).exists(_.contains("k"))),
+      s"every compacted file must record k stats: ${opt.stats}")
   }
 }

@@ -44,7 +44,7 @@ class TxLogSpec extends SparkSpec {
     val t = table()
     TxLog.overwrite(Seq((1L, "a")).toDF("k", "v"), t)
     // simulate the crash: data files staged, the commit never happens
-    val orphan = TxLog.writeData(Seq((9L, "ghost")).toDF("k", "v"), t)
+    val orphan = TxLog.writeData(Seq((9L, "ghost")).toDF("k", "v"), t, TxLog.mappingAsOf(t))
     assert(orphan.nonEmpty)
     assert(TxLog.read(spark, t).as[(Long, String)].collect().toSet ===
       Set((1L, "a")))
@@ -56,8 +56,8 @@ class TxLogSpec extends SparkSpec {
     val t = table()
     TxLog.overwrite(Seq((1L, "a")).toDF("k", "v"), t)
     val before = TxLog.activeFiles(t)
-    val addA = TxLog.writeData(Seq((2L, "A")).toDF("k", "v"), t)
-    val addB = TxLog.writeData(Seq((2L, "B")).toDF("k", "v"), t)
+    val addA = TxLog.writeData(Seq((2L, "A")).toDF("k", "v"), t, TxLog.mappingAsOf(t))
+    val addB = TxLog.writeData(Seq((2L, "B")).toDF("k", "v"), t, TxLog.mappingAsOf(t))
     val winA = TxLog.tryCommit(t,
       TxLog.Commit(2L, addA, Seq.empty, "append", -1L))
     val winB = TxLog.tryCommit(t,
@@ -98,7 +98,7 @@ class TxLogSpec extends SparkSpec {
     val v1Files = TxLog.activeFiles(t)
     TxLog.overwrite(Seq((2L, "b")).toDF("k", "v"), t)            // v2 removes v1's files
     TxLog.append(Seq((3L, "c")).toDF("k", "v"), t)               // v3
-    val orphan = TxLog.writeData(Seq((9L, "ghost")).toDF("k", "v"), t)
+    val orphan = TxLog.writeData(Seq((9L, "ghost")).toDF("k", "v"), t, TxLog.mappingAsOf(t))
     // dry run reports the same doomed set but deletes NOTHING
     val wouldDelete = TxLog.vacuum(t, retainVersions = 2, dryRun = true)
     assert(TxLog.read(spark, t, Some(1L)).count() === 1,
@@ -872,7 +872,7 @@ class TxLogSpec extends SparkSpec {
     TxLog.overwrite(Seq((1L, "a")).toDF("k", "v"), t)              // v1
     TxLog.overwrite(Seq((2L, "b")).toDF("k", "v"), t)              // v2: v1 files doomed
     TxLog.append(Seq((3L, "c")).toDF("k", "v"), t)                 // v3
-    TxLog.writeData(Seq((9L, "ghost")).toDF("k", "v"), t)          // orphan
+    TxLog.writeData(Seq((9L, "ghost")).toDF("k", "v"), t, TxLog.mappingAsOf(t))          // orphan
     val preview = TxLog.vacuum(t, retainVersions = 2, dryRun = true)
     assert(preview.nonEmpty)
     // preview touched nothing: a second dry run sees the identical set
@@ -1092,7 +1092,7 @@ class TxLogSpec extends SparkSpec {
     // the INVERTED numeric interval (100.0, 9.0) — pruning from it drops
     // the file even though it holds k='9', inside the queried range
     val df = Seq(("100", 1L), ("9", 2L)).toDF("k", "ver").coalesce(1)
-    val add = TxLog.writeData(df, t)
+    val add = TxLog.writeData(df, t, TxLog.mappingAsOf(t))
     assert(add.size === 1)
     assert(TxLog.tryCommit(t, TxLog.Commit(1L, add, Seq.empty, "append", -1L,
       stats = Map(add.head -> Map("k" -> (100.0, 9.0))),
