@@ -2730,73 +2730,44 @@ object TxLog {
       .map(n => s"$sub/$n")
   }
 
+  /** The active bloom sidecars as of `asOf`, read as one plain frame
+    * (file, col, bloom BINARY), or None when there are none. One-shot
+    * lookups probe this frame; a keyed write attempt probes its
+    * [[BloomIndex]]'s persisted copy instead. */
+  private def sidecarFrame(spark: SparkSession, table: String,
+      asOf: Option[Long]): Option[DataFrame] = {
+    val bls = activeBlooms(table, asOf)
+    Option.when(bls.nonEmpty)(spark.read.parquet(bls.map(resolve(table, _)): _*))
+  }
+
   /** Columns any active bloom sidecar indexes — how rewrites (merge,
     * OPTIMIZE) know which filters to rebuild for their output files
     * without a table-properties store. One metadata-sized distinct. */
   private def activeBloomCols(spark: SparkSession, table: String,
-      asOf: Option[Long]): Seq[String] = {
-    val bls = activeBlooms(table, asOf)
-    if (bls.isEmpty) return Seq.empty
-    spark.read.parquet(bls.map(resolve(table, _)): _*)
-      .select("col").distinct().collect().map(_.getString(0)).toSeq
-  }
+      asOf: Option[Long]): Seq[String] =
+    sidecarFrame(spark, table, asOf).fold(Seq.empty[String])(
+      _.select("col").distinct().collect().map(_.getString(0)).toSeq)
 
-  /** Candidate files that survive the bloom tests: a file is pruned only
-    * when it HAS a filter for a tested column and NONE of that column's
-    * probe hashes hit. Files without a filter always pass (they could
-    * hold anything) — pruning degrades, correctness doesn't. The probing
-    * runs WHERE THE SIDECARS ARE READ — executors deserialize each
-    * (file, col) filter once, test the broadcast probe hashes, and only
-    * (file, col) MISSES collect (bounded by candidates × tested columns;
-    * filter bytes never move to the driver — at lake scale the active
-    * index is GBs across 100 k files, and a driver-side fold of it would
-    * be the non-distributed mistake). */
-  private def bloomSurvivors(spark: SparkSession, table: String,
-      candidates: Seq[String], tests: Map[String, Array[Long]],
-      asOf: Option[Long]): Seq[String] = {
-    if (candidates.isEmpty || tests.isEmpty) return candidates
-    val bls = activeBlooms(table, asOf)
-    if (bls.isEmpty) return candidates
-    val candKeys = candidates.map(fileKey).toSet
-    // probe keys arrive LOGICAL; sidecar `col` entries are PHYSICAL
-    val physT = physOf(mappingAsOf(table, asOf)) _
-    val tests2 = tests.map { case (c, hs) => physT(c) -> hs }
-    val testedCols = tests2.keySet
-    import spark.implicits._
-    val misses = spark.read.parquet(bls.map(resolve(table, _)): _*)
-      .select("file", "col", "bloom").as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.filter { case (f, c, bytes) =>
-          candKeys.contains(fileKey(f)) && testedCols.contains(c) && {
-            val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(bytes))
-            !tests2(c).exists(bf.mightContainLong)
-          }
-        }.map(t => fileKey(t._1))
-      }.collect().toSet
-    candidates.filterNot(f => misses.contains(fileKey(f)))
-  }
-
-  /** One-pass view of the active bloom sidecar set for a single write
-    * attempt. merge/applyChanges need THREE derived answers per attempt
-    * — indexed columns, probe survivors, inert sidecars — and asking
-    * each against a fresh `spark.read.parquet(sidecars)` was 3+
+  /** One-pass view of the active bloom sidecar set as of a single write
+    * attempt's `base`. merge/applyChanges need THREE derived answers per
+    * attempt — indexed columns, probe survivors, inert sidecars — and
+    * asking each against a fresh `spark.read.parquet(sidecars)` was 3+
     * redundant distributed reads per commit attempt (repeated on every
     * optimistic-concurrency retry; at lake scale the sidecar set is
     * GBs). Here the frame loads ONCE and persists (filter bytes stay
-    * distributed — never collected); the (sidecar, file, col) manifest
-    * WITHOUT the bytes collects lazily, metadata-sized, and answers the
-    * columns/inertness questions driver-side. [[release]] when the
-    * attempt ends. */
+    * distributed — never collected); [[skipFiles]] probes it, and the
+    * (sidecar, file, col) manifest WITHOUT the bytes collects lazily,
+    * metadata-sized, and answers the columns/inertness questions
+    * driver-side. [[release]] when the attempt ends. */
   private final class BloomIndex(spark: SparkSession, table: String,
-      val sidecars: Seq[String]) {
-    private val df =
-      if (sidecars.isEmpty) None
-      else Some(spark.read.parquet(sidecars.map(resolve(table, _)): _*)
-        .withColumn("_bl", input_file_name())
+      base: Option[Long]) {
+    val sidecars: Seq[String] = activeBlooms(table, base)
+    /** The persisted sidecar frame [[skipFiles]] probes. */
+    val frame: Option[DataFrame] = sidecarFrame(spark, table, base).map(
+      _.withColumn("_bl", input_file_name())
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     /** (sidecar uri, data file key, col) — one row per indexed pair. */
-    private lazy val manifest: Seq[(String, String, String)] = df match {
+    private lazy val manifest: Seq[(String, String, String)] = frame match {
       case None => Seq.empty
       case Some(d) => d.select("_bl", "file", "col").distinct().collect()
         .map(r => (r.getString(0), fileKey(r.getString(1)), r.getString(2)))
@@ -2804,31 +2775,6 @@ object TxLog {
     }
     /** Columns any sidecar indexes (the [[activeBloomCols]] answer). */
     def cols: Seq[String] = manifest.map(_._3).distinct
-    /** Candidates surviving the probe tests (the [[bloomSurvivors]]
-      * answer, served from the persisted frame). */
-    def survivors(candidates: Seq[String],
-        tests: Map[String, Array[Long]]): Seq[String] = df match {
-      case Some(d) if candidates.nonEmpty && tests.nonEmpty =>
-        val candKeys = candidates.map(fileKey).toSet
-        // probe keys LOGICAL, sidecar entries PHYSICAL — translate
-        val physT = physOf(mappingAsOf(table)) _
-        val tests2 = tests.map { case (c, hs) => physT(c) -> hs }
-        val testedCols = tests2.keySet
-        import spark.implicits._
-        val misses = d.select("file", "col", "bloom")
-          .as[(String, String, Array[Byte])]
-          .mapPartitions { it =>
-            it.filter { case (f, c, bytes) =>
-              candKeys.contains(fileKey(f)) && testedCols.contains(c) && {
-                val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-                  new java.io.ByteArrayInputStream(bytes))
-                !tests2(c).exists(bf.mightContainLong)
-              }
-            }.map(t => fileKey(t._1))
-          }.collect().toSet
-        candidates.filterNot(f => misses.contains(fileKey(f)))
-      case _ => candidates
-    }
     /** Sidecars whose every indexed file is outside `remainingKeys` —
       * nothing they index can be read again, so they retire with the
       * commit that removed their last file (the [[inertDvs]] pattern,
@@ -2840,16 +2786,9 @@ object TxLog {
         }
         itsRefs.nonEmpty && itsRefs.forall(f => !remainingKeys.contains(f))
       }
-    def release(): Unit = df.foreach(_.unpersist(false))
+    def release(): Unit = frame.foreach(_.unpersist(false))
   }
 
-  /** Active files that MIGHT contain any of `values` in `colName`:
-    * range stats first (cheap, log-resident), then the bloom index for
-    * files that carry one. For a key-clustered table the stats do the
-    * work; for the hash-scattered high-cardinality key — where every
-    * file's [min, max] spans the domain and stats prune NOTHING — the
-    * blooms prune to ~fpp × files. Sound both ways: a bloom has no
-    * false negatives, and stats-less/bloom-less files always pass. */
   /** Probe values hash through `Literal.create(v, loggedType)`, whose
     * error modes are a footgun: an Int probe on a bigint column throws
     * an opaque Literal validation error, while TimestampType/DateType
@@ -2880,47 +2819,39 @@ object TxLog {
     })
   }
 
+  /** The point-lookup refusal: at least one probe value, a logged
+    * column, and every value of the column's external class
+    * ([[probeClassOk]]). */
   private def validateProbe(table: String, colName: String,
-      dt: org.apache.spark.sql.types.DataType, v: Any): Unit = {
-    if (!probeClassOk(dt, v)) throw new IllegalArgumentException(
-      s"txlog point-lookup on $table.$colName: probe value " +
-        s"${v.getClass.getName}($v) does not match the logged type " +
-        s"${dt.simpleString} — pass the column's external Scala type " +
-        "(e.g. java.sql.Timestamp/Instant for timestamp, Long for bigint)")
-  }
-
-  def filesForEquals(spark: SparkSession, table: String, colName: String,
-      values: Seq[Any], asOf: Option[Long] = None): Seq[String] = {
+      values: Seq[Any], asOf: Option[Long]): Unit = {
     require(values.nonEmpty, "filesForEquals needs at least one probe value")
     val dt = schemaAsOf(table, asOf) match {
       case Some(sc) if sc.fieldNames.contains(colName) => sc(colName).dataType
       case _ => throw new IllegalArgumentException(
         s"txlog table $table has no logged column '$colName'")
     }
-    values.foreach(validateProbe(table, colName, dt, _))
-    val tstate = stateAt(table, asOf)
-    val nstats = tstate.stats
-    val lstats = tstate.sstats
-    val phys = physOf(mappingAsOf(table, asOf)) _
-    val statsPass = activeFiles(table, asOf).filter { f =>
-      values.exists { v =>
-        val numOk = nstats.get(f).flatMap(_.get(phys(colName))).forall {
-          case (mn, mx) => v match {
-            case n: Number => n.doubleValue() >= mn && n.doubleValue() <= mx
-            case _ => true
-          }
-        }
-        val strOk = lstats.get(f).flatMap(_.get(phys(colName))).forall {
-          case (mn, mx) => v match {
-            case s: String => utf8Cmp(s, mn) >= 0 && utf8Cmp(s, mx) <= 0
-            case _ => true
-          }
-        }
-        numOk && strOk
-      }
+    values.foreach { v =>
+      if (!probeClassOk(dt, v)) throw new IllegalArgumentException(
+        s"txlog point-lookup on $table.$colName: probe value " +
+          s"${v.getClass.getName}($v) does not match the logged type " +
+          s"${dt.simpleString} — pass the column's external Scala type " +
+          "(e.g. java.sql.Timestamp/Instant for timestamp, Long for bigint)")
     }
-    val hashes = values.map(xxh64(_, dt)).toArray
-    bloomSurvivors(spark, table, statsPass, Map(colName -> hashes), asOf)
+  }
+
+  /** Active files that MIGHT contain any of `values` in `colName`:
+    * partition values and range stats first (cheap, log-resident), then
+    * the bloom index for files that carry one — the [[skipFiles]] rule.
+    * For a key-clustered table the stats do the work; for the
+    * hash-scattered high-cardinality key — where every file's [min, max]
+    * spans the domain and stats prune NOTHING — the blooms prune to
+    * ~fpp × files. Sound both ways: a bloom has no false negatives, and
+    * stats-less/bloom-less files always pass. */
+  def filesForEquals(spark: SparkSession, table: String, colName: String,
+      values: Seq[Any], asOf: Option[Long] = None): Seq[String] = {
+    validateProbe(table, colName, values, asOf)
+    skipFiles(table, Skip(eq = Map(colName -> values)), asOf,
+      sidecarFrame(spark, table, asOf))
   }
 
   /** Point-lookup read: scan only the files [[filesForEquals]] admits,
@@ -2929,10 +2860,9 @@ object TxLog {
     * other read path. */
   def readEquals(spark: SparkSession, table: String, colName: String,
       values: Seq[Any], asOf: Option[Long] = None): DataFrame = {
-    val files = filesForEquals(spark, table, colName, values, asOf)
-    if (files.isEmpty) read(spark, table, asOf).limit(0)
-    else readFiles(spark, table, files, asOf)
-      .filter(col(colName).isin(values: _*))
+    validateProbe(table, colName, values, asOf)
+    readPruned(spark, table, Map.empty, Map.empty, asOf,
+      eqProbes = Map(colName -> values)).filter(col(colName).isin(values: _*))
   }
 
   /** Snapshot of the metadata a writer derives its commit from: logical
@@ -3116,8 +3046,7 @@ object TxLog {
       if (remove.isEmpty) (Seq.empty, Seq.empty)
       else if (kept.isEmpty) (activeDvs(table, base), activeBlooms(table, base))
       else {
-        val bi = blooms.getOrElse(
-          new BloomIndex(spark, table, activeBlooms(table, base)))
+        val bi = blooms.getOrElse(new BloomIndex(spark, table, base))
         try (inertDvs(spark, table, activeDvs(table, base), kept),
           bi.inert(kept))
         finally if (blooms.isEmpty) bi.release()
@@ -3521,6 +3450,167 @@ object TxLog {
     }
   }
 
+  /** One data-skipping question, asked of every active file by
+    * [[skipFiles]]. Column names are LOGICAL. A file survives only if it
+    * may satisfy EVERY entry (conjunctive — the multi-dimensional win of
+    * Z-order/Hilbert clustering, where each clustered column's ranges
+    * are simultaneously tight per file):
+    *   - `num`: closed double ranges (numeric columns; timestamps as the
+    *     epoch-seconds cast their stats recorded);
+    *   - `str`: closed ranges in UTF-8 byte order ([[utf8Cmp]]);
+    *   - `eq`: equality values — the file may hold at least one (a null
+    *     value equals nothing, SQL `=`/IN semantics);
+    *   - `isNull` / `isNotNull`: NULL-ness predicates;
+    *   - `hashes`: precomputed xxhash64 probes tested against the bloom
+    *     sidecars, beside the ones `eq` derives. */
+  private final case class Skip(
+      num: Map[String, (Double, Double)] = Map.empty,
+      str: Map[String, (String, String)] = Map.empty,
+      eq: Map[String, Seq[Any]] = Map.empty,
+      isNull: Set[String] = Set.empty,
+      isNotNull: Set[String] = Set.empty,
+      hashes: Map[String, Array[Long]] = Map.empty)
+
+  /** THE file-skipping rule: the active files as of `asOf` that may hold
+    * a row satisfying `spec`, in one pass over the snapshot. Every pruned
+    * read and every keyed prune asks it. Per file, in a fixed order:
+    *
+    *   1. exact partition values — a file whose path records col=2019
+    *      cannot hold a 2020 row, whatever its stats say (Delta prunes
+    *      partitionValues before stats the same way), and a
+    *      null-partition file holds only nulls in the column;
+    *   2. the commit-recorded `stats` / `sstats` [min, max];
+    *   3. footer null counts — nulls == 0 rules out IS NULL,
+    *      nulls == rows IS NOT NULL;
+    *   4. last, the bloom sidecars in `sidecars` (probed only when some
+    *      file survives 1–3 and a hash test exists).
+    *
+    * Files without a recorded partition value, stat, count or filter for
+    * a column pass that column's test — pruning only ever narrows, a
+    * missed lookup degrades pruning, never correctness. */
+  private def skipFiles(table: String, spec: Skip, asOf: Option[Long],
+      sidecars: => Option[DataFrame] = None): Seq[String] = {
+    val st = stateAt(table, asOf)
+    val logged = schemaAsOf(table, asOf).fold(Map.empty[String,
+      org.apache.spark.sql.types.DataType])(_.fields.map(f => f.name -> f.dataType).toMap)
+    // Mixed-era-log guard: logs written before sstats existed recorded
+    // DOUBLE-CAST bounds for string columns — for numeric-looking strings
+    // those are inverted garbage ('100' < '9' as doubles), and pruning
+    // from them drops live files. Numeric bounds are only trusted when
+    // the column's CURRENT logged type soundly casts to double
+    // ([[doubleCastable]]); unknown schema or unknown column → never
+    // prune, the safe direction. Tables written from r11 on no longer
+    // record numeric stats for string columns, but 100 TB tables carry
+    // their old log eras forever — the reader must not assume the era.
+    val trusted = logged.filter(e => doubleCastable(e._2)).keySet
+    // spec names are LOGICAL (`trusted` holds logical names);
+    // stats, null counts, partition paths and sidecar `col` entries are
+    // recorded PHYSICAL — translate at the lookup only
+    val phys = physOf(mappingAsOf(table, asOf)) _
+    val kept = activeFiles(table, asOf).filter { f =>
+      lazy val pvals = partValuesOf(f).toMap
+      def numStat(c: String) = st.stats.get(f).flatMap(_.get(phys(c)))
+        .filter(_ => trusted(c))
+      def strStat(c: String) = st.sstats.get(f).flatMap(_.get(phys(c)))
+      def nulls(c: String) = st.nulls.get(f).flatMap(_.get(phys(c)))
+      def allNull(c: String) = (nulls(c), st.rows.get(f)) match {
+        case (Some(n), Some(r)) => r > 0 && n == r
+        case _ => false
+      }
+      def numIn(d: Double, lo: Double, hi: Double) = d >= lo && d <= hi
+      def strIn(v: String, lo: String, hi: String) =
+        utf8Cmp(v, lo) >= 0 && utf8Cmp(v, hi) <= 0
+      // 1 then 2: a partition value decides where it can; else the stats
+      spec.num.forall { case (c, (lo, hi)) =>
+        pvals.get(phys(c)) match {
+          case Some(None) => false
+          case Some(Some(v)) if trusted(c) && v.toDoubleOption.isDefined =>
+            numIn(v.toDouble, lo, hi)
+          case _ => numStat(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+        }
+      } &&
+      spec.str.forall { case (c, (lo, hi)) =>
+        pvals.get(phys(c)) match {
+          case Some(Some(v)) => strIn(v, lo, hi)
+          case Some(None) => false
+          case None => strStat(c).forall { case (mn, mx) =>
+            utf8Cmp(mx, lo) >= 0 && utf8Cmp(mn, hi) <= 0 }
+        }
+      } &&
+      spec.eq.forall { case (c, vs) =>
+        pvals.get(phys(c)) match {
+          // exact string match for string values, double-domain match for
+          // numeric — unknown probe types never prune
+          case Some(pv) => vs.exists(p => p != null && ((pv, p) match {
+            case (Some(v), s: String) => v == s
+            case (Some(v), n: Number) => v.toDoubleOption.contains(n.doubleValue)
+            case (None, _) => false
+            case _ => true
+          }))
+          // a numeric value meets the stats only when its class is the
+          // column's own (a Long on a timestamp column is not epoch seconds)
+          case None => vs.exists {
+            case null => false
+            case n: Number if logged.get(c).exists(probeClassOk(_, n)) =>
+              numStat(c).forall { case (mn, mx) => numIn(n.doubleValue, mn, mx) }
+            case s: String => strStat(c).forall { case (mn, mx) =>
+              strIn(s, mn, mx) }
+            case _ => true
+          }
+        }
+      } &&
+      // 3: footer null counts (partition columns record none — their
+      // NULL-ness is the path's)
+      spec.isNull.forall(c => pvals.get(phys(c)) match {
+        case Some(pv) => pv.isEmpty
+        case None => !nulls(c).contains(0L)
+      }) &&
+      spec.isNotNull.forall(c => pvals.get(phys(c)) match {
+        case Some(pv) => pv.nonEmpty
+        case None => !allNull(c)
+      })
+    }
+    // 4: blooms answer "does this file plausibly hold THIS value" — the
+    // hash-scattered point-lookup case where ranges prune nothing. An
+    // equality column hashes only when every value's runtime class
+    // matches the logged type (an SQL comparison coerces rather than
+    // errors, and a type-crossed hash would false-negative); null values
+    // match nothing and hash nothing.
+    val eqHashes = spec.eq.flatMap { case (c, vs) =>
+      logged.get(c).collect {
+        case dt if vs.forall(probeClassOk(dt, _)) =>
+          c -> vs.filter(_ != null).map(xxh64(_, dt)).toArray
+      }
+    }
+    val tests = (eqHashes ++ spec.hashes).map { case (c, hs) => phys(c) -> hs }
+    if (kept.isEmpty || tests.isEmpty) kept
+    else sidecars match {
+      case None => kept
+      case Some(frame) =>
+        // a file is pruned only when it HAS a filter for a tested column
+        // and NONE of that column's probe hashes hit. The probing runs
+        // WHERE THE SIDECARS ARE READ — executors deserialize each
+        // (file, col) filter once, test the probe hashes, and only
+        // (file, col) MISSES collect (bounded by candidates × tested
+        // columns; filter bytes never move to the driver — at lake scale
+        // the active index is GBs across 100 k files)
+        val candKeys = kept.map(fileKey).toSet
+        import frame.sparkSession.implicits._
+        val misses = frame.select("file", "col", "bloom")
+          .as[(String, String, Array[Byte])]
+          .mapPartitions { it =>
+            it.filter { case (f, c, bytes) =>
+              candKeys.contains(fileKey(f)) && tests.contains(c) && {
+                val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+                  new java.io.ByteArrayInputStream(bytes))
+                !tests(c).exists(bf.mightContainLong)
+              }
+            }.map(t => fileKey(t._1))
+          }.collect().toSet
+        kept.filterNot(f => misses.contains(fileKey(f)))
+    }
+  }
+
   /** Active files whose recorded [min, max] for `colName` intersects
     * [lo, hi] — plus every file committed WITHOUT stats (those must be
     * read). Stats are folded from the full commit log (commits are never
@@ -3531,74 +3621,18 @@ object TxLog {
     filesForRanges(table, Map(colName -> (lo, hi)), asOf)
 
   /** Multi-column form: a file survives only if EVERY predicate's range
-    * intersects its recorded [min, max] (conjunctive pruning — the
-    * multi-dimensional win of Z-order/Hilbert clustering, where each
-    * clustered column's ranges are simultaneously tight per file). */
+    * intersects its recorded [min, max] — see [[skipFiles]]. */
   def filesForRanges(table: String, ranges: Map[String, (Double, Double)],
-      asOf: Option[Long] = None): Seq[String] = {
-    val statsMap = stateAt(table, asOf).stats
-    // Mixed-era-log guard: logs written before sstats existed recorded
-    // DOUBLE-CAST bounds for string columns — for numeric-looking strings
-    // those are inverted garbage ('100' < '9' as doubles), and pruning
-    // from them drops live files. Numeric stats are only trusted when the
-    // column's CURRENT logged type soundly casts to double
-    // ([[doubleCastable]]); unknown schema or unknown column → never
-    // prune, the safe direction. Tables written from r11 on no longer
-    // record numeric stats for string columns, but 100 TB tables carry
-    // their old log eras forever — the reader must not assume the era.
-    val schema = schemaAsOf(table, asOf)
-    def trusted(c: String): Boolean = schema match {
-      case Some(s) if s.fieldNames.contains(c) => doubleCastable(s(c).dataType)
-      case _ => false
-    }
-    // predicates arrive LOGICAL (trusted() checks the logical schema);
-    // stats and partition paths are recorded PHYSICAL — translate at
-    // the lookup only
-    val phys = physOf(mappingAsOf(table, asOf)) _
-    activeFiles(table, asOf).filter { f =>
-      // Partition values prune FIRST — exact, not a range: a file whose
-      // path records col=2019 cannot hold a 2020 row, whatever its stats
-      // say. Delta prunes partitionValues before stats the same way. A
-      // null-partition file (all rows null in the column) can never
-      // satisfy a range predicate either.
-      lazy val pvals = partValuesOf(f).toMap
-      ranges.forall { case (colName, (lo, hi)) =>
-        val partVerdict = pvals.get(phys(colName)).collect {
-          case Some(v) if trusted(colName) && v.toDoubleOption.isDefined =>
-            val d = v.toDouble; d >= lo && d <= hi
-          case None if trusted(colName) => false // all-null partition file
-        }
-        partVerdict.getOrElse(
-          statsMap.get(f).flatMap(_.get(phys(colName))) match {
-            case Some((mn, mx)) if trusted(colName) => mx >= lo && mn <= hi
-            case _ => true
-          })
-      }
-    }
-  }
+      asOf: Option[Long] = None): Seq[String] =
+    skipFiles(table, Skip(num = ranges), asOf)
 
   /** String twin of [[filesForRanges]]: active files whose recorded
     * `sstats` [min, max] for each column intersects [lo, hi] in UTF-8
     * byte order ([[utf8Cmp]] — the order the bounds were recorded in),
     * plus every file committed without string stats. */
   def filesForStringRange(table: String, colName: String, lo: String,
-      hi: String, asOf: Option[Long] = None): Seq[String] = {
-    val statsMap = stateAt(table, asOf).sstats
-    val phys = physOf(mappingAsOf(table, asOf)) _
-    activeFiles(table, asOf).filter { f =>
-      // exact partition value beats recorded bounds — see filesForRanges
-      partValuesOf(f).toMap.get(phys(colName)) match {
-        case Some(Some(v)) => utf8Cmp(v, lo) >= 0 && utf8Cmp(v, hi) <= 0
-        case Some(None) => false // all-null partition file
-        case None =>
-          statsMap.get(f).flatMap(_.get(phys(colName))) match {
-            case Some((mn, mx)) =>
-              utf8Cmp(mx, lo) >= 0 && utf8Cmp(mn, hi) <= 0
-            case None => true
-          }
-      }
-    }
-  }
+      hi: String, asOf: Option[Long] = None): Seq[String] =
+    skipFiles(table, Skip(str = Map(colName -> (lo, hi))), asOf)
 
   /** Stats-pruned range read: plan only the files [[filesForRange]] keeps
     * (the Delta data-skipping read path — at fleet scale this is the
@@ -3612,36 +3646,20 @@ object TxLog {
   /** Multi-column stats-pruned read — see [[filesForRanges]]. */
   def readRanges(spark: SparkSession, table: String,
       ranges: Map[String, (Double, Double)],
-      asOf: Option[Long] = None): DataFrame = {
-    val keep = filesForRanges(table, ranges, asOf)
-    // readFiles carries the log schema and the DV filter exactly like
-    // read() — the pruned read must stay "identical to filtering a full
-    // read" across mergeSchema evolution AND deletion vectors.
-    val base =
-      if (keep.nonEmpty) readFiles(spark, table, keep, asOf)
-      else read(spark, table, asOf) // degenerate: keep schema, filter to ∅
-    ranges.foldLeft(base) { case (df, (c, (lo, hi))) =>
-      // timestamp columns compare through the same epoch-seconds double
-      // cast their stats recorded; numeric columns compare natively so
-      // the predicate still pushes to the parquet scan
-      val cc =
-        if (df.schema(c).dataType
-            .isInstanceOf[org.apache.spark.sql.types.TimestampType])
-          col(c).cast("double")
-        else col(c)
-      df.filter(cc >= lo && cc <= hi)
+      asOf: Option[Long] = None): DataFrame =
+    ranges.foldLeft(readPruned(spark, table, ranges, Map.empty, asOf)) {
+      case (df, (c, (lo, hi))) =>
+        // timestamp columns compare through the same epoch-seconds double
+        // cast their stats recorded; numeric columns compare natively so
+        // the predicate still pushes to the parquet scan
+        val cc =
+          if (df.schema(c).dataType
+              .isInstanceOf[org.apache.spark.sql.types.TimestampType])
+            col(c).cast("double")
+          else col(c)
+        df.filter(cc >= lo && cc <= hi)
     }
-  }
 
-  /** Combined stats-pruned read for RELATION integration (the SQL data
-    * source derives per-column bounds from its pushed-down filters and
-    * calls this): scan only the files whose recorded numeric/timestamp
-    * stats intersect every `numRanges` bound AND whose sstats intersect
-    * every `strRanges` bound. Returns the files UNFILTERED at row level
-    * — the caller (Spark, re-evaluating residual predicates above the
-    * scan) owns exactness; this owns never dropping a file that could
-    * hold a matching row (stats-less files always pass, string columns
-    * never consult legacy numeric stats). */
   private sealed trait GenShape
   private final case class GenYear(base: String) extends GenShape
   private final case class GenMonth(base: String) extends GenShape
@@ -3874,6 +3892,16 @@ object TxLog {
     out
   }
 
+  /** Combined pruned read for RELATION integration (the SQL data source
+    * derives per-column bounds, equality probes and NULL-ness columns
+    * from its pushed-down filters and calls this): scan only the files
+    * [[skipFiles]] keeps for all of them — partition values, numeric and
+    * string stats, footer null counts, then the bloom index for the
+    * equality probes. Returns the files UNFILTERED at row level — the
+    * caller (Spark, re-evaluating residual predicates above the scan)
+    * owns exactness; this owns never dropping a file that could hold a
+    * matching row (stats-less files always pass, string columns never
+    * consult legacy numeric stats). */
   def readPruned(spark: SparkSession, table: String,
       numRanges: Map[String, (Double, Double)],
       strRanges: Map[String, (String, String)],
@@ -3881,90 +3909,14 @@ object TxLog {
       eqProbes: Map[String, Seq[Any]] = Map.empty,
       isNullCols: Set[String] = Set.empty,
       isNotNullCols: Set[String] = Set.empty): DataFrame = {
-    val keepN1 = filesForRanges(table, numRanges, asOf)
-    // NULL-ness prunes via partition values AND footer null counts.
-    // Partition values decide exactly: a col=2020 file holds NO null rows
-    // for col (partitionBy routes them to __HIVE_DEFAULT_PARTITION__), a
-    // null-partition file holds ONLY null rows. For data columns the
-    // commit-recorded footer counts decide: nulls==0 can't satisfy
-    // IS NULL, nulls==rows can't satisfy IS NOT NULL. Files without
-    // recorded counts always pass — min/max stats ignore nulls and never
-    // get a vote here.
-    lazy val nullCounts = fileNullCounts(table, asOf)
-    lazy val rowCounts = fileRowCounts(table, asOf)
-    // predicate columns arrive LOGICAL; footer counts and partition
-    // paths are recorded PHYSICAL — translate at every lookup
-    val phys = physOf(mappingAsOf(table, asOf)) _
-    def allNull(f: String, c: String): Boolean =
-      (nullCounts.get(f).flatMap(_.get(phys(c))), rowCounts.get(f)) match {
-        case (Some(n), Some(r)) => r > 0 && n == r
-        case _ => false
-      }
-    def noNulls(f: String, c: String): Boolean =
-      nullCounts.get(f).flatMap(_.get(phys(c))).contains(0L)
-    // a file that is ALL null for a compared column can never satisfy a
-    // range or equality predicate on it — the one pruning min/max stats
-    // can't make (an all-null file records no bounds at all)
-    val cmpCols = numRanges.keySet ++ strRanges.keySet ++ eqProbes.keySet
-    val keepN0 =
-      if (cmpCols.isEmpty) keepN1
-      else keepN1.filterNot(f => cmpCols.exists(allNull(f, _)))
-    val keepN =
-      if (isNullCols.isEmpty && isNotNullCols.isEmpty) keepN0
-      else keepN0.filter { f =>
-        lazy val pvals = partValuesOf(f).toMap
-        isNullCols.forall(c =>
-          pvals.get(phys(c)).forall(_.isEmpty) && !noNulls(f, c)) &&
-          isNotNullCols.forall(c =>
-            pvals.get(phys(c)).forall(_.nonEmpty) && !allNull(f, c))
-      }
-    val keepS0 = strRanges.foldLeft(keepN) { case (acc, (c, (lo, hi))) =>
-      val ok = filesForStringRange(table, c, lo, hi, asOf).toSet
-      acc.filter(ok)
-    }
-    // partition equality prunes before blooms: an In-list that spans a
-    // wide range still hits only its listed partitions (the range cut
-    // above keeps the whole span). Exact string match for string values,
-    // double-domain match for numeric — unknown types never prune.
-    val keepS =
-      if (eqProbes.isEmpty) keepS0
-      else keepS0.filter { f =>
-        lazy val pvals = partValuesOf(f).toMap
-        eqProbes.forall { case (c, vs) =>
-          pvals.get(phys(c)) match {
-            case Some(vOpt) => vs.exists(p => (vOpt, p) match {
-              case (Some(v), s: String) => v == s
-              case (Some(v), n: Number) =>
-                v.toDoubleOption.contains(n.doubleValue)
-              case (None, _) => false // null partition ≠ non-null probe
-              case _ => true // unpruneable probe type: keep the file
-            })
-            case None => true // unpartitioned on c: stats/bloom decide
-          }
-        }
-      }
-    // equality probes additionally consult the bloom index: stats answer
-    // "could this file's RANGE hold the value", blooms answer "does this
-    // file plausibly hold THIS value" — the hash-scattered point-lookup
-    // case where ranges prune nothing. A probe whose runtime class
-    // mismatches the logged type contributes nothing here (an SQL
-    // comparison coerces rather than errors — pruning silently from a
-    // type-crossed hash would false-negative), so only class-exact
-    // probes hash.
-    val keep =
-      if (eqProbes.isEmpty || keepS.isEmpty) keepS
-      else {
-        val schema = schemaAsOf(table, asOf)
-        val tests = eqProbes.flatMap { case (c, vs) =>
-          schema.collect {
-            case sc if sc.fieldNames.contains(c) &&
-                vs.forall(v => v != null && probeClassOk(sc(c).dataType, v)) =>
-              c -> vs.map(xxh64(_, sc(c).dataType)).toArray
-          }
-        }
-        if (tests.isEmpty) keepS
-        else bloomSurvivors(spark, table, keepS, tests, asOf)
-      }
+    // a range or equality on a column implies it IS NOT NULL: a file ALL
+    // null for a compared column holds no matching row — the prune
+    // min/max stats can't make (an all-null file records no bounds)
+    val compared = numRanges.keySet ++ strRanges.keySet ++ eqProbes.keySet
+    val keep = skipFiles(table, Skip(numRanges, strRanges, eqProbes,
+      isNullCols, isNotNullCols ++ compared), asOf,
+      sidecarFrame(spark, table, asOf))
+    // degenerate: keep the schema, scan nothing
     if (keep.isEmpty) read(spark, table, asOf).limit(0)
     else readFiles(spark, table, keep, asOf)
   }
@@ -3976,49 +3928,40 @@ object TxLog {
     * filter. Result is identical to filtering a full [[read]] — files
     * without recorded string stats are always read. */
   def readStringRange(spark: SparkSession, table: String, colName: String,
-      lo: String, hi: String, asOf: Option[Long] = None): DataFrame = {
-    val keep = filesForStringRange(table, colName, lo, hi, asOf)
-    val base =
-      if (keep.nonEmpty) readFiles(spark, table, keep, asOf)
-      else read(spark, table, asOf) // degenerate: keep schema, filter to ∅
-    base.filter(col(colName) >= lo && col(colName) <= hi)
-  }
+      lo: String, hi: String, asOf: Option[Long] = None): DataFrame =
+    readPruned(spark, table, Map.empty, Map(colName -> (lo, hi)), asOf)
+      .filter(col(colName) >= lo && col(colName) <= hi)
 
-  /** Typed per-column bounds of the merge keys over the incoming batch:
-    * numeric/timestamp key columns yield double bounds (pruned against
-    * `stats`), string key columns lexicographic bounds (pruned against
-    * `sstats` — NEVER cast through double: '9' > '100' lexicographically
-    * but 9.0 < 100.0, so a double-cast bound can wrongly prune a file
-    * holding a contested key, leaving a stale row beside the new one). */
-  private final case class KeyBounds(
-      num: Map[String, (Double, Double)],
-      str: Map[String, (String, String)])
-
-  /** Per-column bounds of the merge keys over the incoming batch, or
-    * None when no column can prune. Composite keys prune CONJUNCTIVELY:
-    * a file can hold a contested composite key only if EVERY bounded
-    * column's recorded range intersects that column's batch bounds, so
-    * each soundly-bounded column narrows the touched set independently.
-    * A column contributes no bound when its type has no sound stats
-    * (only numeric/timestamp and string qualify) or when the batch has
-    * ANY null in it — a null-keyed incoming row contests existing rows
-    * whose value in that column is null, and those rows sit outside
-    * every recorded range (stats ignore nulls), so pruning on that
-    * column could strand a stale row. Empty batch → None (caller keeps
-    * the historical full-rewrite behavior). One driver-side aggregate
-    * row for all columns. */
+  /** Per-column bounds of the merge keys over the incoming batch, as a
+    * [[Skip]] (empty when no column can prune): numeric/timestamp key
+    * columns yield double bounds (pruned against `stats`), string key
+    * columns lexicographic bounds (pruned against `sstats` — NEVER cast
+    * through double: '9' > '100' lexicographically but 9.0 < 100.0, so a
+    * double-cast bound can wrongly prune a file holding a contested key,
+    * leaving a stale row beside the new one). Composite keys prune
+    * CONJUNCTIVELY: a file can hold a contested composite key only if
+    * EVERY bounded column's recorded range intersects that column's
+    * batch bounds, so each soundly-bounded column narrows the touched set
+    * independently. A column contributes no bound when its type has no
+    * sound stats (only numeric/timestamp and string qualify) or when the
+    * batch has ANY null in it — a null-keyed incoming row contests
+    * existing rows whose value in that column is null, and those rows sit
+    * outside every recorded range (stats ignore nulls), so pruning on
+    * that column could strand a stale row. Empty batch → no bounds
+    * (caller keeps the historical full-rewrite behavior). One
+    * driver-side aggregate row for all columns. */
   private def mergeKeyBounds(updates: DataFrame,
-      keyCols: Seq[String]): Option[KeyBounds] = {
+      keyCols: Seq[String]): Skip = {
     val numCols = keyCols.filter(c => doubleCastable(updates.schema(c).dataType))
     val strCols = keyCols.filter(c =>
       updates.schema(c).dataType == org.apache.spark.sql.types.StringType)
-    if (numCols.isEmpty && strCols.isEmpty) return None
+    if (numCols.isEmpty && strCols.isEmpty) return Skip()
     val aggs = Seq(count(lit(1)).alias("__n")) ++
       numCols.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double")), count(col(c)))) ++
       strCols.flatMap(c => Seq(min(col(c)), max(col(c)), count(col(c))))
     val r = updates.agg(aggs.head, aggs.tail: _*).head()
     val n = r.getLong(0)
-    if (n == 0L) return None
+    if (n == 0L) return Skip()
     def slot[T](base: Int, i: Int, get: (Row, Int) => T): Option[(T, T)] = {
       val at = base + 3 * i
       if (r.getLong(at + 2) != n || r.isNullAt(at)) None
@@ -4028,7 +3971,7 @@ object TxLog {
       slot(1, i, _.getDouble(_)).map(c -> _) }.toMap
     val str = strCols.zipWithIndex.flatMap { case (c, i) =>
       slot(1 + 3 * numCols.size, i, _.getString(_)).map(c -> _) }.toMap
-    if (num.isEmpty && str.isEmpty) None else Some(KeyBounds(num, str))
+    Skip(num = num, str = str)
   }
 
   /** Ceiling on distinct per-column probe hashes a merge batch may test
@@ -4049,89 +3992,32 @@ object TxLog {
       if (hs.length > MergeBloomProbeCap) None else Some(c -> hs)
     }.toMap
 
-  /** Bloom refinement of a merge's range-pruned rewrite set. Range
-    * bounds prune nothing when the key is hash-scattered (every file's
-    * [min, max] spans the domain — the steady-state CDC shape on an
-    * unclustered key); the per-file blooms cut the rewrite to files that
-    * might actually hold a batch key. A probe column is used only when
-    * the batch's column TYPE matches the logged type — xxhash64 of an
-    * Int and a Long differ, and a type-crossed probe could false-negative
-    * a file into wrongly surviving rows (the one failure mode bloom
-    * pruning must never have). */
-  private def refineTouchedByBlooms(table: String,
-      touched: Seq[String], probes: Map[String, Array[Long]],
-      updates: DataFrame, asOf: Option[Long],
-      bi: BloomIndex): Seq[String] = {
-    if (probes.isEmpty || touched.isEmpty) return touched
-    val logged = schemaAsOf(table, asOf)
-    val tests = probes.filter { case (c, _) =>
-      logged.exists(sc => sc.fieldNames.contains(c) &&
-        sc(c).dataType == updates.schema(c).dataType)
-    }
-    if (tests.isEmpty) touched
-    else bi.survivors(touched, tests)
-  }
-
-  /** Files a merge/applyChanges batch with `bounds` may contest:
-    * conjunctive intersection over every bounded column, numeric bounds
-    * against `stats`, string bounds lexicographically against `sstats`;
-    * files without recorded stats for a column pass that column's test
-    * (they could hold any key). */
-  private def filesForKeyBounds(table: String,
-      bounds: KeyBounds, asOf: Option[Long]): Seq[String] = {
-    val tstate = stateAt(table, asOf)
-    val nstats = tstate.stats
-    val lstats = tstate.sstats
-    // bounds arrive in LOGICAL names; stats and partition paths are
-    // recorded PHYSICAL — translate at the lookup
-    val phys = physOf(mappingAsOf(table, asOf)) _
-    activeFiles(table, asOf).filter { f =>
-      // exact partition values beat recorded stats, same as
-      // [[filesForRanges]]: a merge whose keys include the partition
-      // column touches only matching partitions. mergeKeyBounds already
-      // withholds a column's bound when the batch has nulls in it, so an
-      // all-null partition file (value None) is only ever pruned against
-      // a null-free batch — sound.
-      lazy val pvals = partValuesOf(f).toMap
-      bounds.num.forall { case (c, (lo, hi)) =>
-        pvals.get(phys(c)).collect {
-          case Some(v) if v.toDoubleOption.isDefined =>
-            val d = v.toDouble; d >= lo && d <= hi
-          case None => false
-        }.getOrElse(nstats.get(f).flatMap(_.get(phys(c))) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        })
-      } &&
-      bounds.str.forall { case (c, (lo, hi)) =>
-        pvals.get(phys(c)).map {
-          case Some(v) => utf8Cmp(v, lo) >= 0 && utf8Cmp(v, hi) <= 0
-          case None => false
-        }.getOrElse(lstats.get(f).flatMap(_.get(phys(c))) match {
-          case Some((mn, mx)) => utf8Cmp(mx, lo) >= 0 && utf8Cmp(mn, hi) <= 0
-          case None => true
-        })
-      }
-    }
-  }
-
   /** The key-bounds + bloom prune every keyed verb shares ([[merge]],
     * [[applyChanges]], [[applyChangesScd2]], [[repairScd2]] and
     * [[mergeInto]]'s `onKeys`): the batch's bounds and probes are
     * snapshot-independent, so they compute once per call, and
     * [[candidates]] narrows one attempt's active files to those that may
-    * hold a batch key. Files without recorded stats or blooms always
-    * pass — pruning only ever narrows, never decides membership. */
+    * hold a batch key — the [[skipFiles]] rule over the attempt's
+    * persisted bloom frame. Range bounds prune nothing when the key is
+    * hash-scattered (every file's [min, max] spans the domain — the
+    * steady-state CDC shape on an unclustered key); the per-file blooms
+    * cut the rewrite to files that might actually hold a batch key. */
   private final class KeyPrune(table: String, batch: DataFrame,
       keyCols: Seq[String]) {
     private val bounds = mergeKeyBounds(batch, keyCols)
     private val probes = mergeKeyProbes(batch, keyCols)
     def candidates(base: Option[Long], bi: BloomIndex): Seq[String] = {
-      val ranged = bounds match {
-        case Some(b) => filesForKeyBounds(table, b, base)
-        case None => activeFiles(table, base)
+      // a probe column is used only when the batch's column TYPE matches
+      // the logged type — xxhash64 of an Int and a Long differ, and a
+      // type-crossed probe could false-negative a file into wrongly
+      // surviving rows (the one failure mode bloom pruning must never
+      // have)
+      val logged = schemaAsOf(table, base)
+      val hashes = probes.filter { case (c, _) =>
+        logged.exists(sc => sc.fieldNames.contains(c) &&
+          sc(c).dataType == batch.schema(c).dataType)
       }
-      refineTouchedByBlooms(table, ranged, probes, batch, base, bi)
+      skipFiles(table, bounds.copy(hashes = hashes), base, bi.frame)
     }
   }
 
@@ -4159,7 +4045,7 @@ object TxLog {
       val allActive = base.fold(Seq.empty[String])(_ => activeFiles(table, base))
       // ONE sidecar read per attempt serves the pruning and the commit's
       // bloom bookkeeping — see [[BloomIndex]]
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+      val bi = new BloomIndex(spark, table, base)
       try {
         // Stats-pruned: only files that may hold a batch key are
         // rewritten — for a key-clustered table with localized updates
@@ -4377,7 +4263,7 @@ object TxLog {
           streamId = streamId))
       else {
         val allActive = activeFiles(table, base)
-        val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+        val bi = new BloomIndex(spark, table, base)
         try {
           // exact: files holding ANY row for a batch key. Not just open
           // rows — a key whose chain is fully CLOSED must still be found,
@@ -4456,7 +4342,7 @@ object TxLog {
       require(base.nonEmpty && activeFiles(table, base).nonEmpty,
         s"repairScd2 on empty txlog table $table — use applyChangesScd2")
       val allActive = activeFiles(table, base)
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+      val bi = new BloomIndex(spark, table, base)
       try {
         // ANY row of an affected key touches (history rewrites whole
         // chains, not just open rows)
@@ -4895,8 +4781,7 @@ object TxLog {
       }
     // a caller that already holds the attempt's index passes it in, so
     // the sidecars are read once per attempt
-    val bi = blooms.getOrElse(
-      new BloomIndex(spark, table, activeBlooms(table, base)))
+    val bi = blooms.getOrElse(new BloomIndex(spark, table, base))
     try {
       // DECLARED stats/bloom columns re-record on the rewrite, or DML
       // strips its output files of skipping metadata and every later
@@ -5467,7 +5352,7 @@ object TxLog {
     }
     // a lost race re-derives against the new snapshot
     optimistic(table, "mergeInto") { base =>
-      val bi = new BloomIndex(spark, table, activeBlooms(table, base))
+      val bi = new BloomIndex(spark, table, base)
       try attempt(base, bi) finally bi.release()
     }
   }
@@ -6220,13 +6105,6 @@ object TxLog {
     * absence as unknown, never zero). */
   def fileRowCounts(table: String, asOf: Option[Long] = None): Map[String, Long] = {
     val recorded = stateAt(table, asOf).rows
-    activeFiles(table, asOf).flatMap(f => recorded.get(f).map(f -> _)).toMap
-  }
-
-  /** Commit-recorded per-column null counts per active file as of `asOf`. */
-  def fileNullCounts(table: String,
-      asOf: Option[Long] = None): Map[String, Map[String, Long]] = {
-    val recorded = stateAt(table, asOf).nulls
     activeFiles(table, asOf).flatMap(f => recorded.get(f).map(f -> _)).toMap
   }
 

@@ -448,8 +448,8 @@ case class TxLogRelation(sqlContext: SQLContext, path: String,
     * intersecting files, with no TxLog-API call site. Sound because a
     * pruned file's recorded bounds cannot intersect the predicate, so
     * it holds no satisfying row (NULL rows fail range predicates too;
-    * IsNull/IsNotNull prune only via exact partition values, never via
-    * stats — stats ignore nulls). */
+    * IsNull/IsNotNull prune via exact partition values and footer null
+    * counts, never via min/max — stats ignore nulls). */
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
     val (numB0, strB0, eqP0) = statsBounds(filters)
@@ -466,9 +466,9 @@ case class TxLogRelation(sqlContext: SQLContext, path: String,
     // table's files with no stats and no bucket column in the query
     val eqP = TxLog.deriveGeneratedEqProbes(path, pinnedVersion, eqP0,
       numB0.keySet ++ strB0.keySet)
-    // NULL-ness predicates prune via partition values only (a col=v
-    // path segment proves the file holds no nulls for col and vice
-    // versa); stats-based pruning never sees them. IsNotNull is
+    // NULL-ness predicates prune via partition values (a col=v path
+    // segment proves the file holds no nulls for col and vice versa)
+    // and footer null counts, never via min/max. IsNotNull is
     // Spark-injected next to nearly every comparison, so on partitioned
     // tables this drops null-partition files for free.
     val (nullC, notNullC) = nullness(filters)

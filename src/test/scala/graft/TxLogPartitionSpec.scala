@@ -303,6 +303,29 @@ class TxLogPartitionSpec extends SparkSpec {
       .as[Long].collect().toSet === Set(1L))
   }
 
+  test("point lookups on a partition column prune to its partitions") {
+    val t = table()
+    TxLog.setProperties(t, Map("graft.partition.columns" -> "p"))
+    TxLog.append(Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "a"))
+      .toDF("k", "p"), t)
+    TxLog.append(Seq((5L, "b"), (6L, "a")).toDF("k", "p"), t)
+    val keep = TxLog.filesForEquals(spark, t, "p", Seq("a"))
+    assert(keep.nonEmpty && keep.forall(_.contains("p=a/")), keep)
+    assert(keep.size === TxLog.activeFiles(t).count(_.contains("p=a/")))
+    assert(TxLog.readEquals(spark, t, "p", Seq("a"))
+      .as[(Long, String)].collect().toSet ===
+      TxLog.read(spark, t).filter(col("p") === "a")
+        .as[(Long, String)].collect().toSet)
+    // numeric partition values match in the double domain; the
+    // unpartitioned seed file has no partition value and is kept
+    val y = mkPartitioned()
+    val keepY = TxLog.filesForEquals(spark, y, "y", Seq(2020))
+    assert(!keepY.exists(f => f.contains("y=2021") || f.contains("y=2019")),
+      keepY)
+    val y2020 = TxLog.activeFiles(y).count(_.contains("y=2020"))
+    assert(keepY.size === y2020 + 1, keepY)
+  }
+
   test("compact of a partitioned table stamps the checkpoint protocol v4") {
     val t = mkPartitioned()
     TxLog.compact(t)

@@ -1329,6 +1329,23 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.read(spark, dst).agg(min("k")).head.getLong(0) === 1L)
   }
 
+  test("equality probes alone prune by recorded min/max when no bloom exists") {
+    val t = table()
+    // three key-disjoint files with k stats and no bloom index
+    Seq(0, 1, 2).foreach(i => TxLog.append(
+      spark.range(i * 100, (i + 1) * 100).toDF("k").coalesce(1), t,
+      statsCols = Seq("k")))
+    assert(TxLog.activeBlooms(t).isEmpty)
+    val pruned = TxLog.readPruned(spark, t, Map.empty, Map.empty,
+      eqProbes = Map("k" -> Seq(150L)))
+    assert(pruned.inputFiles.length === 1,
+      s"opened ${pruned.inputFiles.length} of ${TxLog.activeFiles(t).size}")
+    assert(pruned.filter($"k" === 150L).count() === 1L)
+    // a value outside every file's [min, max] opens nothing
+    assert(TxLog.readPruned(spark, t, Map.empty, Map.empty,
+      eqProbes = Map("k" -> Seq(999L))).inputFiles.isEmpty)
+  }
+
   test("SQL WHERE over a txlog view prunes files through pushed-filter stats") {
     import org.apache.spark.sql.functions._
     val t = table()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.ZOrder
-import graft.ops.Maintenance
+import graft.ops.{Maintenance, TxLog}
 
 /** Z-order layout: key correctness against a Scala model, and the
   * data-skipping property the layout exists for — every output file of a
@@ -56,5 +56,50 @@ class ZOrderSpec extends SparkSpec {
     assert(lexB > 200, s"lex b-spread $lexB")
     assert(zB < lexB * 0.6, s"z b-spread $zB vs lex $lexB")
     assert(avgSpread(zDir, "a") < 256, "a still bounded")
+  }
+
+  test("OPTIMIZE ZORDER BY prunes a 2-D box that a bin-packing OPTIMIZE keeps whole") {
+    val rnd = new scala.util.Random(23)
+    val rows = Seq.fill(20000)((rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
+    // random layout: every one of the 16 files spans both whole domains
+    def build(): String = {
+      val t = tmpDir("zorder_box") + "/t"
+      TxLog.setProperties(t, Map("graft.stats.columns" -> "a,b"))
+      TxLog.append(rows.toDF("a", "b").repartition(16), t)
+      t
+    }
+    // a selective box: 10 % of each dimension
+    val box = Map("a" -> (100.0, 199.0), "b" -> (500.0, 599.0))
+    val inBox = rows.count { case (a, b) =>
+      a >= 100 && a <= 199 && b >= 500 && b <= 599 }.toLong
+    val (packed, zordered) = (build(), build())
+    // hold the output at 16 files for both rewrites, so the comparison
+    // isolates layout (random vs curve-clustered): ceil(bytes / 16) per
+    // output file, and one input file per read partition so the
+    // bin-pack's coalesce has 16 partitions to keep
+    val total = TxLog.fileSizes(packed).values.sum
+    val confs = Map(
+      "spark.graft.optimize.targetFileBytes" -> ((total + 15) / 16).toString,
+      "spark.graft.optimize.minFileBytes" -> Long.MaxValue.toString,
+      "spark.sql.files.openCostInBytes" -> (128L << 20).toString)
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      spark.sql(s"OPTIMIZE txlog.`$packed`")
+      spark.sql(s"OPTIMIZE txlog.`$zordered` ZORDER BY (a, b)")
+    } finally confs.keys.foreach(spark.conf.unset)
+    val nFiles = TxLog.activeFiles(packed).size
+    assert(TxLog.activeFiles(zordered).size === nFiles)
+    Seq(packed, zordered).foreach { t =>
+      val last = TxLog.commits(t).last
+      assert(last.op === "optimize" && last.stats.size === nFiles &&
+        last.stats.values.forall(_.keySet === Set("a", "b")),
+        s"the rewrite must record a/b stats for every output file: $t")
+    }
+    assert(TxLog.filesForRanges(packed, box).size === nFiles,
+      "a bin-pack of a random layout leaves every file spanning the box")
+    val kept = TxLog.filesForRanges(zordered, box).size
+    assert(kept * 2 <= nFiles, s"ZORDER kept $kept of $nFiles files")
+    Seq(packed, zordered).foreach(t =>
+      assert(TxLog.readRanges(spark, t, box).count() === inBox))
   }
 }
