@@ -2580,64 +2580,95 @@ object TxLog {
           cur.fields ++ added.map(_.copy(nullable = true)))
     }
 
-  /** Per-file (min, max) of `statsCols` for freshly staged `files` — the
-    * data-skipping stats recorded in the commit. ONE distributed pass
-    * grouped by input_file_name; the collect is one row per file per
-    * commit (metadata-sized, like the commit itself).
+  /** The skipping metadata of freshly staged `files`, which hold
+    * `schema` (the physical schema the write used, partition columns
+    * excluded; passing it skips parquet schema inference): per-file
+    * (min, max) of `statsCols` and per-file bloom filters for
+    * `bloomCols`, both physical names, from ONE distributed aggregation
+    * grouped by input_file_name. The collect is one row per file —
+    * bounds plus finished filters, O(batch files × filter bytes), the
+    * same commit-bounded collected size as the commit itself.
     *
-    * Returns (numeric stats, string stats). Numeric columns record double
-    * bounds; STRING columns record their bounds AS STRINGS in `sstats`
-    * (Spark's min/max on strings is UTF8String binary order — compared
-    * back with [[utf8Cmp]]). Casting a lexicographic string min/max
-    * through double is never done: for numeric-looking strings it records
-    * inverted garbage bounds ('100','9' → (100.0, 9.0)) that can wrongly
-    * prune a file holding a contested merge key. Columns of any other
-    * type record nothing — the file is simply never pruned on them, the
-    * safe direction. */
-  private def fileStats(spark: SparkSession, table: String,
-      files: Seq[String], statsCols: Seq[String],
-      mapping: Option[Map[String, String]]): (Map[String, Map[String, (Double, Double)]], Map[String, Map[String, (String, String)]]) = {
-    if (statsCols.isEmpty || files.isEmpty) return (Map.empty, Map.empty)
-    val df = spark.read.parquet(files.map(f => s"$table/$f"): _*)
-    // staged files carry PHYSICAL column names; callers pass LOGICAL
-    // stats columns — translate, and record the stats keyed physical
-    // (the same namespace partition paths and footer null counts use)
-    val phys = physOf(mapping) _
-    // partition columns are stripped from staged data files — their value
-    // rides the path ([[partValuesOf]]), which prunes EXACTLY; min/max
-    // stats for them would be both unreadable here and redundant
-    val present = statsCols.map(phys).filter(df.columns.contains)
-    val numCols = present.filter(c => doubleCastable(df.schema(c).dataType))
-    val strCols = present.filter(c =>
-      df.schema(c).dataType == org.apache.spark.sql.types.StringType)
-    val kept = numCols ++ strCols
-    if (kept.isEmpty) return (Map.empty, Map.empty)
-    val aggs = numCols.flatMap(c => Seq(
-      min(col(c)).cast("double").alias(s"__mn_$c"),
-      max(col(c)).cast("double").alias(s"__mx_$c"))) ++
-      strCols.flatMap(c => Seq(
-        min(col(c)).alias(s"__smn_$c"), max(col(c)).alias(s"__smx_$c")))
-    val rows = df.groupBy(input_file_name().alias("_f"))
-      .agg(aggs.head, aggs.tail: _*)
+    * Stats: numeric and timestamp columns record double bounds
+    * ([[doubleCastable]]); STRING columns record their bounds AS STRINGS
+    * in `sstats` (Spark's min/max on strings is UTF8String binary order —
+    * compared back with [[utf8Cmp]]). Casting a lexicographic string
+    * min/max through double is never done: for numeric-looking strings it
+    * records inverted garbage bounds ('100','9' → (100.0, 9.0)) that can
+    * wrongly prune a file holding a contested merge key. Columns of any
+    * other type record nothing — the file is simply never pruned on them,
+    * the safe direction. A column all NULL within one file records no
+    * bounds and no filter.
+    *
+    * Blooms: Spark's codegen'd sketch aggregate (partial filters OR
+    * together map-side), staged as ONE sidecar parquet (file, col, bloom
+    * BINARY; `file` is the staged relative path, which readers compare
+    * through [[fileKey]] — a partitioned path has a third segment); the
+    * sidecar's relative paths become the commit's `bloomAdd`. Filters are
+    * sized at ~3 % fpp from the batch's largest file, clamped to the
+    * sketch aggregate's ceilings. The row counts come from the staged
+    * files' parquet footers ([[footerCounts]]), not from a counting pass:
+    * a file whose footer cannot be read contributes no count, and the
+    * filters are then sized from the largest count that was read (floor
+    * 64). An over-full filter only costs extra false positives (extra
+    * reads), never a missed row. A zero-row write (Spark still stages a
+    * schema-only part file) has no groups: it records nothing. */
+  private def fileMeta(spark: SparkSession, table: String,
+      files: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      statsCols: Seq[String], bloomCols: Seq[String]): Staged = {
+    val numCols = statsCols.filter(c => doubleCastable(schema(c).dataType))
+    val strCols = statsCols.filter(c =>
+      schema(c).dataType == org.apache.spark.sql.types.StringType)
+    if (files.isEmpty || numCols.isEmpty && strCols.isEmpty && bloomCols.isEmpty)
+      return Staged(files, Map.empty, Map.empty, Seq.empty)
+    lazy val est = math.min(math.max(files.flatMap(f =>
+      footerCounts(resolve(table, f)).map(_._1)).maxOption.getOrElse(0L),
+      64L), 4000000L)
+    lazy val bits = math.min(est * 8L, 67108864L) // ~7.3 bits/key = 3% fpp
+    if (bloomCols.nonEmpty) graft.functions.GraftFunctions.register(spark)
+    val aggs = numCols.flatMap(c => Seq(min(col(c)).cast("double"),
+      max(col(c)).cast("double"))) ++
+      strCols.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
+      bloomCols.map(c => call_function("bloom_agg", xxhash64(col(c)),
+        lit(est), lit(bits)))
+    val rows = spark.read.schema(schema)
+      .parquet(files.map(f => s"$table/$f"): _*)
+      .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*)
       .collect()
     // canonical fileKey set lookup (last two path segments match between
     // the staged rel entries and input_file_name URIs) — no linear
     // suffix scan over the staged set
     val relByKey = files.map(f => fileKey(f) -> f).toMap
-    def perFile[T](cols: Seq[String], offset: Int, get: (Row, Int) => T): Map[String, Map[String, (T, T)]] =
-      rows.flatMap { r =>
-        relByKey.get(fileKey(r.getString(0))).map { rel =>
-          // all-NULL within one file → NULL min/max → record no stats
-          rel -> cols.zipWithIndex.flatMap { case (c, i) =>
-            val (a, b) = (offset + 2 * i, offset + 2 * i + 1)
-            if (r.isNullAt(a) || r.isNullAt(b)) None
-            else Some(c -> (get(r, a), get(r, b)))
-          }.toMap
-        }
-      }.toMap
-    (perFile[Double](numCols, 1, _.getDouble(_)).filter(_._2.nonEmpty),
-      perFile[String](strCols, 1 + 2 * numCols.size, _.getString(_))
-        .filter(_._2.nonEmpty))
+    val byFile = rows.toSeq.flatMap(r =>
+      relByKey.get(fileKey(r.getString(0))).map(_ -> r))
+    def bounds[T](cols: Seq[String], at: Int)(get: (Row, Int) => T)
+        : Map[String, Map[String, (T, T)]] =
+      byFile.map { case (rel, r) =>
+        rel -> cols.zipWithIndex.flatMap { case (c, i) =>
+          val (a, b) = (at + 2 * i, at + 2 * i + 1)
+          Option.when(!r.isNullAt(a) && !r.isNullAt(b))(
+            c -> (get(r, a), get(r, b)))
+        }.toMap
+      }.filter(_._2.nonEmpty).toMap
+    val at = 1 + 2 * (numCols.size + strCols.size)
+    val filters = byFile.flatMap { case (rel, r) =>
+      bloomCols.zipWithIndex.collect { case (c, i) if !r.isNullAt(at + i) =>
+        (rel, c, r.getAs[Array[Byte]](at + i))
+      }
+    }
+    val bloomAdd = if (filters.isEmpty) Seq.empty else {
+      val sub = s"bl-${UUID.randomUUID().toString.take(8)}"
+      import spark.implicits._
+      filters.toDF("file", "col", "bloom").coalesce(1)
+        .write.parquet(s"$table/$sub")
+      listDir(Paths.get(table, sub))
+        .map(_.getFileName.toString)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        .sorted
+        .map(n => s"$sub/$n")
+    }
+    Staged(files, bounds(numCols, 1)(_.getDouble(_)),
+      bounds(strCols, 1 + 2 * numCols.size)(_.getString(_)), bloomAdd)
   }
 
   /** Types whose min/max cast to double losslessly enough for range
@@ -2672,81 +2703,28 @@ object TxLog {
       org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt)))
       .eval(null).asInstanceOf[Long]
 
-  /** Build per-file bloom filters for `bloomCols` over freshly-staged
-    * `files` and stage them as ONE sidecar parquet (file, col, bloom
-    * BINARY; `file` is the staged relative path, which readers compare
-    * through [[fileKey]] — a partitioned path has a third segment);
-    * returns the sidecar's relative paths for the commit's
-    * `bloomAdd`. The build is one distributed aggregation (Spark's
-    * codegen'd sketch aggregate grouped by file — partial filters OR
-    * together map-side); only the finished filters collect, O(batch
-    * files × filter bytes), the same commit-bounded driver footprint as
-    * [[fileStats]]. Filters are sized from the batch's largest file at
-    * ~3 % fpp, clamped to Spark's sketch-aggregate ceilings — an
-    * over-full filter degrades to more false positives (extra reads),
-    * never to false negatives (missed rows). */
-  private def fileBlooms(spark: SparkSession, table: String,
-      files: Seq[String], bloomCols: Seq[String],
-      mapping: Option[Map[String, String]]): Seq[String] = {
-    if (bloomCols.isEmpty || files.isEmpty) return Seq.empty
-    graft.functions.GraftFunctions.register(spark)
-    val df = spark.read.parquet(files.map(f => s"$table/$f"): _*)
-    // staged files carry PHYSICAL names — translate like [[fileStats]];
-    // sidecar `col` entries are physical for the same reason
-    val phys = physOf(mapping) _
-    val cols = bloomCols.map(phys).filter(df.columns.contains)
-    if (cols.isEmpty) return Seq.empty
-    // zero-row staged write: Spark still emits a schema-only part file,
-    // so `files` is non-empty but the grouped count has no groups and
-    // max(count) is NULL — there is nothing to index, not an error
-    val maxRowsRow = df.groupBy(input_file_name().alias("_f")).count()
-      .agg(max("count")).head()
-    if (maxRowsRow.isNullAt(0)) return Seq.empty
-    val maxRows = maxRowsRow.getLong(0)
-    val est = math.min(math.max(maxRows, 64L), 4000000L)
-    val bits = math.min(est * 8L, 67108864L) // ~7.3 bits/key = 3% fpp
-    val aggs = cols.map(c => call_function("bloom_agg",
-      xxhash64(col(c)), lit(est), lit(bits)).alias(s"__bf_$c"))
-    val rows = df.groupBy(input_file_name().alias("_f"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    val relByKey = files.map(f => fileKey(f) -> f).toMap
-    val out = rows.flatMap { r =>
-      relByKey.get(fileKey(r.getString(0))).toSeq.flatMap { rel =>
-        cols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(i + 1)) None
-          else Some((rel, c, r.getAs[Array[Byte]](i + 1)))
-        }
-      }
-    }.toSeq
-    if (out.isEmpty) return Seq.empty
-    val sub = s"bl-${UUID.randomUUID().toString.take(8)}"
-    import spark.implicits._
-    out.toDF("file", "col", "bloom").coalesce(1)
-      .write.parquet(s"$table/$sub")
-    listDir(Paths.get(table, sub))
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .sorted
-      .map(n => s"$sub/$n")
-  }
-
   /** The active bloom sidecars as of `asOf`, read as one plain frame
-    * (file, col, bloom BINARY), or None when there are none. One-shot
-    * lookups probe this frame; a keyed write attempt probes its
-    * [[BloomIndex]]'s persisted copy instead. */
+    * (file, col, bloom BINARY), or None when there are none. Every
+    * sidecar is written by [[fileMeta]] with that one schema, so it is
+    * given, not inferred. One-shot lookups probe this frame; a keyed
+    * write attempt probes its [[BloomIndex]]'s persisted copy instead. */
   private def sidecarFrame(spark: SparkSession, table: String,
       asOf: Option[Long]): Option[DataFrame] = {
     val bls = activeBlooms(table, asOf)
-    Option.when(bls.nonEmpty)(spark.read.parquet(bls.map(resolve(table, _)): _*))
+    Option.when(bls.nonEmpty)(spark.read
+      .schema("file STRING, col STRING, bloom BINARY")
+      .parquet(bls.map(resolve(table, _)): _*))
   }
 
   /** Columns any active bloom sidecar indexes — how rewrites (merge,
     * OPTIMIZE) know which filters to rebuild for their output files
-    * without a table-properties store. One metadata-sized distinct. */
+    * without a table-properties store. The `col` column is one row per
+    * (file, column) pair, metadata-sized, so it de-duplicates after the
+    * collect rather than through a shuffled distinct. */
   private def activeBloomCols(spark: SparkSession, table: String,
       asOf: Option[Long]): Seq[String] =
     sidecarFrame(spark, table, asOf).fold(Seq.empty[String])(
-      _.select("col").distinct().collect().map(_.getString(0)).toSeq)
+      _.select("col").collect().map(_.getString(0)).toSeq.distinct)
 
   /** One-pass view of the active bloom sidecar set as of a single write
     * attempt's `base`. merge/applyChanges need THREE derived answers per
@@ -2967,17 +2945,25 @@ object TxLog {
   /** The write half every data-adding verb shares: [[writeData]] under
     * `mapping` (the one the commit publishes with — the committed
     * mapping, or a writer's extended or replacement one), then the
-    * skipping metadata for the staged files ([[stageMeta]]). */
+    * skipping metadata for the staged files ([[stageMeta]]), read with
+    * the schema the write used: `df`'s under physical names, less the
+    * partition columns [[writeData]] moves into the paths. */
   private def stage(df: DataFrame, table: String,
       mapping: Option[Map[String, String]],
       statsCols: Seq[String] = Seq.empty, bloomCols: Seq[String] = Seq.empty,
-      blooms: Option[BloomIndex] = None): Staged =
+      blooms: Option[BloomIndex] = None): Staged = {
+    val phys = physOf(mapping) _
+    val partCols = declaredPartitionCols(table).map(phys).toSet
+    val fileSchema = org.apache.spark.sql.types.StructType(df.schema.fields
+      .toSeq.map(f => f.copy(name = phys(f.name), nullable = true))
+      .filterNot(f => partCols(f.name)))
     stageMeta(df.sparkSession, table, writeData(df, table, mapping),
-      df.columns.toSeq, mapping, statsCols, bloomCols, blooms)
+      fileSchema, mapping, statsCols, bloomCols, blooms)
+  }
 
-  /** Per-file stats ([[fileStats]]) and bloom sidecars ([[fileBlooms]])
-    * for `add`, files already in the table directory whose LOGICAL
-    * columns are `columns`. The one column rule: the caller's
+  /** Per-file stats and bloom sidecars ([[fileMeta]]) for `add`, files
+    * already in the table directory that hold `schema` (PHYSICAL names,
+    * partition columns excluded). The one column rule: the caller's
     * `statsCols`/`bloomCols`, plus the table's declared
     * `graft.stats.columns` and `graft.cluster.columns` (stats) and
     * `graft.bloom.columns` (blooms), plus every column an active sidecar
@@ -2989,22 +2975,23 @@ object TxLog {
     * columns record stats implicitly: clustering exists to make their
     * per-file ranges tight. Declared and sidecar names may be recorded in
     * either era's namespace, so they normalize physical→logical under
-    * `mapping` (fileStats/fileBlooms map back); a name in neither drops
-    * at the column filter, the safe direction. */
+    * `mapping` and map back for [[fileMeta]]; a name in neither, or a
+    * partition column (its value rides the path and prunes exactly),
+    * drops at the column filter, the safe direction. */
   private def stageMeta(spark: SparkSession, table: String,
-      add: Seq[String], columns: Seq[String],
+      add: Seq[String], schema: org.apache.spark.sql.types.StructType,
       mapping: Option[Map[String, String]], statsCols: Seq[String],
       bloomCols: Seq[String], blooms: Option[BloomIndex]): Staged = {
     val inv = logicalsOf(mapping)
+    val columns = schema.fieldNames.toSeq.map(c => inv.getOrElse(c, c))
     def rule(own: Seq[String], derived: Seq[String]): Seq[String] =
       (own ++ derived.map(c => inv.getOrElse(c, c)))
-        .distinct.filter(columns.contains)
+        .distinct.filter(columns.contains).map(physOf(mapping))
     val stCols = rule(statsCols, declaredCols(table, "graft.stats.columns") ++
       declaredCols(table, "graft.cluster.columns"))
     val blCols = rule(bloomCols, declaredCols(table, "graft.bloom.columns") ++
       blooms.fold(activeBloomCols(spark, table, None))(_.cols))
-    val (nst, sst) = fileStats(spark, table, add, stCols, mapping)
-    Staged(add, nst, sst, fileBlooms(spark, table, add, blCols, mapping))
+    fileMeta(spark, table, add, schema, stCols, blCols)
   }
 
   /** The one tail every commit that adds or retires data files ends in:
@@ -5574,8 +5561,13 @@ object TxLog {
       Files.createLink(target, p)
       s"$sub/$rel"
     }.sorted
-    val staged = stageMeta(spark, dir, entries, schema.fieldNames.toSeq,
-      None, statsCols, Seq.empty, None)
+    // the links keep their Hive `col=value` subpaths: those columns ride
+    // the paths, not the files
+    val pathCols = entries.flatMap(partValuesOf(_).map(_._1)).toSet
+    val fileSchema = org.apache.spark.sql.types.StructType(
+      schema.fields.toSeq.filterNot(f => pathCols(f.name)))
+    val staged = stageMeta(spark, dir, entries, fileSchema, None, statsCols,
+      Seq.empty, None)
     optimistic(dir, "convertParquet") { base =>
       swap(spark, dir, base, Seq.empty, Seq.empty, staged, "convert",
         Some(schema.toDDL))
@@ -6133,7 +6125,11 @@ object TxLog {
       targetBytes: Option[Long], clusterBy: Seq[org.apache.spark.sql.Column])
 
   /** Output arrangement for an OPTIMIZE rewrite: plain bin-packing
-    * (`coalesce`, no shuffle) when no clustering is requested; with
+    * when no clustering is requested — `coalesce` (no shuffle) when the
+    * read has at least `nOut` partitions, else a round-robin
+    * `repartition`, since `coalesce` cannot split the read's partitions
+    * (small files packed into few read splits would otherwise write
+    * fewer, oversized files); with
     * `clusterBy` keys (a column, or a space-filling-curve key like
     * [[graft.functions.ZOrder.interleave2]]), a range repartition +
     * in-partition sort so every output file covers a tight min/max range
@@ -6143,9 +6139,28 @@ object TxLog {
     * shuffle/sort only and never appear in the output schema. */
   private def arrange(cur: DataFrame, nOut: Int,
       clusterBy: Seq[org.apache.spark.sql.Column]): DataFrame =
-    if (clusterBy.isEmpty) cur.coalesce(nOut)
-    else cur.repartitionByRange(nOut, clusterBy: _*)
+    if (clusterBy.isEmpty) {
+      if (nOut > scanPartitions(cur)) cur.repartition(nOut)
+      else cur.coalesce(nOut)
+    } else cur.repartitionByRange(nOut, clusterBy: _*)
       .sortWithinPartitions(clusterBy: _*)
+
+  /** The partitions `df`'s data scans split their files into, summed
+    * over a union, from the physical plan alone. `df.rdd` would count
+    * them by running the plan's broadcasts (a deletion-vector read's
+    * anti-join sides), whose scans are not the read's and are skipped. */
+  private def scanPartitions(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+        Nil
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        scans(a.inputPlan)
+      case f: FileSourceScanExec => Seq(f)
+      case _ => p.children.flatMap(scans)
+    }
+    scans(df.queryExecution.executedPlan).map(_.inputRDD.getNumPartitions).sum
+  }
 
   /** The one compaction engine behind every OPTIMIZE-style verb. Each
     * attempt asks `select(base, active)` for the files to rewrite (empty:

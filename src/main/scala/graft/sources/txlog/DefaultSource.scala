@@ -487,7 +487,7 @@ case class TxLogRelation(sqlContext: SQLContext, path: String,
 
   /** Per-column conjunctive bounds derivable from the pushed filters.
     * Numeric columns bound in their own domain; TIMESTAMP columns bound
-    * as epoch SECONDS (the exact double cast [[TxLog]]'s fileStats
+    * as epoch SECONDS (the exact double cast [[TxLog]]'s staging step
     * recorded), widened ±1 s so double rounding can never tighten a
     * bound past a real row; string columns bound lexicographically for
     * the sstats path. Strict inequalities widen to inclusive — pruning

@@ -102,4 +102,18 @@ class ZOrderSpec extends SparkSpec {
     Seq(packed, zordered).foreach(t =>
       assert(TxLog.readRanges(spark, t, box).count() === inBox))
   }
+
+  test("a bin-packing OPTIMIZE splits the read's partitions to reach targetBytes") {
+    val t = tmpDir("binpack_split") + "/t"
+    val rows = (0 until 4000).map(i => (i.toLong, s"v${i % 97}"))
+    TxLog.append(rows.toDF("k", "v").repartition(16), t)
+    assert(TxLog.activeFiles(t).size === 16)
+    // default openCostInBytes: the read packs the 16 small files into
+    // fewer partitions than the 16 outputs targetBytes asks for
+    val total = TxLog.fileSizes(t).values.sum
+    TxLog.optimize(spark, t, targetBytes = Some((total + 15) / 16))
+    assert(TxLog.activeFiles(t).size === 16)
+    assert(TxLog.read(spark, t).as[(Long, String)].collect().sorted.toSeq ===
+      rows.sorted)
+  }
 }
