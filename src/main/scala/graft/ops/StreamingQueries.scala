@@ -154,14 +154,10 @@ object StreamingQueries {
     val writes = batch.select("version").distinct().collect()
       .map(_.getLong(0)).sorted.toSeq.map { v =>
         Future {
-          val delta =
-            if (v == 1L) TxLog.read(s, table, Some(1L))
-              .withColumn("change_type", lit("insert"))
-            // commitChanges is O(files the commit touched), never
-            // O(snapshot); the full-diff changes() yields the same
-            // rows at per-version cost proportional to the table
-            else TxLog.commitChanges(s, table, v, Seq("c_custkey"))
-          delta.withColumn("version", lit(v))
+          // commitChanges is O(files the commit touched), never
+          // O(snapshot), and the first data commit reads as all-insert
+          TxLog.commitChanges(s, table, v, Seq("c_custkey"))
+            .withColumn("version", lit(v))
             .write.mode("overwrite").parquet(s"$out/v=$v")
         }
       }
@@ -548,7 +544,7 @@ object StreamingQueries {
     // Streaming change data feed: the commit LOG is the stream — a file
     // stream over `_txlog/*.json` delivers each commit exactly once
     // (checkpointed), and foreachBatch resolves every arriving version
-    // into its keyed diff vs the previous snapshot (TxLog.changes),
+    // into the keyed change rows of that commit (TxLog.commitChanges),
     // landing it in a version-keyed overwrite (idempotent under replay).
     // This is the readChangeFeed streaming shape: downstream consumers
     // tail O(delta) per version, never rescanning the table. The
@@ -621,11 +617,12 @@ object StreamingQueries {
     // CDF must surface DV commits: a deletion-vector DELETE changes the
     // snapshot without touching a data file, and a downstream incremental
     // consumer still has to see those row-level deletes as change rows.
-    // The commit-log stream + per-version keyed snapshot diff does
-    // exactly that — TxLog.changes reads each snapshot THROUGH the DV
-    // anti-join, so DV'd rows diff as deletes. The flip side is pinned
-    // too: the optimizeDvs rewrite between two versions changes files
-    // but not content, so its version must emit ZERO change rows.
+    // The commit-log stream + per-version TxLog.commitChanges does
+    // exactly that — a DV commit's referenced files are read on both
+    // sides, the post side THROUGH the new DV anti-join, so DV'd rows
+    // diff as deletes. The flip side is pinned too: the optimizeDvs
+    // rewrite changes files but not content, so its version must emit
+    // ZERO change rows.
     QueryDef("st27_stream_cdf_dv",
       "streaming CDF over DV commits: dvDelete versions emit row-level delete change rows; the optimizeDvs rewrite version emits none",
       s"""WITH s1 AS (SELECT * FROM read_parquet('$StageSql/stcdfdv_v1/*.parquet'))

@@ -1182,20 +1182,11 @@ object TxLog {
     // physical name for a given column). The scan plans under the
     // physical schema and renames back to logical immediately after —
     // one projection, collapsed by Catalyst into the scan's output.
-    val physSchema0 = (schema, mapping) match {
+    val physSchema = (schema, mapping) match {
       case (Some(s), Some(m)) => Some(org.apache.spark.sql.types.StructType(
         s.map(f => f.copy(name = m.getOrElse(f.name, f.name)))))
       case _ => schema
     }
-    // Row tracking: ask the scan for the hidden materialized-id column
-    // too (files without it — fresh writes — return NULL and fall back
-    // to base + row_index below)
-    val physSchema =
-      if (!needIds) physSchema0
-      else physSchema0.map(s => org.apache.spark.sql.types.StructType(
-        s.fields.filterNot(_.name == RowIdCol) :+
-          org.apache.spark.sql.types.StructField(RowIdCol,
-            org.apache.spark.sql.types.LongType, nullable = true)))
     def toLogical(df: DataFrame, extra: Seq[String]): DataFrame =
       (schema, mapping) match {
         case (Some(s), Some(m)) => df.select(
@@ -1206,114 +1197,92 @@ object TxLog {
       }
     val dvs = activeDvs(table, asOf)
     val partsByFile = files.map(f => f -> partValuesOf(f)).toMap
-    val keyed: DataFrame = if (partsByFile.valuesIterator.forall(_.isEmpty)) {
-      val paths = files.map(resolve(table, _))
-      val base = physSchema match {
-        case Some(s) => spark.read.schema(s).parquet(paths: _*)
+    // One scan per distinct partition-column SET: an unpartitioned file
+    // set (the empty one included) is the single group with none; a
+    // partitioned one is practically one group for the partitioned era
+    // plus one for any pre-partitioning files — never one per partition
+    // value.
+    val groups =
+      if (files.isEmpty) Seq(Seq.empty[String] -> files)
+      else files.groupBy(f => partsByFile(f).map(_._1))
+        .toSeq.sortBy(_._1.mkString(","))
+    // Partitioned data files are partition-stripped, so a group reads with
+    // the schema MINUS its partition columns. Row tracking asks the scan
+    // for the hidden materialized-id column too (files without it — fresh
+    // writes — return NULL and fall back to base + row_index below).
+    def scan(pcols: Seq[String], fs: Seq[String]): DataFrame = {
+      val paths = fs.map(resolve(table, _))
+      physSchema match {
+        case Some(s) =>
+          val dataFields = s.fields
+            .filterNot(f => pcols.contains(f.name) || f.name == RowIdCol)
+          spark.read.schema(org.apache.spark.sql.types.StructType(
+            if (needIds) dataFields :+
+              org.apache.spark.sql.types.StructField(RowIdCol,
+                org.apache.spark.sql.types.LongType, nullable = true)
+            else dataFields)).parquet(paths: _*)
         case None => spark.read.parquet(paths: _*)
       }
-      // `_metadata` resolves only on the scan relation itself, so the row
-      // keys must be materialized HERE — a caller cannot re-derive them
-      // after the anti-join projection. DV-free reads skip the key columns
-      // entirely: the common path stays a bare scan.
-      if (dvs.isEmpty && !keepRowKeys && !needIds)
-        return toLogical(base, Seq.empty)
-      val withKeys = base
+    }
+    // `_metadata` resolves only on the scan relation itself, so the row
+    // keys must be materialized on each scan — a caller cannot re-derive
+    // them after the anti-join projection. A DV-free read of unpartitioned
+    // files that needs no keys or ids skips them entirely: the common path
+    // stays a bare scan.
+    if (dvs.isEmpty && !keepRowKeys && !needIds && groups.forall(_._1.isEmpty))
+      return toLogical(scan(Seq.empty, files), Seq.empty)
+    val baseMap = if (needIds) baseRowIdsAsOf(table, asOf)
+      else Map.empty[String, Long]
+    val rowKeyCols = Seq("__dv_f", "__dv_ri") ++
+      (if (needIds) Seq(RowIdCol) else Nil)
+    val scans = groups.map { case (pcols, fs) =>
+      val withKeys = scan(pcols, fs)
         .withColumn("__dv_f", relFileKey)
         .withColumn("__dv_ri", col("_metadata.row_index"))
+      // partition columns reconstruct from the commit-recorded path
+      // values — a plan-constant fileKey→value map (metadata-plane-
+      // bounded, same class as the commit itself), element_at per row,
+      // cast to the logged type. Under column mapping they land under
+      // their PHYSICAL names (path segments carry the frozen physical
+      // name) and [[toLogical]] renames the union like any other column.
+      val withParts = pcols.foldLeft(withKeys) { (df, c) =>
+        val m = fs.flatMap { f =>
+          partsByFile(f).collectFirst { case (`c`, Some(v)) =>
+            fileKey(f) -> v }
+        }.toMap
+        // null-partition files are simply absent from the map
+        val raw: org.apache.spark.sql.Column =
+          if (m.isEmpty) lit(null).cast("string")
+          else element_at(typedlit(m), col("__dv_f"))
+        val typed = physSchema.flatMap(_.fields.find(_.name == c))
+          .map(f => raw.cast(f.dataType)).getOrElse(raw)
+        df.withColumn(c, typed)
+      }
+      // stable id = materialized (rewritten files) else base + row_index
+      // (fresh files); NULL when neither (pre-enable era)
       val withIds =
-        if (!needIds) withKeys
+        if (!needIds) withParts
         else {
-          // stable id = materialized (rewritten files) else base +
-          // row_index (fresh files); NULL when neither (pre-enable era)
-          val baseMap = baseRowIdsAsOf(table, asOf)
           val fromBase: org.apache.spark.sql.Column =
             if (baseMap.isEmpty) lit(null).cast("long")
             else element_at(typedlit(baseMap), col("__dv_f")) +
               col("__dv_ri")
           val id =
-            if (withKeys.columns.contains(RowIdCol))
+            if (withParts.columns.contains(RowIdCol))
               coalesce(col(RowIdCol), fromBase)
             else fromBase
-          withKeys.withColumn(RowIdCol, id)
+          withParts.withColumn(RowIdCol, id)
         }
-      toLogical(withIds,
-        Seq("__dv_f", "__dv_ri") ++ (if (needIds) Seq(RowIdCol) else Nil))
-    } else {
-      // Partitioned (or mixed-era) snapshot: data files are partition-
-      // stripped, so each scan group reads with the schema MINUS its
-      // partition columns and reconstructs them from the commit-recorded
-      // path values — a plan-constant fileKey→value map (metadata-plane-
-      // bounded, same class as the commit itself), element_at per row,
-      // cast to the logged type. One scan per distinct partition-column
-      // SET (practically: one for the partitioned era, one for any
-      // pre-partitioning files), not per partition value. Under column
-      // mapping the whole branch speaks PHYSICAL names — partition path
-      // segments carry the frozen physical name, so reconstruction lands
-      // physical columns and ONE [[toLogical]] projection at the end
-      // renames the union, exactly like the unpartitioned branch.
-      val groups = files.groupBy(f => partsByFile(f).map(_._1))
-        .toSeq.sortBy(_._1.mkString(","))
-      val baseMap = if (needIds) baseRowIdsAsOf(table, asOf)
-        else Map.empty[String, Long]
-      val scans = groups.map { case (pcols, fs) =>
-        val paths = fs.map(resolve(table, _))
-        val base = physSchema0 match {
-          case Some(s) =>
-            val dataFields = s.fields
-              .filterNot(f => pcols.contains(f.name) || f.name == RowIdCol)
-            val dataSchema = org.apache.spark.sql.types.StructType(
-              if (needIds) dataFields :+
-                org.apache.spark.sql.types.StructField(RowIdCol,
-                  org.apache.spark.sql.types.LongType, nullable = true)
-              else dataFields)
-            spark.read.schema(dataSchema).parquet(paths: _*)
-          case None => spark.read.parquet(paths: _*)
-        }
-        val withKeys = base
-          .withColumn("__dv_f", relFileKey)
-          .withColumn("__dv_ri", col("_metadata.row_index"))
-        val withParts = pcols.foldLeft(withKeys) { (df, c) =>
-          val m = fs.flatMap { f =>
-            partsByFile(f).collectFirst { case (`c`, Some(v)) =>
-              fileKey(f) -> v }
-          }.toMap
-          // null-partition files are simply absent from the map
-          val raw: org.apache.spark.sql.Column =
-            if (m.isEmpty) lit(null).cast("string")
-            else element_at(typedlit(m), col("__dv_f"))
-          val typed = physSchema0.flatMap(_.fields.find(_.name == c))
-            .map(f => raw.cast(f.dataType)).getOrElse(raw)
-          df.withColumn(c, typed)
-        }
-        // row tracking: same resolution as the unpartitioned branch —
-        // materialized id (rewritten files) else base + row_index
-        val withIds =
-          if (!needIds) withParts
-          else {
-            val fromBase: org.apache.spark.sql.Column =
-              if (baseMap.isEmpty) lit(null).cast("long")
-              else element_at(typedlit(baseMap), col("__dv_f")) +
-                col("__dv_ri")
-            val id =
-              if (withParts.columns.contains(RowIdCol))
-                coalesce(col(RowIdCol), fromBase)
-              else fromBase
-            withParts.withColumn(RowIdCol, id)
-          }
-        // restore the logged column order (the partitioned writer moved
-        // partition columns last); keys stay, dropped at the end as usual
-        physSchema0 match {
-          case Some(s) => withIds.select(
-            s.fieldNames.toSeq.filterNot(_ == RowIdCol).map(col) ++
-              Seq(col("__dv_f"), col("__dv_ri")) ++
-              (if (needIds) Seq(col(RowIdCol)) else Nil): _*)
-          case None => withIds
-        }
+      // restore the logged column order (the partitioned writer moved
+      // partition columns last); keys stay, dropped at the end as usual
+      physSchema match {
+        case Some(s) => withIds.select(
+          (s.fieldNames.toSeq.filterNot(_ == RowIdCol) ++ rowKeyCols)
+            .map(col): _*)
+        case None => withIds
       }
-      toLogical(scans.reduce(_ unionByName _),
-        Seq("__dv_f", "__dv_ri") ++ (if (needIds) Seq(RowIdCol) else Nil))
     }
+    val keyed = toLogical(scans.reduce(_ unionByName _), rowKeyCols)
     val filtered =
       if (dvs.isEmpty) keyed
       else {
@@ -1620,11 +1589,8 @@ object TxLog {
         // the table owner's latency/throughput trade). Guarded against
         // self-trigger (layout-only ops skip) and best-effort like the
         // checkpoint: a failed compaction never fails the commit.
-        // NOTE: the txlog streaming SINK predates this with its own
-        // option-driven cadence form (autoCompactEvery /
-        // autoCompactMinBytes, DefaultSource.scala) — prefer THIS table
-        // property for new tables (one policy, declared once, applies to
-        // every writer); the sink options remain for per-query control.
+        // This is the ONE compaction policy: declared once, it applies to
+        // every writer, the txlog streaming sink included.
         // AUTO-MANIFEST (Delta's delta.compatibility.symlinkFormatManifest
         // .enabled): regenerate the symlink manifests after any commit
         // that changes the active file set, so external readers never
@@ -4405,75 +4371,10 @@ object TxLog {
     * by the two snapshots. Null-safe (`<=>`) column compares, so NULL→
     * value and value→NULL both classify as updates. Requires `keyCols`
     * to be unique per snapshot (the [[merge]] invariant). */
-  /** Shared classification tail of [[changes]]/[[commitChanges]]: the
-    * keyed full-outer diff of two aligned `_pre`/`_post` frames.
-    * `preImages = false` emits insert / delete / update (the update row
-    * is the NEW image); `preImages = true` splits each update into
-    * `update_preimage` + `update_postimage` rows (Delta CDF's
-    * readChangeFeed shape — a consumer reconstructing reversible deltas
-    * or auditing old values needs the pre-image). Unchanged keys emit
-    * nothing either way. One pass: the changed rows explode into their
-    * 1–2 image tags, no second join branch. */
-  private def keyedDiff(pre: DataFrame, post: DataFrame,
-      keyCols: Seq[String], dataCols: Seq[String],
-      preImages: Boolean): DataFrame = {
-    val keyEq = keyCols.map(k => col(s"_pre.$k") <=> col(s"_post.$k"))
-      .reduce(_ && _)
-    val sameData = dataCols.map(c => col(s"_pre.$c") <=> col(s"_post.$c"))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val preKey = col(s"_pre.${keyCols.head}")
-    val postKey = col(s"_post.${keyCols.head}")
-    val kind = when(preKey.isNull, lit("insert"))
-      .when(postKey.isNull, lit("delete"))
-      .when(!sameData, lit("update"))
-    // each image tag says which side's values it projects (p = pre side)
-    val oneImg = array(struct(col("_kind").alias("t"),
-      (col("_kind") === "delete").alias("p")))
-    val imgs =
-      if (!preImages) oneImg
-      else when(col("_kind") === "update",
-        array(
-          struct(lit("update_preimage").alias("t"), lit(true).alias("p")),
-          struct(lit("update_postimage").alias("t"), lit(false).alias("p"))))
-        .otherwise(oneImg)
-    pre.join(post, keyEq, "full_outer")
-      .withColumn("_kind", kind).filter(col("_kind").isNotNull)
-      .withColumn("_img", explode(imgs))
-      .select(
-        keyCols.map(k =>
-          coalesce(col(s"_post.$k"), col(s"_pre.$k")).alias(k)) ++
-          dataCols.map(c => when(col("_img.p"), col(s"_pre.$c"))
-            .otherwise(col(s"_post.$c")).alias(c)) :+
-          col("_img.t").alias("change_type"): _*)
-  }
-
   def changes(spark: SparkSession, table: String, keyCols: Seq[String],
-      fromV: Long, toV: Long, preImages: Boolean = false): DataFrame = {
-    // Bootstrap: version 0 is "before the table existed" — everything in
-    // toV is an insert. This is how a NEW incremental consumer starts
-    // (changesSince(lastSeen = 0)) without a special first-poll code path.
-    if (fromV <= 0L) {
-      val snap = read(spark, table, Some(toV))
-      val dataCols = snap.columns.filterNot(keyCols.contains).toSeq
-      return snap.select(
-        (keyCols ++ dataCols).map(col) :+ lit("insert").alias("change_type"): _*)
-    }
-    val preRaw = read(spark, table, Some(fromV))
-    val postRaw = read(spark, table, Some(toV))
-    // Align both snapshots to the union schema (missing columns read as
-    // typed NULLs) so a mergeSchema evolution between fromV and toV diffs
-    // as updates instead of failing to resolve `_pre.<newcol>`.
-    val unionFields = postRaw.schema.fields ++
-      preRaw.schema.fields.filterNot(f => postRaw.columns.contains(f.name))
-    def align(df: DataFrame): DataFrame = df.select(unionFields.toSeq.map { f =>
-      if (df.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).alias(f.name)
-    }: _*)
-    val pre = align(preRaw).alias("_pre")
-    val post = align(postRaw).alias("_post")
-    val dataCols = unionFields.map(_.name).filterNot(keyCols.contains).toSeq
-    keyedDiff(pre, post, keyCols, dataCols, preImages)
-  }
+      fromV: Long, toV: Long, preImages: Boolean = false): DataFrame =
+    snapshotDiff(v => read(spark, table, Some(v)), keyCols, fromV, toV,
+      preImages)
 
   /** [[changes]] with the stable `_row_id` riding every change row
     * (row tracking must be enabled): updates carry the row's UNCHANGED
@@ -4493,30 +4394,80 @@ object TxLog {
     // _row_version stays OUT of the diff: a rewrite bumps it for
     // co-located rows whose values never changed, which would read as
     // spurious updates here
-    if (fromV <= 0L) {
-      val snap = readWithRowIds(spark, table, Some(toV))
-        .drop("_row_version")
-      val dataCols = snap.columns.filterNot(keyCols.contains).toSeq
-      return snap.select(
-        (keyCols ++ dataCols).map(col) :+ lit("insert").alias("change_type"): _*)
-    }
-    val preRaw = readWithRowIds(spark, table, Some(fromV))
-      .drop("_row_version")
-    val postRaw = readWithRowIds(spark, table, Some(toV))
-      .drop("_row_version")
-    // same union-schema alignment as [[changes]]: a mergeSchema
-    // evolution between the versions diffs as updates, not a resolution
-    // failure
+    snapshotDiff(
+      v => readWithRowIds(spark, table, Some(v)).drop("_row_version"),
+      keyCols, fromV, toV, preImages)
+  }
+
+  /** The windowed snapshot diff behind [[changes]] and
+    * [[changesWithRowIds]]: `snapshot(v)` reads the table as of `v`.
+    * Bootstrap: version 0 is "before the table existed" — everything in
+    * `toV` is an insert. This is how a NEW incremental consumer starts
+    * (changesSince(lastSeen = 0)) without a special first-poll code path.
+    * A window nets its commits: a row inserted and deleted inside it
+    * emits nothing, unlike the per-commit [[commitChanges]]. */
+  private def snapshotDiff(snapshot: Long => DataFrame, keyCols: Seq[String],
+      fromV: Long, toV: Long, preImages: Boolean): DataFrame =
+    if (fromV <= 0L) allInserts(snapshot(toV), keyCols)
+    else imageDiff(snapshot(fromV), snapshot(toV), keyCols, preImages)
+
+  /** Every row of `df` as an `insert` change row, key columns first. */
+  private def allInserts(df: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val dataCols = df.columns.filterNot(keyCols.contains).toSeq
+    df.select((keyCols ++ dataCols).map(col) :+
+      lit("insert").alias("change_type"): _*)
+  }
+
+  /** The keyed diff of a pre-image and a post-image, shared by every
+    * keyed change reader. Both align to the union schema (missing columns
+    * read as typed NULLs), so a mergeSchema evolution between the two —
+    * or inside the very commit being read — diffs as updates instead of
+    * failing to resolve `_pre.<newcol>`. `preImages = false` emits
+    * insert / delete / update (the update row is the NEW image);
+    * `preImages = true` splits each update into `update_preimage` +
+    * `update_postimage` rows (Delta CDF's readChangeFeed shape — a
+    * consumer reconstructing reversible deltas or auditing old values
+    * needs the pre-image). Unchanged keys emit nothing either way. One
+    * pass: the changed rows explode into their 1–2 image tags, no second
+    * join branch. */
+  private def imageDiff(preRaw: DataFrame, postRaw: DataFrame,
+      keyCols: Seq[String], preImages: Boolean): DataFrame = {
     val unionFields = postRaw.schema.fields ++
       preRaw.schema.fields.filterNot(f => postRaw.columns.contains(f.name))
     def align(df: DataFrame): DataFrame = df.select(unionFields.toSeq.map { f =>
       if (df.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).alias(f.name)
     }: _*)
-    val pre = align(preRaw).alias("_pre")
-    val post = align(postRaw).alias("_post")
     val dataCols = unionFields.map(_.name).filterNot(keyCols.contains).toSeq
-    keyedDiff(pre, post, keyCols, dataCols, preImages)
+    val keyEq = keyCols.map(k => col(s"_pre.$k") <=> col(s"_post.$k"))
+      .reduce(_ && _)
+    val sameData = dataCols.map(c => col(s"_pre.$c") <=> col(s"_post.$c"))
+      .reduceOption(_ && _).getOrElse(lit(true))
+    val preKey = col(s"_pre.${keyCols.head}")
+    val postKey = col(s"_post.${keyCols.head}")
+    val kind = when(preKey.isNull, lit("insert"))
+      .when(postKey.isNull, lit("delete"))
+      .when(!sameData, lit("update"))
+    // each image tag says which side's values it projects (p = pre side)
+    val oneImg = array(struct(col("_kind").alias("t"),
+      (col("_kind") === "delete").alias("p")))
+    val imgs =
+      if (!preImages) oneImg
+      else when(col("_kind") === "update",
+        array(
+          struct(lit("update_preimage").alias("t"), lit(true).alias("p")),
+          struct(lit("update_postimage").alias("t"), lit(false).alias("p"))))
+        .otherwise(oneImg)
+    align(preRaw).alias("_pre")
+      .join(align(postRaw).alias("_post"), keyEq, "full_outer")
+      .withColumn("_kind", kind).filter(col("_kind").isNotNull)
+      .withColumn("_img", explode(imgs))
+      .select(
+        keyCols.map(k =>
+          coalesce(col(s"_post.$k"), col(s"_pre.$k")).alias(k)) ++
+          dataCols.map(c => when(col("_img.p"), col(s"_pre.$c"))
+            .otherwise(col(s"_post.$c")).alias(c)) :+
+          col("_img.t").alias("change_type"): _*)
   }
 
   /** The change-feed row schema for `table` as of a version: key columns
@@ -4533,70 +4484,61 @@ object TxLog {
           org.apache.spark.sql.types.StringType))
   }
 
-  /** Keyed change rows produced by ONE commit — O(files the commit
-    * touched), never O(snapshot), which is what makes a streaming
-    * change-feed consumer viable on a 100 TB table. Pre-state = the
-    * files the commit removed plus the data files its new deletion
-    * vectors reference, read as of version−1; post-state = the files it
-    * added plus those same DV'd files, read as of `version` (under the
-    * new DVs). A row in an untouched file is byte-identical in both
-    * states and can never produce a change row, so restricting the diff
-    * to touched files is exact, not an approximation. Classification
-    * matches [[changes]]: insert / delete / update (emitting the new
-    * row), unchanged keys emit nothing. The table's first data commit —
-    * and a [[cloneTable]] bootstrap — is all-insert with no diff. */
+  /** How ONE commit changed rows, as the file sets whose rows form its
+    * images. Pre-image = the files the commit removed plus the data files
+    * its new deletion vectors reference, read as of version−1;
+    * post-image = the files it added plus those same DV'd files, read as
+    * of the commit's version (under the new DVs). A row in an untouched
+    * file is byte-identical in both states and can never produce a
+    * change, so restricting to touched files is exact, not an
+    * approximation, and costs O(files the commit touched), never
+    * O(snapshot). A commit with no file change or a layout-only op
+    * (optimize / optimizeDvs / reorg: same logical rows, different
+    * files) is silent: both sets empty. The table's first data commit, a
+    * [[cloneTable]] bootstrap and an append are `allInsert`: their adds
+    * are the post-image and nothing is diffed. */
+  private case class CommitImages(pre: Seq[String], post: Seq[String],
+      allInsert: Boolean)
+
+  private def commitImages(spark: SparkSession, table: String, c: Commit,
+      all: Seq[Commit]): CommitImages =
+    if ((c.add.isEmpty && c.remove.isEmpty && c.dvAdd.isEmpty) ||
+        LayoutOnlyOps(c.op)) CommitImages(Nil, Nil, allInsert = false)
+    else {
+      val bootstrap = c.op == "clone" || c.op == "append" ||
+        !all.exists(p => p.version < c.version &&
+          (p.add.nonEmpty || p.dvAdd.nonEmpty))
+      if (bootstrap) CommitImages(Nil, c.add, allInsert = true)
+      else {
+        // data files referenced by the commit's new deletion vectors:
+        // their rows changed (some died) without the file moving
+        val dvRefFiles = dvReferencedFiles(spark, table, c)
+        CommitImages((c.remove ++ dvRefFiles).distinct,
+          (c.add ++ dvRefFiles).distinct, allInsert = false)
+      }
+    }
+
+  /** Keyed change rows produced by ONE commit, from its
+    * [[commitImages]]. Classification matches [[changes]]: insert /
+    * delete / update (emitting the new row), unchanged keys emit
+    * nothing; an all-insert commit emits its added rows with no diff. */
   def commitChanges(spark: SparkSession, table: String, version: Long,
       keyCols: Seq[String], preImages: Boolean = false): DataFrame = {
-    val c = commits(table).find(_.version == version).getOrElse(
+    val all = commits(table)
+    val c = all.find(_.version == version).getOrElse(
       throw new IllegalArgumentException(
         s"txlog table $table has no commit at version $version"))
     def empty(): DataFrame = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       cdfSchema(table, keyCols, Some(version)))
-    def ordered(df: DataFrame, tag: org.apache.spark.sql.Column): DataFrame = {
-      val dataCols = df.columns.filterNot(keyCols.contains).toSeq
-      df.select((keyCols ++ dataCols).map(col) :+
-        tag.alias("change_type"): _*)
-    }
-    if (c.add.isEmpty && c.remove.isEmpty && c.dvAdd.isEmpty) return empty()
-    c.op match {
-      case op if LayoutOnlyOps(op) =>
-        empty() // layout only: no logical row changed
-      case _ =>
-        val bootstrap = c.op == "clone" ||
-          !commits(table).exists(p => p.version < version &&
-            (p.add.nonEmpty || p.dvAdd.nonEmpty))
-        if (bootstrap)
-          return ordered(readFiles(spark, table, c.add, Some(version)),
-            lit("insert"))
-        if (c.op == "append")
-          return ordered(readFiles(spark, table, c.add, Some(version)),
-            lit("insert"))
-        // data files referenced by the commit's new deletion vectors:
-        // their rows changed (some died) without the file moving
-        val dvRefFiles = dvReferencedFiles(spark, table, c)
-        val preFiles = (c.remove ++ dvRefFiles).distinct
-        val postFiles = (c.add ++ dvRefFiles).distinct
-        val preRaw =
-          if (preFiles.isEmpty) empty().drop("change_type")
-          else readFiles(spark, table, preFiles, Some(version - 1))
-        val postRaw =
-          if (postFiles.isEmpty) empty().drop("change_type")
-          else readFiles(spark, table, postFiles, Some(version))
-        // align both states to the union schema (a mergeSchema evolution
-        // lands in this very commit) — same move as [[changes]]
-        val unionFields = postRaw.schema.fields ++
-          preRaw.schema.fields.filterNot(f => postRaw.columns.contains(f.name))
-        def align(df: DataFrame): DataFrame =
-          df.select(unionFields.toSeq.map { f =>
-            if (df.columns.contains(f.name)) col(f.name)
-            else lit(null).cast(f.dataType).alias(f.name)
-          }: _*)
-        val pre = align(preRaw).alias("_pre")
-        val post = align(postRaw).alias("_post")
-        val dataCols = unionFields.map(_.name).filterNot(keyCols.contains).toSeq
-        keyedDiff(pre, post, keyCols, dataCols, preImages)
-    }
+    def side(files: Seq[String], v: Long): DataFrame =
+      if (files.isEmpty) empty().drop("change_type")
+      else readFiles(spark, table, files, Some(v))
+    val img = commitImages(spark, table, c, all)
+    if (img.pre.isEmpty && img.post.isEmpty) empty()
+    else if (img.allInsert) allInserts(side(img.post, version), keyCols)
+    else imageDiff(side(img.pre, version - 1), side(img.post, version),
+      keyCols, preImages)
   }
 
   /** Data files a commit's NEW deletion vectors reference: their rows
@@ -4615,15 +4557,11 @@ object TxLog {
     * view-maintenance feed ([[Mview]]): every table column plus `_sign`
     * (+1 / −1), such that for ANY linear aggregate
     * `agg(toV) = agg(fromV) ⊕ Σ(_sign · row)`. No key columns, no join:
-    * per commit, rows of (added files ∪ DV'd files) read at `v` carry
-    * +1 and rows of (removed files ∪ DV'd files) read at `v−1` carry −1.
-    * A row co-located in a rewritten file but logically unchanged
-    * appears once with each sign and CANCELS in any multiset consumer —
-    * restricting to touched files is exact, and cost is O(files the
-    * window's commits touched), never O(snapshot). Layout-only commits
-    * (optimize / optimizeDvs / reorg: same logical rows, different
-    * files) are skipped outright rather than emitting self-cancelling
-    * pairs.
+    * per commit ([[commitImages]]), post-image rows read at `v` carry +1
+    * and pre-image rows read at `v−1` carry −1. A row co-located in a
+    * rewritten file but logically unchanged appears once with each sign
+    * and CANCELS in any multiset consumer; silent commits emit nothing
+    * rather than self-cancelling pairs.
     *
     * All frames align to the schema AS OF `toV` (missing columns read
     * as typed NULLs, dropped columns drop, widened columns up-cast).
@@ -4638,35 +4576,22 @@ object TxLog {
     val schema = schemaAsOf(table, Some(toV)).getOrElse(
       throw new IllegalArgumentException(
         s"txlog table $table has no schema-carrying commit at $toV"))
-    def aligned(df: DataFrame, sign: Int): DataFrame =
-      df.select(schema.fields.toSeq.map { f =>
-        if (df.columns.contains(f.name))
-          col(f.name).cast(f.dataType).alias(f.name)
-        else lit(null).cast(f.dataType).alias(f.name)
-      } :+ lit(sign).alias("_sign"): _*)
-    val all = commits(table)
-    val window = all.filter(c => c.version > fromV && c.version <= toV)
-    val parts = window.flatMap { c =>
-      if (c.add.isEmpty && c.remove.isEmpty && c.dvAdd.isEmpty) Nil
-      else c.op match {
-        case op if LayoutOnlyOps(op) => Nil
-        case _ =>
-          val bootstrap = c.op == "clone" ||
-            !all.exists(p => p.version < c.version &&
-              (p.add.nonEmpty || p.dvAdd.nonEmpty))
-          if (bootstrap || c.op == "append")
-            Seq(aligned(readFiles(spark, table, c.add, Some(c.version)), 1))
-          else {
-            val dvRefFiles = dvReferencedFiles(spark, table, c)
-            val preFiles = (c.remove ++ dvRefFiles).distinct
-            val postFiles = (c.add ++ dvRefFiles).distinct
-            (if (postFiles.isEmpty) Nil else Seq(aligned(
-              readFiles(spark, table, postFiles, Some(c.version)), 1))) ++
-            (if (preFiles.isEmpty) Nil else Seq(aligned(
-              readFiles(spark, table, preFiles, Some(c.version - 1)), -1)))
-          }
+    def aligned(files: Seq[String], v: Long, sign: Int): Seq[DataFrame] =
+      if (files.isEmpty) Nil
+      else {
+        val df = readFiles(spark, table, files, Some(v))
+        Seq(df.select(schema.fields.toSeq.map { f =>
+          if (df.columns.contains(f.name))
+            col(f.name).cast(f.dataType).alias(f.name)
+          else lit(null).cast(f.dataType).alias(f.name)
+        } :+ lit(sign).alias("_sign"): _*))
       }
-    }
+    val all = commits(table)
+    val parts = all.filter(c => c.version > fromV && c.version <= toV)
+      .flatMap { c =>
+        val img = commitImages(spark, table, c, all)
+        aligned(img.post, c.version, 1) ++ aligned(img.pre, c.version - 1, -1)
+      }
     parts.reduceOption(_ union _).getOrElse {
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),

@@ -92,26 +92,16 @@ class DefaultSource extends RelationProvider with SchemaRelationProvider
     // would silently skip a different query's batches (they also count
     // from 0). Recorded in each commit; see TxLog.batchCommitted.
     val streamId = parameters.get("checkpointlocation")
-    // Small-file controls for a PARTITIONED streaming sink (the classic
-    // spiral: one file per partition per trigger, unbounded).
-    //   - binpack (default true): shuffle each micro-batch by the
-    //     declared partition columns before the write, so a trigger
-    //     lands ONE file per touched partition instead of one per input
-    //     task per partition. Micro-batches are small by construction —
-    //     the single-task-per-partition write is the right shape here
-    //     (a 100 TB BATCH load wants the opposite, which is why the
-    //     batch paths don't do this).
-    //   - autoCompactEvery=N (default 0 = off): after every Nth batch,
-    //     fold sub-threshold files back together with
-    //     [[TxLog.optimizeSmall]] (autoCompactMinBytes, default 8 MiB) —
-    //     Delta's auto-compaction cadence. Optimize commits deliver
-    //     nothing to downstream streaming readers (dataChange=false
-    //     analog), so compaction never disturbs a tailing stream.
-    val binpack = parameters.get("binpack").forall(_.toBoolean)
-    val autoCompactEvery = parameters.get("autocompactevery")
-      .map(_.toInt).getOrElse(0)
-    val autoCompactMinBytes = parameters.get("autocompactminbytes")
-      .map(_.toLong).getOrElse(8L * 1024 * 1024)
+    // Small-file control is the table's `graft.autoCompact.*` policy,
+    // declared once and applied to every writer, this sink included; the
+    // sink's former per-query options are refused rather than ignored.
+    val retired = Seq("binpack", "autoCompactEvery", "autoCompactMinBytes")
+      .filter(parameters.contains)
+    require(retired.isEmpty,
+      s"txlog sink option(s) ${retired.mkString(", ")} are no longer " +
+        "supported: set the table properties graft.autoCompact.enabled, " +
+        "graft.autoCompact.minFileSize, graft.autoCompact.minFiles and " +
+        "graft.autoCompact.targetSize instead")
     new Sink {
       override def name(): String = s"TxLogSink[$path]"
       override def addBatch(batchId: Long, data: DataFrame): Unit = {
@@ -121,13 +111,17 @@ class DefaultSource extends RelationProvider with SchemaRelationProvider
         // addBatch's frame is streaming-flagged; batch writers refuse it
         val raw = org.apache.spark.sql.execution.streaming
           .GraftSourceShim.asBatch(data)
+        // a micro-batch is small by construction: shuffle it by the
+        // declared partition columns so a trigger lands ONE file per
+        // touched partition, not one per input task per partition (a
+        // 100 TB BATCH load wants the opposite, which is why the batch
+        // paths don't do this)
         val sinkPartCols = TxLog.declaredPartitionCols(path)
           .filter(raw.columns.contains)
         val batch =
-          if (binpack && sinkPartCols.nonEmpty)
-            raw.repartition(sinkPartCols.map(
-              org.apache.spark.sql.functions.col): _*)
-          else raw
+          if (sinkPartCols.isEmpty) raw
+          else raw.repartition(sinkPartCols.map(
+            org.apache.spark.sql.functions.col): _*)
         if (update && dynPartOverwrite)
           TxLog.overwritePartitions(batch, path, statsCols, batchId, streamId)
         else if (update) versionCol match {
@@ -144,14 +138,6 @@ class DefaultSource extends RelationProvider with SchemaRelationProvider
           TxLog.overwrite(batch, path, statsCols, mergeSchema, batchId, streamId)
         else
           TxLog.append(batch, path, statsCols, mergeSchema, batchId, streamId)
-        // auto-compaction cadence: bounded files-per-partition however
-        // long the stream runs. A no-op (None) when fewer than 2 files
-        // are under the threshold; the optimize commit is invisible to
-        // streaming readers.
-        if (autoCompactEvery > 0 && batchId > 0 &&
-            batchId % autoCompactEvery == 0)
-          TxLog.optimizeSmall(batch.sparkSession, path, autoCompactMinBytes,
-            targetBytes = Some(128L * 1024 * 1024))
       }
       override def toString: String = name()
     }

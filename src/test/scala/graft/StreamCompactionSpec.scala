@@ -8,16 +8,17 @@ import graft.ops.TxLog
 
 /** Small-file control for PARTITIONED streaming txlog sinks (VERDICT r13
   * item 3 — the 100 TB spiral: one file per partition per trigger,
-  * forever). Pins the write distribution (`binpack`: one file per
-  * touched partition per micro-batch, however the input is partitioned)
-  * and the `autoCompactEvery` cadence (files-per-partition bounded over
-  * N triggers; optimize commits invisible to streaming readers). */
+  * forever). Pins the write distribution (one file per touched partition
+  * per micro-batch, however the input is partitioned) and the table's
+  * `graft.autoCompact.*` policy applied to the sink's commits
+  * (files-per-partition bounded over many triggers; optimize commits
+  * invisible to streaming readers). */
 class StreamCompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def mkTable(): String = {
+  private def mkTable(props: Map[String, String] = Map.empty): String = {
     val t = tmpDir("stream_compact") + "/t"
-    TxLog.setProperties(t, Map("graft.partition.columns" -> "p"))
+    TxLog.setProperties(t, Map("graft.partition.columns" -> "p") ++ props)
     t
   }
 
@@ -48,32 +49,19 @@ class StreamCompactionSpec extends SparkSpec {
     assert(TxLog.read(spark, t).count() === 9)
   }
 
-  test("binpack=false keeps the input task shape (the spiral this fixes)") {
+  test("graft.autoCompact.* bounds files-per-partition across triggers") {
     implicit val sqlCtx = spark.sqlContext
-    val t = mkTable()
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("k", "p")
-      .repartition(4)
-      .writeStream.format("graft.sources.txlog")
-      .option("checkpointLocation", tmpDir("stream_compact_cp"))
-      .option("path", t).option("binpack", "false")
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData((1L, "a"), (2L, "a"), (3L, "a"), (4L, "a"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(filesPerPartition(t)("p=a") > 1,
-      "without binpack, one batch writes one file per input task")
-  }
-
-  test("autoCompactEvery bounds files-per-partition across triggers") {
-    implicit val sqlCtx = spark.sqlContext
-    val t = mkTable()
+    // every trigger lands one small file in each of 2 partitions, so the
+    // policy folds the small files on every second trigger
+    val t = mkTable(Map(
+      "graft.autoCompact.enabled" -> "true",
+      "graft.autoCompact.minFileSize" -> (1024L * 1024).toString,
+      "graft.autoCompact.minFiles" -> "4"))
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("k", "p")
       .writeStream.format("graft.sources.txlog")
       .option("checkpointLocation", tmpDir("stream_compact_cp"))
-      .option("path", t).option("autoCompactEvery", "2")
+      .option("path", t)
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       (1 to 6).foreach { b =>
@@ -81,13 +69,13 @@ class StreamCompactionSpec extends SparkSpec {
         q.processAllAvailable()
       }
     } finally q.stop()
-    // 6 triggers: without compaction 6 files per partition; the every-2
-    // cadence folds sub-threshold files, so the trickle stays bounded
+    // 6 triggers: without compaction 6 files per partition; the policy
+    // folds sub-threshold files, so the trickle stays bounded
     val fp = filesPerPartition(t)
     assert(fp.values.forall(_ <= 3),
       s"auto-compaction must bound the trickle, got $fp")
     assert(TxLog.commits(t).count(_.op == "optimize") >= 2,
-      "the cadence must have run")
+      "the policy must have run")
     // contents exact through every fold
     assert(TxLog.read(spark, t).groupBy("p").count()
       .as[(String, Long)].collect().toMap === Map("a" -> 6L, "b" -> 6L))
@@ -99,5 +87,22 @@ class StreamCompactionSpec extends SparkSpec {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q2.awaitTermination()
     assert(spark.table("compact_tail").count() === 12)
+  }
+
+  test("the sink refuses its retired compaction options, naming the policy") {
+    implicit val sqlCtx = spark.sqlContext
+    Seq("binpack" -> "false", "autoCompactEvery" -> "2",
+        "autoCompactMinBytes" -> "1024").foreach { case (k, v) =>
+      val in = MemoryStream[(Long, String)]
+      val e = intercept[IllegalArgumentException] {
+        in.toDF().toDF("k", "p")
+          .writeStream.format("graft.sources.txlog")
+          .option("checkpointLocation", tmpDir("stream_compact_cp"))
+          .option("path", mkTable()).option(k, v)
+          .start()
+      }
+      assert(e.getMessage.contains(k) &&
+        e.getMessage.contains("graft.autoCompact.minFiles"), e.getMessage)
+    }
   }
 }
