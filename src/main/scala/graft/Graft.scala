@@ -43,8 +43,14 @@ object Graft {
   }
 
   /** Local session tuned for this environment (single JVM, many cores).
-    * On a real cluster the same settings hold except master/partitions,
-    * which come from the deploy environment.
+    * File listing always stays on the driver: above
+    * `parallelPartitionDiscovery.threshold` paths (default 32: a
+    * partitioned table's directories, or a multi-path read such as
+    * TxLog's) `InMemoryFileIndex` lists through a Spark job, which in a
+    * local session runs on the same cores and only adds task scheduling
+    * and result serialization. On a real cluster the same settings hold
+    * except master, partitions and that listing threshold, which come
+    * from the deploy environment.
     */
   def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
@@ -55,6 +61,8 @@ object Graft {
       // spark.sql.extensions=graft.functions.GraftExtensions instead)
       .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")

@@ -141,28 +141,38 @@ object StreamingQueries {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** Run independent `actions` of one micro-batch together and wait for
+    * all of them, so the scheduler overlaps their fixed costs instead of
+    * the driver sequencing them. The pool is made per
+    * call, on the batch's thread: its threads inherit the batch's Spark
+    * local properties (job description, query and run id), and a long-
+    * lived pool would label every later job with the batch that first
+    * started its threads. */
+  private def overlapped(actions: (() => Unit)*): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(actions.size,
+        Runtime.getRuntime.availableProcessors)))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try actions.map(a => Future(a())).foreach(
+      Await.result(_, scala.concurrent.duration.Duration.Inf))
+    finally pool.shutdown()
+  }
+
   /** Shared CDF-consumer foreachBatch body (st22/st27): write each
     * delivered commit version's change rows to its own `v=` dir. The
     * per-version jobs are independent (distinct output dirs, read-only
-    * against the log), so they are submitted together and the scheduler
-    * overlaps their fixed costs (guide §2.6) instead of the driver
-    * sequencing one tiny job per version. */
+    * against the log), so they run [[overlapped]]. */
   private def writeVersionDeltas(s: SparkSession, table: String,
-      out: String)(batch: DataFrame): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = batch.select("version").distinct().collect()
-      .map(_.getLong(0)).sorted.toSeq.map { v =>
-        Future {
-          // commitChanges is O(files the commit touched), never
-          // O(snapshot), and the first data commit reads as all-insert
-          TxLog.commitChanges(s, table, v, Seq("c_custkey"))
-            .withColumn("version", lit(v))
-            .write.mode("overwrite").parquet(s"$out/v=$v")
-        }
-      }
-    writes.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-  }
+      out: String)(batch: DataFrame): Unit =
+    overlapped(batch.select("version").distinct().collect()
+      .map(_.getLong(0)).sorted.toSeq.map { v => () =>
+        // commitChanges is O(files the commit touched), never
+        // O(snapshot), and the first data commit reads as all-insert
+        TxLog.commitChanges(s, table, v, Seq("c_custkey"))
+          .withColumn("version", lit(v))
+          .write.mode("overwrite").parquet(s"$out/v=$v")
+      }: _*)
 
   /** Staged documents landing dir + streaming read (the corpus-ingest
     * analog of [[stageEventsDir]]/[[eventsStream]]). */
@@ -2166,20 +2176,20 @@ object StreamingQueries {
             .persist()
           // norms derive from the batch alone (not from `post`) — overlap
           // that write with the postings write instead of serializing
-          // three driver-sequenced actions per micro-batch (guide §2.6)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val fNorms = Future {
-            lens.write.mode("overwrite").parquet(s"$root/norms/batch=$batchId")
-          }
-          post.repartition(col("blk"))
-            .write.partitionBy("blk").mode("overwrite")
-            .parquet(s"$root/idx/batch=$batchId")
-          // stats from the same deterministic frame the postings landed
-          // from — a replayed batch reproduces both bit-for-bit
-          Bm25.blockStats(post)
-            .write.mode("overwrite").parquet(s"$root/bstats/batch=$batchId")
-          Await.result(fNorms, scala.concurrent.duration.Duration.Inf)
+          // three driver-sequenced actions per micro-batch
+          overlapped(
+            () => lens.write.mode("overwrite")
+              .parquet(s"$root/norms/batch=$batchId"),
+            () => {
+              post.repartition(col("blk"))
+                .write.partitionBy("blk").mode("overwrite")
+                .parquet(s"$root/idx/batch=$batchId")
+              // stats from the same deterministic frame the postings
+              // landed from — a replayed batch reproduces both
+              // bit-for-bit
+              Bm25.blockStats(post)
+                .write.mode("overwrite").parquet(s"$root/bstats/batch=$batchId")
+            })
           post.unpersist()
           ()
         }

@@ -1348,7 +1348,15 @@ object TxLog {
 
   /** Atomically publish `commit` — false if that version already exists
     * (lost the race; re-derive and retry with the next version). */
-  def tryCommit(table: String, commit: Commit): Boolean = {
+  def tryCommit(table: String, commit: Commit): Boolean =
+    publish(table, commit, footers(table, commit.add))
+
+  /** [[tryCommit]] with the add files' footer counts already read
+    * (`feet`, keyed by add entry; a file absent from it records no rows
+    * or nulls): [[swap]] passes the ones [[fileMeta]] read when it
+    * staged the files, so each staged footer is opened once. */
+  private def publish(table: String, commit: Commit,
+      feet: Map[String, FooterCounts]): Boolean = {
     Files.createDirectories(logDir(table))
     // Replay-guard ENFORCEMENT (not just the callers' pre-check): a
     // commit claiming a (streamId, batchId) the log already carries is a
@@ -1440,7 +1448,7 @@ object TxLog {
       val nullsNode = node.putObject("nulls")
       var rowCounts = Map.empty[String, Long]
       commit.add.foreach { f =>
-        footerCounts(resolve(table, f)).foreach { case (nRows, colNulls) =>
+        feet.get(f).foreach { case (nRows, colNulls) =>
           rowsNode.put(f, nRows)
           rowCounts += f -> nRows
           if (colNulls.nonEmpty) {
@@ -2573,7 +2581,8 @@ object TxLog {
     * sidecar's relative paths become the commit's `bloomAdd`. Filters are
     * sized at ~3 % fpp from the batch's largest file, clamped to the
     * sketch aggregate's ceilings. The row counts come from the staged
-    * files' parquet footers ([[footerCounts]]), not from a counting pass:
+    * files' parquet footers ([[footers]], read once here and carried to
+    * the commit in [[Staged]]), not from a counting pass:
     * a file whose footer cannot be read contributes no count, and the
     * filters are then sized from the largest count that was read (floor
     * 64). An over-full filter only costs extra false positives (extra
@@ -2585,11 +2594,11 @@ object TxLog {
     val numCols = statsCols.filter(c => doubleCastable(schema(c).dataType))
     val strCols = statsCols.filter(c =>
       schema(c).dataType == org.apache.spark.sql.types.StringType)
+    val feet = footers(table, files)
     if (files.isEmpty || numCols.isEmpty && strCols.isEmpty && bloomCols.isEmpty)
-      return Staged(files, Map.empty, Map.empty, Seq.empty)
-    lazy val est = math.min(math.max(files.flatMap(f =>
-      footerCounts(resolve(table, f)).map(_._1)).maxOption.getOrElse(0L),
-      64L), 4000000L)
+      return Staged(files, Map.empty, Map.empty, Seq.empty, feet)
+    lazy val est = math.min(math.max(
+      feet.values.map(_._1).maxOption.getOrElse(0L), 64L), 4000000L)
     lazy val bits = math.min(est * 8L, 67108864L) // ~7.3 bits/key = 3% fpp
     if (bloomCols.nonEmpty) graft.functions.GraftFunctions.register(spark)
     val aggs = numCols.flatMap(c => Seq(min(col(c)).cast("double"),
@@ -2634,7 +2643,7 @@ object TxLog {
         .map(n => s"$sub/$n")
     }
     Staged(files, bounds(numCols, 1)(_.getDouble(_)),
-      bounds(strCols, 1 + 2 * numCols.size)(_.getString(_)), bloomAdd)
+      bounds(strCols, 1 + 2 * numCols.size)(_.getString(_)), bloomAdd, feet)
   }
 
   /** Types whose min/max cast to double losslessly enough for range
@@ -2901,12 +2910,12 @@ object TxLog {
       if (tryCommit(table, mk(v))) Some(v) else None
     }
 
-  /** Data files staged by [[stage]] and the skipping metadata recorded
-    * for them: what [[swap]] publishes. */
+  /** Data files staged by [[stage]], the skipping metadata recorded
+    * for them and their footer counts: what [[swap]] publishes. */
   private final case class Staged(add: Seq[String],
       stats: Map[String, Map[String, (Double, Double)]],
       sstats: Map[String, Map[String, (String, String)]],
-      bloomAdd: Seq[String])
+      bloomAdd: Seq[String], feet: Map[String, FooterCounts])
 
   /** The write half every data-adding verb shares: [[writeData]] under
     * `mapping` (the one the commit publishes with — the committed
@@ -3005,11 +3014,11 @@ object TxLog {
         finally if (blooms.isEmpty) bi.release()
       }
     val v = base.getOrElse(0L) + 1
-    Option.when(tryCommit(table, Commit(v, staged.add, remove, op, batchId,
+    Option.when(publish(table, Commit(v, staged.add, remove, op, batchId,
       staged.stats, schemaDdl, dvRemove = dvRemove, sstats = staged.sstats,
       streamId = streamId, bloomAdd = staged.bloomAdd,
       bloomRemove = bloomRemove, colMap = colMap, copySources = copySources,
-      properties = extraProps)))(v)
+      properties = extraProps), staged.feet))(v)
   }
 
   /** The mapping a schema-evolving write (mergeSchema append or COPY
@@ -5631,7 +5640,8 @@ object TxLog {
         Files.exists(Paths.get(resolve(table, f))))
       if (missing.isEmpty || dryRun) Some(missing)
       else swap(spark, table, base, files, missing,
-        Staged(Seq.empty, Map.empty, Map.empty, Seq.empty), "fsck", None)
+        Staged(Seq.empty, Map.empty, Map.empty, Seq.empty, Map.empty),
+        "fsck", None)
         .map(_ => missing)
     }
 
@@ -5986,17 +5996,23 @@ object TxLog {
     }.toMap
   }
 
-  /** (row count, per-top-level-column null count) from one parquet file's
-    * footer — the same numbers Delta records as numRecords/nullCount,
-    * taken from metadata the write already produced. Null counts only for
-    * top-level leaf columns whose statistics are present in EVERY row
-    * group (a partial sum would under-count and wrongly prune); any
-    * unreadable footer yields None, the "don't know" direction. */
-  private def footerCounts(path: String): Option[(Long, Map[String, Long])] =
-    scala.util.Try {
+  /** (row count, per-top-level-column null count) of one parquet file. */
+  private type FooterCounts = (Long, Map[String, Long])
+
+  /** [[FooterCounts]] per entry of `files` (table-relative or absolute),
+    * from each parquet footer — the same numbers Delta records as
+    * numRecords/nullCount, taken from metadata the write already
+    * produced. Null counts only for top-level leaf columns whose
+    * statistics are present in EVERY row group (a partial sum would
+    * under-count and wrongly prune); a file whose footer cannot be read
+    * has no entry, the "don't know" direction. One Hadoop configuration
+    * serves every file (each new one re-parses the default resources). */
+  private def footers(table: String, files: Seq[String])
+      : Map[String, FooterCounts] = {
+    lazy val conf = new org.apache.hadoop.conf.Configuration()
+    files.flatMap(f => scala.util.Try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path),
-        new org.apache.hadoop.conf.Configuration())
+        new org.apache.hadoop.fs.Path(resolve(table, f)), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         val blocks = r.getFooter.getBlocks.asScala.toSeq
@@ -6013,9 +6029,10 @@ object TxLog {
             Some(c -> stats.map(_.get.getNumNulls).sum)
           else None
         }
-        (nRows, colNulls)
+        f -> (nRows, colNulls)
       } finally r.close()
-    }.toOption
+    }.toOption).toMap
+  }
 
   /** Commit-recorded row count per active file as of `asOf` — absent for
     * files whose commit predates row recording (consumers must treat
