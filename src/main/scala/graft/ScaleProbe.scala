@@ -97,7 +97,7 @@ object ScaleProbe {
           // permuted by xxhash64(token, position, replica) (breaks
           // adjacency → shingle-based signatures can't either)
           val toks = transform(
-            filter(split(col("text"), "\\s+"), t => length(t) > 0),
+            graft.ext.TextAnalysis.tokens(col("text")),
             t => when(pmod(xxhash64(t, lit(i)), lit(2)) === 0,
               concat(t, lit(s"x$i"))).otherwise(t))
           val shuffled = concat_ws(" ", transform(array_sort(

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -19,9 +20,16 @@ import graft.functions.VectorFunctions.cosineNative
   */
 object Dedup {
 
-  /** Word tokens (lowercased, whitespace-split, empties dropped). */
-  def tokens(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => length(t) > 0)
+  /** Word tokens (lowercased, whitespace-split, empties dropped): the
+    * native [[graft.functions.WsTokens]] byte scan, which needs
+    * [[graft.functions.GraftExtensions]] or [[GraftFunctions.register]] on
+    * the session (`Graft.session` installs the extensions). */
+  def tokens(text: Column): Column = call_function("ws_tokens", lower(text))
+
+  /** `xxhash64` of each [[tokens]] token, hashed in the scan
+    * ([[graft.functions.WsTokenHashes]]): no token strings are built. */
+  def tokenHashes(text: Column): Column =
+    call_function("ws_token_hashes", lower(text))
 
   /** Distinct word set. */
   def tokenSet(text: Column): Column = array_distinct(tokens(text))
@@ -43,15 +51,15 @@ object Dedup {
       .agg(min(col(idCol)).alias("canonical_id"),
         count(lit(1)).alias("copies"))
 
-  /** Shingle hashes without shingle strings: one xxhash64 per TOKEN, then
-    * the native [[graft.functions.ShingleHashes]] rolling combiner produces
-    * the n-gram hashes (same discriminative power as hashing joined shingle
+  /** Shingle hashes without shingle strings: one xxhash64 per TOKEN
+    * ([[tokenHashes]]), then the native
+    * [[graft.functions.ShingleHashes]] rolling combiner produces the n-gram
+    * hashes (same discriminative power as hashing joined shingle
     * strings, none of the string allocation). MATERIALIZE the result as a
     * column before deriving signatures. Requires [[GraftFunctions.register]]
     * (callers here handle it). */
   def shingleHashes(text: Column, shingleSize: Int): Column =
-    call_function("shingle_hashes",
-      transform(tokens(text), t => xxhash64(t)), lit(shingleSize))
+    call_function("shingle_hashes", tokenHashes(text), lit(shingleSize))
 
   /** MinHash signature from a MATERIALIZED hash-array column — the native
     * [[graft.functions.MinHashSig]] expression computes all seeds in one
@@ -88,14 +96,21 @@ object Dedup {
     * signature) is quadratic in its size — at corpus scale one such bucket
     * stalls the stage. Rows in over-cap buckets are *dropped from candidate
     * generation* (they are near-identical boilerplate; run [[exact]] dedup
-    * first to collapse them). The size pass is a partial-aggregating
-    * group-by on the same key the join shuffles on — no extra repartition. */
-  private def capBuckets(rows: DataFrame, keyCols: Seq[String], cap: Int): DataFrame = {
-    val sizes = rows.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).alias("_bucket_n"))
+    * first to collapse them).
+    *
+    * The size is a `count(1)` window partitioned by the bucket keys, so it
+    * is counted inside the shuffle the join needs anyway: the output is
+    * already hash-partitioned on the join keys, both sides of a self-join
+    * read that one exchange (AQE reuses it), and the rows upstream of it
+    * (the MinHash signatures) are computed once. A group-by joined back
+    * made each side re-derive the rows in its own stage. The window's
+    * buffer spills, so a hot bucket is never collected into memory, and
+    * it is still dropped before any pair is enumerated. */
+  private def capBuckets(rows: DataFrame, keyCols: Seq[String], cap: Int): DataFrame =
+    rows.withColumn("_bucket_n",
+        count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)))
       .filter(col("_bucket_n") <= cap)
-    rows.join(sizes, keyCols).drop("_bucket_n")
-  }
+      .drop("_bucket_n")
 
   /** Per-document distinct shingle-hash set — the exact-Jaccard verify
     * payload (8-byte hashes, not shingle strings). Input: (id, hs) from
@@ -299,10 +314,11 @@ object Dedup {
   }
 
   /** 64-bit SimHash value via the native [[graft.functions.SimHash64]]
-    * expression: one string-hash pass over tokens, then a single generated
-    * vote loop. Requires [[GraftFunctions.register]] on the session. */
+    * expression: one hash per token ([[tokenHashes]]), then a single
+    * generated vote loop. Requires [[GraftFunctions.register]] on the
+    * session. */
   def simhashValue(text: Column): Column =
-    call_function("simhash64", transform(tokens(text), t => xxhash64(t)))
+    call_function("simhash64", tokenHashes(text))
 
   /** Blocked exact n-gram Jaccard pairs: equi-block on cheap metadata
     * (language + length BUCKET — both in the join key) then verify —
@@ -327,8 +343,7 @@ object Dedup {
     // the shuffle bytes; sorted once per doc so the per-pair verify is the
     // allocation-free merge-walk (jaccardSorted)
     GraftFunctions.register(df.sparkSession)
-    val hashedSet =
-      array_sort(array_distinct(transform(tokens(col(textCol)), t => xxhash64(t))))
+    val hashedSet = array_sort(array_distinct(tokenHashes(col(textCol))))
     val w = lenTol + 1
     val a = df.select(col(idCol).alias("id_a"), col(langCol).alias("lang"),
       col(lenCol).alias("len_a"), hashedSet.alias("toks_a"),
@@ -507,8 +522,7 @@ object Dedup {
     val dup = windows.groupBy("h")
       .agg(count(lit(1)).alias("_n")).filter(col("_n") > 1).select("h")
     val marked = windows.join(dup, Seq("h")).select("id", "pos")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy("pos")
+    val w = Window.partitionBy("id").orderBy("pos")
     val starts = marked.withColumn("_gap", col("pos") - lag("pos", 1).over(w))
     starts.groupBy("id").agg(
       count(lit(1)).alias("dup_windows"),

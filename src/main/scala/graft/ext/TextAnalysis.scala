@@ -11,10 +11,10 @@ import org.apache.spark.sql.types.DoubleType
   */
 object TextAnalysis {
 
-  /** Whitespace tokens, empties dropped (BPE-ish splitting is layered on
-    * top of this in [[bpeishTokenCount]]). */
-  def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => length(t) > 0)
+  /** Whitespace tokens, empties dropped: the native
+    * [[graft.functions.WsTokens]] byte scan, case kept ([[Dedup.tokens]]
+    * is the lowercased form). */
+  def tokens(text: Column): Column = call_function("ws_tokens", text)
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -28,6 +28,8 @@ object TextAnalysis {
   /** Quality features: char/token counts, mean token length, punctuation &
     * whitespace ratios, stopword ratio. All exact integer/ratio arithmetic
     * (int casts to double only at the final division → cross-engine stable).
+    * A ratio over zero chars or zero tokens is NULL in both ANSI modes
+    * (`try_divide`; a plain divide raises DIVIDE_BY_ZERO under ANSI).
     */
   def qualityFeatures(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = col(textCol)
@@ -40,9 +42,9 @@ object TextAnalysis {
       col(idCol),
       nChars.alias("n_chars"),
       nToks.alias("n_tokens"),
-      (nChars.cast(DoubleType) / nToks.cast(DoubleType)).alias("chars_per_token"),
-      (punct.cast(DoubleType) / nChars.cast(DoubleType)).alias("punct_ratio"),
-      (stop.cast(DoubleType) / nToks.cast(DoubleType)).alias("stopword_ratio"))
+      try_divide(nChars.cast(DoubleType), nToks.cast(DoubleType)).alias("chars_per_token"),
+      try_divide(punct.cast(DoubleType), nChars.cast(DoubleType)).alias("punct_ratio"),
+      try_divide(stop.cast(DoubleType), nToks.cast(DoubleType)).alias("stopword_ratio"))
   }
 
   /** Quality score in [0,1]: penalize too-short/too-long docs, high
@@ -52,8 +54,10 @@ object TextAnalysis {
     val nToks = size(toks).cast(DoubleType)
     val lenScore = when(nToks < 5, nToks / 5.0)
       .when(nToks > 10000, lit(0.5)).otherwise(lit(1.0))
-    val punct = (length(text) - length(regexp_replace(text, """[\p{Punct}]""", "")))
-      .cast(DoubleType) / length(text).cast(DoubleType)
+    // an empty text has no punctuation ratio: NULL in both ANSI modes
+    val punct = try_divide(
+      (length(text) - length(regexp_replace(text, """[\p{Punct}]""", ""))).cast(DoubleType),
+      length(text).cast(DoubleType))
     val punctScore = when(punct > 0.3, lit(0.3)).otherwise(lit(1.0))
     lenScore * punctScore
   }

@@ -26,6 +26,10 @@ object GraftFunctions {
     ("shingle_hashes", "order-sensitive n-gram hashes from token hashes",
       es => ShingleHashes(es.head,
         es(1).eval(null).asInstanceOf[Number].intValue())),
+    ("ws_tokens", "whitespace tokens (Java regex \\s, empties dropped) in one byte scan",
+      es => WsTokens(es.head)),
+    ("ws_token_hashes", "xxhash64 of each whitespace token, no token strings built",
+      es => WsTokenHashes(es.head)),
     ("vec_dot_i8", "exact integer dot product of two int8-quantized vectors",
       es => ByteVecDot(es.head, es(1))),
     ("sorted_intersect_size", "set-intersection size of two sorted long arrays (merge-walk, zero allocation)",

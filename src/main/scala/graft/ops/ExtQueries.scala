@@ -133,8 +133,7 @@ object ExtQueries {
         |SELECT copies AS cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
         |  CAST(SUM(copies) AS BIGINT) AS n_docs
         |FROM c GROUP BY copies""".stripMargin) { (s, dir) =>
-      val bag = array_sort(array_distinct(
-        filter(split(lower(col("text")), "\\s+"), t => length(t) > 0)))
+      val bag = array_sort(array_distinct(Dedup.tokens(col("text"))))
       Dedup.exact(
           Tables.load(s, dir, "documents")
             .withColumn("bag_key", md5(concat_ws(" ", bag))),
@@ -162,8 +161,7 @@ object ExtQueries {
         |SELECT doc_id, n_chars, CAST(cluster_size AS BIGINT) AS cluster_size
         |FROM r WHERE rn = 1""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val bag = array_sort(array_distinct(
-        filter(split(lower(col("text")), "\\s+"), t => length(t) > 0)))
+      val bag = array_sort(array_distinct(Dedup.tokens(col("text"))))
       val w = Window.partitionBy("bag_key")
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
@@ -193,9 +191,8 @@ object ExtQueries {
         |GROUP BY t, n_docs HAVING COUNT(*) * 4 >= n_docs""".stripMargin) { (s, dir) =>
       val docs = Tables.load(s, dir, "documents")
       val n = docs.agg(count(lit(1)).alias("n_docs"))
-      docs.select(col("doc_id"), explode(array_distinct(
-          filter(split(lower(col("text")), "\\s+"), t => length(t) > 0)))
-          .alias("token"))
+      docs.select(col("doc_id"),
+          explode(array_distinct(Dedup.tokens(col("text")))).alias("token"))
         .groupBy("token").agg(count(lit(1)).alias("df"))
         .crossJoin(broadcast(n))
         .filter(col("df") * 4 >= col("n_docs"))
@@ -1414,7 +1411,7 @@ object ExtQueries {
         |FROM r""".stripMargin) { (s, dir) =>
       val stop = Seq("the", "a", "and", "of", "to", "in", "is", "it",
         "that", "for", "on", "with", "as", "at", "this", "be")
-      val toks = filter(split(col("text"), "\\s+"), t => length(t) > 0)
+      val toks = TextAnalysis.tokens(col("text"))
       val nToks = size(col("toks"))
       val denom = greatest(nToks, lit(1))
       val meanLen = aggregate(transform(col("toks"), t => length(t)),
