@@ -439,7 +439,7 @@ object AnalyticsQueries {
         |  (CAST(4 AS BIGINT), 'optimize',  CAST(1 AS BIGINT), CAST(3 AS BIGINT), CAST(0 AS BIGINT))
         |) AS t(version, op, n_added, n_removed, n_added_dvs)""".stripMargin) { (s, dir) =>
       val in = Tables.load(s, dir, "customer").select("c_custkey", "c_name")
-      val t = Fixtures.immutableTable(dir, "txhist", 1) { t =>
+      val t = Fixtures.immutableTable(dir, "txhist", 2) { t =>
         TxLog.overwrite(in.filter(pmod(col("c_custkey"), lit(2)) === 0)
           .repartition(2), t)                                          // v1: 2 files
         TxLog.append(in.filter(pmod(col("c_custkey"), lit(2)) === 1)
@@ -558,7 +558,7 @@ object AnalyticsQueries {
       val in = s.read.parquet(s"$stage/txoptsm_in")
       // v1–v6 (big file + trickle + both DVs) cached per sf; the
       // bin-packing OPTIMIZE — the feature — runs fresh on a file-copy
-      val base = Fixtures.immutableTable(dir, "txoptsm_base", 1) { t =>
+      val base = Fixtures.immutableTable(dir, "txoptsm_base", 2) { t =>
         TxLog.append(in.filter(pmod(col("c_custkey"), lit(4)) =!= 0)
           .coalesce(1), t)                                              // v1: big
         Seq(0, 4, 8).foreach(r =>
@@ -971,7 +971,7 @@ object AnalyticsQueries {
         .stageInput(dir, "txrst_in")
       // v1–v3 (load + the DML history RESTORE rewinds over) cached; the
       // RESTORE itself — the feature — runs fresh on a file-copy
-      val base = Fixtures.immutableTable(dir, "txrst_base", 1) { t =>
+      val base = Fixtures.immutableTable(dir, "txrst_base", 2) { t =>
         TxLog.overwrite(s.read.parquet(s"$stage/txrst_in")
           .repartition(4), t)                                          // v1
         TxLog.deleteVectors(s, t, pmod(col("c_custkey"), lit(4)) === 0) // v2

@@ -653,7 +653,7 @@ object StreamingQueries {
       // the DV-commit history is deterministic and READ-ONLY under the
       // commit-log stream (checkpoint/out dirs stay per-run) — build it
       // once per sf like the batch CDF entries' txcdf/txcdfpre fixtures
-      val table = Fixtures.immutableTable(dir, "st27dv", 1) { t =>
+      val table = Fixtures.immutableTable(dir, "st27dv", 2) { t =>
         TxLog.overwrite(s.read.parquet(s"$stage/stcdfdv_v1"), t)          // v1
         TxLog.deleteVectors(s, t, pmod(col("c_custkey"), lit(7)) === 0)   // v2
         TxLog.optimizeDvs(s, t, maxDeletedFraction = 0.05)                // v3

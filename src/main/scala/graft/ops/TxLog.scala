@@ -64,11 +64,12 @@ object TxLog {
     * timestamp index always agrees with the version order. −1 on logs
     * written before timestamping. */
   /** `dvAdd`/`dvRemove`: deletion-vector files (relative paths, parquet of
-    * RLE ranges (file STRING, start BIGINT, end BIGINT) — one row per
-    * consecutive run of deleted row indexes; pre-r9 DVs stored one row per
-    * deleted row and are still readable) entering/leaving the active DV
-    * set — the protocol-v2 feature: rows listed in an active DV are dead
-    * without their data file being rewritten. */
+    * (file STRING, bitmap BINARY) — one row per DV'd data file, the
+    * bitmap a [[graft.functions.DvBitmapCodec]] bitset of its deleted row
+    * indexes; older sidecars of (file, start, end) ranges or pre-r9
+    * (file, row_index) rows are still readable) entering/leaving the
+    * active DV set — the protocol-v3 feature: rows listed in an active DV
+    * are dead without their data file being rewritten. */
   /** `sizes`: bytes per ADD entry, recorded at commit time ([[tryCommit]]
     * stats the staged files — they exist on disk before the commit
     * publishes them). Lets consumers budget work in bytes without
@@ -121,9 +122,9 @@ object TxLog {
       bloomAdd: Seq[String] = Seq.empty,
       bloomRemove: Seq[String] = Seq.empty,
       // minimum reader protocol this commit REQUIRES beyond what its
-      // content implies (bitset-encoded DVs pass 3: their files parse as
-      // empty range sets under a v2 reader — silent resurrection).
-      // Parse round-trips the stamped protocolVersion through this field.
+      // content implies (the log-retention `protocol` commit passes its
+      // floor). Parse round-trips the stamped protocolVersion through
+      // this field.
       minReader: Int = 1,
       // table-property deltas (Delta TBLPROPERTIES): Some(v) sets,
       // None unsets; folded last-write-wins by [[TxLog.properties]]
@@ -183,14 +184,15 @@ object TxLog {
     * actions it doesn't know (Delta's protocol action plays the same
     * role: an old reader must refuse, not guess). Commits are stamped with
     * the MINIMUM version that can read them correctly (Delta's
-    * minReaderVersion): plain commits say 1, deletion-vector commits say 2,
-    * BITSET-encoded deletion vectors say 3 — so a v1-era reader keeps
-    * working on tables that never used DVs and refuses exactly the tables
-    * it would misread. The v3 stamp exists because a v2-era range reader
-    * would not ERROR on a bitmap DV: merge-schema normalization turns
-    * bitmap rows into NULL ranges that silently drop from both anti-join
-    * sides — deleted rows would RESURRECT, the exact silent misread the
-    * protocol stamp is for. PARTITIONED commits (add paths carrying
+    * minReaderVersion): plain commits say 1, absolute (shallow-clone)
+    * file references say 2, deletion-vector commits say 3 — so a v1-era
+    * reader keeps working on tables that never used DVs and refuses
+    * exactly the tables it would misread. DV commits say 3 because every
+    * DV is a bitset, and a v2-era range reader would not ERROR on one:
+    * merge-schema normalization turns bitmap rows into NULL ranges that
+    * silently drop from both anti-join sides — deleted rows would
+    * RESURRECT, the exact silent misread the protocol stamp is for.
+    * PARTITIONED commits (add paths carrying
     * Hive-style `col=value` segments — the Delta `partitionValues`
     * analog, recorded in the path rather than a JSON field) say 4: a
     * v3-era reader would read the partition-stripped data files under
@@ -1024,8 +1026,8 @@ object TxLog {
 
   /** Active deletion-vector files in the snapshot as of `asOf` — via
     * [[stateAt]] (checkpoint + tail fold). Rows a DV lists for a data
-    * file that has since been removed are inert: the anti-join key
-    * includes the file, and removed paths never reappear. */
+    * file that has since been removed are inert: the probe keys on the
+    * file, and removed paths never reappear. */
   def activeDvs(table: String, asOf: Option[Long] = None): Seq[String] =
     stateAt(table, asOf).dvs
 
@@ -1039,7 +1041,7 @@ object TxLog {
   /** The per-file key a deletion vector stores: the last two path segments
     * of the scan's `_metadata.file_path` — exactly the relative path
     * [[writeData]] returned (`d-<uuid>/part-….parquet`), so the DV
-    * anti-join is a plain equi-join however the table root moves. */
+    * probe finds its file's bitmap however the table root moves. */
   private def relFileKey: org.apache.spark.sql.Column = {
     val parts = split(col("_metadata.file_path"), "/")
     concat_ws("/", element_at(parts, -2), element_at(parts, -1))
@@ -1051,120 +1053,70 @@ object TxLog {
   private def fileKey(f: String): String =
     f.split('/').takeRight(2).mkString("/")
 
-  /** Normalized view of a DV file set: one row per (file, start, end)
-    * deleted-row-index range. Reads BOTH on-disk formats — the current RLE
-    * ranges and the pre-r9 row-level (file, row_index) pairs, which
-    * normalize to width-1 ranges — so a v2 reader never refuses a DV it
-    * understands. `withSource` adds the DV file's own URI (`_dv`) for
-    * inert-DV bookkeeping. */
-  private def readDvRanges(spark: SparkSession, table: String,
-      dvs: Seq[String], withSource: Boolean = false): DataFrame = {
-    var df = spark.read.option("mergeSchema", "true")
-      .parquet(dvs.map(resolve(table, _)): _*)
-    if (withSource) df = df.withColumn("_dv", input_file_name())
-    val cols = df.columns.toSet
-    // a bitmap-only DV set has NO range columns at all; and in a mixed
-    // set, bitmap rows surface as NULL-range rows after the merge-schema
-    // union — both must yield zero RANGE rows here (their deletes are
-    // served by readDvBitmaps), never an analysis error or a null range
-    if (!cols("start") && !cols("row_index"))
-      return df.select(Seq(col("file"), lit(null).cast("long").alias("start"),
-        lit(null).cast("long").alias("end")) ++
-        (if (withSource) Seq(col("_dv")) else Nil): _*)
-        .limit(0)
-    def norm(c: String): org.apache.spark.sql.Column =
-      if (cols(c) && cols("row_index")) coalesce(col(c), col("row_index"))
-      else if (cols(c)) col(c)
-      else col("row_index")
-    df.select(Seq(col("file"), norm("start").alias("start"),
-      norm("end").alias("end")) ++
-      (if (withSource) Seq(col("_dv")) else Nil): _*)
-      .filter(col("start").isNotNull)
-  }
+  /** Every shape a DV sidecar has had on disk, as one fixed read
+    * schema: `(file, bitmap)` bitsets, the older `(file, start, end)`
+    * ranges and the pre-r9 `(file, row_index)` rows. A column a sidecar
+    * lacks reads NULL, so no schema-inference job runs. */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, bitmap BINARY, start BIGINT, `end` BIGINT, row_index BIGINT")
 
-  /** Serialized deletion BITSETS in a DV file set: (fileKey → bytes),
-    * collected to the driver — the same driver-bounded footprint the
-    * range broadcast always had, at the bitset's O(set bits) size
-    * instead of the scattered range list's O(deleted rows) rows. Files
-    * carrying several bitmap rows (two scatter-deletes before a
-    * compaction) OR together driver-side via a range-list round trip —
-    * rare (optimizeDvs collapses DVs) and metadata-bounded. */
-  private def readDvBitmaps(spark: SparkSession, table: String,
-      dvs: Seq[String]): Map[String, Array[Byte]] = {
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(dvs.map(resolve(table, _)): _*)
-    if (!df.columns.contains("bitmap")) return Map.empty
-    df.filter(col("bitmap").isNotNull).select("file", "bitmap").collect()
-      .groupBy(_.getString(0))
-      .map { case (f, rows) =>
-        val bms = rows.map(_.getAs[Array[Byte]](1))
-        f -> (if (bms.length == 1) bms.head
-        else {
-          // union the rare multi-bitmap-per-file case (two scatter
-          // deletes before any compaction) via range decode + a sorted
-          // overlap-coalescing merge — O(runs), never expanding a run
-          // to its individual bits
-          val sorted = bms.toSeq
-            .flatMap(graft.functions.DvBitmapCodec.toRanges)
-            .sortBy(_._1)
-          // headOption guard: a degenerate zero-container bitmap (never
-          // produced by this writer, but cheap to survive) unions to empty
-          val merged = sorted.foldLeft(Vector.empty[(Long, Long)]) {
-            case (acc, (s, e)) => acc.lastOption match {
-              case Some((ls, le)) if s <= le + 1 =>
-                acc.init :+ (ls, math.max(le, e))
-              case _ => acc :+ (s, e)
-            }
-          }
-          graft.functions.DvBitmapCodec.fromRanges(merged)
-        })
+  /** The ONE reader of DV sidecars: one fixed-schema read and one collect,
+    * folded on the driver to (sidecar [[fileKey]], data-file key) →
+    * bitset. Legacy range and row rows decode to bitsets here and
+    * nowhere else; several rows for one file union. Metadata-sized: one
+    * row per (sidecar, DV'd file), or per legacy range/row. */
+  private def readDvs(spark: SparkSession, table: String,
+      dvs: Seq[String]): Map[(String, String), Array[Byte]] =
+    if (dvs.isEmpty) Map.empty
+    else spark.read.schema(DvSchema).parquet(dvs.map(resolve(table, _)): _*)
+      .select(col("_metadata.file_path"), col("file"), col("bitmap"),
+        coalesce(col("start"), col("row_index")),
+        coalesce(col("end"), col("row_index")))
+      .collect().toSeq
+      .groupBy(r => (fileKey(r.getString(0)), r.getString(1)))
+      .map { case (k, rows) =>
+        val ranges = rows.filterNot(_.isNullAt(3))
+          .map(r => (r.getLong(3), r.getLong(4)))
+        k -> graft.functions.DvBitmapCodec.union(
+          rows.filterNot(_.isNullAt(2)).map(_.getAs[Array[Byte]](2)) ++
+            Option.when(ranges.nonEmpty)(
+              graft.functions.DvBitmapCodec.fromRanges(ranges)))
       }
-  }
+
+  /** Deleted rows per data-file key over a DV file set: every sidecar's
+    * bitset for the file, unioned. */
+  private def dvBitmaps(spark: SparkSession, table: String,
+      dvs: Seq[String]): Map[String, Array[Byte]] =
+    readDvs(spark, table, dvs).groupBy(_._1._2).map { case (f, bms) =>
+      f -> graft.functions.DvBitmapCodec.union(bms.values.toSeq) }
 
   /** DV files whose every referenced data file is absent from
-    * `remainingKeys` (the post-commit active set): their anti-join can
-    * never match again, so they should retire with the commit that removed
-    * their last data file instead of paying the broadcast on every
-    * subsequent read. Bookkeeping collect is one row per (DV file,
-    * referenced data file) — metadata-sized. */
+    * `remainingKeys` (the post-commit active set): their probe can never
+    * match again, so they should retire with the commit that removed
+    * their last data file instead of riding every subsequent read. */
   private def inertDvs(spark: SparkSession, table: String, dvs: Seq[String],
       remainingKeys: Set[String]): Seq[String] = {
-    if (dvs.isEmpty) return Seq.empty
-    // refs come from the RAW rows, not the range normalization — a
-    // bitset-encoded DV has no range columns, and dropping its refs here
-    // would leave it unretirable forever (a leak, not a correctness bug)
-    val refs = spark.read.option("mergeSchema", "true")
-      .parquet(dvs.map(resolve(table, _)): _*)
-      .withColumn("_dv", input_file_name())
-      .select("_dv", "file").distinct().collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    dvs.filter { dv =>
-      val itsRefs = refs.collect {
-        case (uri, f) if uri.endsWith(fileKey(dv)) => f
-      }
-      itsRefs.nonEmpty && itsRefs.forall(f => !remainingKeys.contains(f))
-    }
+    val refs = readDvs(spark, table, dvs).keys.groupMap(_._1)(_._2)
+    dvs.filter(dv => refs.get(fileKey(dv))
+      .exists(_.forall(f => !remainingKeys.contains(f))))
   }
 
   /** Data-file keys (the [[fileKey]] form) the given DV sidecars
-    * reference — one metadata-sized distinct. mergeSchema: range- and
-    * bitset-encoded sidecars have different schemas. */
+    * reference. */
   private def dvRefKeys(spark: SparkSession, table: String,
       dvs: Seq[String]): Set[String] =
-    if (dvs.isEmpty) Set.empty
-    else spark.read.option("mergeSchema", "true")
-      .parquet(dvs.map(resolve(table, _)): _*)
-      .select("file").distinct().collect().map(_.getString(0)).toSet
+    readDvs(spark, table, dvs).keySet.map(_._2)
 
   /** Schema-aware, DV-filtered read of a specific file subset — the ONE
     * place scan semantics live, shared by [[read]], [[readRanges]] and
     * [[copyOnWrite]] so a deletion vector can never be skipped on one path
-    * and honored on another. The DV set is broadcast as RLE RANGES:
-    * bounded by the number of consecutive deleted runs, not deleted rows
-    * — contiguous predicate deletes of any size broadcast a few ranges.
-    * A pathological scattered-delete DV that WOULD outgrow a broadcast is
-    * the signal to run [[optimizeDvs]]/OPTIMIZE, which collapses DVs into
-    * rewritten files. */
+    * and honored on another. The DV set rides the plan as a constant
+    * (data-file key → bitset) map that `dv_bitmap_probe` tests each row
+    * against — no join. A run-encoded bitset is bounded by the number of
+    * consecutive deleted runs, so contiguous deletes of any size ship a
+    * few bytes. A pathological scattered-delete DV set that WOULD outgrow
+    * the plan is the signal to run [[optimizeDvs]]/OPTIMIZE, which
+    * collapses DVs into rewritten files. */
   private def readFiles(spark: SparkSession, table: String,
       files: Seq[String], asOf: Option[Long],
       keepRowKeys: Boolean = false,
@@ -1226,7 +1178,7 @@ object TxLog {
     }
     // `_metadata` resolves only on the scan relation itself, so the row
     // keys must be materialized on each scan — a caller cannot re-derive
-    // them after the anti-join projection. A DV-free read of unpartitioned
+    // them after the union. A DV-free read of unpartitioned
     // files that needs no keys or ids skips them entirely: the common path
     // stays a bare scan.
     if (dvs.isEmpty && !keepRowKeys && !needIds && groups.forall(_._1.isEmpty))
@@ -1286,55 +1238,20 @@ object TxLog {
     val filtered =
       if (dvs.isEmpty) keyed
       else {
-        // Hybrid anti-join, split on range width. A range join keyed only
-        // on the file would hash every probe row of a file against ALL of
-        // that file's ranges — for a scattered delete (width-1 ranges)
-        // that is rows × deleted comparisons per file, quadratic (the r9
-        // probe measured st27 at 33× under it). So: NARROW ranges expand
-        // back to exact (file, row) keys — an O(1) hash probe per row,
-        // broadcast O(deleted) like the r8 row-level encoding; WIDE
-        // ranges stay ranges — broadcast O(ranges), and they are few by
-        // construction (wide = contiguous delete). Both sides bounded,
-        // neither degenerate.
-        val ranges = readDvRanges(spark, table, dvs)
-        val narrow = ranges.filter(col("end") - col("start") < 8)
-          .select(col("file").alias("__dv_f"),
-            explode(sequence(col("start"), col("end"))).alias("__dv_ri"))
-        // range bounds join under reserved __dv_* names: an unqualified
-        // col("start")/col("end") would be ambiguous against any user
-        // table that itself has a start/end column
-        val wide = ranges.filter(col("end") - col("start") >= 8)
-          .select(col("file").alias("__dv_file"),
-            col("start").alias("__dv_start"), col("end").alias("__dv_end"))
-        val afterRanges = keyed
-          .join(broadcast(narrow), Seq("__dv_f", "__dv_ri"), "left_anti")
-          .join(broadcast(wide),
-            col("__dv_f") === col("__dv_file") &&
-              col("__dv_ri") >= col("__dv_start") &&
-              col("__dv_ri") <= col("__dv_end"),
-            "left_anti")
-        // Bitset-encoded DVs (the scattered-delete form) probe JOIN-FREE:
-        // the (file → bitmap) map rides the plan as a constant and each
-        // row pays one parse-free bitset test — Delta's DV-in-scan shape.
-        // O(set bits) bytes where the equivalent range list is O(deleted
-        // rows) rows; files without a bitmap probe nothing.
-        val bms = readDvBitmaps(spark, table, dvs)
-        if (bms.isEmpty) afterRanges
-        else {
-          // The constant map rides the serialized plan to every task; a
-          // set this large is pathological (run optimizeDvs — it rewrites
-          // heavily-deleted files and retires their DVs). Fail with the
-          // remedy in hand rather than shipping a multi-GB plan.
-          val totalBytes = bms.valuesIterator.map(_.length.toLong).sum
-          require(totalBytes <= 256L * 1024 * 1024,
-            s"txlog $table carries ${totalBytes >> 20} MiB of bitset " +
-              "deletion vectors — beyond the plan-constant ceiling. Run " +
-              "TxLog.optimizeDvs to materialize the deletes and retire " +
-              "the DVs, then retry the read.")
-          graft.functions.GraftFunctions.register(spark)
-          afterRanges.filter(!call_function("dv_bitmap_probe",
-            col("__dv_f"), col("__dv_ri"), typedlit(bms)))
-        }
+        // The constant map rides the serialized plan to every task; a
+        // set this large is pathological (run optimizeDvs — it rewrites
+        // heavily-deleted files and retires their DVs). Fail with the
+        // remedy in hand rather than shipping a multi-GB plan.
+        val bms = dvBitmaps(spark, table, dvs)
+        val totalBytes = bms.valuesIterator.map(_.length.toLong).sum
+        require(totalBytes <= 256L * 1024 * 1024,
+          s"txlog $table carries ${totalBytes >> 20} MiB of bitset " +
+            "deletion vectors — beyond the plan-constant ceiling. Run " +
+            "TxLog.optimizeDvs to materialize the deletes and retire " +
+            "the DVs, then retry the read.")
+        graft.functions.GraftFunctions.register(spark)
+        keyed.filter(!call_function("dv_bitmap_probe",
+          col("__dv_f"), col("__dv_ri"), typedlit(bms)))
       }
     // Identity overlay: replace the column's stored bytes (NULL in fresh
     // files, a stale-impossible copy in rewritten ones) with the derived
@@ -1375,10 +1292,12 @@ object TxLog {
           "was applied by a concurrent or prior writer (replay guard)")
     val node = mapper.createObjectNode()
     // minimum version that can read this commit correctly: plain commits
-    // stay readable by v1-era readers; deletion vectors and absolute
-    // (shallow-clone) file references demand a v2 reader
-    val needsV2 = commit.dvAdd.nonEmpty || commit.dvRemove.nonEmpty ||
-      (commit.add ++ commit.remove).exists(_.startsWith("/"))
+    // stay readable by v1-era readers; absolute (shallow-clone) file
+    // references demand a v2 reader
+    val needsV2 = (commit.add ++ commit.remove).exists(_.startsWith("/"))
+    // every deletion vector is a bitset: a v2-era range reader would read
+    // it as no deletes and resurrect its rows, so DV commits demand v3
+    val needsV3 = commit.dvAdd.nonEmpty || commit.dvRemove.nonEmpty
     // partitioned adds demand a v4 reader: older readers would plan the
     // partition-stripped files under the full logged schema and silently
     // NULL every partition column
@@ -1401,7 +1320,8 @@ object TxLog {
     node.put("protocolVersion",
       math.max(if (needsV7 >= 7) needsV7 else if (needsV6) 6
       else if (needsV5) 5
-      else if (needsV4) 4 else if (needsV2) 2 else 1, commit.minReader))
+      else if (needsV4) 4 else if (needsV3) 3 else if (needsV2) 2 else 1,
+      commit.minReader))
     node.put("version", commit.version)
     node.put("op", commit.op)
     node.put("batchId", commit.batchId)
@@ -4648,8 +4568,8 @@ object TxLog {
     * filter, or a semi/anti join against a source) to the LIVE rows that
     * make a file touched, and collected as one row per touched file —
     * metadata-sized, like the commit. The file key comes from readFiles'
-    * row keys rather than input_file_name(): with a DV anti-join in the
-    * plan there are two sources, and input_file_name() refuses
+    * row keys rather than input_file_name(): a semi/anti join against a
+    * source puts two sources in the plan, and input_file_name() refuses
     * multi-source expressions. __dv_f is the last-two-segments fileKey: a
     * canonical SET lookup resolves both relative entries and absolute
     * (shallow-clone) entries — no linear suffix scan over the active set. */
@@ -4778,27 +4698,30 @@ object TxLog {
     }
   }
 
-  /** DELETE WHERE via deletion vectors (protocol v2; Delta's DV feature):
+  /** DELETE WHERE via deletion vectors (protocol v3; Delta's DV feature):
     * NO data file is rewritten — one scan finds every live matching row,
-    * compresses its (file, row_index) set into RLE ranges (gaps-and-
-    * islands over a key-partitioned window: fully distributed, no driver
-    * or per-file materialization), and a data-less commit activates the
-    * DV parquet. Reads anti-join active DVs (see [[readFiles]]), so the
-    * delete is visible atomically. Scan cost is O(matching rows); the
-    * PERSISTED and BROADCAST cost is O(ranges) — predicate deletes are
-    * overwhelmingly contiguous-in-file (clustered layout makes them more
-    * so), so a 50%-delete of a huge file is a few range rows, where the
-    * r8 row-level encoding paid one broadcast row per deleted row. Worst
-    * case (every other row dead) degrades to deleted/2 ranges — the
-    * [[optimizeDvs]] threshold is the relief valve that rewrites such
-    * files. DVs accumulate until a rewrite ([[optimize]] / merge /
-    * overwrite / [[optimizeDvs]]) materializes and retires them. */
+    * compresses its (file, row_index) set into ranges (gaps-and-islands
+    * over a key-partitioned window: fully distributed, no driver or
+    * per-file materialization), groups each file's ranges into one
+    * [[graft.functions.DvBitmapCodec]] bitset, and a data-less commit
+    * activates the DV parquet of (file, bitmap) rows. Reads probe active
+    * DVs (see [[readFiles]]), so the delete is visible atomically. Scan
+    * cost is O(matching rows); the PERSISTED and plan-shipped cost is the
+    * bitset's: a few bytes per run for a contiguous delete (a 50%-delete
+    * of a huge file is one run per 64 Ki-row block), ≤ 2 bytes/row or a
+    * hard 8 KiB per block for a scattered one. DVs accumulate until a
+    * rewrite ([[optimize]] / merge / overwrite / [[optimizeDvs]])
+    * materializes and retires them. */
   def deleteVectors(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column): Long =
     optimistic(table, "dvDelete") { base =>
       require(base.nonEmpty, s"dvDelete on empty txlog table $table")
+      graft.functions.GraftFunctions.register(spark)
       val w = Window.partitionBy(col("file")).orderBy(col("ri"))
-      val hits = readFiles(spark, table, activeFiles(table, base), base,
+      // one (file, bitmap) row per touched file, collected once: the
+      // sidecar is written from these rows, and their files are the
+      // commit's dvTargets attribution
+      val perFile = readFiles(spark, table, activeFiles(table, base), base,
           keepRowKeys = true)
         .filter(condition)
         .select(col("__dv_f").alias("file"), col("__dv_ri").alias("ri"))
@@ -4806,59 +4729,33 @@ object TxLog {
         .withColumn("_grp", col("ri") - row_number().over(w))
         .groupBy(col("file"), col("_grp"))
         .agg(min("ri").alias("start"), max("ri").alias("end"))
-        .drop("_grp")
-      // Encoding choice per batch: the range list is O(consecutive runs)
-      // — ideal for contiguous predicate deletes, degenerate for
-      // SCATTERED ones (a million dispersed rows = a million width-1
-      // range rows broadcast on every read). When the batch is large AND
-      // mostly width-1 runs, re-encode per file as a roaring-style
-      // bitset (DvBitmapCodec): ≤ 2 bytes/row sparse, 8 KiB/64 Ki-row
-      // block dense — O(set bits) however scattered. Readers handle both
-      // encodings side by side (readDvRanges / readDvBitmaps), so the
-      // threshold only tunes size, never correctness.
-      val enc = hits.agg(count(lit(1)).alias("nr"),
-        coalesce(sum(col("end") - col("start") + 1), lit(0L)).alias("rows"))
-        .head()
-      val (nRanges, nRows) = (enc.getLong(0), enc.getLong(1))
-      val scattered = nRanges > 2048 && nRows < 4 * nRanges
-      val staged =
-        if (!scattered) hits
-        else {
-          graft.functions.GraftFunctions.register(spark)
-          hits.groupBy("file").agg(
-            call_function("dv_bitmap_from_ranges",
-              sort_array(collect_list(struct(col("start"), col("end")))))
-              .alias("bitmap"))
-        }
-      val sub = s"dv-${UUID.randomUUID().toString.take(8)}"
-      staged.coalesce(1).write.parquet(s"$table/$sub")
-      val dvFiles = listDir(Paths.get(table, sub)).map(_.getFileName.toString)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        .sorted.map(n => s"$sub/$n")
-      // the data files this DV covers, read back from the (tiny,
-      // metadata-sized) staged sidecar — doubles as the empty check and
-      // becomes the commit's dvTargets attribution
-      val covered = spark.read.parquet(s"$table/$sub")
-        .select("file").distinct().collect().map(_.getString(0)).sorted
-      // empty hit set: drop the staged dir, no new version
-      if (covered.isEmpty) {
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(s"$table/$sub"))
-        Some(base.get)
-      } else {
+        .groupBy("file")
+        .agg(call_function("dv_bitmap_from_ranges",
+          sort_array(collect_list(struct(col("start"), col("end")))))
+          .alias("bitmap"))
+        .collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1)))
+        .sortBy(_._1).toSeq
+      // empty hit set: nothing staged, no new version
+      if (perFile.isEmpty) Some(base.get)
+      else {
+        val sub = s"dv-${UUID.randomUUID().toString.take(8)}"
+        import spark.implicits._
+        perFile.toDF("file", "bitmap").coalesce(1)
+          .write.parquet(s"$table/$sub")
+        val dvFiles = listDir(Paths.get(table, sub))
+          .map(_.getFileName.toString)
+          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+          .sorted.map(n => s"$sub/$n")
+        val covered = perFile.map(_._1)
         val v = base.get + 1
         val won = tryCommit(table, Commit(v, Seq.empty, Seq.empty,
-          "dvDelete", -1L,
-          dvAdd = dvFiles,
-          dvTargets = covered.toSeq.map(fileKey),
-          minReader = if (scattered) 3 else 1))
+          "dvDelete", -1L, dvAdd = dvFiles, dvTargets = covered))
         // lost the race: under serializable, refuse if the winner touched
         // my covered files (re-deriving would silently delete over its
         // write); disjoint writers re-scan against the new snapshot and
         // both commit
         if (!won)
-          checkFileConflicts(table, base, covered.map(fileKey).toSet,
-            "dvDelete")
+          checkFileConflicts(table, base, covered.toSet, "dvDelete")
         Option.when(won)(v)
       }
     }
@@ -5693,10 +5590,10 @@ object TxLog {
     val files = st.files
     // same minimum-readable-version rule as tryCommit: a checkpoint of a
     // table that never used a v2 feature must stay readable by a v1-era
-    // reader (absolute clone refs in the file list, or DV history — whose
-    // commits a reader must fold — are what demand v2). st.minReader
-    // already carries the max stamp over the folded history (DV commits
-    // stamp >= 2 at write time).
+    // reader (absolute clone refs in the file list demand v2; DV history,
+    // whose commits a reader must fold, demands v3). st.minReader already
+    // carries the max stamp over the folded history (DV commits stamp
+    // >= 3 at write time).
     val needed = Seq(if (files.exists(_.startsWith("/"))) 2 else 1,
       st.minReader, if (hasCompactedLog(table)) 6 else 1,
       retentionFloor(table).getOrElse(1),
@@ -6046,8 +5943,8 @@ object TxLog {
     * opened (Delta answers the same query from numRecords). Some(n) iff
     * every active file carries a recorded row count AND no deletion
     * vector is active (a DV hides rows the footer counted; subtracting
-    * would need DV cardinality, which range- and bitset-encoded vectors
-    * don't record) — otherwise None and the caller scans. At 100 TB this
+    * would need DV cardinality, which the log does not record; the
+    * sidecars do) — otherwise None and the caller scans. At 100 TB this
     * is the difference between a millisecond metadata fold and a
     * full-table scan for the most common dashboard query there is. */
   def rowCount(table: String, asOf: Option[Long] = None): Option[Long] = {
@@ -6089,8 +5986,8 @@ object TxLog {
 
   /** The partitions `df`'s data scans split their files into, summed
     * over a union, from the physical plan alone. `df.rdd` would count
-    * them by running the plan's broadcasts (a deletion-vector read's
-    * anti-join sides), whose scans are not the read's and are skipped. */
+    * them by running the plan's broadcasts (a join's build side), whose
+    * scans are not the read's and are skipped. */
   private def scanPartitions(df: DataFrame): Int = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
@@ -6282,8 +6179,8 @@ object TxLog {
 
   /** Deletion-vector maintenance (Delta's DV compaction threshold inside
     * OPTIMIZE): rewrite ONLY the data files whose DV'd-row fraction
-    * exceeds `maxDeletedFraction` — those files pay the anti-join for
-    * many dead rows on every read — and leave lightly-deleted files
+    * exceeds `maxDeletedFraction` — those files scan and probe many dead
+    * rows on every read — and leave lightly-deleted files
     * riding their cheap DVs. DV files whose every referenced data file
     * has left the active set retire with the commit. All bookkeeping
     * collects are metadata-sized (one row per DV'd file / per DV-file
@@ -6295,20 +6192,9 @@ object TxLog {
       require(base.nonEmpty, s"optimizeDvs on empty txlog table $table")
       val dvs = activeDvs(table, base)
       if (dvs.isEmpty) Seq.empty[String] else {
-        // dead rows per data-file key, and which DV file holds which refs
-        // dead-row count per file = total width of its ranges (DV files
-        // never overlap ranges for live rows: a re-delete of an already-
-        // dead row can't happen — readFiles filters it out of the scan)
-        val deadRanges = readDvRanges(spark, table, dvs)
-          .groupBy("file")
-          .agg(sum(col("end") - col("start") + 1).alias("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        // bitset-encoded DVs contribute their cardinality to the dead count
-        val deadBits = readDvBitmaps(spark, table, dvs)
-          .map { case (f, bm) =>
-            f -> graft.functions.DvBitmapCodec.cardinality(bm) }
-        val dead = (deadRanges.keySet ++ deadBits.keySet).map(f =>
-          f -> (deadRanges.getOrElse(f, 0L) + deadBits.getOrElse(f, 0L))).toMap
+        // dead rows per data-file key: the cardinality of its bitset
+        val dead = dvBitmaps(spark, table, dvs).map { case (f, bm) =>
+          f -> graft.functions.DvBitmapCodec.cardinality(bm) }
         // total rows per file (projection-free scan keyed like the DV)
         val totals = spark.read
           .parquet(files.map(resolve(table, _)): _*)

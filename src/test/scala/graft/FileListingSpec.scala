@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobCount
 import org.apache.spark.sql.functions._
 
 /** `Graft.session` lists files on the driver at any path count: a read
@@ -11,29 +9,6 @@ import org.apache.spark.sql.functions._
   * task scheduling on the same cores. Each read passes its schema, so
   * no inference job is counted either. */
 class FileListingSpec extends SparkSpec {
-
-  /** Spark jobs `body` starts from this thread (jobs carry the thread's
-    * job group, so a job of another thread never counts). */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"listing-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "listing job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.ListenerDrain(spark)
-      sc.removeSparkListener(l)
-    }
-    n.get
-  }
 
   /** 40 single-row files under `p=0` … `p=39`. */
   private def fortyPartitions(): String = {
@@ -46,7 +21,7 @@ class FileListingSpec extends SparkSpec {
   test("a 40-directory partitioned tree lists with no Spark job") {
     val dir = fortyPartitions()
     val schema = "id BIGINT, p INT"
-    assert(jobsOf(spark.read.schema(schema).parquet(dir)) === 0)
+    assert(JobCount(spark)(spark.read.schema(schema).parquet(dir)) === 0)
     val df = spark.read.schema(schema).parquet(dir)
     assert(df.inputFiles.length === 40)
     assert(df.where(col("p") === 7).collect().map(_.getLong(0)) === Array(7L))
@@ -58,7 +33,7 @@ class FileListingSpec extends SparkSpec {
         java.nio.file.Files.walk(java.nio.file.Paths.get(dir)))(
       _.toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted.toSeq)
     assert(files.size === 40)
-    assert(jobsOf(spark.read.schema("id BIGINT").parquet(files: _*)) === 0)
+    assert(JobCount(spark)(spark.read.schema("id BIGINT").parquet(files: _*)) === 0)
     assert(spark.read.schema("id BIGINT").parquet(files: _*)
       .agg(sum("id")).head().getLong(0) === (0L until 40L).sum)
   }

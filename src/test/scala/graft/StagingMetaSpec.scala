@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,29 +15,6 @@ class StagingMetaSpec extends SparkSpec {
   import spark.implicits._
 
   private def table(): String = tmpDir("staging") + "/t"
-
-  /** Spark jobs `body` starts from this thread. Jobs carry the thread's
-    * job group, so a job of another thread never counts. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"staging-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "staging job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.ListenerDrain(spark)
-      sc.removeSparkListener(l)
-    }
-    n.get
-  }
 
   /** Row `i` of (id bigint, ts timestamp, name string, v double); every
     * tenth name is NULL. */
@@ -159,7 +134,7 @@ class StagingMetaSpec extends SparkSpec {
     TxLog.append(rows(400), t)
     // the data write, the one stats+bloom aggregation (split in two by
     // AQE), the indexed-columns read and the sidecar write
-    val n = jobsOf(TxLog.append(rows(37, 400), t))
+    val n = JobCount(spark)(TxLog.append(rows(37, 400), t))
     assert(n <= 5, s"a 37-row append ran $n Spark jobs")
     val c = TxLog.commits(t).last
     assert(c.stats.nonEmpty && c.bloomAdd.nonEmpty)
@@ -170,7 +145,7 @@ class StagingMetaSpec extends SparkSpec {
     TxLog.setProperties(t, Map("graft.bloom.columns" -> "id"))
     TxLog.append(threeFiles(), t)
     // the one job is the probe of the sidecar frame; its schema is given
-    val n = jobsOf(TxLog.filesForEquals(spark, t, "id", Seq(7L)))
+    val n = JobCount(spark)(TxLog.filesForEquals(spark, t, "id", Seq(7L)))
     assert(n <= 1, s"filesForEquals ran $n Spark jobs")
   }
 }

@@ -592,12 +592,12 @@ class TxLogSpec extends SparkSpec {
     TxLog.optimize(spark, t, targetFiles = 1)
     assert(TxLog.activeDvs(t).isEmpty)
     assert(TxLog.read(spark, t).as[Long].collect().toSet === got)
-    // a DV commit demands a protocol-v2 reader; plain commits stay v1
+    // a DV commit demands a protocol-v3 reader; plain commits stay v1
     val json = TxLog.commits(t).map(c => c.version ->
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(t, "_txlog", f"${c.version}%020d.json")))).toMap
     assert(json(1L).contains("\"protocolVersion\":1"))
-    assert(json(3L).contains("\"protocolVersion\":2"))
+    assert(json(3L).contains("\"protocolVersion\":3"))
   }
 
   test("DV ranges: a 50% contiguous delete persists O(ranges), not O(deleted rows)") {
@@ -607,13 +607,15 @@ class TxLogSpec extends SparkSpec {
     TxLog.deleteVectors(spark, t, col("k") < 50000)
     val dvs = TxLog.activeDvs(t)
     assert(dvs.nonEmpty)
-    // the DV parquet holds RANGE rows: a contiguous 50 000-row delete is
-    // ONE row per touched file — the r8 row-level encoding persisted (and
-    // broadcast on every read) 50 000
+    // the DV parquet holds one (file, bitmap) row per touched file, and a
+    // contiguous 50 000-row delete run-encodes to a few bytes — the r8
+    // row-level encoding persisted (and broadcast on every read) 50 000
     val dvRows = spark.read.parquet(dvs.map(f => s"$t/$f"): _*)
-    assert(dvRows.columns.toSet === Set("file", "start", "end"))
+    assert(dvRows.columns.toSet === Set("file", "bitmap"))
     assert(dvRows.count() <= 2,
-      s"contiguous delete must compress to ~1 range/file: ${dvRows.count()}")
+      s"contiguous delete must compress to ~1 row/file: ${dvRows.count()}")
+    val dvBytes = dvRows.collect().map(_.getAs[Array[Byte]]("bitmap").length)
+    assert(dvBytes.sum < 100, s"contiguous delete bitmap bytes: ${dvBytes.toSeq}")
     assert(TxLog.read(spark, t).count() === 50000)
     // scattered worst case (every other row) still answers exactly
     TxLog.deleteVectors(spark, t, col("k") % 2 === 0)
@@ -634,25 +636,33 @@ class TxLogSpec extends SparkSpec {
     // and activate it via a raw commit, simulating a table carried
     // forward from before the range encoding
     import spark.implicits._
-    Seq((dataFile, 3L), (dataFile, 7L)).toDF("file", "row_index")
-      .coalesce(1).write.parquet(s"$t/dv-legacy")
-    val legacy = java.nio.file.Files.list(
-        java.nio.file.Paths.get(t, "dv-legacy")).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .map(n => s"dv-legacy/$n").toSeq
+    def sidecar(dir: String)(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      df.coalesce(1).write.parquet(s"$t/$dir")
+      java.nio.file.Files.list(java.nio.file.Paths.get(t, dir))
+        .iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        .map(n => s"$dir/$n").toSeq
+    }
+    val legacy = sidecar("dv-legacy")(
+      Seq((dataFile, 3L), (dataFile, 7L)).toDF("file", "row_index"))
+    // and a range DV exactly as the writer before one-encoding wrote it:
+    // one (file, start, end) row per consecutive run of deleted rows
+    val ranged = sidecar("dv-ranges")(
+      Seq((dataFile, 20L, 24L), (dataFile, 40L, 40L))
+        .toDF("file", "start", "end"))
     assert(TxLog.tryCommit(t, TxLog.Commit(2L, Seq.empty, Seq.empty,
-      "dvDelete", -1L, dvAdd = legacy)))
+      "dvDelete", -1L, dvAdd = legacy ++ ranged)))
+    val olderDead = Set(3L, 7L, 20L, 21L, 22L, 23L, 24L, 40L)
     assert(TxLog.read(spark, t).as[Long].collect().toSet ===
-      (0L until 100L).toSet -- Set(3L, 7L))
-    // a NEW range-format DV stacks on the legacy one (mixed-schema read)
+      (0L until 100L).toSet -- olderDead)
+    // a NEW bitmap DV stacks on both legacy shapes (one fixed-schema read)
     TxLog.deleteVectors(spark, t, col("k") >= 90)                  // v3
     assert(TxLog.read(spark, t).as[Long].collect().toSet ===
-      (0L until 90L).toSet -- Set(3L, 7L))
-    // optimizeDvs folds BOTH formats' dead counts and retires them
+      (0L until 90L).toSet -- olderDead)
+    // optimizeDvs folds every format's dead counts and retires them all
     TxLog.optimizeDvs(spark, t, maxDeletedFraction = 0.05)
     assert(TxLog.activeDvs(t).isEmpty)
-    assert(TxLog.read(spark, t).count() === 88)
+    assert(TxLog.read(spark, t).count() === 82)
   }
 
   test("optimizeDvs rewrites only heavily-deleted files and retires inert DVs") {
@@ -754,10 +764,14 @@ class TxLogSpec extends SparkSpec {
     TxLog.optimize(spark, c, targetFiles = 1)
     assert(TxLog.activeFiles(c).forall(!_.startsWith("/")))
     assert(TxLog.read(spark, c).count() === 200)
-    // absolute references demand a v2 reader
-    val v1Json = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(c, "_txlog", f"${1L}%020d.json")))
-    assert(v1Json.contains("\"protocolVersion\":2"))
+    // absolute references demand a v2 reader; this clone also carries
+    // the source's deletion vector, and DV commits demand v3
+    def v1Json(table: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(table, "_txlog", f"${1L}%020d.json")))
+    assert(v1Json(c).contains("\"protocolVersion\":3"))
+    val dvFree = table()
+    TxLog.cloneTable(spark, t, dvFree, asOf = Some(2L))
+    assert(v1Json(dvFree).contains("\"protocolVersion\":2"))
     // cloning onto an existing table is refused
     intercept[IllegalArgumentException] { TxLog.cloneTable(spark, t, c) }
   }
@@ -822,10 +836,10 @@ class TxLogSpec extends SparkSpec {
       java.nio.file.Paths.get(t, "_txlog", f"$v%020d.checkpoint.json")))
     // a table that never used a v2 feature checkpoints readable-by-v1
     assert(cpJson(1L).contains("\"protocolVersion\":1"))
-    // DV history upgrades the stamp: folding this table needs a v2 reader
+    // DV history upgrades the stamp: folding this table needs a v3 reader
     TxLog.deleteVectors(spark, t, col("k") < 2)                    // v2
     TxLog.compact(t)
-    assert(cpJson(2L).contains("\"protocolVersion\":2"))
+    assert(cpJson(2L).contains("\"protocolVersion\":3"))
   }
 
   test("applyChanges tie (same key AND version): the delete wins deterministically") {
@@ -1114,8 +1128,8 @@ class TxLogSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val t = table()
     // one 60k-row file; deleting every other row would cost 30k width-1
-    // range rows under the RLE encoding — the scatter pattern that
-    // triggers the roaring-style bitset (~8 KiB dense block instead)
+    // range rows under a range encoding — the scatter pattern the
+    // bitset's dense container bounds at ~8 KiB
     TxLog.overwrite(spark.range(0, 60000).toDF("k")
       .withColumn("v", col("k") * 2).coalesce(1), t)
     TxLog.deleteVectors(spark, t, pmod(col("k"), lit(2)) === 0)
@@ -1133,18 +1147,19 @@ class TxLogSpec extends SparkSpec {
     TxLog.deleteVectors(spark, t,
       pmod(col("k"), lit(4)) === 1 && col("k") < 60000)
     assert(TxLog.read(spark, t).count() === 15000L)
-    // contiguous delete on a SECOND file stays range-encoded — both
-    // encodings serve one snapshot side by side
+    // contiguous delete on a SECOND file run-encodes — bitsets of every
+    // container kind serve one snapshot side by side
     TxLog.append(spark.range(100000, 101000).toDF("k")
       .withColumn("v", col("k") * 2).coalesce(1), t)
     TxLog.deleteVectors(spark, t, col("k").between(100000, 100499))
     val dvAll = TxLog.activeDvs(t)
     val lastDv = spark.read.parquet(s"$t/${TxLog.commits(t).last.dvAdd.head}")
-    assert(!lastDv.columns.contains("bitmap"), "contiguous delete stays ranges")
+    val lastBytes = lastDv.select("bitmap").head.getAs[Array[Byte]](0).length
+    assert(lastBytes < 100, s"the contiguous delete's bitmap is run-encoded: $lastBytes bytes")
     assert(TxLog.read(spark, t).count() === 15500L)
     assert(TxLog.read(spark, t).agg(min("k")).head.getLong(0) === 3L)
     // cardinality feeds optimizeDvs: both heavily-deleted files rewrite,
-    // every DV (bitset and range alike) retires
+    // every DV (dense and run-encoded alike) retires
     TxLog.optimizeDvs(spark, t, maxDeletedFraction = 0.2)
     assert(TxLog.activeDvs(t).isEmpty)
     assert(TxLog.read(spark, t).count() === 15500L)
