@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The catalog runner every driver main shares (Bench, Verify,
-  * TimeEntries, ScaleProbe, PlanSnap, PlanDump): one session shape, one
+  * TimeEntries, ScaleProbe, PlanSnap): one session shape, one
   * way to run and time an entry, one state-store unload, one JSON string
   * escaper.
   */

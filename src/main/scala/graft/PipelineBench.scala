@@ -2,8 +2,9 @@ package graft
 
 /** Flagship-pipeline throughput benchmark at the reference's data scale:
   * both cleaning notebooks + the full streaming medallion, with per-stage
-  * wall times. Input corpus from tools/gen_books.py (212k books / 3M
-  * reviews — the Kaggle dataset's published dimensions).
+  * wall times. Input corpus from `python3 perfbench/gen.py raw <seed> 1.0
+  * <dir>` (212k books / 3M reviews — the Kaggle dataset's published
+  * dimensions).
   */
 object PipelineBench {
   def main(args: Array[String]): Unit = {

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Hilbert curve index of a `bits`-resolution grid cell — the data-layout
-  * key [[graft.ops.Maintenance.rewriteCurveOrdered]] sorts by, as the
+/** Hilbert curve index of a `bits`-resolution grid cell — a data-layout
+  * key for [[graft.ops.TxLog.optimize]]'s `clusterBy`, as the
   * higher-locality alternative to the Morton key ([[ZOrder.interleave2]]).
   *
   * Why Hilbert next to Z-order: the Morton curve takes long diagonal jumps

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * table by it bounds the min/max range of BOTH dimensions inside every
   * file/row-group, so parquet footer stats prune reads on either column —
   * a lexicographic (a, b) sort only prunes on `a`
-  * (see [[graft.ops.Maintenance.rewriteZOrdered]]).
+  * (pass it as `clusterBy` to [[graft.ops.TxLog.optimize]]).
   *
   * Built from shift/mask column arithmetic (codegen'd by Spark like any
   * integer expression); the identical formula is emitted as portable SQL

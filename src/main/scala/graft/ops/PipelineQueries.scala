@@ -1068,7 +1068,7 @@ object PipelineQueries {
     },
 
     QueryDef("ext_zorder_key",
-      "Morton z-order key over two bucketed dimensions (the layout key behind Maintenance.rewriteZOrdered)", {
+      "Morton z-order key over two bucketed dimensions (the clusterBy key behind OPTIMIZE ZORDER BY)", {
       val z = graft.functions.ZOrder.interleaveSql(
         "(o_custkey & 255)", "(o_orderkey & 255)", bits = 8)
       s"SELECT o_orderkey, $z AS z FROM orders"
@@ -1084,7 +1084,7 @@ object PipelineQueries {
     // subqueries (HilbertKey.xy2dSql) — a bit-for-bit cross-engine check
     // of the curve, not just a row count.
     QueryDef("ext_hilbert_key",
-      "Hilbert curve key over two bucketed dimensions (higher-locality alternative to the Morton key; see Maintenance.rewriteCurveOrdered)", {
+      "Hilbert curve key over two bucketed dimensions (higher-locality alternative to the Morton key as an OPTIMIZE clusterBy key)", {
       val walk = graft.functions.HilbertKey.xy2dSql(
         "o_custkey & 255", "o_orderkey & 255", bits = 8,
         from = "orders", passCols = Seq("o_orderkey"))
@@ -1219,11 +1219,11 @@ object PipelineQueries {
         TfIdf.docFreq(TfIdf.tokenized(batch, "doc_id", "text"))), nDocs)
     },
 
-    // Keyed MERGE ("upsert") on a plain parquet lake — the Delta-style
-    // write path (reference M:127-132) without Delta jars: latest version
-    // per key wins, incoming batch beats existing on ties, committed via
-    // the SafeSwap two-rename protocol. Both input frames are staged so
-    // the oracle replays the identical merge window.
+    // Keyed MERGE ("upsert") into a txlog table — the Delta-style write
+    // path (reference M:127-132) without Delta jars: latest version per
+    // key wins, incoming batch beats existing on ties, one atomic
+    // versioned commit. Both input frames are staged so the oracle
+    // replays the identical merge window.
     QueryDef("ext_upsert_merge",
       "MERGE into a txlog parquet table: per-key latest-version-wins upsert (updates + brand-new keys), atomic versioned commit",
       s"""WITH b AS (SELECT *, 0 AS _src FROM read_parquet('${QueryDef.StageSql}/upsert_base/*.parquet')),
@@ -1245,10 +1245,7 @@ object PipelineQueries {
       Fixtures.stagedInput(dir, "upsert_updates", 1)(updates)
       val target = java.nio.file.Files
         .createTempDirectory("graft_upsert").toString + "/t"
-      // txlog-committed since r7 (VERDICT r6 item 1): v1 = base load,
-      // v2 = merge — same merge semantics as Upsert.mergeIntoParquet, but
-      // published through an atomic versioned commit instead of SafeSwap's
-      // directory swap (which st12 still exercises)
+      // v1 = base load, v2 = merge
       TxLog.overwrite(s.read.parquet(s"$stage/upsert_base"), target)
       TxLog.merge(s, target,
         s.read.parquet(s"$stage/upsert_updates"), Seq("c_custkey"), "version")

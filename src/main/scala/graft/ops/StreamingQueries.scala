@@ -1123,21 +1123,22 @@ object StreamingQueries {
     },
 
     QueryDef("st12_stream_agg_update",
-      "update-mode streaming aggregate: changed groups per trigger, merged by an upsert sink (T5's third output mode)",
+      "update-mode streaming aggregate: changed groups per trigger, merged into a txlog table by a keyed upsert sink (T5's third output mode)",
       "SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY event_type") { (s0, dir) =>
       val s = streamSession(s0, dir)
-      val out = tmp("graft_st12")
+      val target = tmp("graft_st12") + "/t"
+      val cp = tmp("graft_st12_cp")
       eventsStream(s, stageEventsDir(s, dir))
         .groupBy("event_type").agg(count(lit(1)).alias("cnt"))
         .writeStream.outputMode("update")
-        .option("checkpointLocation", s"$out/_cp")
+        .option("checkpointLocation", cp)
         // update mode emits only the groups changed in each trigger; the
-        // upsert sink merges them by key so the table converges to the
-        // complete-mode answer without rewriting unchanged groups
-        .foreachBatch(graft.ops.Upsert.sink(s"$out/sink",
-          Seq("event_type"), versionCol = "cnt") _)
+        // sink merges them by key (a group's count only rises, so the
+        // latest-version row is its newest count) and the table converges
+        // to the complete-mode answer — st19's batchId-idempotent commit
+        .foreachBatch(TxLog.sink(target, Seq("event_type"), "cnt", Some(cp)) _)
         .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      s.read.parquet(s"$out/sink")
+      TxLog.read(s, target)
     },
 
     // Only CLOSED sessions emit (a session closes when a later event opens

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: the log holds FILE PATHS, never data — a commit is O(files
   * touched); reads plan from the file list without listing the data dirs
   * (no eventually-consistent-listing hazard); the merge rewrite is bounded
-  * by the target table like [[Upsert]]. Put-if-absent is the single
+  * by the files the batch's keys touch. Put-if-absent is the single
   * FS-specific primitive: this implementation uses java.nio hard links
   * (correct on local/NFS-v4/HDFS-fuse POSIX semantics); an object-store
   * deployment swaps in its conditional-put here and nothing else changes.
@@ -3877,7 +3877,9 @@ object TxLog {
   /** The key-bounds + bloom prune every keyed verb shares ([[merge]],
     * [[applyChanges]], [[applyChangesScd2]], [[repairScd2]] and
     * [[mergeInto]]'s `onKeys`): the batch's bounds and probes are
-    * snapshot-independent, so they compute once per call, and
+    * snapshot-independent, so they compute at most once per call (never
+    * when no snapshot exists to prune, so a first streaming batch is not
+    * evaluated for them), and
     * [[candidates]] narrows one attempt's active files to those that may
     * hold a batch key — the [[skipFiles]] rule over the attempt's
     * persisted bloom frame. Range bounds prune nothing when the key is
@@ -3886,8 +3888,8 @@ object TxLog {
     * cut the rewrite to files that might actually hold a batch key. */
   private final class KeyPrune(table: String, batch: DataFrame,
       keyCols: Seq[String]) {
-    private val bounds = mergeKeyBounds(batch, keyCols)
-    private val probes = mergeKeyProbes(batch, keyCols)
+    private lazy val bounds = mergeKeyBounds(batch, keyCols)
+    private lazy val probes = mergeKeyProbes(batch, keyCols)
     def candidates(base: Option[Long], bi: BloomIndex): Seq[String] = {
       // a probe column is used only when the batch's column TYPE matches
       // the logged type — xxhash64 of an Int and a Long differ, and a
@@ -6182,10 +6184,10 @@ object TxLog {
     * exceeds `maxDeletedFraction` — those files scan and probe many dead
     * rows on every read — and leave lightly-deleted files
     * riding their cheap DVs. DV files whose every referenced data file
-    * has left the active set retire with the commit. All bookkeeping
-    * collects are metadata-sized (one row per DV'd file / per DV-file
-    * reference). Returns the base version unchanged when nothing crosses
-    * the threshold. */
+    * has left the active set retire with the commit. Dead rows come from
+    * the DV bitsets, row totals from the commit log (a pre-row-count file
+    * reads its footer), so no data file is scanned to decide. Returns the
+    * base version unchanged when nothing crosses the threshold. */
   def optimizeDvs(spark: SparkSession, table: String,
       maxDeletedFraction: Double = 0.2): Long =
     compact(spark, table, "optimizeDvs", "optimizeDvs") { (base, files) =>
@@ -6195,15 +6197,14 @@ object TxLog {
         // dead rows per data-file key: the cardinality of its bitset
         val dead = dvBitmaps(spark, table, dvs).map { case (f, bm) =>
           f -> graft.functions.DvBitmapCodec.cardinality(bm) }
-        // total rows per file (projection-free scan keyed like the DV)
-        val totals = spark.read
-          .parquet(files.map(resolve(table, _)): _*)
-          .select(relFileKey.alias("_f")).groupBy("_f").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        files.filter { f =>
-          val k = fileKey(f)
-          dead.get(k).exists(d =>
-            d.toDouble / math.max(totals.getOrElse(k, d), 1L) > maxDeletedFraction)
+        // total rows per DV'd file: commit-recorded, else its footer
+        val dvd = files.filter(f => dead.contains(fileKey(f)))
+        val recorded = stateAt(table, base).rows
+        val footed = footers(table, dvd.filterNot(recorded.contains))
+        dvd.filter { f =>
+          val d = dead(fileKey(f))
+          val total = recorded.get(f).orElse(footed.get(f).map(_._1))
+          d.toDouble / math.max(total.getOrElse(d), 1L) > maxDeletedFraction
         }
       }
     }.fold(_.get, identity)

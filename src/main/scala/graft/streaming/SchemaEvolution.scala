@@ -69,10 +69,9 @@ object SchemaEvolution {
     * bookkeeping a restart reads its source schema from. The write goes
     * through a temp file + checked rename: `create(overwrite)` truncates
     * in place, so a crash mid-write would leave an empty DDL file that
-    * breaks every subsequent restart (the interrupted-swap failure class
-    * [[graft.ops.SafeSwap]] exists for, in miniature). A crash BETWEEN the
-    * delete and the rename is covered on the read side: [[load]] recovers
-    * the complete tmp, and the next track() re-runs the swap to completion. */
+    * breaks every subsequent restart. A crash BETWEEN the delete and the
+    * rename is covered on the read side: [[load]] recovers the complete
+    * tmp, and the next track() re-runs the swap to completion. */
   def track(spark: SparkSession, schemaDir: String,
       observed: StructType): StructType = {
     val tracked = load(spark, schemaDir).getOrElse(observed)

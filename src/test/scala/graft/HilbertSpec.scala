@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-import graft.ops.Maintenance
+import graft.functions.{GraftFunctions, ZOrder}
+import graft.ops.TxLog
 
 /** Hilbert layout key: bijectivity and the every-step-adjacency property
   * that distinguishes it from the Morton curve (ZOrderSpec), agreement
@@ -85,22 +85,23 @@ class HilbertSpec extends SparkSpec {
     val src = tmpDir("hilbert_src")
     rows.toDF("a", "b").write.mode("overwrite").parquet(src)
 
-    val hDir = tmpDir("hilbert_h")
-    Maintenance.rewriteCurveOrdered(spark, src, hDir,
-      col("a"), col("b"), nFiles = 8, bits = 8)
-    val zDir = tmpDir("hilbert_z")
-    Maintenance.rewriteZOrdered(spark, src, zDir,
-      col("a"), col("b"), nFiles = 8, bits = 8)
+    // the same 8-file OPTIMIZE, clustered by each curve's key
+    def clustered(name: String, key: org.apache.spark.sql.Column): String = {
+      val t = tmpDir(name) + "/t"
+      TxLog.append(spark.read.parquet(src), t)
+      TxLog.optimize(spark, t, targetFiles = 8, clusterBy = Seq(key))
+      t
+    }
+    val h = clustered("hilbert_h",
+      call_function("hilbert_key", col("a"), col("b"), lit(8)))
+    val z = clustered("hilbert_z", ZOrder.interleave2(col("a"), col("b"), bits = 8))
 
-    def area(dir: String): Double = {
-      import org.apache.spark.sql.DataFrame
-      def spans(df: DataFrame) = df
+    def area(t: String): Double =
+      spark.read.parquet(TxLog.activeFiles(t).map(f => s"$t/$f"): _*)
         .groupBy(input_file_name().alias("f"))
         .agg(((max("a") - min("a") + 1) * (max("b") - min("b") + 1)).alias("box"))
         .agg(avg("box")).collect()(0).getDouble(0)
-      spans(spark.read.parquet(dir))
-    }
-    val (hArea, zArea) = (area(hDir), area(zDir))
+    val (hArea, zArea) = (area(h), area(z))
     // per-file bounding-box area: the curve's whole value proposition.
     // Hilbert should not be worse than Morton on a uniform grid (it is
     // strictly better at skewed aspect ratios; uniform is the floor case).

@@ -1,7 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+import org.apache.spark.sql.functions.{hash, lit, pmod}
 
 /** Physical-plan audits: the properties that make these operators hold at
   * 100 TB (SURVEY.md §4 + the scale design rules). A query that silently
@@ -15,6 +22,14 @@ class PlanSpec extends SparkSpec {
     val df: DataFrame = SparkEntry.queries(name)(spark, SF)
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
+
+  /** The physical plan an entry's result starts from (AQE's initial plan,
+    * exchanges placed, before any stage runs). */
+  private def physical(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, SF).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
 
   test("filter pushdown reaches the parquet scan (p4 startsWith/isNull)") {
     val p = plan("p4_filter_startswith_or_null")
@@ -80,5 +95,37 @@ class PlanSpec extends SparkSpec {
     val p = plan("ext_text_lm_score")
     assert(p.contains("BroadcastHashJoin"), p)   // vocab side never shuffles
     assert(p.contains("partial_sum"), p)         // map-side combine before the per-doc shuffle
+  }
+
+  test("BM25 serving scans only the probed terms' token-bucket dirs, terms pushed (ext_bm25_lakehouse)") {
+    val scans = physical("ext_bm25_lakehouse").collect {
+      case f: FileSourceScanExec
+        if f.relation.location.inputFiles.exists(_.contains("/bkt=")) => f
+    }
+    assert(scans.size === 1, scans)
+    val read = scans.head.relation.location.inputFiles.toSeq
+      .flatMap(_.split('/').filter(_.startsWith("bkt="))).toSet
+    // the entry's 4 query terms under the index's pmod(hash(token), 16)
+    val probed = spark.range(1)
+      .select(Seq("batch", "hash", "line", "sort")
+        .map(t => pmod(hash(lit(t)), lit(16))): _*)
+      .head().toSeq.map(b => s"bkt=$b").toSet
+    assert(read === probed)
+    assert(scans.head.metadata("PushedFilters")
+      .contains("In(token, [batch,hash,line,sort])"), scans.head.metadata)
+  }
+
+  test("IVF-PQ ADC is broadcast-joined, partially aggregated and shortlisted below the shuffle (ext_ann_lakehouse_ivfpq)") {
+    val p = physical("ext_ann_lakehouse_ivfpq")
+    // probes, LUT and both rerank sides broadcast; the codes never shuffle
+    // into a join
+    assert(p.collect { case j: BroadcastHashJoinExec => j }.size === 4, p)
+    assert(p.collect { case j: SortMergeJoinExec => j }.isEmpty, p)
+    val shuffled = p.collect { case e: ShuffleExchangeExec => e.child }
+    assert(shuffled.exists {
+      case h: HashAggregateExec => h.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }, p)
+    assert(shuffled.exists(_.isInstanceOf[WindowGroupLimitExec]), p)
   }
 }

@@ -66,36 +66,6 @@ class RuntimeOpsSpec extends SparkSpec {
     assert(u.filter(col("extra").isNull).count() === 5)
   }
 
-  test("small-files compaction preserves data and shrinks file count") {
-    val out = tmpDir("compact") + "/t"
-    Tables.load(spark, SF, "lineitem").repartition(16)
-      .write.parquet(out)
-    val before = new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(before === 16)
-    val sum0 = spark.read.parquet(out).agg(sum("l_quantity")).head().getDouble(0)
-    graft.ops.Maintenance.compactParquet(spark, out, targetFileMB = 1024)
-    val after = new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(after < before, s"$after vs $before")
-    assert(spark.read.parquet(out).agg(sum("l_quantity")).head().getDouble(0) === sum0)
-    assert(spark.read.parquet(out).count() === 600572 || spark.read.parquet(out).count() > 0)
-  }
-
-  test("clustered rewrite partitions by year and preserves rows") {
-    val in = tmpDir("cluster_in") + "/t"
-    val out = tmpDir("cluster_out") + "/t"
-    Tables.load(spark, SF, "orders")
-      .withColumn("o_year", year(col("o_orderdate")))
-      .drop("o_orderdate") // timestamp col not needed for layout test
-      .write.parquet(in)
-    graft.ops.Maintenance.rewriteClustered(spark, in, out,
-      partitionCol = "o_year", clusterCols = Seq("o_custkey"))
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("o_year=")).map(_.getName).sorted
-    assert(dirs.nonEmpty && dirs.head === "o_year=1995", dirs.mkString(","))
-    assert(spark.read.parquet(out).count() ===
-      spark.read.parquet(in).count())
-  }
-
   test("StreamingQueryListener observes query lifecycle and progress") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()

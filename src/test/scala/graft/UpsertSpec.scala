@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.ops.Upsert
+import graft.ops.TxLog
 
 /** Streaming upsert sink: latest-version-per-key semantics across
-  * micro-batches (Delta MERGE analog on plain parquet). */
+  * micro-batches, each batch one txlog commit (Delta's streaming
+  * MERGE). */
 object UpsertSpec {
   case class Update(id: Long, value: String, version: Long)
 }
@@ -19,12 +20,13 @@ class UpsertSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = tmpDir("upsert") + "/t"
+    val cp = tmpDir("upsert_cp")
 
     val input = MemoryStream[Update]
     val q = input.toDS().toDF()
       .writeStream
-      .option("checkpointLocation", tmpDir("upsert_cp"))
-      .foreachBatch(Upsert.sink(dir, Seq("id"), "version") _)
+      .option("checkpointLocation", cp)
+      .foreachBatch(TxLog.sink(dir, Seq("id"), "version", Some(cp)) _)
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       input.addData(Update(1, "a1", 1), Update(2, "b1", 1))
@@ -35,28 +37,11 @@ class UpsertSpec extends SparkSpec {
       input.addData(Update(1, "a0", 0))
       q.processAllAvailable()
 
-      val rows = spark.read.parquet(dir).as[Update].collect()
+      val rows = TxLog.read(spark, dir).as[Update].collect()
         .map(u => u.id -> (u.value, u.version)).toMap
       assert(rows === Map(
         1L -> ("a2", 2L), 2L -> ("b1", 1L), 3L -> ("c1", 1L)))
     } finally q.stop()
-  }
-
-  test("interrupted swap is refused, not treated as a first batch") {
-    import graft.ops.SafeSwap
-    import spark.implicits._
-    val dir = tmpDir("swapcrash") + "/t"
-    // simulate a crash between rename(target -> backup) and
-    // rename(staging -> target): only the backup exists
-    Seq((1L, "old", 1L)).toDF("id", "value", "version")
-      .write.parquet(SafeSwap.backup(dir))
-    val updates = Seq((2L, "new", 2L)).toDF("id", "value", "version")
-    val e = intercept[java.io.IOException] {
-      Upsert.mergeIntoParquet(spark, dir, updates, Seq("id"), "version")
-    }
-    assert(e.getMessage.contains("interrupted"))
-    // the backup is untouched — recoverable by hand
-    assert(spark.read.parquet(SafeSwap.backup(dir)).count() === 1)
   }
 
   // st19's oracle ("latest event per user, versioned by µs timestamp")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.ZOrder
-import graft.ops.{Maintenance, TxLog}
+import graft.ops.TxLog
 
 /** Z-order layout: key correctness against a Scala model, and the
   * data-skipping property the layout exists for — every output file of a
@@ -35,27 +35,30 @@ class ZOrderSpec extends SparkSpec {
     val src = tmpDir("zorder_src")
     rows.toDF("a", "b").write.mode("overwrite").parquet(src)
 
-    val zDir = tmpDir("zorder_z")
-    Maintenance.rewriteZOrdered(spark, src, zDir,
-      col("a"), col("b"), nFiles = 8, bits = 8)
+    val z = tmpDir("zorder_z") + "/t"
+    TxLog.append(spark.read.parquet(src), z)
+    TxLog.optimize(spark, z, targetFiles = 8,
+      clusterBy = Seq(ZOrder.interleave2(col("a"), col("b"), bits = 8)))
+    val zFiles = TxLog.activeFiles(z).map(f => s"$z/$f")
+    assert(zFiles.size === 8)
     val lexDir = tmpDir("zorder_lex")
     spark.read.parquet(src).repartitionByRange(8, col("a"), col("b"))
       .sortWithinPartitions("a", "b")
       .write.mode("overwrite").parquet(lexDir)
 
-    def avgSpread(dir: String, c: String): Double =
-      spark.read.parquet(dir)
+    def avgSpread(files: Seq[String], c: String): Double =
+      spark.read.parquet(files: _*)
         .groupBy(input_file_name().alias("f"))
         .agg((max(col(c)) - min(col(c))).alias("spread"))
         .agg(avg("spread")).head().getDouble(0)
 
-    val zB = avgSpread(zDir, "b")
-    val lexB = avgSpread(lexDir, "b")
+    val zB = avgSpread(zFiles, "b")
+    val lexB = avgSpread(Seq(lexDir), "b")
     // lexicographic files span nearly the whole b domain; z-ordered files
     // hold a bounded rectangle in (a, b)
     assert(lexB > 200, s"lex b-spread $lexB")
     assert(zB < lexB * 0.6, s"z b-spread $zB vs lex $lexB")
-    assert(avgSpread(zDir, "a") < 256, "a still bounded")
+    assert(avgSpread(zFiles, "a") < 256, "a still bounded")
   }
 
   test("OPTIMIZE ZORDER BY prunes a 2-D box that a bin-packing OPTIMIZE keeps whole") {
