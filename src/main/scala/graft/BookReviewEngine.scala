@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.{DetailsClean, ReviewsClean}
+import graft.etl.{DetailsClean, ReviewsClean, Schemas}
 import graft.medallion.Medallion
 
 /** The switch-over facade: everything the reference's three notebooks do,
@@ -16,16 +16,19 @@ import graft.medallion.Medallion
   */
 object BookReviewEngine {
 
-  /** books_data.csv → cleaned 11-column parquet (details.py end-to-end). */
+  /** books_data.csv → cleaned 11-column parquet (details.py end-to-end),
+    * read back with its declared schema, so no job infers it from the
+    * footers. */
   def cleanDetails(spark: SparkSession, rawCsv: String, outParquet: String): DataFrame = {
     DetailsClean.run(spark, rawCsv, outParquet)
-    spark.read.parquet(outParquet)
+    spark.read.schema(Schemas.detailsCleaned).parquet(outParquet)
   }
 
-  /** Books_rating.csv → cleaned 10-column parquet (reviews.py end-to-end). */
+  /** Books_rating.csv → cleaned 10-column parquet (reviews.py end-to-end),
+    * read back with its declared schema as [[cleanDetails]] is. */
   def cleanReviews(spark: SparkSession, rawCsv: String, outParquet: String): DataFrame = {
     ReviewsClean.run(spark, rawCsv, outParquet)
-    spark.read.parquet(outParquet)
+    spark.read.schema(Schemas.ratingsCleaned).parquet(outParquet)
   }
 
   /** Streaming bronze→silver→gold over the two cleaned dirs; returns gold

@@ -9,8 +9,9 @@ import graft.Graft
 /** Batch cleaning of raw book-ratings CSV → 10-column cleaned table,
   * re-expressing Amazon-book-review_books_reviews.py. Preserves the
   * reference's mean-imputation ordering quirk (nulls dropped BEFORE the
-  * mean fill, so the fill is a no-op on score — SURVEY.md §7.4.4) and its
-  * ANSI-off division/cast semantics (x/0 → NULL, garbage cast → NULL).
+  * mean fill, so the fill is a no-op on score — SURVEY.md §7.4.4; the
+  * no-op is therefore not run, see [[fillNulls]]) and its ANSI-off
+  * division/cast semantics (x/0 → NULL, garbage cast → NULL).
   */
 object ReviewsClean {
 
@@ -42,17 +43,19 @@ object ReviewsClean {
   /** Drop the 84%-null Price column (reviews.py:86-93). */
   def dropPrice(df: DataFrame): DataFrame = df.drop("Price")
 
-  /** Global mean of score (reviews.py:102) then per-column fills
-    * (reviews.py:104-107). The score fill is a no-op by construction —
-    * reproduced, not "fixed". */
-  def fillNulls(df: DataFrame): DataFrame = {
-    val meanScore = df.agg(avg(col("review/score"))).first().getDouble(0)
+  /** Per-column fills (reviews.py:104-107). The reference first takes
+    * the global mean of score (reviews.py:102), then fills the text
+    * columns with "N.A", `Review_helpfulness` with 0 and score with that
+    * mean. The score fill is a no-op by construction: [[castAndDropScore]]
+    * already dropped every NULL and NaN score (`na.drop` counts NaN as
+    * NULL), so it is left out. Taking the mean cost a second pass over
+    * the input, and when no score survived the mean was NULL and reading
+    * it threw. */
+  def fillNulls(df: DataFrame): DataFrame =
     df.na.fill(Map(
         "Title" -> "N.A", "User_id" -> "N.A", "profileName" -> "N.A",
         "review/summary" -> "N.A", "review/text" -> "N.A"))
       .na.fill(Map("Review_helpfulness" -> 0.0))
-      .na.fill(Map("review/score" -> meanScore))
-  }
 
   /** Final 10-column shape with renames (reviews.py:113). */
   def finalProjection(df: DataFrame): DataFrame =

@@ -177,7 +177,12 @@ object TxLog {
       // targets conflicts only with writers touching THOSE files, not
       // with everything. Absent on older logs → conservative (conflicts
       // with all), never wrong.
-      dvTargets: Seq[String] = Seq.empty)
+      dvTargets: Seq[String] = Seq.empty,
+      // the columns each `bloomAdd` sidecar indexes, so a writer learns
+      // the indexed set from the snapshot fold before its write job
+      // starts, without reading a sidecar. Absent on older logs: their
+      // sidecars are read for it ([[activeBloomCols]]).
+      bloomCols: Map[String, Seq[String]] = Map.empty)
 
   /** Highest protocol version this reader understands. A reader meeting a
     * HIGHER version fails loudly instead of silently misinterpreting
@@ -286,6 +291,17 @@ object TxLog {
   }
 
   private val mapper = new ObjectMapper()
+
+  /** A JSON object of string arrays (absent: empty), and its writer. */
+  private def strSeqMap(
+      n: com.fasterxml.jackson.databind.JsonNode): Map[String, Seq[String]] =
+    Option(n).map(_.properties().asScala.map(e =>
+      e.getKey -> e.getValue.elements().asScala.map(_.asText()).toSeq).toMap)
+      .getOrElse(Map.empty)
+
+  private def putStrSeqMap(o: com.fasterxml.jackson.databind.node.ObjectNode,
+      m: Map[String, Seq[String]]): Unit =
+    m.foreach { case (k, vs) => val a = o.putArray(k); vs.foreach(a.add) }
 
   private def logDir(table: String): Path = Paths.get(table, "_txlog")
 
@@ -567,7 +583,8 @@ object TxLog {
             s.properties().asScala.map(e =>
               e.getKey -> e.getValue.asLong()).toMap
           }.getOrElse(Map.empty),
-          dvTargets = optArr("dvTargets"))
+          dvTargets = optArr("dvTargets"),
+          bloomCols = strSeqMap(node.get("bloomCols")))
       }
 
   /** Latest committed version, from the LISTING alone — commit filenames
@@ -677,7 +694,9 @@ object TxLog {
       // the EXACT batch ids of legacy streamId-less commits (those match
       // any stream — a max would wrongly swallow a NEW stream's batch 0)
       guardMax: Map[String, Long] = Map.empty,
-      wildcardBatches: Set[Long] = Set.empty) {
+      wildcardBatches: Set[Long] = Set.empty,
+      // indexed columns per active bloom sidecar that recorded them
+      bloomCols: Map[String, Seq[String]] = Map.empty) {
 
     def update(c: Commit): TableState = TableState.foldAll(this, Seq(c))
 
@@ -707,6 +726,7 @@ object TxLog {
           case (f, b) => b + c.rows.getOrElse(f, 0L)
         }.maxOption.getOrElse(0L)),
         minReader = math.max(minReader, c.minReader),
+        bloomCols = bloomCols -- c.bloomRemove ++ c.bloomCols,
         copySources = copySources ++ c.copySources,
         guardMax = c.streamId match {
           case Some(sid) if c.batchId >= 0 => guardMax +
@@ -767,6 +787,7 @@ object TxLog {
       guardMax.foreach { case (sid, b) => go.put(sid, b) }
       val wa = node.putArray("wildcardBatches")
       wildcardBatches.toSeq.sorted.foreach(wa.add)
+      putStrSeqMap(node.putObject("bloomCols"), bloomCols)
     }
   }
 
@@ -836,7 +857,8 @@ object TxLog {
         copySources = strs("copySources").toSet,
         guardMax = longMap("guardMax"),
         wildcardBatches = Option(n.get("wildcardBatches")).map(
-          _.elements().asScala.map(_.asLong()).toSet).getOrElse(Set.empty))
+          _.elements().asScala.map(_.asLong()).toSet).getOrElse(Set.empty),
+        bloomCols = strSeqMap(n.get("bloomCols")))
     }
   }
 
@@ -856,7 +878,8 @@ object TxLog {
       sstats = a.sstats ++ b.sstats,
       rows = a.rows ++ b.rows,
       nulls = a.nulls ++ b.nulls,
-      baseRowIds = a.baseRowIds ++ b.baseRowIds))
+      baseRowIds = a.baseRowIds ++ b.baseRowIds,
+      bloomCols = a.bloomCols ++ b.bloomCols))
 
   /** Per-table cache for [[stateAt]] — the state-checkpoint parse and the
     * tail fold both reuse across calls; only NEW tail commits re-parse
@@ -1270,7 +1293,7 @@ object TxLog {
 
   /** [[tryCommit]] with the add files' footer counts already read
     * (`feet`, keyed by add entry; a file absent from it records no rows
-    * or nulls): [[swap]] passes the ones [[fileMeta]] read when it
+    * or nulls): [[swap]] passes the ones [[stage]] read when it
     * staged the files, so each staged footer is opened once. */
   private def publish(table: String, commit: Commit,
       feet: Map[String, FooterCounts]): Boolean = {
@@ -1420,6 +1443,8 @@ object TxLog {
     if (commit.bloomRemove.nonEmpty) {
       val a = node.putArray("bloomRemove"); commit.bloomRemove.foreach(a.add)
     }
+    if (commit.bloomCols.nonEmpty)
+      putStrSeqMap(node.putObject("bloomCols"), commit.bloomCols)
     commit.colMap.foreach { m =>
       val cm = node.putObject("colMap")
       m.foreach { case (logical, physical) => cm.put(logical, physical) }
@@ -1573,7 +1598,17 @@ object TxLog {
     * files and reconstructed at read time, so the layout is what a
     * Hive/Delta-aware engine expects on disk. */
   def writeData(df: DataFrame, table: String,
-      mapping: Option[Map[String, String]]): Seq[String] = {
+      mapping: Option[Map[String, String]]): Seq[String] =
+    writeFiles(df, table, mapping, None)._1
+
+  /** [[writeData]], collecting the skipping metadata `meta` asks for
+    * inside the write job ([[FileMetaTracker]]): the staged relative
+    * paths, and per staged path its [[FileMeta]]. With `sized`, a table
+    * with no declared partition or cluster columns stages files sized to
+    * the data ([[sizedPartitions]]). */
+  private def writeFiles(df: DataFrame, table: String,
+      mapping: Option[Map[String, String]], meta: Option[MetaSpec],
+      sized: Boolean = false): (Seq[String], Map[String, FileMeta]) = {
     // Column mapping: stage under PHYSICAL names — the one choke point
     // every write path (append, overwrite, merge/DML rewrites, OPTIMIZE,
     // streaming sink) already funnels through. `mapping` is the one the
@@ -1604,29 +1639,69 @@ object TxLog {
     val clusterCols = declaredCols(table, "graft.cluster.columns")
       .map(physName).filter(staged0.columns.contains)
     val staged =
-      if (clusterCols.isEmpty || partCols.nonEmpty) staged0
-      else {
+      if (partCols.nonEmpty) staged0
+      else if (clusterCols.nonEmpty) {
         val n = math.max(1, staged0.rdd.getNumPartitions)
         staged0.repartitionByRange(n, clusterCols.map(col): _*)
           .sortWithinPartitions(clusterCols.map(col): _*)
+      } else if (sized) sizedPartitions(staged0, table)
+        .fold(staged0)(staged0.coalesce)
+      else staged0
+    val tracker = meta.filterNot(_.isEmpty)
+      .map(new FileMetaTracker(_, 1 + partCols.size))
+    org.apache.spark.sql.GraftWriteBridge.writeParquet(staged,
+      s"$table/$sub", partCols, tracker.toSeq)
+    val root = Paths.get(table, sub)
+    val add = walkDir(root)
+      .filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".parquet")
       }
-    if (partCols.isEmpty) {
-      staged.write.parquet(s"$table/$sub")
-      listDir(Paths.get(table, sub))
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        .sorted
-        .map(n => s"$sub/$n")
-    } else {
-      staged.write.partitionBy(partCols: _*).parquet(s"$table/$sub")
-      val root = Paths.get(table, sub)
-      walkDir(root)
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("part-") && n.endsWith(".parquet")
-        }
-        .map(p => s"$sub/${root.relativize(p)}")
-        .sorted
+      .map(p => s"$sub/${root.relativize(p)}")
+      .sorted
+    (add, tracker.fold(Map.empty[String, FileMeta])(
+      _.results.map { case (k, m) => s"$sub/$k" -> m }.toMap))
+  }
+
+  /** The partition count that stages `df` in files of about the table's
+    * `graft.autoCompact.targetSize` (default 128 MiB, the size
+    * auto-compaction packs toward): ceil(estimated bytes / target). The
+    * estimate is the optimized plan's `sizeInBytes`. None — keep the
+    * frame's shape — where the caller chose the shape (a repartition on
+    * top, a `range` with explicit slices) or the estimate is no upper
+    * bound on the output: a leaf of unknown size (Spark's default
+    * estimate, as for an RDD), a streaming plan, an operator that can
+    * emit more rows than it reads (`Generate`, the typed map and group
+    * operators), or an estimate of 10 000 target files and more (a join
+    * estimates the product of its sides). Applied as a coalesce, which
+    * adds no shuffle and never raises the partition count: a 37-row
+    * append writes one file instead of one per core (Delta's optimized
+    * writes apply the same cure at write time). */
+  private def sizedPartitions(df: DataFrame, table: String): Option[Int] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val plan = df.queryExecution.optimizedPlan
+    def chosen(p: LogicalPlan): Boolean = p match {
+      case _: RepartitionOperation => true
+      case r: Range => r.numSlices.isDefined
+      case _: Project | _: Filter => chosen(p.children.head)
+      case s: Sort => !s.global && chosen(s.child)
+      case _ => false
+    }
+    val unknown = df.sparkSession.sessionState.conf.defaultSizeInBytes
+    val unbounded = plan.isStreaming ||
+      plan.collectLeaves().exists(_.stats.sizeInBytes >= unknown) ||
+      plan.exists {
+        case _: Generate | _: MapPartitions | _: MapGroups | _: CoGroup |
+            _: FlatMapGroupsWithState => true
+        case _ => false
+      }
+    if (chosen(plan) || unbounded) None
+    else {
+      val target = properties(table).get("graft.autoCompact.targetSize")
+        .flatMap(_.trim.toLongOption).filter(_ > 0)
+        .getOrElse(128L * 1024 * 1024)
+      val n = (plan.stats.sizeInBytes + target - 1) / target
+      Option.when(n < 10000)(n.max(1).toInt)
     }
   }
 
@@ -2474,83 +2549,21 @@ object TxLog {
           cur.fields ++ added.map(_.copy(nullable = true)))
     }
 
-  /** The skipping metadata of freshly staged `files`, which hold
-    * `schema` (the physical schema the write used, partition columns
-    * excluded; passing it skips parquet schema inference): per-file
-    * (min, max) of `statsCols` and per-file bloom filters for
-    * `bloomCols`, both physical names, from ONE distributed aggregation
-    * grouped by input_file_name. The collect is one row per file —
-    * bounds plus finished filters, O(batch files × filter bytes), the
-    * same commit-bounded collected size as the commit itself.
-    *
-    * Stats: numeric and timestamp columns record double bounds
-    * ([[doubleCastable]]); STRING columns record their bounds AS STRINGS
-    * in `sstats` (Spark's min/max on strings is UTF8String binary order —
-    * compared back with [[utf8Cmp]]). Casting a lexicographic string
-    * min/max through double is never done: for numeric-looking strings it
-    * records inverted garbage bounds ('100','9' → (100.0, 9.0)) that can
-    * wrongly prune a file holding a contested merge key. Columns of any
-    * other type record nothing — the file is simply never pruned on them,
-    * the safe direction. A column all NULL within one file records no
-    * bounds and no filter.
-    *
-    * Blooms: Spark's codegen'd sketch aggregate (partial filters OR
-    * together map-side), staged as ONE sidecar parquet (file, col, bloom
-    * BINARY; `file` is the staged relative path, which readers compare
-    * through [[fileKey]] — a partitioned path has a third segment); the
-    * sidecar's relative paths become the commit's `bloomAdd`. Filters are
-    * sized at ~3 % fpp from the batch's largest file, clamped to the
-    * sketch aggregate's ceilings. The row counts come from the staged
-    * files' parquet footers ([[footers]], read once here and carried to
-    * the commit in [[Staged]]), not from a counting pass:
-    * a file whose footer cannot be read contributes no count, and the
-    * filters are then sized from the largest count that was read (floor
-    * 64). An over-full filter only costs extra false positives (extra
-    * reads), never a missed row. A zero-row write (Spark still stages a
-    * schema-only part file) has no groups: it records nothing. */
-  private def fileMeta(spark: SparkSession, table: String,
-      files: Seq[String], schema: org.apache.spark.sql.types.StructType,
-      statsCols: Seq[String], bloomCols: Seq[String]): Staged = {
-    val numCols = statsCols.filter(c => doubleCastable(schema(c).dataType))
-    val strCols = statsCols.filter(c =>
-      schema(c).dataType == org.apache.spark.sql.types.StringType)
-    val feet = footers(table, files)
-    if (files.isEmpty || numCols.isEmpty && strCols.isEmpty && bloomCols.isEmpty)
-      return Staged(files, Map.empty, Map.empty, Seq.empty, feet)
-    lazy val est = math.min(math.max(
-      feet.values.map(_._1).maxOption.getOrElse(0L), 64L), 4000000L)
-    lazy val bits = math.min(est * 8L, 67108864L) // ~7.3 bits/key = 3% fpp
-    if (bloomCols.nonEmpty) graft.functions.GraftFunctions.register(spark)
-    val aggs = numCols.flatMap(c => Seq(min(col(c)).cast("double"),
-      max(col(c)).cast("double"))) ++
-      strCols.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-      bloomCols.map(c => call_function("bloom_agg", xxhash64(col(c)),
-        lit(est), lit(bits)))
-    val rows = spark.read.schema(schema)
-      .parquet(files.map(f => s"$table/$f"): _*)
-      .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*)
-      .collect()
-    // canonical fileKey set lookup (last two path segments match between
-    // the staged rel entries and input_file_name URIs) — no linear
-    // suffix scan over the staged set
-    val relByKey = files.map(f => fileKey(f) -> f).toMap
-    val byFile = rows.toSeq.flatMap(r =>
-      relByKey.get(fileKey(r.getString(0))).map(_ -> r))
-    def bounds[T](cols: Seq[String], at: Int)(get: (Row, Int) => T)
-        : Map[String, Map[String, (T, T)]] =
-      byFile.map { case (rel, r) =>
-        rel -> cols.zipWithIndex.flatMap { case (c, i) =>
-          val (a, b) = (at + 2 * i, at + 2 * i + 1)
-          Option.when(!r.isNullAt(a) && !r.isNullAt(b))(
-            c -> (get(r, a), get(r, b)))
-        }.toMap
-      }.filter(_._2.nonEmpty).toMap
-    val at = 1 + 2 * (numCols.size + strCols.size)
-    val filters = byFile.flatMap { case (rel, r) =>
-      bloomCols.zipWithIndex.collect { case (c, i) if !r.isNullAt(at + i) =>
-        (rel, c, r.getAs[Array[Byte]](at + i))
-      }
-    }
+  /** The commit half of the skipping metadata of `add`, staged files of
+    * `table`: their [[FileMeta]] (`metas`, by staged path) become the
+    * commit's `stats` and `sstats`, and their filters one sidecar parquet
+    * (file, col, bloom BINARY; `file` is the staged relative path, which
+    * readers compare through [[fileKey]] — a partitioned path has a third
+    * segment). The sidecar's relative paths become the commit's
+    * `bloomAdd`, each recorded with the columns it indexes. The footer
+    * counts (`feet`, read once per staged file) ride along to the commit
+    * in [[Staged]]. */
+  private def recordMeta(spark: SparkSession, table: String,
+      add: Seq[String], metas: Map[String, FileMeta],
+      feet: Map[String, FooterCounts]): Staged = {
+    val byFile = add.flatMap(f => metas.get(f).map(f -> _))
+    val filters = byFile.flatMap { case (f, m) =>
+      m.blooms.toSeq.sortBy(_._1).map { case (c, b) => (f, c, b) } }
     val bloomAdd = if (filters.isEmpty) Seq.empty else {
       val sub = s"bl-${UUID.randomUUID().toString.take(8)}"
       import spark.implicits._
@@ -2562,21 +2575,42 @@ object TxLog {
         .sorted
         .map(n => s"$sub/$n")
     }
-    Staged(files, bounds(numCols, 1)(_.getDouble(_)),
-      bounds(strCols, 1 + 2 * numCols.size)(_.getString(_)), bloomAdd, feet)
+    val cols = filters.map(_._2).distinct
+    Staged(add,
+      byFile.collect { case (f, m) if m.stats.nonEmpty => f -> m.stats }.toMap,
+      byFile.collect { case (f, m) if m.sstats.nonEmpty => f -> m.sstats }.toMap,
+      bloomAdd, feet, bloomAdd.map(_ -> cols).toMap)
   }
 
-  /** Types whose min/max cast to double losslessly enough for range
-    * stats: numerics, and timestamps (epoch seconds — the same cast
-    * [[mergeKeyBounds]] and range callers apply, so units always agree).
-    * Event-time is the most common clustering column at lake scale;
-    * without this a time-range read would open every footer. */
-  private def doubleCastable(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case _: org.apache.spark.sql.types.TimestampType => true
-      case _ => false
-    }
+  /** The bounds of `files`, files already in the table directory that no
+    * write of this engine staged (a converted directory's links): one
+    * scan of the `spec` stats columns feeds each file's rows to a
+    * [[FileMetaAcc]] — the accumulator a staged write's tasks use — and
+    * the partial results of a file split across tasks merge on the
+    * driver. No bloom column is read: a directory has no log before its
+    * conversion, so nothing declares or indexes one. */
+  private def scanBounds(spark: SparkSession, table: String,
+      files: Seq[String], spec: MetaSpec): Map[String, FileMeta] = {
+    val cols = spec.numCols ++ spec.strCols
+    if (files.isEmpty || cols.isEmpty) return Map.empty
+    val read = org.apache.spark.sql.types.StructType(cols.map(spec.schema(_)))
+    val scanSpec = MetaSpec(read, cols, Seq.empty)
+    val relByKey = files.map(f => fileKey(f) -> f).toMap
+    val n = cols.size
+    spark.read.schema(read).parquet(files.map(f => s"$table/$f"): _*)
+      .withColumn("_file", input_file_name()).queryExecution.toRdd
+      .mapPartitions { it =>
+        val accs = scala.collection.mutable.LinkedHashMap
+          .empty[String, FileMetaAcc]
+        it.foreach { r =>
+          accs.getOrElseUpdate(fileKey(r.getUTF8String(n).toString),
+            new FileMetaAcc(scanSpec)).add(r)
+        }
+        accs.iterator.map { case (k, a) => k -> a.result() }
+      }.collect().toSeq
+      .groupMapReduce(_._1)(_._2)(_ mergeBounds _)
+      .flatMap { case (k, m) => relByKey.get(k).map(_ -> m) }
+  }
 
   /** Lexicographic comparison in UTF-8 byte (unsigned) order — the same
     * total order Spark's UTF8String binary collation uses for string
@@ -2600,26 +2634,35 @@ object TxLog {
 
   /** The active bloom sidecars as of `asOf`, read as one plain frame
     * (file, col, bloom BINARY), or None when there are none. Every
-    * sidecar is written by [[fileMeta]] with that one schema, so it is
+    * sidecar is written by [[recordMeta]] with that one schema, so it is
     * given, not inferred. One-shot lookups probe this frame; a keyed
     * write attempt probes its [[BloomIndex]]'s persisted copy instead. */
   private def sidecarFrame(spark: SparkSession, table: String,
-      asOf: Option[Long]): Option[DataFrame] = {
-    val bls = activeBlooms(table, asOf)
+      asOf: Option[Long]): Option[DataFrame] =
+    sidecars(spark, table, activeBlooms(table, asOf))
+
+  private def sidecars(spark: SparkSession, table: String,
+      bls: Seq[String]): Option[DataFrame] =
     Option.when(bls.nonEmpty)(spark.read
       .schema("file STRING, col STRING, bloom BINARY")
       .parquet(bls.map(resolve(table, _)): _*))
-  }
 
-  /** Columns any active bloom sidecar indexes — how rewrites (merge,
-    * OPTIMIZE) know which filters to rebuild for their output files
-    * without a table-properties store. The `col` column is one row per
-    * (file, column) pair, metadata-sized, so it de-duplicates after the
-    * collect rather than through a shuffled distinct. */
+  /** Columns any active bloom sidecar indexes as of `asOf` — how
+    * rewrites (merge, OPTIMIZE) and appends know which filters to build
+    * for their output files without a table-properties store, and before
+    * their write job starts. Each commit that adds a sidecar records the
+    * columns it indexes, and the snapshot fold keeps them per active
+    * sidecar, so this reads no data. Sidecars committed before that
+    * record existed are the one exception: their `col` column is read
+    * here, one row per (file, column) pair, metadata-sized. */
   private def activeBloomCols(spark: SparkSession, table: String,
-      asOf: Option[Long]): Seq[String] =
-    sidecarFrame(spark, table, asOf).fold(Seq.empty[String])(
-      _.select("col").collect().map(_.getString(0)).toSeq.distinct)
+      asOf: Option[Long]): Seq[String] = {
+    val st = stateAt(table, asOf)
+    val (known, legacy) = st.blooms.partition(st.bloomCols.contains)
+    (known.flatMap(st.bloomCols) ++ sidecars(spark, table, legacy).fold(
+      Seq.empty[String])(_.select("col").collect().map(_.getString(0)).toSeq))
+      .distinct
+  }
 
   /** One-pass view of the active bloom sidecar set as of a single write
     * attempt's `base`. merge/applyChanges need THREE derived answers per
@@ -2630,8 +2673,9 @@ object TxLog {
     * GBs). Here the frame loads ONCE and persists (filter bytes stay
     * distributed — never collected); [[skipFiles]] probes it, and the
     * (sidecar, file, col) manifest WITHOUT the bytes collects lazily,
-    * metadata-sized, and answers the columns/inertness questions
-    * driver-side. [[release]] when the attempt ends. */
+    * metadata-sized, and answers the inertness question driver-side
+    * (the indexed columns come from the log, [[activeBloomCols]]).
+    * [[release]] when the attempt ends. */
   private final class BloomIndex(spark: SparkSession, table: String,
       base: Option[Long]) {
     val sidecars: Seq[String] = activeBlooms(table, base)
@@ -2646,8 +2690,8 @@ object TxLog {
         .map(r => (r.getString(0), fileKey(r.getString(1)), r.getString(2)))
         .toSeq
     }
-    /** Columns any sidecar indexes (the [[activeBloomCols]] answer). */
-    def cols: Seq[String] = manifest.map(_._3).distinct
+    /** Columns any sidecar indexes, at the attempt's base. */
+    def cols: Seq[String] = activeBloomCols(spark, table, base)
     /** Sidecars whose every indexed file is outside `remainingKeys` —
       * nothing they index can be read again, so they retire with the
       * commit that removed their last file (the [[inertDvs]] pattern,
@@ -2831,62 +2875,68 @@ object TxLog {
     }
 
   /** Data files staged by [[stage]], the skipping metadata recorded
-    * for them and their footer counts: what [[swap]] publishes. */
+    * for them and their footer counts, and the columns each added bloom
+    * sidecar indexes: what [[swap]] publishes. */
   private final case class Staged(add: Seq[String],
       stats: Map[String, Map[String, (Double, Double)]],
       sstats: Map[String, Map[String, (String, String)]],
-      bloomAdd: Seq[String], feet: Map[String, FooterCounts])
+      bloomAdd: Seq[String], feet: Map[String, FooterCounts],
+      bloomCols: Map[String, Seq[String]] = Map.empty)
 
-  /** The write half every data-adding verb shares: [[writeData]] under
+  /** The write half every data-adding verb shares: [[writeFiles]] under
     * `mapping` (the one the commit publishes with — the committed
-    * mapping, or a writer's extended or replacement one), then the
-    * skipping metadata for the staged files ([[stageMeta]]), read with
-    * the schema the write used: `df`'s under physical names, less the
-    * partition columns [[writeData]] moves into the paths. */
+    * mapping, or a writer's extended or replacement one), collecting the
+    * skipping metadata [[metaSpec]] names inside the write job, then
+    * [[recordMeta]]. The metadata describes rows of the schema the write
+    * uses: `df`'s under physical names, less the partition columns
+    * [[writeFiles]] moves into the paths. `sized` stages files sized to
+    * the data ([[sizedPartitions]]). */
   private def stage(df: DataFrame, table: String,
       mapping: Option[Map[String, String]],
       statsCols: Seq[String] = Seq.empty, bloomCols: Seq[String] = Seq.empty,
-      blooms: Option[BloomIndex] = None): Staged = {
+      blooms: Option[BloomIndex] = None, sized: Boolean = true): Staged = {
+    val spark = df.sparkSession
     val phys = physOf(mapping) _
     val partCols = declaredPartitionCols(table).map(phys).toSet
     val fileSchema = org.apache.spark.sql.types.StructType(df.schema.fields
       .toSeq.map(f => f.copy(name = phys(f.name), nullable = true))
       .filterNot(f => partCols(f.name)))
-    stageMeta(df.sparkSession, table, writeData(df, table, mapping),
-      fileSchema, mapping, statsCols, bloomCols, blooms)
+    val spec = metaSpec(spark, table, fileSchema, mapping, statsCols,
+      bloomCols, blooms)
+    val (add, metas) = writeFiles(df, table, mapping, Some(spec), sized)
+    recordMeta(spark, table, add, metas, footers(table, add))
   }
 
-  /** Per-file stats and bloom sidecars ([[fileMeta]]) for `add`, files
-    * already in the table directory that hold `schema` (PHYSICAL names,
-    * partition columns excluded). The one column rule: the caller's
-    * `statsCols`/`bloomCols`, plus the table's declared
+  /** What the skipping metadata of files holding `schema` (PHYSICAL
+    * names, partition columns excluded) covers. The one column rule: the
+    * caller's `statsCols`/`bloomCols`, plus the table's declared
     * `graft.stats.columns` and `graft.cluster.columns` (stats) and
     * `graft.bloom.columns` (blooms), plus every column an active sidecar
-    * already indexes — `blooms` when the attempt holds the index, else
-    * the latest snapshot's. A table configures its skipping layout once
+    * already indexes — at the attempt's base when it holds `blooms`, else
+    * at the latest snapshot. A table configures its skipping layout once
     * and every writer records it (batch, streaming sink, SQL INSERT, DML
     * and OPTIMIZE rewrites), instead of each call site re-passing the
     * lists or silently producing never-pruned files. Declared cluster
     * columns record stats implicitly: clustering exists to make their
     * per-file ranges tight. Declared and sidecar names may be recorded in
     * either era's namespace, so they normalize physical→logical under
-    * `mapping` and map back for [[fileMeta]]; a name in neither, or a
+    * `mapping` and map back to physical; a name in neither, or a
     * partition column (its value rides the path and prunes exactly),
     * drops at the column filter, the safe direction. */
-  private def stageMeta(spark: SparkSession, table: String,
-      add: Seq[String], schema: org.apache.spark.sql.types.StructType,
+  private def metaSpec(spark: SparkSession, table: String,
+      schema: org.apache.spark.sql.types.StructType,
       mapping: Option[Map[String, String]], statsCols: Seq[String],
-      bloomCols: Seq[String], blooms: Option[BloomIndex]): Staged = {
+      bloomCols: Seq[String], blooms: Option[BloomIndex]): MetaSpec = {
     val inv = logicalsOf(mapping)
     val columns = schema.fieldNames.toSeq.map(c => inv.getOrElse(c, c))
     def rule(own: Seq[String], derived: Seq[String]): Seq[String] =
       (own ++ derived.map(c => inv.getOrElse(c, c)))
         .distinct.filter(columns.contains).map(physOf(mapping))
-    val stCols = rule(statsCols, declaredCols(table, "graft.stats.columns") ++
-      declaredCols(table, "graft.cluster.columns"))
-    val blCols = rule(bloomCols, declaredCols(table, "graft.bloom.columns") ++
-      blooms.fold(activeBloomCols(spark, table, None))(_.cols))
-    fileMeta(spark, table, add, schema, stCols, blCols)
+    MetaSpec(schema,
+      rule(statsCols, declaredCols(table, "graft.stats.columns") ++
+        declaredCols(table, "graft.cluster.columns")),
+      rule(bloomCols, declaredCols(table, "graft.bloom.columns") ++
+        blooms.fold(activeBloomCols(spark, table, None))(_.cols)))
   }
 
   /** The one tail every commit that adds or retires data files ends in:
@@ -2938,7 +2988,7 @@ object TxLog {
       staged.stats, schemaDdl, dvRemove = dvRemove, sstats = staged.sstats,
       streamId = streamId, bloomAdd = staged.bloomAdd,
       bloomRemove = bloomRemove, colMap = colMap, copySources = copySources,
-      properties = extraProps), staged.feet))(v)
+      properties = extraProps, bloomCols = staged.bloomCols), staged.feet))(v)
   }
 
   /** The mapping a schema-evolving write (mergeSchema append or COPY
@@ -2978,7 +3028,10 @@ object TxLog {
     val schema = resolveSchema(table, df, mergeSchema)
     validateConstraints(df, constraints(table))
     val (mapping, colMap) = extendMapping(table, schema)
-    val staged = stage(df, table, mapping, statsCols, bloomCols)
+    // a streaming sink's micro-batch (it carries a streamId) keeps its
+    // shape: its estimate bounds nothing the sink did not already shape
+    val staged = stage(df, table, mapping, statsCols, bloomCols,
+      sized = streamId.isEmpty)
     optimistic(table, "append", Some(meta0)) { base =>
       swap(df.sparkSession, table, base, Seq.empty, Seq.empty, staged,
         "append", Some(schema.toDDL), batchId, streamId, colMap, extraProps)
@@ -3022,7 +3075,8 @@ object TxLog {
     }
     val colMap = mapping.filter(m => !mapping0.contains(m))
       .map(m => df.schema.fieldNames.toSeq.map(n => n -> m(n)))
-    val staged = stage(df, table, mapping, statsCols, bloomCols)
+    val staged = stage(df, table, mapping, statsCols, bloomCols,
+      sized = streamId.isEmpty) // as in [[append]]
     optimistic(table, "overwrite", Some(meta0)) { base =>
       val active = activeFiles(table, base)
       swap(df.sparkSession, table, base, active, active, staged, "overwrite",
@@ -3380,11 +3434,11 @@ object TxLog {
     // those are inverted garbage ('100' < '9' as doubles), and pruning
     // from them drops live files. Numeric bounds are only trusted when
     // the column's CURRENT logged type soundly casts to double
-    // ([[doubleCastable]]); unknown schema or unknown column → never
+    // ([[FileMeta.doubleCastable]]); unknown schema or unknown column → never
     // prune, the safe direction. Tables written from r11 on no longer
     // record numeric stats for string columns, but 100 TB tables carry
     // their old log eras forever — the reader must not assume the era.
-    val trusted = logged.filter(e => doubleCastable(e._2)).keySet
+    val trusted = logged.filter(e => FileMeta.doubleCastable(e._2)).keySet
     // spec names are LOGICAL (`trusted` holds logical names);
     // stats, null counts, partition paths and sidecar `col` entries are
     // recorded PHYSICAL — translate at the lookup only
@@ -3834,7 +3888,8 @@ object TxLog {
     * driver-side aggregate row for all columns. */
   private def mergeKeyBounds(updates: DataFrame,
       keyCols: Seq[String]): Skip = {
-    val numCols = keyCols.filter(c => doubleCastable(updates.schema(c).dataType))
+    val numCols =
+      keyCols.filter(c => FileMeta.doubleCastable(updates.schema(c).dataType))
     val strCols = keyCols.filter(c =>
       updates.schema(c).dataType == org.apache.spark.sql.types.StringType)
     if (numCols.isEmpty && strCols.isEmpty) return Skip()
@@ -4630,8 +4685,11 @@ object TxLog {
       // strips its output files of skipping metadata and every later
       // pruned operation must read them (for the keyed fold: one-merge
       // decay of the CDC fast path)
+      // compactions keep the shape they arranged ([[arrange]]), and a
+      // streaming batch its own, as in [[append]]
       val staged = stage(rewritten, table, mappingAsOf(table, base),
-        statsCols, bloomCols, Some(bi))
+        statsCols, bloomCols, Some(bi),
+        sized = !LayoutOnlyOps(op) && streamId.isEmpty)
       swap(spark, table, base, files, touched, staged, op,
         schemaDdlOverride.orElse(schemaAsOf(table, base).map(_.toDDL)),
         batchId, streamId, extraProps = extraProps, blooms = Some(bi))
@@ -5281,7 +5339,9 @@ object TxLog {
     // shallow clone of an indexed table must not silently stop skipping.
     // (Byte sizes need no carry: tryCommit stats the absolute add
     // entries itself.)
-    val blooms = activeBlooms(src, asOf).map(abs)
+    val srcState = stateAt(src, asOf)
+    val blooms = srcState.blooms.map(abs)
+    val bloomColsByAbs = srcState.bloomCols.map { case (b, cs) => abs(b) -> cs }
     // table properties travel with the clone (Delta clone semantics):
     // the folded as-of map rides the clone commit as set-deltas; under
     // OR REPLACE, destination-only properties ride as UNSETs so the
@@ -5316,7 +5376,7 @@ object TxLog {
       "clone", -1L,
       statsByAbs, srcSchema.map(_.toDDL), dvAdd = dvs,
       dvRemove = if (base.isEmpty) Seq.empty else activeDvs(dst),
-      sstats = sstatsByAbs, bloomAdd = blooms,
+      sstats = sstatsByAbs, bloomAdd = blooms, bloomCols = bloomColsByAbs,
       bloomRemove = if (base.isEmpty) Seq.empty else activeBlooms(dst),
       properties = props,
       colMap = srcColMap, baseRowIds = baseByAbs)))
@@ -5399,8 +5459,10 @@ object TxLog {
     val pathCols = entries.flatMap(partValuesOf(_).map(_._1)).toSet
     val fileSchema = org.apache.spark.sql.types.StructType(
       schema.fields.toSeq.filterNot(f => pathCols(f.name)))
-    val staged = stageMeta(spark, dir, entries, fileSchema, None, statsCols,
-      Seq.empty, None)
+    val spec = metaSpec(spark, dir, fileSchema, None, statsCols, Seq.empty,
+      None)
+    val staged = recordMeta(spark, dir, entries,
+      scanBounds(spark, dir, entries, spec), footers(dir, entries))
     optimistic(dir, "convertParquet") { base =>
       swap(spark, dir, base, Seq.empty, Seq.empty, staged, "convert",
         Some(schema.toDDL))

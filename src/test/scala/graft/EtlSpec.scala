@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.JobCount
 import org.apache.spark.sql.Row
 
 import graft.etl.{DetailsClean, ReviewsClean}
@@ -94,6 +95,33 @@ class EtlSpec extends SparkSpec {
     // never attempts the failing conversion and drops nothing
     assert(dropped.collect().length === 2)
     permissive.unpersist()
+  }
+
+  test("reviews: a CSV whose every score is unparseable cleans to an empty frame") {
+    val raw = tmpDir("garbagescores") + "/Books_rating.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(raw),
+      "Id,Title,Price,User_id,profileName,review/helpfulness,review/score," +
+        "review/time,review/summary,review/text\n" +
+        "1,Book A,,u1,Alice,7/7,garbage,1300000000,Great,Loved it\n" +
+        "2,Book A,,u2,Bob,0/0,,1200000000,,Meh\n")
+    val out = ReviewsClean.pipeline(spark, ReviewsClean.readRaw(spark, raw))
+    assert(out.collect().isEmpty)
+    assert(out.columns.length === 10)
+  }
+
+  test("cleanDetails and cleanReviews read back with the declared schemas, starting no job") {
+    val root = tmpDir("readback")
+    Seq(("books_data.csv", DetailsClean.run _, BookReviewEngine.cleanDetails _),
+      ("Books_rating.csv", ReviewsClean.run _, BookReviewEngine.cleanReviews _))
+      .foreach { case (csv, run, clean) =>
+        val written = JobCount(spark)(run(spark, fixture(csv), s"$root/run-$csv"))
+        var cleaned: org.apache.spark.sql.DataFrame = null
+        val total = JobCount(spark) {
+          cleaned = clean(spark, fixture(csv), s"$root/clean-$csv")
+        }
+        assert(total === written, s"$csv: the readback started jobs")
+        assert(cleaned.schema === spark.read.parquet(s"$root/clean-$csv").schema)
+      }
   }
 
   test("reviews: 10-column cleaned schema") {

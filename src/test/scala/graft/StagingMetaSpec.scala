@@ -9,8 +9,9 @@ import graft.ops.TxLog
 /** The skipping metadata every data-adding write stages with its files:
   * per-file min/max stats and per-file bloom filters. These specs pin
   * what a commit records against plain per-file passes computed here,
-  * under plain, partitioned and column-mapped layouts, and how many Spark
-  * jobs a small append and a bloom-pruned lookup start. */
+  * under plain, partitioned and column-mapped layouts, how many Spark
+  * jobs a small append and a bloom-pruned lookup start, and how many
+  * files an append stages. */
 class StagingMetaSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,9 +36,9 @@ class StagingMetaSpec extends SparkSpec {
   /** The last commit records exactly what plain per-file passes over its
     * added files compute: min/max per file (numerics and timestamps as
     * doubles, strings as strings; an all-NULL file records none), and
-    * per (file, column) the `bloom_agg` bytes sized from the batch's
-    * largest file row count (~3 % fpp, clamped). Columns are LOGICAL;
-    * the files and the recorded metadata speak physical names. */
+    * per (file, column) the `bloom_agg` bytes sized from that file's own
+    * row count (~3 % fpp, clamped). Columns are LOGICAL; the files and
+    * the recorded metadata speak physical names. */
   private def assertPlainMeta(t: String, numeric: Seq[String],
       strings: Seq[String], bloom: Seq[String]): Unit = {
     val c = TxLog.commits(t).last
@@ -60,15 +61,17 @@ class StagingMetaSpec extends SparkSpec {
       assert(c.sstats.getOrElse(f, Map.empty) === str, s"sstats of $f")
     }
     val counts = files.map { case (f, df) => f -> df.count() }.toMap
-    val est = math.min(math.max(counts.values.max, 64L), 4000000L)
-    val bits = math.min(est * 8L, 67108864L)
     graft.functions.GraftFunctions.register(spark)
     val want = (for {
       (f, df) <- files if counts(f) > 0
       p <- bloom.map(phys)
-    } yield (f, p) -> df.agg(call_function("bloom_agg",
-      xxhash64(col(p)), lit(est), lit(bits))).head()
-      .getAs[Array[Byte]](0).toSeq).toMap
+    } yield {
+      val est = math.min(math.max(counts(f), 64L), 4000000L)
+      val bits = math.min(est * 8L, 67108864L)
+      (f, p) -> df.agg(call_function("bloom_agg",
+        xxhash64(col(p)), lit(est), lit(bits))).head()
+        .getAs[Array[Byte]](0).toSeq
+    }).toMap
     val got =
       if (c.bloomAdd.isEmpty) Map.empty
       else spark.read.parquet(c.bloomAdd.map(b => s"$t/$b"): _*).collect()
@@ -127,17 +130,92 @@ class StagingMetaSpec extends SparkSpec {
     assertPlainMeta(mapped, Seq("key", "ts"), Seq("title"), Seq("key"))
   }
 
-  test("a small append to a stats- and bloom-declaring table runs at most 5 jobs") {
+  test("a converted directory records the bounds of plain per-file passes") {
+    val dir = tmpDir("staging") + "/conv"
+    // small row groups and splits: one file's rows reach several tasks,
+    // whose partial bounds merge
+    threeFiles().write.option("parquet.block.size", "2048").parquet(dir)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "4096")
+    try TxLog.convertParquet(spark, dir, statsCols = Seq("id", "ts", "name"))
+    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(TxLog.commits(dir).last.add.size === 3)
+    assertPlainMeta(dir, Seq("id", "ts"), Seq("name"), Seq.empty)
+  }
+
+  test("a small append to a stats- and bloom-declaring table runs at most 2 jobs") {
     val t = table()
     TxLog.setProperties(t, Map("graft.stats.columns" -> "id,ts",
       "graft.bloom.columns" -> "id"))
     TxLog.append(rows(400), t)
-    // the data write, the one stats+bloom aggregation (split in two by
-    // AQE), the indexed-columns read and the sidecar write
+    // the data write, which collects the stats and filters, and the
+    // sidecar write
     val n = JobCount(spark)(TxLog.append(rows(37, 400), t))
-    assert(n <= 5, s"a 37-row append ran $n Spark jobs")
+    assert(n <= 2, s"a 37-row append ran $n Spark jobs")
     val c = TxLog.commits(t).last
+    assert(c.add.size === 1, "a 37-row append stages one file")
     assert(c.stats.nonEmpty && c.bloomAdd.nonEmpty)
+    assertPlainMeta(t, Seq("id", "ts"), Seq.empty, Seq("id"))
+  }
+
+  test("a small append stages one file; a large one keeps its parallelism") {
+    val t = table()
+    TxLog.append(rows(37), t)
+    assert(TxLog.commits(t).last.add.size === 1)
+    // a shape the caller chose is kept
+    TxLog.append(rows(37).repartition(3), t)
+    assert(TxLog.commits(t).last.add.size === 3)
+    // 400 000 bigint rows estimate 3.2 MB, above 48 files of a 64 KiB
+    // target: the write keeps one file per partition of the frame
+    TxLog.setProperties(t, Map("graft.autoCompact.targetSize" -> "65536"))
+    val big = spark.range(400000).toDF("id")
+    val parts = big.rdd.getNumPartitions
+    assert(parts > 1)
+    TxLog.append(big.select(col("id"), lit(null).cast("timestamp").as("ts"),
+      lit(null).cast("string").as("name"),
+      (col("id") % 1000).cast("double").as("v")), t)
+    assert(TxLog.commits(t).last.add.size === parts)
+    assert(TxLog.read(spark, t).count() === 400074L)
+  }
+
+  test("a column the sidecars index undeclared stays indexed, read from the log") {
+    val t = table()
+    TxLog.append(rows(200), t, bloomCols = Seq("name"))
+    assert(TxLog.commits(t).last.bloomCols.values.toSeq === Seq(Seq("name")))
+    // no sidecar is read to learn the indexed column: the data write and
+    // the sidecar write are the only jobs
+    val n = JobCount(spark)(TxLog.append(rows(37, 200), t))
+    assert(n <= 2, s"a 37-row append ran $n Spark jobs")
+    assertPlainMeta(t, Seq.empty, Seq.empty, Seq("name"))
+    assert(TxLog.filesForEquals(spark, t, "name", Seq("name-0013")).nonEmpty)
+  }
+
+  test("sidecars committed without their indexed columns are still read for them") {
+    val t = table()
+    TxLog.append(rows(200), t, bloomCols = Seq("name"))
+    // an older log: the commit does not record the sidecar's columns
+    val logDir = java.nio.file.Paths.get(t, "_txlog")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val old = table()
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(old, "_txlog"))
+    java.nio.file.Files.list(java.nio.file.Paths.get(t)).forEach { p =>
+      val n = p.getFileName.toString
+      if (n != "_txlog") org.apache.commons.io.FileUtils.copyDirectory(
+        p.toFile, java.nio.file.Paths.get(old, n).toFile)
+    }
+    java.nio.file.Files.list(logDir).forEach { p =>
+      val node = mapper.readTree(p.toFile)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      node.remove("bloomCols")
+      mapper.writeValue(
+        java.nio.file.Paths.get(old, "_txlog", p.getFileName.toString).toFile,
+        node)
+    }
+    assert(TxLog.commits(old).forall(_.bloomCols.isEmpty))
+    TxLog.append(rows(37, 200), old)
+    assert(TxLog.commits(old).last.bloomCols.values.toSeq === Seq(Seq("name")))
+    assertPlainMeta(old, Seq.empty, Seq.empty, Seq("name"))
   }
 
   test("a bloom-pruned point lookup reads its sidecars without schema inference") {
